@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 /** Session factory with the engine's default tuning.
   *
@@ -12,8 +12,26 @@ import org.apache.spark.sql.SparkSession
   * core count rather than the 200 default.
   */
 object GraftSession {
-  def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      : SparkSession.Builder = {
+  /** Entries of Spark's JVM-wide generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, a static conf; Spark's
+    * default of 100 evicts a plan's classes before the plan runs again).
+    * Measured at sf0.01, local[4]: one pass of all 270 queries graft.Bench
+    * times generates 2640 distinct classes, and a second pass 69 more
+    * (plans that differ between runs); one cached class retains
+    * 27.4 KB of heap (source text, class, byte-code stats) and about
+    * 7.6 KB of metaspace. 4096 holds the whole surface with room for the
+    * per-run classes; a full cache costs about 110 MB of heap. */
+  val CodegenCacheEntries = 4096
+
+  /** The engine's session extensions, shared by every session the engine
+    * and its specs build: the physical rule that keeps request constants
+    * out of generated code. */
+  val extensions: SparkSessionExtensions => Unit =
+    _.injectQueryStagePrepRule(_ => graft.plans.ParameterizeLiterals)
+
+  def defaultMaster: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"
+
+  def builder(master: String = defaultMaster): SparkSession.Builder = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     SparkSession.builder()
       .master(master)
@@ -50,6 +68,8 @@ object GraftSession {
       .config("spark.sql.sources.fileCompressionFactor", "4.0")
       .config("spark.sql.warehouse.dir",
         sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", "/tmp/graft-warehouse"))
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .withExtensions(extensions)
   }
 
   /** Log posture shared by EVERY main (engine, Verify, Bench, FuzzSweep,
@@ -67,15 +87,24 @@ object GraftSession {
       org.apache.logging.log4j.Level.ERROR)
   }
 
-  def get(): SparkSession = {
-    val spark = builder().getOrCreate()
+  /** The one session constructor: every main (Bench, Explain, Verify
+    * and the tools) builds its session here, so the oracle gate checks
+    * the same rule set the bench times. */
+  def get(master: String = defaultMaster): SparkSession = {
+    val spark = builder(master).getOrCreate()
     quietLogs(spark)
+    installRules(spark)
+    spark
+  }
+
+  /** The engine's logical optimizer rules, on every session `get`
+    * returns and on the specs' session. */
+  def installRules(spark: SparkSession): Unit = {
     // QL's join+agg push-down (eager aggregation on the foreign side)
     graft.plans.PushDownGroupBy.install(spark)
     // SOME(key) → key: keeps string witnesses of the group key from
     // forcing the whole aggregate onto SortAggregateExec
     graft.plans.FoldFirstOfGroupKey.install(spark)
-    spark
   }
 
   /** Scale-aware AQE headroom: `initialPartitionNum` is a RUNTIME SQL

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -17,12 +16,10 @@ object Verify {
     // sf100 sweep showed a bare 32-partition session re-opens the
     // spill bend GraftSession already closed (dict_sum 225 s → the
     // aggregate class back to linear under the shipped posture).
-    val spark = GraftSession.builder(s"local[$cpus]").getOrCreate()
-    GraftSession.quietLogs(spark)
+    // It is built by the engine's own constructor, so the gate also
+    // runs every rewrite and session extension the engine ships with.
+    val spark = GraftSession.get(s"local[$cpus]")
     GraftSession.tuneShuffleFor(spark, sfDir)
-    // same optimizer extensions the engine session installs — the
-    // correctness gate must exercise the rewrites it ships with
-    graft.plans.PushDownGroupBy.install(spark)
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -9,9 +9,8 @@ object ExplainQuery {
     val dir = args(0)
     val name = args(1)
     val ab = args.contains("--ab")
-    val spark = graft.GraftSession.builder().getOrCreate()
+    val spark = graft.GraftSession.get()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.PushDownGroupBy.install(spark)
     graft.GraftSession.tuneShuffleFor(spark, dir)
     val df = graft.SparkEntry.queries(name)(spark, dir)
     println(s"=== $name [rules ON] ===")

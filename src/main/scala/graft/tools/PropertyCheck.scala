@@ -36,10 +36,8 @@ object PropertyCheck {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set("cc", "split", "pack", "pretrain", "minhash",
         "simhash", "semantic"))
-    val spark = graft.GraftSession.builder().getOrCreate()
-    graft.GraftSession.quietLogs(spark)
+    val spark = graft.GraftSession.get()
     graft.GraftSession.tuneShuffleFor(spark, sfDir)
-    graft.plans.PushDownGroupBy.install(spark)
     if (which("cc")) ccCheck(spark, sfDir)
     if (which("split")) splitCheck(spark, sfDir)
     if (which("pack")) packCheck(spark, sfDir)

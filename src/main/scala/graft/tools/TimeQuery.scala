@@ -2,7 +2,8 @@ package graft.tools
 
 /** Ad-hoc A/B timer for single queries: `runMain graft.tools.TimeQuery
   * <sfDir> <query> [reps] [--bare|--ab]` — `--bare` runs WITHOUT the
-  * engine's optimizer extensions (rule-off baseline for rewrite A/Bs);
+  * engine's logical optimizer rules (rule-off baseline for rewrite
+  * A/Bs; a `newSession()` keeps the session extensions);
   * `--ab` INTERLEAVES rule-on and rule-off reps in ONE JVM (shared
   * page cache, same session placement — the SCALING.md adjudication
   * method for cross-session noise). Prints per-rep seconds + medians;
@@ -16,13 +17,9 @@ object TimeQuery {
       .getOrElse(3)
     val bare = args.contains("--bare")
     val ab = args.contains("--ab")
-    val spark = graft.GraftSession.builder().getOrCreate()
+    val spark = graft.GraftSession.get()
     spark.sparkContext.setLogLevel("ERROR")
-    val session = if (bare) spark.newSession() else {
-      // Bench posture: the engine's optimizer extensions installed
-      graft.plans.PushDownGroupBy.install(spark)
-      spark
-    }
+    val session = if (bare) spark.newSession() else spark
     graft.GraftSession.tuneShuffleFor(session, dir)
 
     def rep(s: org.apache.spark.sql.SparkSession, tag: String): Double = {

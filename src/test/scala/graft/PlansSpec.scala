@@ -584,4 +584,35 @@ class PlansSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(e == Set((1L, 1L), (0L, 0L)))
   }
+
+  test("first/any_value of a -0.0 or NaN float/double group key returns the normalized key") {
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    // grouping normalizes -0.0 to 0.0 and every NaN to one NaN, so the
+    // fold's key reference must read the normalized key, never the raw
+    // value a witness of the first row would carry
+    val oddNaN = java.lang.Double.longBitsToDouble(0x7ff8000000000123L)
+    val df = Seq((-0.0, 1L), (0.0, 2L), (Double.NaN, 3L), (oddNaN, 4L), (-0.0, 5L))
+      .toDF("d", "v").withColumn("f", col("d").cast("float"))
+    def bits(x: Double): Long = java.lang.Double.doubleToRawLongBits(x)
+    def fbits(x: Float): Int = java.lang.Float.floatToRawIntBits(x)
+    val dq = df.groupBy(col("d"))
+      .agg(first(col("d")).as("w"), any_value(col("d")).as("w2"), sum(col("v")).as("s"))
+    val drows = dq.collect()
+    assert(drows.map(r => (bits(r.getDouble(0)), r.getLong(3))).toSet ==
+      Set((bits(0.0), 8L), (bits(Double.NaN), 7L)))
+    drows.foreach { r =>
+      assert(bits(r.getDouble(1)) == bits(r.getDouble(0)) &&
+        bits(r.getDouble(2)) == bits(r.getDouble(0)), r.toString)
+    }
+    assert(PlanTest.finalNodes(dq).exists(_.isInstanceOf[HashAggregateExec]))
+    val frows = df.groupBy(col("f"))
+      .agg(first(col("f")).as("w"), last(col("f")).as("w2"), count(lit(1)).as("n"))
+      .collect()
+    assert(frows.map(r => (fbits(r.getFloat(0)), r.getLong(3))).toSet ==
+      Set((fbits(0.0f), 3L), (fbits(Float.NaN), 2L)))
+    frows.foreach { r =>
+      assert(fbits(r.getFloat(1)) == fbits(r.getFloat(0)) &&
+        fbits(r.getFloat(2)) == fbits(r.getFloat(0)), r.toString)
+    }
+  }
 }

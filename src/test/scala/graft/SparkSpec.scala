@@ -17,11 +17,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
+      // same codegen cache and session extensions as the engine session
+      .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries.toLong)
+      .withExtensions(GraftSession.extensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    // same optimizer extensions the engine session installs
-    graft.plans.PushDownGroupBy.install(s)
-    graft.plans.FoldFirstOfGroupKey.install(s)
+    GraftSession.installRules(s)
     s
   }
 

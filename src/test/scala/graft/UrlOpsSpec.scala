@@ -1,11 +1,10 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{UrlOps, YqlSql}
 
 /** Pure-kernel + raise-path pins for the Url:: tail (url_base; the
   * SQL-surface half rides the yql_fn_url_tail oracle). */
-class UrlOpsSpec extends AnyFunSuite {
+class UrlOpsSpec extends SparkSpec {
 
   test("normalize: docs examples + rejects") {
     assert(UrlOps.normalize("hTTp://wWw.yDb.TECH/", defaultHttp = false) ==
@@ -69,9 +68,6 @@ class UrlOpsSpec extends AnyFunSuite {
   }
 
   test("IsAllowedByRobotsTxt raises naming the gap") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .getOrCreate()
     YqlSql.registerAll(spark)
     val e = intercept[Exception] {
       YqlSql.sql(spark,
