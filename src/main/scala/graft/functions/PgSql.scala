@@ -1119,9 +1119,12 @@ object PgSql {
         // differently — translate rather than surface a raw
         // PatternSyntaxException at eval time: \m (start of word) →
         // (?<!\w)(?=\w), \M (end of word) → (?<=\w)(?!\w), \y (any
-        // boundary) → \b, \Y (non-boundary) → \B.
+        // boundary) → \b, \Y (non-boundary) → \B. Inside a bracket
+        // expression they are no class members: they pass through
+        // verbatim and fail loudly (`[\b]` would be a backspace class).
         val nx = pat.charAt(i + 1)
-        nx match {
+        if (inClass) re.append('\\').append(nx)
+        else nx match {
           case 'm' => re.append("(?<!\\w)(?=\\w)")
           case 'M' => re.append("(?<=\\w)(?!\\w)")
           case 'y' => re.append("\\b")

@@ -55,7 +55,7 @@ object YqlTablePaths {
     * [[graft.sources.Tables.load]]). */
   private val viewCache =
     new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, (String, Long)]]()
+      java.util.concurrent.ConcurrentHashMap[String, (String, Seq[(Long, Long)])]]()
   private val viewSeq = new java.util.concurrent.atomic.AtomicLong()
   private val activeSession =
     new scala.util.DynamicVariable[Option[org.apache.spark.sql.SparkSession]](None)
@@ -65,25 +65,33 @@ object YqlTablePaths {
   def rewrite(spark: org.apache.spark.sql.SparkSession, sql: String): String =
     activeSession.withValue(Some(spark)) { rewrite(sql) }
 
-  /** mtime of the path (a glob's member-set changes move its parent
-    * directory's mtime) — one stat per lowering, so an in-session
-    * rewrite of a member table invalidates the cached view. */
-  private def stampOf(path: String): Long = {
-    val f = new java.io.File(path)
-    if (f.exists) f.lastModified
-    else Option(f.getParentFile).map(_.lastModified).getOrElse(0L)
+  /** The `dir/{n1,n2,...}` member glob [[union]] lowers to. */
+  private val MemberGlob = "^(.*)/\\{([^{}]*)\\}$".r
+
+  /** (mtime, length) of every file a scan of `path` reads — the member
+    * itself, or each member a `dir/{a,b}` glob names — as
+    * [[graft.sources.Tables]] stamps its relations: an in-session
+    * rewrite of a member invalidates the cached view even when the
+    * rewrite keeps its mtime. One stat per member per lowering. */
+  private def stampOf(path: String): Seq[(Long, Long)] = {
+    val files = path match {
+      case MemberGlob(dir, names) if !new java.io.File(path).exists =>
+        names.split(",").toSeq.map(n => new java.io.File(dir, n))
+      case _ => Seq(new java.io.File(path))
+    }
+    files.map(f => (f.lastModified, f.length))
   }
 
   /** The FROM-able reference for a member path: a cached registered
     * view when a session is active (sessions key weakly, entries
-    * re-resolve when the path's stamp moves), the bare SQL-on-file
-    * scan text otherwise. */
+    * re-resolve when the path's stamp moves and drop the view they
+    * supersede), the bare SQL-on-file scan text otherwise. */
   private def pathRef(path: String): String = activeSession.value match {
     case Some(spark) =>
       val perSession = viewCache.synchronized {
         var m = viewCache.get(spark)
         if (m == null) {
-          m = new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
+          m = new java.util.concurrent.ConcurrentHashMap[String, (String, Seq[(Long, Long)])]()
           viewCache.put(spark, m)
         }
         m
@@ -96,6 +104,7 @@ object YqlTablePaths {
           val v = s"__g_tbl_${viewSeq.incrementAndGet()}"
           spark.read.parquet(path).createOrReplaceTempView(v)
           perSession.put(path, (v, stamp))
+          if (hit != null) spark.catalog.dropTempView(hit._1)
           v
         }
       s"`$view`"

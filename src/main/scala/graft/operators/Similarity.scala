@@ -326,11 +326,12 @@ object Similarity {
     // multi-table LSH storage cost; candidates dedup on (query, item)
     // BEFORE scoring so each surviving pair pays exactly one cosine.
     // Signatures compute through the fused HyperplaneSigs kernel (one
-    // reference-object plane table, one tight loop) — bit-identical to
-    // chaining hyperplaneSignature per table, but the plan carries a
-    // handful of nodes instead of tables×bits×dim literal leaves:
-    // per-run analysis/optimization of those trees dominated this
-    // operator's wall clock at bench scale (executors measured idle).
+    // reference-object plane table, one tight loop): the plan carries a
+    // handful of nodes instead of tables×bits×dim literal leaves, whose
+    // per-run analysis/optimization dominated this operator's wall
+    // clock at bench scale (executors measured idle). A null vector has
+    // no signatures, so its row drops out of the index (never a
+    // candidate) and a null query probes nothing.
     val allPlanes: Array[Array[Double]] = (0 until tables).toArray.flatMap { t =>
       val rnd = new java.util.Random(seed + t * 7919L)
       Array.fill(bits, dim)(rnd.nextGaussian())

@@ -1,5 +1,12 @@
 package graft.sources
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStream, OutputStream}
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graft.shims
+import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
+
 /** Shared external-process plumbing for the user-job pipe operators
   * (Dsv/Skiff/Protobuf pipeMap): stdin fed from a daemon thread,
   * stdout drained as the task's output iterator, stderr captured
@@ -17,8 +24,8 @@ private[graft] object PipeJob {
   private val StderrCap = 8192
 
   def run[T](command: Seq[String],
-      write: java.io.OutputStream => Unit,
-      read: java.io.InputStream => Iterator[T],
+      write: OutputStream => Unit,
+      read: InputStream => Iterator[T],
       env: Map[String, String] = Map.empty): Iterator[T] = {
     val pb = new ProcessBuilder(command: _*)
     env.foreach { case (k, v) => pb.environment().put(k, v) }
@@ -61,5 +68,41 @@ private[graft] object PipeJob {
              else ""))
       Iterator.empty
     }
+  }
+
+  /** A user job per partition of `input`, in the Catalyst
+    * representation on both sides: `write` streams the partition's rows
+    * onto the job's stdin, `read` decodes its stdout into rows of
+    * `outSchema`. An empty partition starts no process. */
+  def pipeInternal(input: DataFrame, command: Seq[String], outSchema: StructType)(
+      write: (Iterator[InternalRow], OutputStream) => Unit,
+      read: InputStream => Iterator[InternalRow]): DataFrame = {
+    val rdd = input.queryExecution.toRdd.mapPartitions { rows =>
+      if (!rows.hasNext) Iterator.empty
+      else run(command, os => write(rows, os), read)
+    }
+    shims.internalCreateDataFrame(input.sparkSession, rdd, outSchema)
+  }
+
+  /** One blob per partition of `df`: the bytes `write` makes of the
+    * partition's rows — the stream a job would read on its stdin. */
+  def encodeBlobs(df: DataFrame)(
+      write: (Iterator[InternalRow], OutputStream) => Unit): Dataset[Array[Byte]] = {
+    val rdd = df.queryExecution.toRdd.mapPartitions { rows =>
+      val out = new ByteArrayOutputStream()
+      write(rows, out)
+      Iterator.single[InternalRow](InternalRow(out.toByteArray))
+    }
+    val blob = StructType(Seq(StructField("value", BinaryType, nullable = false)))
+    shims.internalCreateDataFrame(df.sparkSession, rdd, blob).as(Encoders.BINARY)
+  }
+
+  /** The rows `read` decodes from every blob, as a DataFrame of
+    * `schema`. */
+  def decodeBlobs(blobs: Dataset[Array[Byte]], schema: StructType)(
+      read: InputStream => Iterator[InternalRow]): DataFrame = {
+    val rdd = blobs.queryExecution.toRdd.mapPartitions(
+      _.flatMap(b => read(new ByteArrayInputStream(b.getBinary(0)))))
+    shims.internalCreateDataFrame(blobs.sparkSession, rdd, schema)
   }
 }

@@ -1,10 +1,12 @@
 package graft.sources
 
-import java.io.{ByteArrayOutputStream, DataInputStream, EOFException, InputStream}
-import java.nio.{ByteBuffer, ByteOrder}
+import java.io.{DataInputStream, EOFException, InputStream, OutputStream}
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Skiff — the reference's schematized binary row format for job I/O
   * (SURVEY.md §1.4; spec yt/docs/en/_includes/user-guide/storage/
@@ -19,6 +21,12 @@ import org.apache.spark.sql.types._
   * (user_job.cpp); here the codec runs inside `mapPartitions` so a
   * "binary mapper" can consume/produce Skiff streams without any
   * driver involvement — each partition is one pipe.
+  *
+  * The codec speaks Catalyst's internal representation directly: no
+  * InternalRow→Row deserialization per input row, no Row→InternalRow
+  * encoder pass per output row, and strings move as UTF-8 bytes without
+  * a java.lang.String round trip. TypesFormatsSpec pins its wire bytes
+  * with golden vectors.
   */
 object Skiff {
 
@@ -34,73 +42,15 @@ object Skiff {
       }
     }
 
-  /** Encode one row: variant16 tag 0 + dense fields. */
-  def encodeRow(row: Row, fields: Seq[Field]): Array[Byte] =
-    encodeRowTagged(row, fields, 0, 0)
-
-  /** Multi-table form: the variant16 tag IS the table index (skiff.md —
-    * a multi-table stream is `variant16<schema0; schema1; ...>`), and
-    * `fieldOffset` lets the caller read the table's fields from a wider
-    * union row. */
-  def encodeRowTagged(row: Row, fields: Seq[Field], tag: Int,
-      fieldOffset: Int): Array[Byte] = {
-    val out = new ByteArrayOutputStream(64)
-    encodeRowTaggedTo(out, row, fields, tag, fieldOffset)
-    out.toByteArray
-  }
-
-  /** Streaming form: encode one tagged row directly onto `out` — skiff
-    * frames are self-delimiting, so the pipe write path needs no
-    * per-row byte[] materialization. */
-  def encodeRowTaggedTo(out: java.io.OutputStream, row: Row,
-      fields: Seq[Field], tag: Int, fieldOffset: Int): Unit = {
-    def le(n: Int, bytes: Int): Unit = {
-      var v = n; var i = 0
-      while (i < bytes) { out.write(v & 0xff); v >>= 8; i += 1 }
-    }
-    def le64(n: Long): Unit = {
-      var v = n; var i = 0
-      while (i < 8) { out.write((v & 0xffL).toInt); v >>= 8; i += 1 }
-    }
-    le(tag, 2) // variant16 schema tag = table index
-    fields.zipWithIndex.foreach { case (f, i0) =>
-      val i = i0 + fieldOffset
-      val isNull = row.isNullAt(i)
-      if (f.optional) out.write(if (isNull) 0 else 1)
-      else if (isNull) throw new IllegalArgumentException(s"null in required ${f.name}")
-      if (!isNull) f.dataType match {
-        case LongType => le64(row.getLong(i))
-        case DoubleType => le64(java.lang.Double.doubleToLongBits(row.getDouble(i)))
-        case BooleanType => out.write(if (row.getBoolean(i)) 1 else 0)
-        case StringType =>
-          val b = row.getString(i).getBytes("UTF-8")
-          le(b.length, 4); out.write(b)
-        case BinaryType =>
-          val b = row.getAs[Array[Byte]](i)
-          le(b.length, 4); out.write(b)
-        case other => throw new IllegalArgumentException(other.toString)
-      }
-    }
-  }
-
-  // ——— InternalRow pipe path ———
-  //
-  // The pipe operators run per partition inside the engine, so they can
-  // speak Catalyst's internal representation directly: no
-  // InternalRow→Row deserialization per input row, no Row→InternalRow
-  // ExpressionEncoder pass per output row, and strings move as UTF-8
-  // bytes without a java.lang.String round trip. Wire bytes are
-  // IDENTICAL to the Row path (same framing, same field encodings —
-  // UTF8String.getBytes IS the UTF-8 encoding Row.getString produced);
-  // the Row-based codecs above stay as the spec-pinned reference and
-  // serve the blob encode/decode surface.
-
-  /** Encode one tagged row from the Catalyst representation; byte-for-
-    * byte the stream [[encodeRowTaggedTo]] writes. A reusable 8-byte
-    * scratch turns per-byte OutputStream calls into one write per
-    * fixed-width field. */
-  def encodeInternalTo(out: java.io.OutputStream,
-      row: org.apache.spark.sql.catalyst.InternalRow,
+  /** Encode one row onto `out`: the variant16 tag, then the dense
+    * fields read from `fieldOffset` on. Skiff frames are
+    * self-delimiting, so a stream is just frames back to back. In a
+    * multi-table stream the tag IS the table index (skiff.md — a
+    * multi-table stream is `variant16<schema0; schema1; ...>`), and
+    * `fieldOffset` locates the table's fields in a wider union row. A
+    * reusable 8-byte scratch turns per-byte OutputStream calls into one
+    * write per fixed-width field. */
+  def encodeInternalTo(out: OutputStream, row: InternalRow,
       fields: Seq[Field], tag: Int, fieldOffset: Int,
       scratch: Array[Byte]): Unit = {
     def le(n: Int, bytes: Int): Unit = {
@@ -152,147 +102,70 @@ object Skiff {
     }
     /** First byte of a frame: -1 on clean EOF, else the byte. */
     def readFrameByte(): Int = din.read()
-    def readFully(b: Array[Byte]): Unit = din.readFully(b)
-  }
-
-  /** Decode a stream of framed rows into the Catalyst representation —
-    * same framing and EOF semantics as [[decodeStream]]. */
-  def decodeStreamInternal(in: InputStream, fields: Seq[Field])
-      : Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
-    val r = new LeReader(in)
-    val n = fields.length
-    new Iterator[org.apache.spark.sql.catalyst.InternalRow] {
-      private var nextRow: org.apache.spark.sql.catalyst.InternalRow = _
-      private var done = false
-      private def advance(): Unit =
-        try {
-          val b0 = r.readFrameByte()
-          if (b0 < 0) { done = true; return }
-          val tag = (b0 & 0xff).toLong | (r.readLE(1) << 8)
-          require(tag == 0, s"unexpected skiff variant16 tag $tag")
-          val vals = new Array[Any](n)
-          var j = 0
-          while (j < n) {
-            val f = fields(j)
-            val present = if (f.optional) r.readLE(1) == 1 else true
-            if (present) vals(j) = f.dataType match {
-              case LongType => r.readLE(8)
-              case DoubleType => java.lang.Double.longBitsToDouble(r.readLE(8))
-              case BooleanType => r.readLE(1) == 1
-              case StringType =>
-                val b = new Array[Byte](r.readLE(4).toInt)
-                r.readFully(b)
-                org.apache.spark.unsafe.types.UTF8String.fromBytes(b)
-              case BinaryType =>
-                val b = new Array[Byte](r.readLE(4).toInt)
-                r.readFully(b); b
-              case other => throw new IllegalArgumentException(other.toString)
-            }
-            j += 1
-          }
-          nextRow =
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-        } catch { case _: EOFException => done = true }
-      advance()
-      def hasNext: Boolean = !done
-      def next(): org.apache.spark.sql.catalyst.InternalRow = {
-        val row = nextRow; advance(); row
+    /** One field in the Catalyst representation, its variant8 presence
+      * byte included: null for an absent optional field. */
+    def readField(f: Field): Any =
+      if (f.optional && readLE(1) != 1) null
+      else f.dataType match {
+        case LongType => readLE(8)
+        case DoubleType => java.lang.Double.longBitsToDouble(readLE(8))
+        case BooleanType => readLE(1) == 1
+        case StringType => UTF8String.fromBytes(readBytes())
+        case BinaryType => readBytes()
+        case other => throw new IllegalArgumentException(other.toString)
       }
+    /** A string32 payload: 4-byte LE length, then the bytes. */
+    private def readBytes(): Array[Byte] = {
+      val b = new Array[Byte](readLE(4).toInt)
+      din.readFully(b); b
     }
   }
 
-  /** Decode a stream of framed rows. */
-  def decodeStream(in: InputStream, fields: Seq[Field]): Iterator[Row] = {
-    val din = new DataInputStream(in)
-    def readLE(bytes: Int): Long = {
-      var v = 0L; var i = 0
-      while (i < bytes) {
-        val b = din.read()
-        if (b < 0) throw new EOFException()
-        v |= (b.toLong & 0xff) << (8 * i); i += 1
-      }
-      v
-    }
-    new Iterator[Row] {
-      private var nextRow: Row = _
-      private var done = false
-      private def advance(): Unit =
-        try {
-          val tag = try readLE(2) catch { case _: EOFException => done = true; return }
-          require(tag == 0, s"unexpected skiff variant16 tag $tag")
-          val vals = fields.map { f =>
-            val present = if (f.optional) readLE(1) == 1 else true
-            if (!present) null
-            else f.dataType match {
-              case LongType => readLE(8)
-              case DoubleType => java.lang.Double.longBitsToDouble(readLE(8))
-              case BooleanType => readLE(1) == 1
-              case StringType =>
-                val n = readLE(4).toInt
-                val b = new Array[Byte](n); din.readFully(b); new String(b, "UTF-8")
-              case BinaryType =>
-                val n = readLE(4).toInt
-                val b = new Array[Byte](n); din.readFully(b); b
-              case other => throw new IllegalArgumentException(other.toString)
-            }
-          }
-          nextRow = Row.fromSeq(vals)
-        } catch { case _: EOFException => done = true }
-      advance()
-      def hasNext: Boolean = !done
-      def next(): Row = { val r = nextRow; advance(); r }
-    }
-  }
+  /** Decode a stream of framed rows (variant16 tag 0) into the Catalyst
+    * representation. */
+  def decodeStreamInternal(in: InputStream, fields: Seq[Field]): Iterator[InternalRow] =
+    decodeFrames(in, Seq(fields), tableIndex = false)
 
   /** Decode a multi-table stream (`variant16<schema0; schema1; ...>`):
     * each row's tag selects its table's schema; rows come back in the
     * union layout of [[unionTagged]] — `$table_index` first, then each
     * table's fields in table order (null outside the row's own table).
     */
-  def decodeStreamMulti(in: InputStream, schemas: Seq[Seq[Field]]): Iterator[Row] = {
-    val din = new DataInputStream(in)
-    val offsets = schemas.scanLeft(0)(_ + _.size)
-    val width = 1 + offsets.last
-    def readLE(bytes: Int): Long = {
-      var v = 0L; var i = 0
-      while (i < bytes) {
-        val b = din.read()
-        if (b < 0) throw new EOFException()
-        v |= (b.toLong & 0xff) << (8 * i); i += 1
-      }
-      v
-    }
-    new Iterator[Row] {
-      private var nextRow: Row = _
+  def decodeStreamMultiInternal(in: InputStream, schemas: Seq[Seq[Field]])
+      : Iterator[InternalRow] =
+    decodeFrames(in, schemas, tableIndex = true)
+
+  /** The frame loop behind both decoders. Table t's fields land at
+    * slots `base(t)` onward; with `tableIndex` the tag goes to slot 0.
+    * A clean or mid-frame EOF ends the stream. */
+  private def decodeFrames(in: InputStream, schemas: Seq[Seq[Field]],
+      tableIndex: Boolean): Iterator[InternalRow] = {
+    val r = new LeReader(in)
+    val tables = schemas.map(_.toArray).toArray
+    val base = tables.scanLeft(if (tableIndex) 1 else 0)(_ + _.length)
+    val width = base.last
+    new Iterator[InternalRow] {
+      private var nextRow: InternalRow = _
       private var done = false
       private def advance(): Unit =
         try {
-          val tag = try readLE(2).toInt catch { case _: EOFException => done = true; return }
-          require(tag >= 0 && tag < schemas.size, s"skiff table index $tag out of range")
+          val b0 = r.readFrameByte()
+          if (b0 < 0) { done = true; return }
+          val tag = ((b0 & 0xff).toLong | (r.readLE(1) << 8)).toInt
+          if (tableIndex)
+            require(tag < tables.length, s"skiff table index $tag out of range")
+          else require(tag == 0, s"unexpected skiff variant16 tag $tag")
           val vals = new Array[Any](width)
-          vals(0) = tag
-          schemas(tag).zipWithIndex.foreach { case (f, i) =>
-            val present = if (f.optional) readLE(1) == 1 else true
-            vals(1 + offsets(tag) + i) =
-              if (!present) null
-              else f.dataType match {
-                case LongType => readLE(8)
-                case DoubleType => java.lang.Double.longBitsToDouble(readLE(8))
-                case BooleanType => readLE(1) == 1
-                case StringType =>
-                  val n = readLE(4).toInt
-                  val b = new Array[Byte](n); din.readFully(b); new String(b, "UTF-8")
-                case BinaryType =>
-                  val n = readLE(4).toInt
-                  val b = new Array[Byte](n); din.readFully(b); b
-                case other => throw new IllegalArgumentException(other.toString)
-              }
-          }
-          nextRow = Row.fromSeq(vals.toIndexedSeq)
+          if (tableIndex) vals(0) = tag
+          val fs = tables(tag)
+          val off = base(tag)
+          var j = 0
+          while (j < fs.length) { vals(off + j) = r.readField(fs(j)); j += 1 }
+          nextRow = new GenericInternalRow(vals)
         } catch { case _: EOFException => done = true }
       advance()
       def hasNext: Boolean = !done
-      def next(): Row = { val r = nextRow; advance(); r }
+      def next(): InternalRow = { val row = nextRow; advance(); row }
     }
   }
 
@@ -335,82 +208,25 @@ object Skiff {
         outSchemas.zipWithIndex.flatMap { case (s, j) =>
           s.fields.map(f => StructField(s"t${j}_${f.name}", f.dataType, nullable = true))
         })
-    val cmd = command
-    val tagged = unionTagged(inputs)
-    val rdd = tagged.queryExecution.toRdd.mapPartitions { rows =>
-      if (!rows.hasNext) Iterator.empty
-      else PipeJob.run(cmd,
-        os => {
-          val scratch = new Array[Byte](8)
-          rows.foreach { r =>
-            val t = r.getInt(0)
-            encodeInternalTo(os, r, inFields(t), t, inOffsets(t), scratch)
-          }
-        },
-        is => decodeStreamMultiInternal(is, outFields))
-    }
-    org.apache.spark.sql.graft.shims
-      .internalCreateDataFrame(tagged.sparkSession, rdd, outStruct)
-  }
-
-  /** Multi-table decode into the Catalyst representation — same framing
-    * and union layout as [[decodeStreamMulti]]. */
-  def decodeStreamMultiInternal(in: InputStream, schemas: Seq[Seq[Field]])
-      : Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
-    val r = new LeReader(in)
-    val offsets = schemas.scanLeft(0)(_ + _.size)
-    val width = 1 + offsets.last
-    new Iterator[org.apache.spark.sql.catalyst.InternalRow] {
-      private var nextRow: org.apache.spark.sql.catalyst.InternalRow = _
-      private var done = false
-      private def advance(): Unit =
-        try {
-          val b0 = r.readFrameByte()
-          if (b0 < 0) { done = true; return }
-          val tag = ((b0 & 0xff).toLong | (r.readLE(1) << 8)).toInt
-          require(tag >= 0 && tag < schemas.size, s"skiff table index $tag out of range")
-          val vals = new Array[Any](width)
-          vals(0) = tag
-          val fs = schemas(tag)
-          var j = 0
-          while (j < fs.length) {
-            val f = fs(j)
-            val present = if (f.optional) r.readLE(1) == 1 else true
-            if (present) vals(1 + offsets(tag) + j) = f.dataType match {
-              case LongType => r.readLE(8)
-              case DoubleType => java.lang.Double.longBitsToDouble(r.readLE(8))
-              case BooleanType => r.readLE(1) == 1
-              case StringType =>
-                val b = new Array[Byte](r.readLE(4).toInt)
-                r.readFully(b)
-                org.apache.spark.unsafe.types.UTF8String.fromBytes(b)
-              case BinaryType =>
-                val b = new Array[Byte](r.readLE(4).toInt)
-                r.readFully(b); b
-              case other => throw new IllegalArgumentException(other.toString)
-            }
-            j += 1
-          }
-          nextRow =
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-        } catch { case _: EOFException => done = true }
-      advance()
-      def hasNext: Boolean = !done
-      def next(): org.apache.spark.sql.catalyst.InternalRow = {
-        val row = nextRow; advance(); row
-      }
-    }
+    PipeJob.pipeInternal(unionTagged(inputs), command, outStruct)(
+      (rows, os) => {
+        val scratch = new Array[Byte](8)
+        rows.foreach { r =>
+          val t = r.getInt(0)
+          encodeInternalTo(os, r, inFields(t), t, inOffsets(t), scratch)
+        }
+      },
+      is => decodeStreamMultiInternal(is, outFields))
   }
 
   /** DataFrame → per-partition Skiff byte streams (one blob per
     * partition = one job pipe). */
-  def encode(df: DataFrame): org.apache.spark.sql.Dataset[Array[Byte]] = {
+  def encode(df: DataFrame): Dataset[Array[Byte]] = {
     val fields = fieldsOf(df.schema)
-    df.mapPartitions { rows =>
-      val out = new ByteArrayOutputStream()
-      rows.foreach(r => out.write(encodeRow(r, fields)))
-      Iterator.single(out.toByteArray)
-    }(Encoders.BINARY)
+    PipeJob.encodeBlobs(df) { (rows, out) =>
+      val scratch = new Array[Byte](8)
+      rows.foreach(r => encodeInternalTo(out, r, fields, 0, 0, scratch))
+    }
   }
 
   /** User job over a Skiff pipe (user_job.cpp with Skiff job I/O):
@@ -420,25 +236,17 @@ object Skiff {
   def pipeMap(input: DataFrame, command: Seq[String], outSchema: StructType): DataFrame = {
     val inFields = fieldsOf(input.schema)
     val outFields = fieldsOf(outSchema)
-    val cmd = command
-    val rdd = input.queryExecution.toRdd.mapPartitions { rows =>
-      if (!rows.hasNext) Iterator.empty
-      else PipeJob.run(cmd,
-        os => {
-          val scratch = new Array[Byte](8)
-          rows.foreach(r => encodeInternalTo(os, r, inFields, 0, 0, scratch))
-        },
-        is => decodeStreamInternal(is, outFields))
-    }
-    org.apache.spark.sql.graft.shims
-      .internalCreateDataFrame(input.sparkSession, rdd, outSchema)
+    PipeJob.pipeInternal(input, command, outSchema)(
+      (rows, os) => {
+        val scratch = new Array[Byte](8)
+        rows.foreach(r => encodeInternalTo(os, r, inFields, 0, 0, scratch))
+      },
+      is => decodeStreamInternal(is, outFields))
   }
 
   /** Per-partition Skiff byte streams → DataFrame with `schema`. */
-  def decode(blobs: org.apache.spark.sql.Dataset[Array[Byte]], schema: StructType): DataFrame = {
+  def decode(blobs: Dataset[Array[Byte]], schema: StructType): DataFrame = {
     val fields = fieldsOf(schema)
-    blobs.mapPartitions { parts =>
-      parts.flatMap(b => decodeStream(new java.io.ByteArrayInputStream(b), fields))
-    }(Encoders.row(schema))
+    PipeJob.decodeBlobs(blobs, schema)(decodeStreamInternal(_, fields))
   }
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -17,12 +16,9 @@ object FuzzSweep {
     val (sfDir, outDir) = (args(0), args(1))
     val seedLo = args.lift(2).map(_.toLong).getOrElse(100L)
     val seedHi = args.lift(3).map(_.toLong).getOrElse(110L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the engine's own session, so the sweep checks the shipped rule set
+    val spark = graft.GraftSession.get(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
     graft.GraftSession.quietLogs(spark, "ERROR")
     new java.io.File(outDir).mkdirs()
 

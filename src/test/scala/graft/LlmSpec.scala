@@ -192,6 +192,16 @@ class LlmSpec extends SparkSpec {
     val multiRecall = (bf & multi).size.toDouble / bf.size
     assert(multiRecall >= 0.7, s"multi-table recall=$multiRecall")
     assert(multiRecall > recall, "8 tables must beat 1 table")
+    // a null embedding has no signatures: the row drops out of the
+    // index and out of the probes, so it is nobody's neighbour
+    val vecs = emb.select("vec_id", "embedding")
+    val nullRow = vecs.filter(col("vec_id") === 0).select(lit(-1L).as("vec_id"),
+      lit(null).cast(vecs.schema("embedding").dataType).as("embedding"))
+    val withNull = Similarity.lshTopK(vecs.union(nullRow),
+      queries.select("vec_id", "embedding").union(nullRow), 5,
+      dim = 64, bits = 8, probeRadius = 3)
+      .select("query_id", "item_id").as[(Long, Long)].collect()
+    assert(withNull.nonEmpty && !withNull.exists { case (q, i) => q == -1L || i == -1L })
   }
 
   test("ivf ANN: probing nprobe of nlist cells recovers most true neighbors") {

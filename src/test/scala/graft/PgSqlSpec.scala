@@ -418,6 +418,29 @@ class PgSqlSpec extends SparkSpec {
     assert(r.getBoolean(3))
   }
 
+  test("SIMILAR TO: word-boundary escapes translate outside bracket " +
+      "expressions only") {
+    val r = one(
+      """--!syntax_pg
+        |SELECT 'ab cd' SIMILAR TO '%b\y %' AS y_boundary,
+        |  'abcd' SIMILAR TO '%b\y%' AS y_mid_word,
+        |  'ab cd' SIMILAR TO '%\mcd' AS m_word_start""".stripMargin)
+    assert(r.getBoolean(0))
+    assert(!r.getBoolean(1))
+    assert(r.getBoolean(2))
+    // inside a class the escape is no class member: it fails loudly,
+    // under the user's own spelling, instead of becoming a backspace
+    // class ([\b]) or the class of the lookaround's characters
+    val y = intercept[Exception](one(
+      """--!syntax_pg
+        |SELECT concat('a', chr(8)) SIMILAR TO 'a[\y]' AS b""".stripMargin))
+    assert(causeMessages(y).contains("[\\y]"), causeMessages(y))
+    val m = intercept[Exception](one(
+      """--!syntax_pg
+        |SELECT 'a?' SIMILAR TO 'a[\m]' AS q""".stripMargin))
+    assert(causeMessages(m).contains("[\\m]"), causeMessages(m))
+  }
+
   test("ORDER BY(expr) gets the PG null-order injection like " +
       "ORDER BY expr (round-12 ADVICE)") {
     // PG: NULLS LAST on ASC — Spark's default would put them first

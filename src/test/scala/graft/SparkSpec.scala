@@ -27,4 +27,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Every message on `t`'s cause chain, one per line: an executor's
+    * error reaches the driver wrapped in a SparkException. */
+  def causeMessages(t: Throwable): String = Iterator.iterate(t)(_.getCause)
+    .takeWhile(_ != null).map(_.getMessage).mkString("\n")
 }

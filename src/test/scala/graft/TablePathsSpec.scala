@@ -171,4 +171,43 @@ class TablePathsSpec extends SparkSpec {
     spark.range(0, 7).toDF("v").write.mode("overwrite").parquet(s"$tp/a")
     assert(n() == 7, "table-path view served a stale member scan")
   }
+
+  test("table-path views: a same-mtime rewrite of another length re-resolves; " +
+      "superseded views are dropped") {
+    import java.nio.file.Files
+    val tp = Files.createTempDirectory("tstamp").toString
+    // single-file members: the one part file Spark writes for n rows
+    def parquetOf(n: Int): Array[Byte] = {
+      val d = Files.createTempDirectory("tstamp_src").toFile
+      spark.range(0, n).toDF("v").coalesce(1).write.mode("overwrite").parquet(d.toString)
+      Files.readAllBytes(d.listFiles().find(f =>
+        f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get.toPath)
+    }
+    val a = new java.io.File(tp, "a.parquet")
+    val b = new java.io.File(tp, "b.parquet")
+    Files.write(a.toPath, parquetOf(2))
+    Files.write(b.toPath, parquetOf(1))
+    val mtime = 1700000000000L
+    Seq(a, b).foreach(_.setLastModified(mtime))
+    def n(): Long = YqlSql.sql(spark,
+      s"SELECT CAST(COUNT(*) AS BIGINT) AS n FROM RANGE('$tp')").head().getLong(0)
+    def views(): Seq[String] = spark.catalog.listTables().collect().toSeq
+      .map(_.name).filter(_.startsWith("__g_tbl_"))
+      .filter(v => spark.table(v).inputFiles.exists(_.contains(tp)))
+    assert(n() == 3)
+    val lengths = scala.collection.mutable.Set(a.length)
+    (1 to 5).map(_ * 10000).foreach { rows =>
+      // rewritten in place under the same mtime: the directory and the
+      // member's mtime stay put, only the length moves. A stale view
+      // keeps the old length, and its one split then ends before the
+      // grown file's row group.
+      Files.write(a.toPath, parquetOf(rows))
+      a.setLastModified(mtime)
+      lengths += a.length
+      assert(a.lastModified == mtime)
+      assert(n() == rows + 1, s"stale view after rewriting a.parquet with $rows rows")
+    }
+    assert(lengths.size == 6, s"member lengths must all differ: $lengths")
+    assert(views().size == 1, s"superseded views leak: ${views()}")
+  }
 }

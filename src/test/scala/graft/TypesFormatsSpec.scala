@@ -3,8 +3,10 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.sources.{Formats, Yson}
 import graft.types.YtTypes
 import graft.types.YtTypes._
@@ -136,7 +138,7 @@ class TypesFormatsSpec extends SparkSpec {
 
     // golden layout: variant16 tag 0, int64 LE, variant8 present +
     // double LE, boolean byte, variant8 present + string32
-    val bytes = Skiff.encodeRow(Row(258L, 1.0, true, "ab"), fields)
+    val bytes = skiffBytes(fields, 0, InternalRow(258L, 1.0, true, utf8("ab")))
     val expect = Array[Byte](0, 0,                      // variant16 tag
       2, 1, 0, 0, 0, 0, 0, 0,                           // 258 LE
       1,                                                // v present
@@ -147,10 +149,11 @@ class TypesFormatsSpec extends SparkSpec {
     assert(bytes.toSeq == expect.toSeq)
 
     // nulls in optional fields
-    val withNulls = Skiff.encodeRow(Row(5L, null, false, null), fields)
-    val back = Skiff.decodeStream(
-      new java.io.ByteArrayInputStream(bytes ++ withNulls), fields).toSeq
-    assert(back == Seq(Row(258L, 1.0, true, "ab"), Row(5L, null, false, null)))
+    val withNulls = skiffBytes(fields, 0, InternalRow(5L, null, false, null))
+    val back = Skiff.decodeStreamInternal(
+      new java.io.ByteArrayInputStream(bytes ++ withNulls), fields)
+      .map(_.toSeq(schema)).toSeq
+    assert(back == Seq(Seq(258L, 1.0, true, utf8("ab")), Seq(5L, null, false, null)))
   }
 
   test("skiff: distributed encode/decode round-trips a DataFrame") {
@@ -168,8 +171,11 @@ class TypesFormatsSpec extends SparkSpec {
     import spark.implicits._
     // golden: a row of table 1 frames with tag 0x0001 LE
     val s1 = StructType(Seq(StructField("n", LongType, nullable = false)))
-    val tagged = Skiff.encodeRowTagged(Row(7L), Skiff.fieldsOf(s1), 1, 0)
+    val tagged = skiffBytes(Skiff.fieldsOf(s1), 1, InternalRow(7L))
     assert(tagged.toSeq == Seq[Byte](1, 0, 7, 0, 0, 0, 0, 0, 0, 0))
+    assert(Skiff.decodeStreamMultiInternal(new java.io.ByteArrayInputStream(tagged),
+      Seq(Skiff.fieldsOf(s1), Skiff.fieldsOf(s1))).map(_.toSeq(
+        Seq(IntegerType, LongType, LongType))).toSeq == Seq(Seq(1, null, 7L)))
     // two tables with DIFFERENT schemas through one cat job
     val a = Seq((1L, "x"), (2L, "y")).toDF("k", "s")
     val b = Seq((10L, 0.5), (20L, 1.5), (30L, 2.5)).toDF("k", "v")
@@ -359,23 +365,27 @@ class TypesFormatsSpec extends SparkSpec {
       StructField("s", StringType)))
     val fields = Proto.fieldsOf(schema)
 
-    // golden layout: field 1 varint 300, field 2 fixed64 1.0,
-    // field 3 varint 1, field 4 len-delimited "ab"
-    val bytes = Proto.encodeRow(Row(300L, 1.0, true, "ab"), fields)
-    val expect = Array[Byte](
+    // golden layout: lenval frame, then field 1 varint 300, field 2
+    // fixed64 1.0, field 3 varint 1, field 4 len-delimited "ab"
+    val bytes = protoBytes(fields, InternalRow(300L, 1.0, true, utf8("ab")))
+    val expect = Array[Byte](18, 0, 0, 0,               // lenval: 18 bytes
       0x08, 0xac.toByte, 0x02,                          // 1<<3|0, varint 300
       0x11, 0, 0, 0, 0, 0, 0, -16, 63,                  // 2<<3|1, 1.0 bits LE
       0x18, 1,                                          // 3<<3|0, true
       0x22, 2, 'a'.toByte, 'b'.toByte)                  // 4<<3|2, "ab"
     assert(bytes.toSeq == expect.toSeq)
+    def decode(b: Array[Byte], fs: Seq[Proto.Field], types: Seq[DataType]) =
+      Proto.decodeStreamInternal(new java.io.ByteArrayInputStream(b), fs)
+        .map(_.toSeq(types)).toSeq
 
     // null fields are absent on the wire and decode back to null
-    val sparse = Proto.encodeRow(Row(7L, null, false, null), fields)
-    assert(Proto.decodeRow(sparse, fields) == Row(7L, null, false, null))
+    val sparse = protoBytes(fields, InternalRow(7L, null, false, null))
+    assert(sparse.toSeq == Seq[Byte](4, 0, 0, 0, 0x08, 7, 0x18, 0))
+    assert(decode(sparse, fields, schema.map(_.dataType)) == Seq(Seq(7L, null, false, null)))
 
     // a decoder with a narrower descriptor skips unknown fields
     val narrow = Seq(Proto.Field("k", LongType, 1), Proto.Field("s", StringType, 4))
-    assert(Proto.decodeRow(bytes, narrow) == Row(300L, "ab"))
+    assert(decode(bytes, narrow, Seq(LongType, StringType)) == Seq(Seq(300L, utf8("ab"))))
   }
 
   test("protobuf: distributed lenval round-trip and cat pipe job") {
@@ -392,89 +402,105 @@ class TypesFormatsSpec extends SparkSpec {
     assert(piped.exceptAll(df).count() == 0 && df.exceptAll(piped).count() == 0)
   }
 
-  test("InternalRow pipe codecs are byte-identical to the Row codecs") {
+  test("golden wire vectors: skiff and protobuf codecs, both directions") {
     import graft.sources.{Proto, Skiff}
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.unsafe.types.UTF8String
-    val rows = Seq(
-      Row(258L, 1.5, true, "ab", "bin0".getBytes("UTF-8")),
-      Row(5L, null, false, null, null),
-      Row(-7L, -0.0, null, "héllo €", Array[Byte](0, 1, -1)),
-      Row(Long.MaxValue, Double.NaN, true, "", Array.empty[Byte]))
-    val schema = StructType(Seq(
-      StructField("k", LongType, nullable = false),
-      StructField("v", DoubleType), StructField("ok", BooleanType),
-      StructField("s", StringType), StructField("b", BinaryType)))
-    def internal(r: Row): InternalRow = InternalRow.fromSeq(
-      r.toSeq.map {
-        case s: String => UTF8String.fromString(s)
-        case x => x
-      })
+    def internal(r: Seq[Any]): InternalRow = InternalRow.fromSeq(r.map {
+      case s: String => utf8(s)
+      case x => x
+    })
+    val sBytes = skiffBytes(Skiff.fieldsOf(goldenSchema), 0, goldenRows.map(internal): _*)
+    assert(sBytes.toSeq == goldenSkiff.toSeq, "skiff encoder left the golden bytes")
+    val pBytes = protoBytes(Proto.fieldsOf(goldenSchema), goldenRows.map(internal): _*)
+    assert(pBytes.toSeq == goldenProto.toSeq, "protobuf encoder left the golden bytes")
 
-    // Skiff: same frame bytes from both encoders, same values back
-    val sf = Skiff.fieldsOf(schema)
-    val rowBytes = new java.io.ByteArrayOutputStream()
-    rows.foreach(r => Skiff.encodeRowTaggedTo(rowBytes, r, sf, 0, 0))
-    val intBytes = new java.io.ByteArrayOutputStream()
-    val scratch = new Array[Byte](8)
-    rows.foreach(r => Skiff.encodeInternalTo(intBytes, internal(r), sf, 0, 0, scratch))
-    assert(java.util.Arrays.equals(rowBytes.toByteArray, intBytes.toByteArray),
-      "skiff internal encoder diverged from the Row encoder")
-    val decoded = Skiff.decodeStreamInternal(
-      new java.io.ByteArrayInputStream(rowBytes.toByteArray), sf).toVector
-    val reference = Skiff.decodeStream(
-      new java.io.ByteArrayInputStream(rowBytes.toByteArray), sf).toVector
-    assert(decoded.length == reference.length)
-    decoded.zip(reference).foreach { case (ir, r) =>
-      assert(ir.numFields == r.length)
-      (0 until r.length).foreach { i =>
-        val want = r.get(i) match {
-          case s: String => UTF8String.fromString(s)
-          case x => x
-        }
-        val got = if (ir.isNullAt(i)) null
-          else ir.get(i, schema.fields(i).dataType)
-        (want, got) match {
-          case (a: Array[Byte], b: Array[Byte]) =>
-            assert(java.util.Arrays.equals(a, b))
-          case (a: Double, b: Double) => // NaN-safe, bit-exact
-            assert(java.lang.Double.doubleToLongBits(a) ==
-              java.lang.Double.doubleToLongBits(b), s"field $i: $a != $b")
-          case (a, b) => assert(a == b, s"field $i: $a != $b")
+    // both decoders give back exactly the literal values
+    def check(decoded: Seq[InternalRow]): Unit = {
+      assert(decoded.length == goldenRows.length)
+      decoded.zip(goldenRows).foreach { case (ir, want) =>
+        assert(ir.numFields == want.length)
+        want.indices.foreach { i =>
+          val got = if (ir.isNullAt(i)) null
+            else ir.get(i, goldenSchema.fields(i).dataType)
+          (want(i), got) match {
+            case (a: Array[Byte], b: Array[Byte]) =>
+              assert(java.util.Arrays.equals(a, b), s"field $i")
+            case (a: Double, b: Double) => // NaN-safe, bit-exact
+              assert(java.lang.Double.doubleToRawLongBits(a) ==
+                java.lang.Double.doubleToRawLongBits(b), s"field $i: $a != $b")
+            case (a: String, b: UTF8String) => assert(utf8(a) == b, s"field $i: $a != $b")
+            case (a, b) => assert(a == b, s"field $i: $a != $b")
+          }
         }
       }
     }
-
-    // Proto: same lenval stream from both encoders, same values back
-    val pf = Proto.fieldsOf(schema)
-    val pRow = new java.io.ByteArrayOutputStream()
-    Proto.encodeFramedStream(rows.iterator, pf, pRow)
-    val pInt = new java.io.ByteArrayOutputStream()
-    Proto.encodeFramedStreamInternal(rows.iterator.map(internal), pf, pInt)
-    assert(java.util.Arrays.equals(pRow.toByteArray, pInt.toByteArray),
-      "proto internal encoder diverged from the Row encoder")
-    val pDecoded = Proto.decodeStreamInternal(
-      new java.io.ByteArrayInputStream(pRow.toByteArray), pf).toVector
-    val pReference = Proto.decodeStream(
-      new java.io.ByteArrayInputStream(pRow.toByteArray), pf).toVector
-    assert(pDecoded.length == pReference.length)
-    pDecoded.zip(pReference).foreach { case (ir, r) =>
-      (0 until r.length).foreach { i =>
-        val want = r.get(i) match {
-          case s: String => UTF8String.fromString(s)
-          case x => x
-        }
-        val got = if (ir.isNullAt(i)) null
-          else ir.get(i, schema.fields(i).dataType)
-        (want, got) match {
-          case (a: Array[Byte], b: Array[Byte]) =>
-            assert(java.util.Arrays.equals(a, b))
-          case (a: Double, b: Double) => // NaN-safe, bit-exact
-            assert(java.lang.Double.doubleToLongBits(a) ==
-              java.lang.Double.doubleToLongBits(b), s"field $i: $a != $b")
-          case (a, b) => assert(a == b, s"field $i: $a != $b")
-        }
-      }
-    }
+    check(Skiff.decodeStreamInternal(new java.io.ByteArrayInputStream(goldenSkiff),
+      Skiff.fieldsOf(goldenSchema)).toVector)
+    check(Proto.decodeStreamInternal(new java.io.ByteArrayInputStream(goldenProto),
+      Proto.fieldsOf(goldenSchema)).toVector)
   }
+
+  test("protobuf: a message without a required field fails, naming it") {
+    import graft.sources.Proto
+    val df = Seq((1L, Option(2L)), (2L, Option.empty[Long])).toDF("k", "v")
+    val required = StructType(Seq(
+      StructField("k", LongType), StructField("v", LongType, nullable = false)))
+    // a pipe job whose output omits `v` must not fill the column with null
+    val piped = intercept[Exception](Proto.pipeMap(df, Seq("cat"), required).collect())
+    assert(causeMessages(piped).contains("required field 'v'"), causeMessages(piped))
+    // the blob decode keeps failing on the same message
+    val blob = intercept[Exception](Proto.decode(Proto.encode(df), required).collect())
+    assert(causeMessages(blob).contains("'v'"), causeMessages(blob))
+    // with every `v` present the same schema decodes
+    val full = df.na.fill(0L)
+    assert(Proto.decode(Proto.encode(full), required).collect().toSeq ==
+      Seq(Row(1L, 2L), Row(2L, 0L)))
+  }
+
+  private def utf8(s: String): UTF8String = UTF8String.fromString(s)
+
+  private def skiffBytes(fields: Seq[graft.sources.Skiff.Field], tag: Int,
+      rows: InternalRow*): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val scratch = new Array[Byte](8)
+    rows.foreach(r => graft.sources.Skiff.encodeInternalTo(out, r, fields, tag, 0, scratch))
+    out.toByteArray
+  }
+
+  private def protoBytes(fields: Seq[graft.sources.Proto.Field],
+      rows: InternalRow*): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    graft.sources.Proto.encodeFramedStreamInternal(rows.iterator, fields, out)
+    out.toByteArray
+  }
+
+  // The golden vector: NaN, -0.0, multi-byte UTF-8, an empty binary,
+  // Long.MaxValue and nulls. goldenSkiff and goldenProto are the bytes
+  // the Row-based codecs (which these InternalRow codecs replaced)
+  // wrote for it; the wire format must not move by a single byte.
+  private val goldenSchema = StructType(Seq(
+    StructField("k", LongType, nullable = false),
+    StructField("v", DoubleType), StructField("ok", BooleanType),
+    StructField("s", StringType), StructField("b", BinaryType)))
+  private val goldenRows: Seq[Seq[Any]] = Seq(
+    Seq(258L, 1.5, true, "ab", "bin0".getBytes("UTF-8")),
+    Seq(5L, null, false, null, null),
+    Seq(-7L, -0.0, null, "héllo €", Array[Byte](0, 1, -1)),
+    Seq(Long.MaxValue, Double.NaN, true, "", Array.empty[Byte]))
+  private val goldenSkiff = Array[Byte](
+    0, 0, 2, 1, 0, 0, 0, 0, 0, 0, 1, 0, 0, 0, 0, 0,
+    0, -8, 63, 1, 1, 1, 2, 0, 0, 0, 97, 98, 1, 4, 0, 0,
+    0, 98, 105, 110, 48, 0, 0, 5, 0, 0, 0, 0, 0, 0, 0, 0,
+    1, 0, 0, 0, 0, 0, -7, -1, -1, -1, -1, -1, -1, -1, 1, 0,
+    0, 0, 0, 0, 0, 0, -128, 0, 1, 10, 0, 0, 0, 104, -61, -87,
+    108, 108, 111, 32, -30, -126, -84, 1, 3, 0, 0, 0, 0, 1, -1, 0,
+    0, -1, -1, -1, -1, -1, -1, -1, 127, 1, 0, 0, 0, 0, 0, 0,
+    -8, 127, 1, 1, 1, 0, 0, 0, 0, 1, 0, 0, 0, 0)
+  private val goldenProto = Array[Byte](
+    24, 0, 0, 0, 8, -126, 2, 17, 0, 0, 0, 0, 0, 0, -8, 63,
+    24, 1, 34, 2, 97, 98, 42, 4, 98, 105, 110, 48, 4, 0, 0, 0,
+    8, 5, 24, 0, 37, 0, 0, 0, 8, -7, -1, -1, -1, -1, -1, -1,
+    -1, -1, 1, 17, 0, 0, 0, 0, 0, 0, 0, -128, 34, 10, 104, -61,
+    -87, 108, 108, 111, 32, -30, -126, -84, 42, 3, 0, 1, -1, 25, 0, 0,
+    0, 8, -1, -1, -1, -1, -1, -1, -1, -1, 127, 17, 0, 0, 0, 0,
+    0, 0, -8, 127, 24, 1, 34, 0, 42, 0)
 }
