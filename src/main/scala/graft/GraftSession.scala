@@ -118,13 +118,11 @@ object GraftSession {
     * rule holds on a real cluster — fan-out follows data volume, AQE
     * coalesces the remainder. */
   def tuneShuffleFor(spark: SparkSession, dir: String): Unit = {
-    def walk(f: java.io.File): Long =
-      if (f.isFile) f.length
-      else Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
     // An explicit SPARK_GRAFT_HEADROOM override (read at builder time)
     // wins over the data-derived estimate — don't clobber it here.
     if (sys.env.contains("SPARK_GRAFT_HEADROOM")) return
-    val bytes = try walk(new java.io.File(dir)) catch { case _: Exception => 0L }
+    val bytes = try graft.sources.Tables.diskBytes(new java.io.File(dir))
+      catch { case _: Exception => 0L }
     val cpus = spark.sparkContext.defaultParallelism.max(1)
     val advisory = 64L << 20
     val decompressed = bytes * 4 // mirrors fileCompressionFactor

@@ -69,17 +69,17 @@ object YqlTablePaths {
   private val MemberGlob = "^(.*)/\\{([^{}]*)\\}$".r
 
   /** (mtime, length) of every file a scan of `path` reads — the member
-    * itself, or each member a `dir/{a,b}` glob names — as
-    * [[graft.sources.Tables]] stamps its relations: an in-session
+    * itself, or each member a `dir/{a,b}` glob names — stamped by
+    * [[graft.sources.Tables.stampOf]] as relations are: an in-session
     * rewrite of a member invalidates the cached view even when the
     * rewrite keeps its mtime. One stat per member per lowering. */
   private def stampOf(path: String): Seq[(Long, Long)] = {
-    val files = path match {
+    val members = path match {
       case MemberGlob(dir, names) if !new java.io.File(path).exists =>
-        names.split(",").toSeq.map(n => new java.io.File(dir, n))
-      case _ => Seq(new java.io.File(path))
+        names.split(",").toSeq.map(n => new java.io.File(dir, n).getPath)
+      case _ => Seq(path)
     }
-    files.map(f => (f.lastModified, f.length))
+    members.map(graft.sources.Tables.stampOf)
   }
 
   /** The FROM-able reference for a member path: a cached registered

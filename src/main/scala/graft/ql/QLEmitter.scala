@@ -46,7 +46,7 @@ object QLEmitter {
   /** Typed `Any` comparison lowering (composite_compare.cpp
     * CompareYsonValues; ql_query_ut.cpp CompareAny/CompareAnyMixed/
     * OrderByAny): when an operand of a comparison is an Any column
-    * (per `anyCols`, collected from field metadata by [[SelectRows]])
+    * (per the [[TableCols]] inventories from [[SelectRows.anyScope]])
     * or an Any-producing call, ordering ops route through
     * `any_compare` and ORDER BY keys through `any_sort_key` (an
     * order-isomorphic byte encoding, so the sort stays a plain
@@ -65,30 +65,22 @@ object QLEmitter {
   final case class TableCols(all: Set[String], any: Set[String],
       u64: Set[String] = Set.empty)
 
-  def toSql(q: Query, anyCols: Set[String]): String =
-    // legacy name-only resolution (no per-table schema available):
-    // any ref whose last segment matches is treated as Any
-    toSql(rewriteAnyQuery(q, AnyResolution(Map.empty, anyCols)))
-
+  /** `byTable` maps VIEW names (not aliases) to their column
+    * inventories; a ref no inventory tags as Any (every ref, when
+    * `byTable` is empty) is typed. */
   def toSql(q: Query, byTable: Map[String, TableCols]): String =
-    toSql(rewriteAnyQuery(q, AnyResolution(byTable, Set.empty)))
-
-  /** How Any-ness of a column reference resolves: `byTable` maps VIEW
-    * names (not aliases) to their column inventories; `nameFallback`
-    * is the legacy last-segment match used when no schema info exists. */
-  private final case class AnyResolution(
-      byTable: Map[String, TableCols], nameFallback: Set[String])
+    toSql(rewriteAnyQuery(q, byTable))
 
   /** Aliases visible in `q`'s FROM/JOIN scope → their inventories. */
-  private def scopeOf(q: Query, res: AnyResolution): Map[String, TableCols] = {
+  private def scopeOf(q: Query, byTable: Map[String, TableCols]): Map[String, TableCols] = {
     def ofTable(path: String, alias: Option[String]): (String, TableCols) = {
       val vn = SelectRows.viewName(path)
-      alias.getOrElse(vn) -> res.byTable.getOrElse(vn, TableCols(Set.empty, Set.empty))
+      alias.getOrElse(vn) -> byTable.getOrElse(vn, TableCols(Set.empty, Set.empty))
     }
     val fromScope = q.from.map {
       case TableRef(path, alias) => ofTable(path, alias)
       case SubquerySource(sub, alias) =>
-        alias.getOrElse("_sub") -> subqueryCols(sub, res)
+        alias.getOrElse("_sub") -> subqueryCols(sub, byTable)
     }
     val joinScope = q.joins.collect {
       case JoinClause(_, TableRef(path, alias), _, _, _) => ofTable(path, alias)
@@ -98,14 +90,14 @@ object QLEmitter {
 
   /** The output inventory of a subquery source: select-item names, Any
     * iff the item's expression is Anyish in the subquery's own scope. */
-  private def subqueryCols(sub: Query, res: AnyResolution): TableCols = {
-    val inner = scopeOf(sub, res)
+  private def subqueryCols(sub: Query, byTable: Map[String, TableCols]): TableCols = {
+    val inner = scopeOf(sub, byTable)
     val named = sub.select.flatMap { si =>
       val name = si.alias.orElse(si.e match {
         case Ref(parts) => Some(parts.last)
         case _ => None
       })
-      name.map(n => (n, isAnyish(si.e, inner, res), isU64ish(si.e, inner)))
+      name.map(n => (n, isAnyish(si.e, inner), isU64ish(si.e, inner)))
     }
     val starCols =
       if (sub.select.exists(_.e == Star)) inner.values.toSeq else Nil
@@ -115,11 +107,9 @@ object QLEmitter {
       named.collect { case (n, _, true) => n }.toSet ++ starCols.flatMap(_.u64))
   }
 
-  private def isAnyish(e: Expr, scope: Map[String, TableCols],
-      res: AnyResolution): Boolean = e match {
+  private def isAnyish(e: Expr, scope: Map[String, TableCols]): Boolean = e match {
     case Ref(parts) =>
-      if (res.byTable.isEmpty) res.nameFallback.contains(parts.last)
-      else if (parts.length >= 2 && scope.contains(parts.head))
+      if (parts.length >= 2 && scope.contains(parts.head))
         scope(parts.head).any.contains(parts(1))
       else {
         // unqualified: Any iff every in-scope owner tags it Any
@@ -149,9 +139,8 @@ object QLEmitter {
     case _ => false
   }
 
-  private def rewriteAnyExpr(e: Expr, scope: Map[String, TableCols],
-      res: AnyResolution): Expr = {
-    def anyish(x: Expr) = isAnyish(x, scope, res)
+  private def rewriteAnyExpr(e: Expr, scope: Map[String, TableCols]): Expr = {
+    def anyish(x: Expr) = isAnyish(x, scope)
     def u64ish(x: Expr) = isU64ish(x, scope)
     def wrap(x: Expr): Expr =
       if (anyish(x)) x else Call("to_any", Seq(x))
@@ -183,19 +172,19 @@ object QLEmitter {
         val fn = Map("<" -> "u64_lt", "<=" -> "u64_leq",
           ">" -> "u64_gt", ">=" -> "u64_geq")(op)
         Some(Bin("raw=", Call(fn,
-          Seq(rewriteAnyExpr(l, scope, res), rewriteAnyExpr(r, scope, res))),
+          Seq(rewriteAnyExpr(l, scope), rewriteAnyExpr(r, scope))),
           BoolLit(true)))
       case Bin("/", l, r) if u64ish(l) || u64ish(r) =>
         Some(Call("u64_div",
-          Seq(rewriteAnyExpr(l, scope, res), rewriteAnyExpr(r, scope, res))))
+          Seq(rewriteAnyExpr(l, scope), rewriteAnyExpr(r, scope))))
       case Bin("%", l, r) if u64ish(l) || u64ish(r) =>
         Some(Call("u64_mod",
-          Seq(rewriteAnyExpr(l, scope, res), rewriteAnyExpr(r, scope, res))))
+          Seq(rewriteAnyExpr(l, scope), rewriteAnyExpr(r, scope))))
       case Bin(op @ ("=" | "!="), l, r) if anyish(l) != anyish(r) =>
         Some(Bin(op, wrap(l), wrap(r)))
       case Call("make_list", args, _) if needsAnyForm(args) =>
         Some(Call("any_make_list",
-          args.map(a => wrap(rewriteAnyExpr(a, scope, res)))))
+          args.map(a => wrap(rewriteAnyExpr(a, scope)))))
       case Call("make_map", args, _) =>
         require(args.length % 2 == 0,
           "make_map: expected an even number of arguments")
@@ -205,14 +194,14 @@ object QLEmitter {
         }
         if (needsAnyForm(args.grouped(2).map(_.last).toSeq))
           Some(Call("any_make_map",
-            args.map(a => wrap(rewriteAnyExpr(a, scope, res)))))
+            args.map(a => wrap(rewriteAnyExpr(a, scope)))))
         else None
       // list functions over Any-carrier lists compare canonical JSON
       // fragments element-wise (ql_query_ut.cpp ListHasIntersection:
       // entity elements never match, an empty side has no intersection)
       case Call("list_has_intersection", args, _) if args.exists(anyish) =>
         Some(Call("any_list_has_intersection",
-          args.map(a => wrap(rewriteAnyExpr(a, scope, res)))))
+          args.map(a => wrap(rewriteAnyExpr(a, scope)))))
       case Call("list_contains", Seq(l, v), _) if anyish(l) =>
         // the needle must be a concrete v1 scalar — an Any needle is a
         // type error (ql_expressions_ut.cpp ListContainsAny: "Wrong
@@ -220,8 +209,8 @@ object QLEmitter {
         if (anyish(v)) throw new IllegalArgumentException(
           "Wrong type for argument 2 to function list_contains")
         Some(Call("any_list_contains",
-          Seq(wrap(rewriteAnyExpr(l, scope, res)),
-            wrap(rewriteAnyExpr(v, scope, res)))))
+          Seq(wrap(rewriteAnyExpr(l, scope)),
+            wrap(rewriteAnyExpr(v, scope)))))
       case _ => None
     }
   }
@@ -254,11 +243,11 @@ object QLEmitter {
     * [[SelectRows.transpile]] before lowering — NOT from toSql, which
     * also lowers synthesized helper queries (the WITH TOTALS totals
     * row is a legitimate global aggregate). Recurses into FROM
-    * subqueries. Throws IllegalArgumentException (never
-    * QLParseException, which would trip the legacy-transpiler
-    * fallback and mask the diagnostic). */
+    * subqueries. Throws IllegalArgumentException: these are semantic
+    * diagnostics on a well-formed query, not parse errors, so they
+    * carry no QLParseException position. */
   def validate(q: Query, byTable: Map[String, TableCols]): Unit =
-    validateScoped(q, AnyResolution(byTable, Set.empty))
+    validateScoped(q, byTable)
 
   /** Nesting depth of an expression tree (for the reference's
     * MaxExpressionDepth = 50 guard, ql_query_ut.cpp TooBigQuery /
@@ -285,8 +274,8 @@ object QLEmitter {
   /** query_preparer.cpp:35 MaxJoinNumber. */
   private val MaxJoinNumber = 200
 
-  private def validateScoped(q: Query, res: AnyResolution): Unit = {
-    val scope = scopeOf(q, res)
+  private def validateScoped(q: Query, byTable: Map[String, TableCols]): Unit = {
+    val scope = scopeOf(q, byTable)
     // join count cap (query_preparer.cpp:1110, ql_query_ut.cpp BigJoin)
     if (q.joins.count(_.isInstanceOf[JoinClause]) > MaxJoinNumber)
       throw new IllegalArgumentException(
@@ -348,7 +337,7 @@ object QLEmitter {
           throw new IllegalArgumentException(
             "Type inference failed: greatest with untyped NULL argument")
         case InList(tuple, rows, _) if rows.flatten.contains(NullLit) &&
-            tuple.exists(t => isAnyish(t, scope, res)) =>
+            tuple.exists(t => isAnyish(t, scope)) =>
           throw new IllegalArgumentException(
             "Cannot use expression of type null with an Any operand in IN")
         case _ => ()
@@ -397,18 +386,18 @@ object QLEmitter {
       q.orderBy.foreach(o => checkScalar(o.e))
     }
     q.from.foreach {
-      case SubquerySource(sub, _) => validateScoped(sub, res)
+      case SubquerySource(sub, _) => validateScoped(sub, byTable)
       case _ => ()
     }
   }
 
-  private def rewriteAnyQuery(q: Query, res: AnyResolution): Query = {
-    val scope = scopeOf(q, res)
-    def rw(e: Expr): Expr = rewriteAnyExpr(e, scope, res)
+  private def rewriteAnyQuery(q: Query, byTable: Map[String, TableCols]): Query = {
+    val scope = scopeOf(q, byTable)
+    def rw(e: Expr): Expr = rewriteAnyExpr(e, scope)
     q.copy(
       select = q.select.map(si => si.copy(e = rw(si.e))),
       from = q.from.map {
-        case SubquerySource(sub, a) => SubquerySource(rewriteAnyQuery(sub, res), a)
+        case SubquerySource(sub, a) => SubquerySource(rewriteAnyQuery(sub, byTable), a)
         case other => other
       },
       joins = q.joins.map {
@@ -423,7 +412,7 @@ object QLEmitter {
       having = q.having.map(rw),
       orderBy = q.orderBy.map { o =>
         val e1 = rw(o.e)
-        if (isAnyish(e1, scope, res)) o.copy(e = Call("any_sort_key", Seq(e1)))
+        if (isAnyish(e1, scope)) o.copy(e = Call("any_sort_key", Seq(e1)))
         // unsigned ordering: bias the bits so the signed sort is the
         // unsigned order (order-isomorphic, stays a plain binary sort)
         else if (isU64ish(e1, scope)) o.copy(e = Call("u64_sort_key", Seq(e1)))

@@ -379,8 +379,8 @@ object QLParser {
       case TIdent(s, _) => s
       // a reserved word where an identifier is required is a firm
       // diagnostic (parser.ypp / ql_query_ut.cpp KeywordAlias:
-      // "unexpected keyword") — NOT a QLParseException, which would
-      // send the query to the legacy transpiler and mask the error
+      // "unexpected keyword"), raised as IllegalArgumentException with
+      // the reference's wording rather than a generic parse error
       case TKw(k, pos) => throw new IllegalArgumentException(
         s"unexpected keyword ${k.toLowerCase} at $pos")
       case t => throw QLParseException("expected identifier", t.pos)

@@ -33,8 +33,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     projection, bare expr in GROUP BY;
   *   - `WITH TOTALS` → group rows UNION ALL totals row with the
   *     reference's order/limit/having/empty/null-key semantics (see
-  *     [[QLEmitter.toSql]]; the legacy regex fallback lowers to
-  *     ROLLUP);
+  *     [[QLEmitter.toSql]]);
   *   - `OFFSET k LIMIT n` → `LIMIT n OFFSET k`;
   *   - `GROUP BY <literal>` groups by a constant, never an ordinal
   *     (spark.sql.groupByOrdinal=false during execution).
@@ -75,25 +74,23 @@ object SelectRows {
     apply(spark, ql, catalog, Options())
 
   def apply(spark: SparkSession, ql: String, catalog: Map[String, DataFrame],
-      options: Options): DataFrame = {
+      options: Options): DataFrame = run(spark, ql, catalog, options)._1
+
+  /** [[apply]]'s body: the result DataFrame plus the Spark SQL text it
+    * handed to `spark.sql` (what [[explain]] prints). */
+  private def run(spark: SparkSession, ql: String, catalog: Map[String, DataFrame],
+      options: Options): (DataFrame, String) = {
     graft.functions.QLFunctions.registerAll(spark)
     // Parse ONCE; every downstream stage (option checks, index rewrite,
-    // emitter) threads this result. A parse failure is remembered: the
-    // prepare-time checks skip (as before), and the transpile stage
-    // either falls back to the legacy rewriter (QLParseException) or
-    // rethrows (anything else) — same visible behavior as the old
-    // parse-per-stage code, at one parse per query.
-    val (parsedQ, parseErr): (Option[QLParser.Query], Option[Throwable]) =
-      try (Some(QLParser.parse(ql)), None)
-      catch { case e: Exception => (None, Some(e)) }
+    // emitter) threads this query. A QLParseException propagates to
+    // the caller with the parser's position.
+    val parsed = QLParser.parse(ql)
     if (!options.allowFullScan) {
       // allow_full_scan=%false (test_query.py test_full_scan): an
       // unfiltered scan is a policy error at prepare time
-      parsedQ.foreach { parsed =>
-        if (parsed.where.isEmpty && parsed.limit.isEmpty)
-          throw new IllegalArgumentException(
-            "Query requires a full scan, which is disabled by the allow_full_scan option")
-      }
+      if (parsed.where.isEmpty && parsed.limit.isEmpty)
+        throw new IllegalArgumentException(
+          "Query requires a full scan, which is disabled by the allow_full_scan option")
     }
     {
       // joins on nonsimple (type_v3) columns raise at prepare time —
@@ -107,20 +104,18 @@ object SelectRows {
              DateType | TimestampType => false
         case _ => true // struct / array / map / variant
       }
-      parsedQ.foreach { parsed =>
-        val fromDf = parsed.from.collect {
-          case QLParser.TableRef(p, _) => catalog.get(p)
-        }.flatten
-        parsed.joins.foreach {
-          case QLParser.JoinClause(_, table, using, _, _) if using.nonEmpty =>
-            val sides = catalog.get(table.path).toSeq ++ fromDf
-            val bad = using.filter(c => sides.exists(df =>
-              df.schema.fields.exists(f => f.name == c && nonsimple(f.dataType))))
-            if (bad.nonEmpty) throw new IllegalArgumentException(
-              s"Join key ${bad.head} carries a nonsimple type and cannot " +
-              "be used in a join equation")
-          case _ => ()
-        }
+      val fromDf = parsed.from.collect {
+        case QLParser.TableRef(p, _) => catalog.get(p)
+      }.flatten
+      parsed.joins.foreach {
+        case QLParser.JoinClause(_, table, using, _, _) if using.nonEmpty =>
+          val sides = catalog.get(table.path).toSeq ++ fromDf
+          val bad = using.filter(c => sides.exists(df =>
+            df.schema.fields.exists(f => f.name == c && nonsimple(f.dataType))))
+          if (bad.nonEmpty) throw new IllegalArgumentException(
+            s"Join key ${bad.head} carries a nonsimple type and cannot " +
+            "be used in a join equation")
+        case _ => ()
       }
     }
     if (!options.allowJoinWithoutIndex) {
@@ -130,7 +125,7 @@ object SelectRows {
       // key column has ForeignKeyPrefix == 0 — every foreign row would
       // be read — and is a policy error at prepare time. Array joins
       // are exempt, as in the reference.
-      parsedQ.foreach(_.joins.foreach {
+      parsed.joins.foreach {
         case QLParser.JoinClause(_, table, using, on, _) =>
           val firstKey = catalog.get(table.path).flatMap(df =>
             df.schema.fields.find(_.metadata.contains(
@@ -146,7 +141,7 @@ object SelectRows {
             "Foreign table key is not used in the join clause; " +
             "the query is inefficient, consider rewriting it")
         case _: QLParser.ArrayJoinClause => ()
-      })
+      }
     }
     val cat = options.inputRowLimit match {
       case Some(n) => catalog.map { case (p, df) => p -> df.limit(n) }
@@ -169,7 +164,7 @@ object SelectRows {
     // Returns a restore thunk: the view swap is scoped to THIS query's
     // analysis (spark.sql resolves views eagerly), so other readers of
     // the table's view name never see the semi-join-filtered plan.
-    val restoreViews = rewriteWithIndex(spark, parsedQ, cat)
+    val restoreViews = rewriteWithIndex(spark, parsed, cat)
     // ascending-key prefix per table (YtSortOrderKey field metadata,
     // contiguous from the first column) — feeds ORDER BY elision on
     // key-sorted scans (ql_query_ut.cpp OrderByPrimaryKeyPrefix)
@@ -181,7 +176,7 @@ object SelectRows {
     }
     val sql = QLEmitter.canonicalNulls.withValue(options.useCanonicalNullRelations) {
       QLEmitter.sortedKeysOf.withValue(sortedKeys) {
-        transpileParsed(parsedQ, parseErr, ql, anyScope(cat))
+        transpileParsed(parsed, anyScope(cat))
       }
     }
     val prev = spark.conf.get("spark.sql.groupByOrdinal", "true")
@@ -192,7 +187,7 @@ object SelectRows {
         spark.conf.set("spark.sql.groupByOrdinal", prev)
         restoreViews()
       }
-    options.outputRowLimit match {
+    val limited = options.outputRowLimit match {
       case Some(n) if options.failOnIncompleteResult =>
         // read one row past the limit; a (n+1)-th row means the limit
         // truncated a larger result → "query result is incomplete".
@@ -211,6 +206,7 @@ object SelectRows {
       case Some(n) => df.limit(n)
       case None => df
     }
+    (limited, sql)
   }
 
   /** Swap the primary table's temp view for the index-scan + semi-join
@@ -231,12 +227,11 @@ object SelectRows {
     * the filtered plan is never visible to other readers of the view
     * name. */
   private def rewriteWithIndex(spark: SparkSession,
-      parsed: Option[QLParser.Query],
+      q: QLParser.Query,
       cat: Map[String, DataFrame]): () => Unit = {
     import QLParser._
     var restore: () => Unit = () => ()
     for {
-      q <- parsed
       idxPath <- q.withIndex
       idx <- cat.get(idxPath)
       (primPath, primAlias) <- q.from.collect { case TableRef(p, a) => (p, a) }
@@ -389,13 +384,13 @@ object SelectRows {
   }
 
   /** ExplainQuery (dynamic_table_client.h:110-115): the query plan for
-    * a QL string — the transpiled SQL plus Catalyst's formatted
-    * physical plan (scans with pushed filters, joins, exchanges), the
-    * same information surface as the reference's explain output. */
+    * a QL string — the Spark SQL that [[apply]] ran plus Catalyst's
+    * formatted physical plan (scans with pushed filters, joins,
+    * exchanges), the same information surface as the reference's
+    * explain output. */
   def explain(spark: SparkSession, ql: String,
       catalog: Map[String, DataFrame] = Map.empty): String = {
-    val df = apply(spark, ql, catalog)
-    val sql = transpile(ql, anyScope(catalog))
+    val (df, sql) = run(spark, ql, catalog, Options())
     s"-- transpiled SQL --\n$sql\n-- physical plan --\n" +
       df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -404,29 +399,12 @@ object SelectRows {
   def viewName(path: String): String =
     path.stripPrefix("//").split('/').last.replaceAll("[^A-Za-z0-9_]", "_")
 
-  /** QL → Spark SQL. The primary path is the real grammar —
-    * [[QLParser]] (tokenizer + recursive descent per parser.ypp) into
-    * [[QLEmitter]]; the legacy regex rewriter remains as a fallback
-    * for strings the parser rejects (logged, so coverage gaps
-    * surface). */
-  def transpile(ql: String): String = transpile(ql, Set.empty[String])
-
-  /** Columns carrying the `any` logical type (field metadata written by
-    * [[graft.types.YtTypes.YtSchema.toStructType]]) — comparisons and
-    * sorts on these route through the typed Any ordering
-    * (QLEmitter's CompareAny lowering). */
-  def anyColumns(catalog: Map[String, DataFrame]): Set[String] = {
-    import graft.types.YtTypes.YtTypeKey
-    catalog.values.flatMap(_.schema.fields.collect {
-      case f if f.metadata.contains(YtTypeKey) &&
-        f.metadata.getString(YtTypeKey) == "any" => f.name
-    }).toSet
-  }
-
-  /** Per-view column inventories (all names + the `any`-typed subset),
-    * keyed by view name — the Any rewrite resolves refs against the
-    * query's own FROM/JOIN scope, so a typed column `x` in one table is
-    * never Any-routed because another table has an Any column `x`. */
+  /** Per-view column inventories (all names + the `any`- and
+    * `uint64`-typed subsets, from field metadata written by
+    * [[graft.types.YtTypes.YtSchema.toStructType]]), keyed by view
+    * name — the Any rewrite resolves refs against the query's own
+    * FROM/JOIN scope, so a typed column `x` in one table is never
+    * Any-routed because another table has an Any column `x`. */
   def anyScope(catalog: Map[String, DataFrame]): Map[String, QLEmitter.TableCols] = {
     import graft.types.YtTypes.YtTypeKey
     catalog.map { case (path, df) =>
@@ -439,298 +417,18 @@ object SelectRows {
     }
   }
 
+  /** QL → Spark SQL through the one grammar: [[QLParser]] (tokenizer +
+    * recursive descent per parser.ypp), [[QLEmitter.validate]], then
+    * [[QLEmitter.toSql]]. A string the parser rejects raises its
+    * QLParseException, naming the position. */
   def transpile(ql: String, byTable: Map[String, QLEmitter.TableCols]): String =
-    try {
-      val q = QLParser.parse(ql)
-      QLEmitter.validate(q, byTable)
-      QLEmitter.toSql(q, byTable)
-    } catch {
-      case e: QLParser.QLParseException =>
-        System.err.println(s"QLParser fallback for: ${ql.take(120)} (${e.getMessage})")
-        transpileLegacy(ql)
-    }
+    transpileParsed(QLParser.parse(ql), byTable)
 
-  /** [[transpile]] over an ALREADY-parsed query — the parse-once path
-    * used by [[apply]]. `parseErr` carries the original parse failure:
-    * a QLParseException falls back to the legacy rewriter (as
-    * [[transpile]] does); anything else rethrows. */
-  private def transpileParsed(parsed: Option[QLParser.Query],
-      parseErr: Option[Throwable], ql: String,
-      byTable: Map[String, QLEmitter.TableCols]): String =
-    parsed match {
-      case Some(q) =>
-        try {
-          QLEmitter.validate(q, byTable)
-          QLEmitter.toSql(q, byTable)
-        } catch {
-          case e: QLParser.QLParseException =>
-            System.err.println(s"QLParser fallback for: ${ql.take(120)} (${e.getMessage})")
-            transpileLegacy(ql)
-        }
-      case None => parseErr match {
-        case Some(e: QLParser.QLParseException) =>
-          System.err.println(s"QLParser fallback for: ${ql.take(120)} (${e.getMessage})")
-          transpileLegacy(ql)
-        case Some(e) => throw e
-        case None => transpileLegacy(ql)
-      }
-    }
-
-  def transpile(ql: String, anyCols: Set[String]): String =
-    try {
-      val q = QLParser.parse(ql)
-      QLEmitter.validate(q, Map.empty)
-      QLEmitter.toSql(q, anyCols)
-    } catch {
-      case e: QLParser.QLParseException =>
-        System.err.println(s"QLParser fallback for: ${ql.take(120)} (${e.getMessage})")
-        transpileLegacy(ql)
-    }
-
-  /** The original regex-rewrite transpiler (fallback path). */
-  def transpileLegacy(ql: String): String = {
-    var q = ql.trim
-    // 1. implicit SELECT
-    if (!q.toUpperCase.startsWith("SELECT")) q = "SELECT " + q
-    // 2. table refs [//path] → view names
-    q = "\\[(//[^\\]]+)\\]".r.replaceAllIn(q, m => viewName(m.group(1)))
-    // 3. WITH INDEX hint: strip (access-path selection is the
-    //    optimizer's job here)
-    q = "(?i)\\bWITH\\s+INDEX\\s+\\S+".r.replaceAllIn(q, "")
-    // 4. uint64 literals keep unsigned semantics (functions/Uint64):
-    //    comparisons against a Nu literal route through the biased
-    //    u64_* comparators; remaining Nu literals lower to the
-    //    two's-complement Long bit pattern, so values above
-    //    Long.MaxValue (e.g. 18446744073709551615u → -1L) survive.
-    q = u64Rewrite(q)
-    // 5. USING a, b  →  USING (a, b)   (stop at the next clause keyword)
-    q = "(?i)\\bUSING\\s+([A-Za-z_][A-Za-z0-9_]*(?:\\s*,\\s*[A-Za-z_][A-Za-z0-9_]*)*)".r
-      .replaceAllIn(q, m => "USING (" + m.group(1) + ")")
-    // 6. tuple equality and tuple IN → struct()
-    q = tupleRewrite(q)
-    // 7. GROUP BY aliases + WITH TOTALS
-    q = groupByRewrite(q)
-    // 8. OFFSET k LIMIT n → LIMIT n OFFSET k
-    q = "(?i)\\bOFFSET\\s+(\\d+)\\s+LIMIT\\s+(\\d+)".r
-      .replaceAllIn(q, m => s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}")
-    // 9. QL spellings that collide with Spark builtins of different
-    //    semantics route to the prefixed registry entries (the parser
-    //    path does this in QLEmitter); `length` is QL's BYTE length →
-    //    octet_length; applied only OUTSIDE string literals so a
-    //    constant like 'if(x)' is left untouched
-    q = mapOutsideQuotes(q,
-      seg => "(?i)\\b(if|greatest|transform|cardinality|length)\\s*\\(".r
-        .replaceAllIn(seg, m => {
-          val n = m.group(1).toLowerCase
-          (if (n == "length") "octet_length" else "ql__" + n) + "("
-        }))
-    q.replaceAll("\\s+", " ").trim
-  }
-
-  /** Apply `f` to each maximal segment of `q` outside single/double
-    * quoted spans; the quoted spans pass through verbatim. */
-  private def mapOutsideQuotes(q: String, f: String => String): String = {
-    val out = new StringBuilder
-    var i = 0; var segStart = 0
-    val n = q.length
-    while (i < n) {
-      val c = q.charAt(i)
-      if (c == '\'' || c == '"') {
-        out.append(f(q.substring(segStart, i)))
-        var j = i + 1
-        while (j < n && q.charAt(j) != c) {
-          if (q.charAt(j) == '\\' && j + 1 < n) j += 1
-          j += 1
-        }
-        val end = math.min(j + 1, n)
-        out.append(q.substring(i, end))
-        i = end; segStart = end
-      } else i += 1
-    }
-    out.append(f(q.substring(segStart, n)))
-    out.toString
-  }
-
-  /** Unsigned-literal lowering. An operand adjacent to a `Nu` literal
-    * in an ordering comparison is rewritten to the u64_lt/leq/gt/geq
-    * registry functions (biased compare); the operand pattern covers an
-    * identifier or a call with one nesting level of parens — enough for
-    * the QL accessor idioms (`try_get_uint64(props, '/k') < 5u`).
-    * Equality needs no bias (bit equality), so `= Nu` just lowers the
-    * literal. */
-  private def u64Rewrite(q: String): String = {
-    val term = "[A-Za-z_][A-Za-z0-9_.]*(?:\\((?:[^()]|\\([^()]*\\))*\\))?"
-    val opFn = Map("<" -> "u64_lt", "<=" -> "u64_leq",
-      ">" -> "u64_gt", ">=" -> "u64_geq")
-    def bits(s: String): String =
-      try java.lang.Long.parseUnsignedLong(s).toString + "L"
-      catch { case _: NumberFormatException => s }
-    var out = ("(" + term + ")\\s*(<=|>=|<|>)\\s*(\\d+)[uU]\\b").r
-      .replaceAllIn(q, m => java.util.regex.Matcher.quoteReplacement(
-        s"${opFn(m.group(2))}(${m.group(1)}, ${bits(m.group(3))})"))
-    out = ("\\b(\\d+)[uU]\\s*(<=|>=|<|>)\\s*(" + term + ")").r
-      .replaceAllIn(out, m => java.util.regex.Matcher.quoteReplacement(
-        s"${opFn(m.group(2))}(${bits(m.group(1))}, ${m.group(3)})"))
-    "\\b(\\d+)[uU]\\b".r.replaceAllIn(out,
-      m => java.util.regex.Matcher.quoteReplacement(bits(m.group(1))))
-  }
-
-  /** `(a, b) = (c, d)` → `(a = c AND b = d)`;
-    * `(a, b) IN ((1, 2), (3, 4))` → `((a = 1 AND b = 2) OR …)` —
-    * the same conjunction lowering the reference's IsRowInRowset does,
-    * and type-agnostic (no struct name/width coupling). */
-  private def tupleRewrite(q: String): String = {
-    val groups = parenGroups(q).sortBy(_._1)
-    val sb = new StringBuilder(q)
-    var done = false // one rewrite per pass, then recurse to fixpoint
-    groups.reverse.foreach { case (start, end) =>
-      if (!done) {
-        val inner = q.substring(start + 1, end)
-        if (topLevelComma(inner) && depthAt(q, start) == 0) {
-          val after = q.substring(end + 1)
-          val afterTrim = after.trim
-          val lhs = splitTopLevel(inner).map(_.trim)
-          if (afterTrim.startsWith("=")) {
-            // find the RHS tuple group
-            val eqPos = end + 1 + after.indexOf('=')
-            val rhsStart = q.indexWhere(!_.isWhitespace, eqPos + 1)
-            groups.find(_._1 == rhsStart).foreach { case (rs, re) =>
-              val rhs = splitTopLevel(q.substring(rs + 1, re)).map(_.trim)
-              if (rhs.length == lhs.length) {
-                val conj = lhs.zip(rhs).map { case (a, b) => s"$a = $b" }
-                  .mkString("(", " AND ", ")")
-                sb.replace(start, re + 1, conj); done = true
-              }
-            }
-          } else if (afterTrim.toUpperCase.startsWith("IN")) {
-            val inPos = end + 1 + after.toUpperCase.indexOf("IN")
-            val listStart = q.indexWhere(!_.isWhitespace, inPos + 2)
-            groups.find(_._1 == listStart).foreach { case (ls, le) =>
-              val list = q.substring(ls + 1, le)
-              val tuples = parenGroups(list).filter(g => depthAt(list, g._1) == 0)
-                .sortBy(_._1)
-              val disj = tuples.map { case (ts, te) =>
-                val vals = splitTopLevel(list.substring(ts + 1, te)).map(_.trim)
-                lhs.zip(vals).map { case (a, v) => s"$a = $v" }
-                  .mkString("(", " AND ", ")")
-              }
-              if (disj.nonEmpty && tuples.forall(t =>
-                  splitTopLevel(list.substring(t._1 + 1, t._2)).length == lhs.length)) {
-                sb.replace(start, le + 1, disj.mkString("(", " OR ", ")")); done = true
-              }
-            }
-          }
-        }
-      }
-    }
-    val out = sb.toString
-    if (out != q) tupleRewrite(out) else out // fixpoint for multiple tuples
-  }
-
-  private def parenGroups(s: String): Seq[(Int, Int)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-    val stack = scala.collection.mutable.Stack.empty[Int]
-    var i = 0
-    var inStr: Char = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr != 0) { if (c == inStr) inStr = 0 }
-      else c match {
-        case '\'' | '"' => inStr = c
-        case '(' => stack.push(i)
-        case ')' => if (stack.nonEmpty) out += ((stack.pop(), i))
-        case _ =>
-      }
-      i += 1
-    }
-    out.toSeq
-  }
-
-  private def depthAt(s: String, pos: Int): Int = {
-    var d = 0; var i = 0; var inStr: Char = 0
-    while (i < pos) {
-      val c = s.charAt(i)
-      if (inStr != 0) { if (c == inStr) inStr = 0 }
-      else c match {
-        case '\'' | '"' => inStr = c
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ =>
-      }
-      i += 1
-    }
-    d
-  }
-
-  private def topLevelComma(inner: String): Boolean = {
-    var d = 0; var i = 0; var inStr: Char = 0
-    while (i < inner.length) {
-      val c = inner.charAt(i)
-      if (inStr != 0) { if (c == inStr) inStr = 0 }
-      else c match {
-        case '\'' | '"' => inStr = c
-        case '(' => d += 1
-        case ')' => d -= 1
-        case ',' if d == 0 => return true
-        case _ =>
-      }
-      i += 1
-    }
-    false
-  }
-
-  /** Handle `GROUP BY e1 [AS a1], e2 … [WITH TOTALS]`. */
-  private def groupByRewrite(q: String): String = {
-    val gbRe = "(?i)\\bGROUP\\s+BY\\b".r
-    val m = gbRe.findFirstMatchIn(q).getOrElse(return q)
-    val tailKeywords = Seq("WITH TOTALS", "HAVING", "ORDER BY", "OFFSET", "LIMIT")
-    val after = q.substring(m.end)
-    val upperAfter = after.toUpperCase
-    val stop = tailKeywords.map(k => {
-      val i = upperAfter.indexOf(k); if (i < 0) after.length else i
-    }).min
-    val itemsStr = after.substring(0, stop)
-    val rest = after.substring(stop)
-    val items = splitTopLevel(itemsStr).map(_.trim).filter(_.nonEmpty)
-
-    var proj = q.substring(0, m.start)
-    val exprs = items.map { it =>
-      val asRe = "(?i)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*)\\s*$".r
-      asRe.findFirstMatchIn(it) match {
-        case Some(am) =>
-          val expr = it.substring(0, am.start).trim
-          val alias = am.group(1)
-          // substitute bare alias tokens in the projection
-          proj = ("(?i)\\b" + java.util.regex.Pattern.quote(alias) + "\\b").r
-            .replaceAllIn(proj, java.util.regex.Matcher.quoteReplacement(s"($expr) AS $alias"))
-          expr
-        case None => it
-      }
-    }
-    val hasTotals = "(?i)\\bWITH\\s+TOTALS\\b".r.findFirstIn(rest).isDefined
-    val restClean = "(?i)\\bWITH\\s+TOTALS\\b".r.replaceAllIn(rest, "")
-    val gb =
-      if (hasTotals) s" GROUP BY ROLLUP(${exprs.mkString(", ")})"
-      else s" GROUP BY ${exprs.mkString(", ")}"
-    proj + gb + restClean
-  }
-
-  private def splitTopLevel(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var d = 0; var start = 0; var i = 0; var inStr: Char = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr != 0) { if (c == inStr) inStr = 0 }
-      else c match {
-        case '\'' | '"' => inStr = c
-        case '(' => d += 1
-        case ')' => d -= 1
-        case ',' if d == 0 => out += s.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.toSeq
+  /** [[transpile]] over an already-parsed query — the parse-once path
+    * used by [[apply]]. */
+  private def transpileParsed(q: QLParser.Query,
+      byTable: Map[String, QLEmitter.TableCols]): String = {
+    QLEmitter.validate(q, byTable)
+    QLEmitter.toSql(q, byTable)
   }
 }

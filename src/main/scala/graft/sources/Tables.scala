@@ -83,7 +83,7 @@ object Tables {
 
   /** (mtime, length) of the path — a parquet overwrite replaces the
     * file or rewrites the directory, both of which move the stamp. */
-  private def stampOf(p: String): (Long, Long) = {
+  private[graft] def stampOf(p: String): (Long, Long) = {
     val f = new java.io.File(p)
     (f.lastModified, f.length)
   }
@@ -135,7 +135,7 @@ object Tables {
     * sf1-decade A/B showed the expensive-projection win (ql_fuzz_exprs
     * 3.7→2.2 s) outweighs the mild exchange tax on lighter ones
     * (yql_fn_basics 2.5→2.7 s) on multi-file layouts too. */
-  private def diskBytes(f: java.io.File): Long =
+  private[graft] def diskBytes(f: java.io.File): Long =
     if (f.isFile) f.length
     else Option(f.listFiles()).map(_.map(diskBytes).sum).getOrElse(0L)
 

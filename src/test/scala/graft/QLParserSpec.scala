@@ -33,6 +33,21 @@ class QLParserSpec extends SparkSpec {
     docs.foreach(q => QLParser.parse(q)) // throws on grammar gaps
   }
 
+  test("parse errors raise QLParseException naming the parser's position") {
+    val t = Seq((1L, 2L)).toDF("a", "b")
+    Seq(
+      "bazzinga mu ha ha ha" -> "trailing input at 12",
+      "* from [//t] order by a limit -1" -> "expected integer literal",
+      "a from [//t] where (a as x) > 0 and (b as x) > 0" ->
+        "alias \"x\" has been already used"
+    ).foreach { case (ql, msg) =>
+      val e = intercept[Exception](SelectRows(spark, ql, Map("//t" -> t)).collect())
+      val parseErr = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case p: QLParser.QLParseException => p }
+      assert(parseErr.exists(_.getMessage.contains(msg)), s"$ql:\n${causeMessages(e)}")
+    }
+  }
+
   test("string literals containing keywords and operators stay inert") {
     val got = run(
       "item_id, 'FROM [//x] WHERE , AND' AS tricky FROM [//mytable] " +

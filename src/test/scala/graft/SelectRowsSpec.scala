@@ -234,6 +234,15 @@ class SelectRowsSpec extends SparkSpec {
       rows.map(r => Row(r._1, r._2, r._3)).asJava, schema)
   }
 
+  test("explain prints the SQL that ran: ORDER BY on the key prefix is elided") {
+    val k = keyedDf(Seq((1L, "a", 10L), (2L, "b", 20L)))
+    val out = SelectRows.explain(spark,
+      "id, v FROM [//tmp/k] ORDER BY id LIMIT 1", Map("//tmp/k" -> k))
+    val sql = out.substring(0, out.indexOf("-- physical plan --"))
+    assert(sql.contains("LIMIT 1"), sql)
+    assert(!sql.toUpperCase.contains("ORDER BY"), sql)
+  }
+
   test("WITH INDEX string: results match the full scan and the plan semi-joins") {
     import graft.plans.SecondaryIndex
     val prim = keyedDf(Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "a", 30L),
