@@ -1,8 +1,20 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{shims => S}
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sources.Tables
 
 /** Sorted/ordered dynamic-table semantics (SURVEY.md §2.C) as
   * DataFrame transforms over an immutable write log.
@@ -47,8 +59,38 @@ object DynTable {
     * `log` must carry `ts` (version order) and `op` (upsert|delete)
     * columns; everything in `keys` is the key; all other columns are
     * values merged latest-wins.
+    *
+    * A log held on the driver (`Tables.held`: a small stored table or
+    * client-sized rows) merges there — the reference's tablet node
+    * answers from its in-memory stores (tablet_node/lookup.cpp) — and
+    * the result is a local frame, so reading it runs no Spark job.
     */
-  def readLatest(log: DataFrame, keys: Seq[String]): DataFrame = {
+  def readLatest(log: DataFrame, keys: Seq[String]): DataFrame = latestWins(log, keys, None)
+
+  /** Versioned read: table state as of timestamp `asOf` — the
+    * reference's `LookupRows`/`SelectRows` at a timestamp
+    * (dynamic_table_client.h:96-115). The ts filter is applied before
+    * the merge so it pushes to the scan.
+    */
+  def readAsOf(log: DataFrame, keys: Seq[String], asOf: Column): DataFrame =
+    latestWins(log, keys, Some(col("ts") <= asOf))
+
+  /** The latest-wins verbs: `cut` filters the log before the merge. On
+    * a held log the cut stays a Catalyst filter over the local rows,
+    * which ConvertToLocalRelation evaluates (Spark's own coercion); a
+    * cut that does not fold, or a key type the driver merge does not
+    * group, takes the distributed merge over the held frame. */
+  private def latestWins(log: DataFrame, keys: Seq[String], cut: Option[Column]): DataFrame =
+    Tables.held(log) match {
+      case Some(held) =>
+        val sliver = cut.fold(held)(held.where)
+        Tables.localRows(sliver).flatMap(mergeHeld(sliver, _, keys))
+          .getOrElse(mergeLatest(sliver, keys))
+      case None => mergeLatest(cut.fold(log)(log.where), keys)
+    }
+
+  /** The distributed merge: one hash aggregation per key. */
+  private def mergeLatest(log: DataFrame, keys: Seq[String]): DataFrame = {
     val valueCols = log.columns.filterNot(c => keys.contains(c) || c == "ts" || c == "op")
     val merged = log
       .groupBy(keys.map(col): _*)
@@ -60,13 +102,67 @@ object DynTable {
       .select(keys.map(col) ++ valueCols.map(c => col(s"_latest.$c").as(c)): _*)
   }
 
-  /** Versioned read: table state as of timestamp `asOf` — the
-    * reference's `LookupRows`/`SelectRows` at a timestamp
-    * (dynamic_table_client.h:96-115). The ts filter is applied before
-    * the merge so it pushes to the scan.
-    */
-  def readAsOf(log: DataFrame, keys: Seq[String], asOf: Column): DataFrame =
-    readLatest(log.where(col("ts") <= asOf), keys)
+  /** [[mergeLatest]] on the driver over `rows` of `log`'s schema: per
+    * key the max-`ts` row (the first one on a tie; rows with a null `ts`
+    * never win), kept only if its `op` is upsert. Null keys group
+    * together and float keys group normalized (-0.0 as 0.0, one NaN), as
+    * in `groupBy`. The schema equals the distributed merge's: keys as in
+    * the log, values nullable. None for a key type this grouping does not
+    * cover (complex or collated). */
+  private def mergeHeld(log: DataFrame, rows: Seq[InternalRow],
+      keys: Seq[String]): Option[DataFrame] = {
+    val schema = log.schema
+    val keyIdx = keys.map(schema.fieldIndex)
+    val tsIdx = schema.fieldIndex("ts")
+    val opIdx = schema.fieldIndex("op")
+    val groupable = keyIdx.forall(i => schema(i).dataType match {
+      case StringType => true // the binary collation only
+      case _: NumericType | BooleanType | BinaryType | DateType |
+          TimestampType | TimestampNTZType => true
+      case _ => false
+    })
+    if (!groupable || schema(opIdx).dataType != StringType) None
+    else {
+      val valueIdx = schema.indices.filterNot(i => keyIdx.contains(i) || i == tsIdx || i == opIdx)
+      val tsType = schema(tsIdx).dataType
+      val tsOrder = TypeUtils.getInterpretedOrdering(tsType)
+      // grouping uses the normalized key; a float compares by its bits
+      // (so NaN equals NaN) and a binary key by its content
+      def keyOf(r: InternalRow): Seq[Any] = keyIdx.map { i =>
+        if (r.isNullAt(i)) null
+        else r.get(i, schema(i).dataType) match {
+          case d: Double => if (d.isNaN) Double.NaN else if (d == 0.0d) 0.0d else d
+          case f: Float => if (f.isNaN) Float.NaN else if (f == 0.0f) 0.0f else f
+          case v => v
+        }
+      }
+      def groupOf(key: Seq[Any]): Seq[Any] = key.map {
+        case d: Double => java.lang.Double.doubleToLongBits(d)
+        case f: Float => java.lang.Float.floatToIntBits(f)
+        case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
+        case v => v
+      }
+      val latest = new java.util.LinkedHashMap[Seq[Any], InternalRow]()
+      rows.foreach { r =>
+        if (!r.isNullAt(tsIdx)) {
+          val g = groupOf(keyOf(r))
+          val cur = latest.get(g)
+          if (cur == null || tsOrder.gt(r.get(tsIdx, tsType), cur.get(tsIdx, tsType)))
+            latest.put(g, r)
+        }
+      }
+      val upsert = UTF8String.fromString(OpUpsert)
+      val out = latest.values.asScala.collect {
+        case r if !r.isNullAt(opIdx) && r.getUTF8String(opIdx) == upsert =>
+          new GenericInternalRow((keyOf(r) ++
+            valueIdx.map(i => r.get(i, schema(i).dataType))).toArray): InternalRow
+      }.toSeq
+      val outSchema = StructType(keyIdx.map(schema(_)) ++
+        valueIdx.map(i => StructField(schema(i).name, schema(i).dataType, nullable = true)))
+      Some(S.ofRows(log.sparkSession,
+        LocalRelation(DataTypeUtils.toAttributes(outSchema), out)))
+    }
+  }
 
   /** Per-COLUMN latest-wins merge — partial upserts (`insert_rows`
     * `update=True`) write only a subset of value columns, and each
@@ -265,7 +361,10 @@ object DynTable {
     * optimistic locking). The check is a semi-join of the staged keys
     * (client-sized, broadcast) against the ts-pruned log sliver —
     * never a scan of full history — and it rides the commit plan, so
-    * laziness is preserved and a retried evaluation re-validates.
+    * laziness is preserved and a retried evaluation re-validates. On a
+    * held log (`Tables.held`) without `written`/`agg` columns and a
+    * client-sized staged frame, the count is taken on the driver when
+    * the plan is built, over the snapshot the log frame pins.
     */
   def commitTransaction(log: DataFrame, staged: DataFrame, keys: Seq[String],
       startTs: Column, commitTs: Column): DataFrame = {
@@ -289,7 +388,18 @@ object DynTable {
       (if (hasStagedMask) Seq(col("written").as("__sw")) else Nil) ++
       (if (hasStagedAgg) Seq(col("agg").as("__sa")) else Nil)
     val stagedKeys = staged.select(stagedSel: _*)
-    val recent = log.where(col("ts") > startTs && col("ts") <= commitTs)
+    // the commit unions onto the held frame, so its write is its only job
+    val held = if (hasLogMask || hasLogAgg) None else Tables.held(log)
+    val base = held.getOrElse(log)
+    val recent = base.where(col("ts") > startTs && col("ts") <= commitTs)
+    val heldConflicts: Option[Long] = held.flatMap { _ =>
+      Tables.localRows(staged.select(keys.map(col): _*)).flatMap { ks =>
+        val types = keys.map(staged.schema(_).dataType)
+        val literals = ks.map(r => types.indices.map(i =>
+          S.column(Literal(r.get(i, types(i)), types(i)))))
+        Tables.localRows(recent.where(keyPredicate(keys, literals))).map(_.size.toLong)
+      }
+    }
     val touched = recent.join(broadcast(stagedKeys), keys)
     val maskDisjoint: Column =
       if (hasLogMask && hasStagedMask)
@@ -303,9 +413,11 @@ object DynTable {
       else lit(false)
     // one aggregate, folded in as a scalar subquery: ANY surviving
     // conflict aborts the WHOLE transaction (it would abort anyway),
-    // so no per-key join back to the staged rows is ever needed
-    val nConflicts = touched.where(!(maskDisjoint || bothDeltas))
-      .agg(count(lit(1))).scalar()
+    // so no per-key join back to the staged rows is ever needed. A
+    // driver-side count enters as a literal, so raise_error still fires
+    // only when the plan runs.
+    val nConflicts = heldConflicts.map(lit).getOrElse(
+      touched.where(!(maskDisjoint || bothDeltas)).agg(count(lit(1))).scalar())
     val checked = staged
       .filter(when(nConflicts > 0,
         raise_error(lit("Row lock conflict due to concurrent write"))
@@ -325,7 +437,7 @@ object DynTable {
       else Seq((if (hasLogMask) col("written")
         else lit(null).cast(org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.StringType))).as("written"))
-    log.select((keys.map(col) ++ Seq(col("ts"), col("op")) ++ logMask ++
+    base.select((keys.map(col) ++ Seq(col("ts"), col("op")) ++ logMask ++
         valueCols.map(col)): _*)
       .unionByName(appended)
   }
@@ -370,12 +482,15 @@ object DynTable {
     * prefix so the scan prunes. Merge happens only on the surviving
     * sliver.
     */
-  def lookup(log: DataFrame, keys: Seq[String], keyValues: Seq[Seq[Any]]): DataFrame = {
-    val pred = keyValues
-      .map(vs => keys.zip(vs).map { case (k, v) => col(k) === lit(v) }.reduce(_ && _))
-      .reduce(_ || _)
-    readLatest(log.where(pred), keys)
-  }
+  def lookup(log: DataFrame, keys: Seq[String], keyValues: Seq[Seq[Any]]): DataFrame =
+    latestWins(log, keys, Some(keyPredicate(keys, keyValues.map(_.map(lit)))))
+
+  /** Rows whose key equals one of `keyValues`: an OR of per-row key
+    * equalities (false for no rows). */
+  private def keyPredicate(keys: Seq[String], keyValues: Seq[Seq[Column]]): Column =
+    keyValues
+      .map(vs => keys.zip(vs).map { case (k, v) => col(k) === v }.reduce(_ && _))
+      .reduceOption(_ || _).getOrElse(lit(false))
 
   /** `lookup_rows keep_missing_rows=%true` (dynamic_table_client.h:
     * TLookupRowsOptions::KeepMissingRows; test_lookup.py): the result
@@ -567,82 +682,14 @@ object DynTable {
     registry.unionByName(update)
   }
 
-  /** The registry/producer tables are client state built as a chain of
-    * `unionByName` over tiny LocalRelations (one row per advance). A
-    * driver-side read over that shape needs no Spark job: walk the
-    * local rows directly. Returns None when the plan carries anything
-    * but LocalRelation/Union (then the caller takes the distributed
-    * read — e.g. a registry persisted to parquet). */
-  private def localUnionRows(df: DataFrame)
-      : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union, LogicalPlan}
-    def walk(p: LogicalPlan): Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
-      p match {
-        case l: LocalRelation => Some(l.data)
-        case u: Union =>
-          val parts = u.children.map(walk)
-          if (parts.forall(_.isDefined)) Some(parts.flatMap(_.get).toSeq)
-          else None
-        case _ => None
-      }
-    // analyzed (not optimized) keeps the raw union chain; unionByName
-    // of identically-shaped frames inserts no Project
-    walk(df.queryExecution.analyzed)
-  }
-
-  /** Latest-wins lookup over local rows: the exact readLatest rule —
-    * per key take the max-ts row (first max wins, like Spark's
-    * max_by), then keep it only if that row is an upsert. Field
-    * ordinals are resolved by name from the frame's schema. */
-  private def localLatestLookup(df: DataFrame, keyCols: Seq[String],
-      keyVals: Seq[Any], valueCols: Seq[String]): Option[Option[Seq[Long]]] =
-    localUnionRows(df).flatMap { rows =>
-      val schema = df.schema
-      val keyIdx = keyCols.map(schema.fieldIndex)
-      val tsIdx = schema.fieldIndex("ts")
-      val opIdx = schema.fieldIndex("op")
-      val valIdx = valueCols.map(schema.fieldIndex)
-      // Nulls in any consulted column (keys, ts, op, values) fall back
-      // to the distributed read, which owns null semantics — a local
-      // getLong on a null slot would silently read 0.
-      def anyNull(r: org.apache.spark.sql.catalyst.InternalRow): Boolean =
-        keyIdx.exists(r.isNullAt) || r.isNullAt(tsIdx) || r.isNullAt(opIdx) ||
-          valIdx.exists(r.isNullAt)
-      def keyMatches(r: org.apache.spark.sql.catalyst.InternalRow): Boolean =
-        keyIdx.zip(keyVals).forall {
-          case (i, s: String) => r.getUTF8String(i).toString == s
-          case (i, l: Long) => r.getLong(i) == l
-          case _ => false
-        }
-      var best: org.apache.spark.sql.catalyst.InternalRow = null
-      var bestTs = Long.MinValue
-      var punt = false
-      rows.foreach { r =>
-        if (!punt) {
-          if (anyNull(r)) punt = true
-          else if (keyMatches(r) && r.getLong(tsIdx) > bestTs) {
-            best = r; bestTs = r.getLong(tsIdx)
-          }
-        }
-      }
-      if (punt) None // unexpected shape: let readLatest decide
-      else if (best == null ||
-        best.getUTF8String(opIdx).toString != OpUpsert) Some(None)
-      else Some(Some(valIdx.map(best.getLong)))
-    }
-
   /** Current offset of a consumer on a tablet (0 when unregistered). */
   def consumerOffset(registry: DataFrame, consumer: String,
-      tabletIndex: Long): Long =
-    localLatestLookup(registry, Seq("consumer", "tablet_index"),
-        Seq(consumer, tabletIndex), Seq("next_offset")) match {
-      case Some(hit) => hit.map(_.head).getOrElse(0L)
-      case None =>
-        val rows = readLatest(registry, Seq("consumer", "tablet_index"))
-          .where(col("consumer") === consumer && col("tablet_index") === tabletIndex)
-          .select("next_offset").collect()
-        if (rows.isEmpty) 0L else rows.head.getLong(0)
-    }
+      tabletIndex: Long): Long = {
+    val rows = readLatest(registry, Seq("consumer", "tablet_index"))
+      .where(col("consumer") === consumer && col("tablet_index") === tabletIndex)
+      .select("next_offset").collect()
+    if (rows.isEmpty) 0L else rows.head.getLong(0)
+  }
 
   /** Pull from a tablet starting at the consumer's registered offset —
     * the PullQueueConsumer read path (pull, process, then
@@ -672,18 +719,13 @@ object DynTable {
     * producer table is hyperparameter-sized (one row per writer host) —
     * reading it driver-side is the consumerOffset pattern, not a
     * data-path collect. */
-  def producerSession(producer: DataFrame, sessionId: String): (Long, Long) =
-    localLatestLookup(producer, Seq("session_id"), Seq(sessionId),
-        Seq("epoch", "seq")) match {
-      case Some(hit) =>
-        hit.map(vs => (vs(0), vs(1))).getOrElse((-1L, -1L))
-      case None =>
-        val rows = readLatest(producer, Seq("session_id"))
-          .where(col("session_id") === sessionId)
-          .select("epoch", "seq").collect()
-        if (rows.isEmpty) (-1L, -1L)
-        else (rows.head.getLong(0), rows.head.getLong(1))
-    }
+  def producerSession(producer: DataFrame, sessionId: String): (Long, Long) = {
+    val rows = readLatest(producer, Seq("session_id"))
+      .where(col("session_id") === sessionId)
+      .select("epoch", "seq").collect()
+    if (rows.isEmpty) (-1L, -1L)
+    else (rows.head.getLong(0), rows.head.getLong(1))
+  }
 
   /** CreateQueueProducerSession: new session → epoch 0, seq -1; existing
     * session → epoch + 1, stored seq. Returns (updated producer table,

@@ -23,13 +23,26 @@ import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
 private[graft] object PipeJob {
   private val StderrCap = 8192
 
+  /** Start the process, retrying while exec fails with ETXTBSY (error
+    * 26): a script written just before (Streams.processInline) stays
+    * open for writing in a child that another task thread is forking
+    * until that child execs, and exec of the script fails meanwhile. */
+  private def start(pb: ProcessBuilder, attempt: Int = 1): Process =
+    try pb.start()
+    catch {
+      case e: java.io.IOException
+          if attempt < 20 && String.valueOf(e.getMessage).contains("error=26") =>
+        Thread.sleep(5L * attempt)
+        start(pb, attempt + 1)
+    }
+
   def run[T](command: Seq[String],
       write: OutputStream => Unit,
       read: InputStream => Iterator[T],
       env: Map[String, String] = Map.empty): Iterator[T] = {
     val pb = new ProcessBuilder(command: _*)
     env.foreach { case (k, v) => pb.environment().put(k, v) }
-    val proc = pb.start()
+    val proc = start(pb)
     val stderr = new java.lang.StringBuilder
     val errThread = new Thread {
       override def run(): Unit = {

@@ -1,6 +1,15 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.graft.{shims => S}
+import org.apache.spark.sql.types.StructType
 
 /** Table catalog over a testdata scale-factor directory.
   *
@@ -43,17 +52,6 @@ object Tables {
         .putBoolean(UniqueMetaKey, true).build())
     }
 
-  /** Load one table. Never caches — Catalyst column pruning + filter
-    * pushdown on the parquet scan beat an uncompressed memory cache at
-    * 100 TB scale.
-    *
-    * `events.ts` normalizes to microsecond TimestampType — the precision
-    * the reference's Timestamp logical type carries (row_base.h: µs since
-    * epoch) — whatever physical encoding the parquet writer chose:
-    * TIMESTAMP(NANOS) arrives as a long (legacy nanosAsLong) and is
-    * divided down; timestamp[us] (isAdjustedToUTC=false → TIMESTAMP_NTZ)
-    * casts losslessly under the engine's fixed UTC session timezone.
-    */
   /** Relation cache: `spark.read.parquet` re-lists the path and
     * re-reads the parquet footer on EVERY call (driver-side,
     * single-threaded — tens of ms), and a bench/verify sweep loads
@@ -77,9 +75,33 @@ object Tables {
     * under memory pressure, which unpins the session; in normal
     * operation soft refs survive GC (including Bench's between-query
     * System.gc()), so cache hits are unaffected. */
-  private val relationCache =
-    new java.util.WeakHashMap[SparkSession, java.lang.ref.SoftReference[
-      java.util.concurrent.ConcurrentHashMap[String, (DataFrame, Long, Long)]]]()
+  private val relationCache = new SessionMaps[Cached]
+
+  /** A cached relation with its path stamp, the schema Spark read and
+    * the data file Spark read it from (see [[relisted]]). */
+  private final case class Cached(df: DataFrame, mtime: Long, len: Long,
+      schema: StructType, first: Option[FileKey])
+
+  /** (path, length, mtime) of one data file. */
+  private type FileKey = (String, Long, Long)
+
+  /** Per-session maps: sessions key weakly, each map is held through a
+    * SoftReference (see [[relationCache]]). */
+  private final class SessionMaps[V] {
+    private val maps = new java.util.WeakHashMap[SparkSession,
+      java.lang.ref.SoftReference[java.util.concurrent.ConcurrentHashMap[String, V]]]()
+    def apply(spark: SparkSession): java.util.concurrent.ConcurrentHashMap[String, V] =
+      maps.synchronized {
+        val ref = maps.get(spark)
+        val cur = if (ref != null) ref.get else null
+        if (cur != null) cur
+        else {
+          val m = new java.util.concurrent.ConcurrentHashMap[String, V]()
+          maps.put(spark, new java.lang.ref.SoftReference(m))
+          m
+        }
+      }
+  }
 
   /** (mtime, length) of the path — a parquet overwrite replaces the
     * file or rewrites the directory, both of which move the stamp. */
@@ -88,28 +110,27 @@ object Tables {
     (f.lastModified, f.length)
   }
 
-  private def sessionCache(spark: SparkSession)
-      : java.util.concurrent.ConcurrentHashMap[String, (DataFrame, Long, Long)] =
-    relationCache.synchronized {
-      val ref = relationCache.get(spark)
-      val cur = if (ref != null) ref.get else null
-      if (cur != null) cur
-      else {
-        val m = new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, Long, Long)]()
-        relationCache.put(spark, new java.lang.ref.SoftReference(m))
-        m
-      }
-    }
-
+  /** Load one table. Never caches data — Catalyst column pruning +
+    * filter pushdown on the parquet scan beat an uncompressed memory
+    * cache at 100 TB scale (small dynamic tables read through DynTable
+    * are the exception: see [[held]]).
+    *
+    * `events.ts` normalizes to microsecond TimestampType — the precision
+    * the reference's Timestamp logical type carries (row_base.h: µs since
+    * epoch) — whatever physical encoding the parquet writer chose:
+    * TIMESTAMP(NANOS) arrives as a long (legacy nanosAsLong) and is
+    * divided down; timestamp[us] (isAdjustedToUTC=false → TIMESTAMP_NTZ)
+    * casts losslessly under the engine's fixed UTC session timezone.
+    */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val p = path(dir, name)
-    val cache = sessionCache(spark)
+    val cache = relationCache(spark)
     val (mtime, len) = stampOf(p)
     val hit = cache.get(p)
-    if (hit != null && hit._2 == mtime && hit._3 == len) hit._1
+    if (hit != null && hit.mtime == mtime && hit.len == len) hit.df
     else {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(p)
+      val df = Option(hit).flatMap(relisted(spark, p, _)).getOrElse(spark.read.parquet(p))
       val normalized = if (name == "events") {
         import org.apache.spark.sql.functions._
         import org.apache.spark.sql.types._
@@ -122,10 +143,137 @@ object Tables {
         }
       } else df
       val built = tagUnique(normalized, name)
-      cache.put(p, (built, mtime, len))
+      cache.put(p, Cached(built, mtime, len, df.schema, schemaFile(df)))
       built
     }
   }
+
+  /** A relisted path whose schema needs no inference job: without
+    * `mergeSchema`, Spark infers a parquet schema from the first data
+    * file of the listing (by path) alone, so when that file is the one
+    * the cached schema came from — same path, length and mtime, as after
+    * an append — the relation is built with that schema. None when the
+    * file changed (a rewrite, or an appended file that sorts first). */
+  private def relisted(spark: SparkSession, p: String, prev: Cached): Option[DataFrame] =
+    prev.first.filter(_ => spark.conf.get("spark.sql.parquet.mergeSchema") == "false").flatMap { f =>
+      val df = spark.read.schema(prev.schema).parquet(p)
+      if (schemaFile(df).contains(f)) Some(df) else None
+    }
+
+  /** The file Spark infers a parquet relation's schema from: the first
+    * data file by path. None when summary files exist (Spark reads those
+    * first) or the relation is partitioned. */
+  private def schemaFile(df: DataFrame): Option[FileKey] = fsScan(df).flatMap { case (_, r) =>
+    val files = listed(r)
+    if (r.partitionSchema.nonEmpty ||
+        files.exists(f => f._1.endsWith("/_metadata") || f._1.endsWith("/_common_metadata"))) None
+    else files.headOption
+  }
+
+  private def fsScan(df: DataFrame): Option[(LogicalRelation, HadoopFsRelation)] =
+    df.queryExecution.analyzed match {
+      case l: LogicalRelation if !l.isStreaming => l.relation match {
+        case r: HadoopFsRelation => Some((l, r))
+        case _ => None
+      }
+      case _ => None
+    }
+
+  /** Data files of a file relation, by path. */
+  private def listed(r: HadoopFsRelation): Seq[FileKey] =
+    r.location.listFiles(Nil, Nil).flatMap(_.files)
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sortBy(_._1)
+
+  // --- Held rows: small stored dynamic tables served from the driver ---
+
+  /** Rows of small stored tables, held on the driver per data file.
+    * Data files are immutable (commits append files, compaction
+    * rewrites the directory), so a file's rows are keyed by its
+    * (path, length, mtime): a relisted table reads only its new files,
+    * and the rows of files no longer listed are dropped. Same session
+    * discipline as [[relationCache]]. */
+  private val heldCache = new SessionMaps[Held]
+
+  /** One table's held rows per data file, all read with `schema`. */
+  private final case class Held(schema: StructType, files: Map[FileKey, Array[InternalRow]])
+
+  /** The rows of `df` as a driver-held frame (a LocalRelation with the
+    * same schema), or None when `df` is not eligible. Eligible are
+    *   - a bare file scan with no partition columns whose plan-estimated
+    *     size is at most `spark.sql.autoBroadcastJoinThreshold`, the size
+    *     Spark already collects to the driver for a broadcast: its rows
+    *     come from the held store, which reads only the files it does not
+    *     hold yet, in one job;
+    *   - a client-sized frame: a LocalRelation or a Union of them.
+    * A negative threshold turns holding off. */
+  private[graft] def held(df: DataFrame): Option[DataFrame] = {
+    val spark = df.sparkSession
+    fsScan(df) match {
+      case Some((l, r)) =>
+        if (r.partitionSchema.nonEmpty || l.stats.sizeInBytes > S.broadcastThreshold(spark)) None
+        else Some(localFrame(spark, l.output, heldRows(spark, r)))
+      case None =>
+        localRows(df).map(localFrame(spark, df.queryExecution.optimizedPlan.output, _))
+    }
+  }
+
+  /** Rows of a client-sized frame: its optimized plan is a LocalRelation
+    * or a Union of them (ConvertToLocalRelation folds projections and
+    * filters over local rows). None for any other plan, and when holding
+    * is off. */
+  private[graft] def localRows(df: DataFrame): Option[Seq[InternalRow]] =
+    if (S.broadcastThreshold(df.sparkSession) < 0 || df.isStreaming ||
+        !df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
+    else df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some(l.data)
+      case u: Union if u.children.forall(_.isInstanceOf[LocalRelation]) =>
+        Some(u.children.flatMap(_.asInstanceOf[LocalRelation].data))
+      case _ => None
+    }
+
+  private def localFrame(spark: SparkSession, output: Seq[Attribute],
+      rows: Seq[InternalRow]): DataFrame =
+    S.ofRows(spark, LocalRelation(output.map(_.newInstance()), rows))
+
+  /** The store's rows for a file relation's listing, reading its new
+    * files in one labelled job. */
+  private def heldRows(spark: SparkSession, r: HadoopFsRelation): Seq[InternalRow] = {
+    val table = r.location.rootPaths.mkString(",")
+    val store = heldCache(spark)
+    val files = listed(r)
+    val prev = Option(store.get(table)).filter(_.schema == r.dataSchema)
+      .map(_.files).getOrElse(Map.empty)
+    val fresh = files.filterNot(prev.contains)
+    val read = if (fresh.isEmpty) Map.empty[FileKey, Array[InternalRow]]
+      else readFiles(spark, r, fresh, s"dyn:held:$table: ${fresh.size} new files")
+    val now = files.map(f => f -> prev.getOrElse(f, read(f))).toMap
+    store.put(table, Held(r.dataSchema, now))
+    files.flatMap(now(_))
+  }
+
+  /** Read `files` of relation `r` in one job, returning each file's rows.
+    * Each file is its own scan, so the partitions of the union map back
+    * to their file. */
+  private def readFiles(spark: SparkSession, r: HadoopFsRelation,
+      files: Seq[FileKey], description: String): Map[FileKey, Array[InternalRow]] = {
+    val sc = spark.sparkContext
+    val rdds = files.map { f =>
+      val index = new InMemoryFileIndex(spark, Seq(new Path(f._1)), r.options, None)
+      S.ofRows(spark, LogicalRelation(r.copy(location = index)(spark), false))
+        .queryExecution.toRdd
+    }
+    val prevDescription = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(description)
+    val parts = try sc.runJob(sc.union(rdds),
+        (it: Iterator[InternalRow]) => it.map(_.copy()).toArray)
+      finally sc.setJobDescription(prevDescription)
+    val ends = rdds.map(_.getNumPartitions).scanLeft(0)(_ + _)
+    files.indices.map(i => files(i) -> parts.slice(ends(i), ends(i + 1)).flatten).toMap
+  }
+
+  /** Data files the store holds for a table (spec hook). */
+  private[graft] def heldFiles(spark: SparkSession): Map[String, Set[String]] =
+    heldCache(spark).asScala.map { case (t, h) => t -> h.files.keySet.map(_._1) }.toMap
 
   /** Recursive on-disk footprint of a table path (file or directory).
     * The spread gate uses TOTAL bytes, not file count: a sub-split

@@ -83,4 +83,16 @@ object shims {
       : org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema, isStreaming = false)
+
+  /** DataFrame over a logical plan (`Dataset.ofRows` is `private[sql]`). */
+  def ofRows(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes. */
+  def broadcastThreshold(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.autoBroadcastJoinThreshold
 }

@@ -1,0 +1,232 @@
+package graft
+
+import java.io.File
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+import scala.util.Random
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.operators.DynTable
+import graft.sources.Tables
+
+/** Held tablets: DynTable's latest-wins verbs and commit check over a log
+  * held on the driver (a small stored table, or client-sized rows)
+  * against the distributed merge, which a broadcast threshold of -1
+  * forces; and the jobs the held store runs.
+  */
+class HeldTabletsSpec extends SparkSpec {
+  private val Threshold = "spark.sql.autoBroadcastJoinThreshold"
+
+  private def withThreshold[T](v: String)(body: => T): T = {
+    val prev = spark.conf.get(Threshold)
+    spark.conf.set(Threshold, v)
+    try body finally spark.conf.set(Threshold, prev)
+  }
+  private def distributed[T](body: => T): T = withThreshold("-1")(body)
+
+  /** A seeded log over 40 key tuples: 1–5 versions per key tuple, every
+    * `ts` distinct (so each key's latest version is unique), about 15%
+    * tombstones, and null `ts`, `op`, values and keys. */
+  private def seededLog(seed: Long, keyFields: Seq[StructField],
+      key: Int => Seq[Any]): (StructType, Seq[Row]) = {
+    val rnd = new Random(seed)
+    val schema = StructType(keyFields ++ Seq(
+      StructField("ts", LongType), StructField("op", StringType),
+      StructField("v", DoubleType), StructField("s", StringType)))
+    val slots = (0 until 40).flatMap(i => Seq.fill(1 + rnd.nextInt(5))(key(i)))
+    val tss = rnd.shuffle((1L to slots.size.toLong).toVector)
+    val rows = slots.zip(tss).map { case (k, t) =>
+      val op = rnd.nextInt(20) match {
+        case 0 => null
+        case 1 | 2 | 3 => DynTable.OpDelete
+        case _ => DynTable.OpUpsert
+      }
+      Row.fromSeq(k ++ Seq(
+        if (rnd.nextInt(12) == 0) null else t,
+        op,
+        if (rnd.nextInt(6) == 0) null else (rnd.nextInt(2000) - 1000) / 8.0,
+        if (rnd.nextInt(6) == 0) null else s"s${rnd.nextInt(50)}"))
+    }
+    (schema, rnd.shuffle(rows))
+  }
+
+  private case class Log(name: String, keys: Seq[String], schema: StructType,
+      rows: Seq[Row], lookups: Seq[Seq[Any]]) {
+    private val tsIdx = keys.size // rows are key..., ts, op, v, s
+    def ts(r: Row): Option[Long] = if (r.isNullAt(tsIdx)) None else Some(r.getLong(tsIdx))
+    def keyOf(r: Row): Seq[Any] = keys.indices.map(r.get)
+    val maxTs: Long = rows.flatMap(ts).max
+    def client: DataFrame = spark.createDataFrame(rows.asJava, schema)
+    lazy val dir: String = {
+      val d = Files.createTempDirectory(s"graft-held-$name").toString + "/log"
+      client.repartition(3).write.parquet(d)
+      d
+    }
+    def stored: DataFrame = spark.read.parquet(dir)
+  }
+
+  private lazy val logs: Seq[Log] = {
+    val (ls, lr) = seededLog(11, Seq(StructField("k", LongType)),
+      i => Seq(if (i == 39) null else i.toLong - 5))
+    val (ss, sr) = seededLog(12, Seq(StructField("k", StringType)),
+      i => Seq(if (i == 39) null else s"k$i"))
+    val (ts, tr) = seededLog(13, Seq(StructField("a", LongType), StructField("b", StringType)),
+      i => Seq(if (i % 13 == 0) null else (i % 7).toLong, if (i == 20) null else s"b${i % 5}"))
+    val (ds, dr) = seededLog(14, Seq(StructField("k", DoubleType)),
+      i => Seq(if (i == 39) null else Seq(Double.NaN, -0.0, 0.0, 1.5, -2.25)(i % 5)))
+    Seq(
+      // int literals looked up against the long key
+      Log("long", Seq("k"), ls, lr, Seq(Seq(3), Seq(7), Seq(-5), Seq(1000))),
+      Log("string", Seq("k"), ss, sr, Seq(Seq("k3"), Seq("k17"), Seq("nope"))),
+      Log("pair", Seq("a", "b"), ts, tr, Seq(Seq(1L, "b1"), Seq(3L, "b3"), Seq(6L, "b0"))),
+      // NaN and -0.0 keys group as in groupBy
+      Log("double", Seq("k"), ds, dr, Seq(Seq(Double.NaN), Seq(-0.0), Seq(1.5))))
+  }
+
+  private def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  /** Held and distributed frames of one verb: same schema, same rows;
+    * the held frame is a LocalRelation, the distributed one an aggregate. */
+  private def same(what: String, verb: () => DataFrame): Unit = {
+    val held = verb()
+    assert(held.queryExecution.analyzed.isInstanceOf[LocalRelation], s"$what: not held")
+    val (dSchema, dRows) = distributed {
+      val d = verb()
+      assert(d.queryExecution.analyzed.collectFirst { case a: Aggregate => a }.nonEmpty,
+        s"$what: not distributed")
+      (d.schema, sorted(d))
+    }
+    assert(held.schema == dSchema, what)
+    val hRows = sorted(held)
+    assert(hRows.nonEmpty || dRows.isEmpty, what)
+    assert(hRows == dRows, what)
+  }
+
+  test("held reads equal the distributed merge: readLatest, readAsOf and lookup " +
+      "over stored and client-sized logs") {
+    for (l <- logs; (form, log) <- Seq("stored" -> (() => l.stored), "client" -> (() => l.client))) {
+      val tag = s"${l.name}/$form"
+      same(s"$tag readLatest", () => DynTable.readLatest(log(), l.keys))
+      Seq(l.maxTs / 3, 2 * l.maxTs / 3).foreach { t =>
+        same(s"$tag readAsOf $t", () => DynTable.readAsOf(log(), l.keys, lit(t)))
+      }
+      same(s"$tag lookup", () => DynTable.lookup(log(), l.keys, l.lookups))
+    }
+  }
+
+  /** The root-most message on `t`'s cause chain naming the conflict. */
+  private def conflictMessage(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      .filter(m => m != null && m.contains("Row lock conflict")).toSeq.lastOption
+      .getOrElse(fail(s"no row lock conflict in: ${causeMessages(t)}"))
+
+  test("held commit check equals the in-plan one: commit and abort, " +
+      "stored and client-sized logs") {
+    for (l <- logs; (form, log) <- Seq("stored" -> (() => l.stored), "client" -> (() => l.client))) {
+      val tag = s"${l.name}/$form"
+      val keyed = l.rows.filter(r => l.keyOf(r).forall(_ != null) && l.ts(r).nonEmpty)
+      val newest = keyed.maxBy(l.ts(_).get)
+      val oldest = keyed.minBy(l.ts(_).get)
+      val keyTypes = l.keys.map(l.schema(_))
+      val stagedSchema = StructType(keyTypes ++ Seq(StructField("op", StringType),
+        StructField("v", DoubleType), StructField("s", StringType)))
+      def staged(rows: Row*): DataFrame = spark.createDataFrame(rows.asJava, stagedSchema)
+      val nullKey = Row.fromSeq(l.keys.map(_ => null) ++ Seq(DynTable.OpUpsert, 1.0, "n"))
+      val commitTs = l.maxTs + 1
+      // started at the newest version: no staged key has a later one
+      val ok = staged(Row.fromSeq(l.keyOf(oldest) ++ Seq(DynTable.OpUpsert, 2.5, "x")),
+        Row.fromSeq(l.keyOf(newest) ++ Seq(DynTable.OpDelete, null, null)), nullKey)
+      val commit = () => DynTable.commitTransaction(log(), ok, l.keys, lit(l.maxTs), lit(commitTs))
+      val held = commit()
+      assert(Jobs.count(spark)(sorted(held)) == 1, s"$tag: a held commit runs only its write")
+      val (dSchema, dRows) = distributed { val d = commit(); (d.schema, sorted(d)) }
+      assert(held.schema == dSchema, tag)
+      assert(sorted(held) == dRows, tag)
+      // started just before the newest version of a staged key: abort
+      val stale = staged(Row.fromSeq(l.keyOf(newest) ++ Seq(DynTable.OpUpsert, 3.5, "y")))
+      val abort = () => DynTable.commitTransaction(log(), stale, l.keys,
+        lit(l.ts(newest).get - 1), lit(commitTs)).collect()
+      val heldMessage = conflictMessage(intercept[Exception](abort()))
+      val distMessage = distributed(conflictMessage(intercept[Exception](abort())))
+      assert(heldMessage == distMessage, tag)
+    }
+  }
+
+  test("the held store reads only new files, in one job, and keeps only listed files") {
+    val l = logs.head
+    val schema = l.stored.schema
+    // a user schema: relisting the directory runs no inference job
+    def log: DataFrame = spark.read.schema(schema).parquet(l.dir)
+    def reads(): Seq[String] = Seq(
+      DynTable.readLatest(log, l.keys),
+      DynTable.lookup(log, l.keys, l.lookups),
+      DynTable.readAsOf(log, l.keys, lit(l.maxTs / 2))).flatMap(sorted)
+    val first = reads()
+    assert(Jobs.count(spark)(assert(reads() == first)) == 0, "unchanged stored log")
+
+    val staged = spark.createDataFrame(Seq(Row(1000L, DynTable.OpUpsert, 0.5, "new")).asJava,
+      StructType(Seq(StructField("k", LongType), StructField("op", StringType),
+        StructField("v", DoubleType), StructField("s", StringType))))
+    DynTable.commitTransaction(log, staged, l.keys, lit(l.maxTs), lit(l.maxTs + 1))
+      .where(col("ts") === l.maxTs + 1).coalesce(1).write.mode("append").parquet(l.dir)
+    var latest: Seq[String] = Nil
+    assert(Jobs.count(spark) { latest = sorted(DynTable.readLatest(log, l.keys)) } == 1,
+      "a read after appending one file")
+    assert(latest.contains("[1000,0.5,new]"))
+    assert(latest == distributed(sorted(DynTable.readLatest(log, l.keys))))
+
+    // compaction rewrites the directory: the store drops every old file
+    val tmp = new File(l.dir + ".compacting")
+    DynTable.compact(log, l.keys).coalesce(1).write.parquet(tmp.getPath)
+    FileUtils.deleteDirectory(new File(l.dir))
+    assert(tmp.renameTo(new File(l.dir)))
+    assert(sorted(DynTable.readLatest(log, l.keys)) ==
+      distributed(sorted(DynTable.readLatest(log, l.keys))))
+    val listed = new File(l.dir).listFiles().map(_.getName)
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSet
+    val held = Tables.heldFiles(spark).collect {
+      case (table, files) if table.endsWith(l.dir) => files.map(new org.apache.hadoop.fs.Path(_).getName)
+    }
+    assert(held.toSeq == Seq(listed))
+  }
+
+  test("consumer registry and producer table reads run no job, nulls included") {
+    var reg = DynTable.emptyConsumerRegistry(spark)
+    reg = DynTable.advanceConsumer(reg, "c1", 1L, 2L, ts = 10L)
+    reg = DynTable.advanceConsumer(reg, "c1", 1L, 4L, ts = 20L)
+    // a null consumer, and an advance with a null ts, which never wins
+    reg = reg.unionByName(spark.createDataFrame(Seq(
+      Row(null, 1L, 7L, 30L, DynTable.OpUpsert),
+      Row("c1", 1L, 9L, null, DynTable.OpUpsert)).asJava,
+      StructType(reg.schema.map(_.copy(nullable = true)))))
+    var offsets = (0L, 0L)
+    assert(Jobs.count(spark) {
+      offsets = (DynTable.consumerOffset(reg, "c1", 1L), DynTable.consumerOffset(reg, "c2", 1L))
+    } == 0)
+    assert(offsets == (4L, 0L))
+    assert(offsets == distributed(
+      (DynTable.consumerOffset(reg, "c1", 1L), DynTable.consumerOffset(reg, "c2", 1L))))
+    val (p1, _, _) = DynTable.createProducerSession(DynTable.emptyProducer(spark), "h", 1L)
+    val (p2, e1, s1) = DynTable.createProducerSession(p1, "h", 2L)
+    assert((e1, s1) == (1L, -1L))
+    var session = (0L, 0L)
+    assert(Jobs.count(spark) { session = DynTable.producerSession(p2, "h") } == 0)
+    assert(session == (1L, -1L))
+  }
+
+  test("eligibility: derived logs, logs above the threshold and holding off are not held") {
+    val l = logs.head
+    assert(Tables.held(l.stored).nonEmpty && Tables.held(l.client).nonEmpty)
+    assert(Tables.held(l.stored.withColumn("v", col("v") * 2)).isEmpty)
+    withThreshold("16")(assert(Tables.held(l.stored).isEmpty))
+    distributed {
+      assert(Tables.held(l.stored).isEmpty && Tables.held(l.client).isEmpty)
+    }
+  }
+}

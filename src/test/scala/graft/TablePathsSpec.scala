@@ -210,4 +210,36 @@ class TablePathsSpec extends SparkSpec {
     assert(lengths.size == 6, s"member lengths must all differ: $lengths")
     assert(views().size == 1, s"superseded views leak: ${views()}")
   }
+
+  test("Tables.load: an append-only relist reuses the schema with no job; " +
+      "a rewrite with another schema re-infers") {
+    import java.io.File
+    import graft.sources.Tables
+    val dir = java.nio.file.Files.createTempDirectory("trelist").toString
+    val p = Tables.path(dir, "log")
+    spark.range(0, 5).selectExpr("id AS k", "id * 2 AS v", "'a' AS s")
+      .coalesce(1).write.parquet(p)
+    assert(Tables.load(spark, dir, "log").count() == 5)
+    // Spark infers a parquet schema from the first data file by path:
+    // the appended file goes in under a name that sorts after it
+    Thread.sleep(1100) // distinct directory mtime even on coarse filesystems
+    val tmp = s"$dir/append.tmp"
+    spark.range(5, 8).selectExpr("id AS k", "id * 2 AS v", "'b' AS s")
+      .coalesce(1).write.parquet(tmp)
+    val part = new File(tmp).listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    assert(part.renameTo(new File(p, "zz-append.parquet")))
+    var reloaded: org.apache.spark.sql.DataFrame = null
+    val jobs = Jobs.count(spark) { reloaded = Tables.load(spark, dir, "log") }
+    assert(jobs == 0, s"the append-only reload ran $jobs jobs")
+    assert(reloaded.schema == spark.read.parquet(p).schema)
+    assert(reloaded.count() == 8)
+    // a rewrite changes the first file: its new schema is inferred
+    Thread.sleep(1100)
+    spark.range(0, 3).selectExpr("CAST(id AS STRING) AS k", "id AS w", "true AS x")
+      .coalesce(1).write.mode("overwrite").parquet(p)
+    val rewritten = Tables.load(spark, dir, "log")
+    assert(rewritten.schema == spark.read.parquet(p).schema)
+    assert(rewritten.columns.toSeq == Seq("k", "w", "x") && rewritten.count() == 3)
+  }
 }
