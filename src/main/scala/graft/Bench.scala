@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sources.Tables
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
@@ -44,6 +45,23 @@ object Bench {
     "yql_agg_tdigest_merge",
     "strm_window_hopping", "strm_window_session", "strm_match_recognize")
 
+  /** Run `df` to completion by draining `queryExecution.toRdd` on the
+    * executors (see above): the one way every timing main forces a
+    * query. */
+  private[graft] def force(df: DataFrame): Unit =
+    df.queryExecution.toRdd.foreachPartition { it =>
+      while (it.hasNext) it.next()
+    }
+
+  /** The form of query `name` the bench times. Verdict-wrapped
+    * correctness keys time the OPERATOR alone (queries.{Llm,Yql,Ops}
+    * .benchOnly): their `SparkEntry.queries` entries also compute the
+    * exact truth + verdict (or a full fuzz sweep), which belongs to the
+    * correctness gate, not the throughput number. */
+  private[graft] def timedForm(name: String): (SparkSession, String) => DataFrame =
+    (graft.queries.Llm.benchOnly ++ graft.queries.Yql.benchOnly ++ graft.queries.Ops.benchOnly)
+      .getOrElse(name, SparkEntry.queries(name))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.get()
@@ -56,14 +74,9 @@ object Bench {
       try Tables.load(spark, sfDir, t).count()
       catch { case _: Throwable => }
     }
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.queryExecution.toRdd.foreachPartition { it =>
-        while (it.hasNext) it.next()
-      }
     // steady-state timing: best of two runs per query (first run also
     // pays plan compilation; the driver wants operator throughput)
-    def once(name: String,
-             fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def once(name: String, fn: (SparkSession, String) => DataFrame): Double = {
       val t0 = System.nanoTime()
       try force(fn(spark, sfDir))
       catch {
@@ -81,18 +94,12 @@ object Bench {
       case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
       case None => SparkEntry.queries
     }
-    val results = selected.map { case (name, fn) =>
+    val results = selected.map { case (name, _) =>
       // settle the heap between operators: without this, a
       // garbage-heavy query taxes its successors' timings and the
       // per-operator numbers measure GC debt, not the operator
       System.gc()
-      // Verdict-wrapped correctness keys time the OPERATOR alone here
-      // (queries.{Llm,Yql}.benchOnly): their `queries` entries also
-      // compute the exact truth + verdict (or a full fuzz sweep),
-      // which belongs to the correctness gate, not the throughput
-      // number.
-      val timed = (graft.queries.Llm.benchOnly ++ graft.queries.Yql.benchOnly ++ graft.queries.Ops.benchOnly)
-        .getOrElse(name, fn)
+      val timed = timedForm(name)
       // MEDIAN of three runs (first also pays plan compilation): for
       // sub-0.3 s queries job-fixed overhead dominates and best-of-N
       // drifts with scheduler luck — the median is noise-robust, so

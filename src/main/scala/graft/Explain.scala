@@ -2,18 +2,19 @@ package graft
 
 /** Plan inspection tool: print the optimized logical plan and the
   * formatted physical plan (and optionally the adaptive final plan
-  * after execution) of any SparkEntry query. Usage:
+  * after execution) of any SparkEntry query, in the form graft.Bench
+  * times ([[Bench.timedForm]]). Usage:
   *
   *   runMain graft.Explain <sfDir> <query>[,<query>...] [--run] [--ab]
   *
-  * `--run` executes the query first so AQE's final plan (actual join
-  * strategies, coalesced partitions, runtime row counts) is shown
-  * instead of the static estimate. `--ab` also prints the same plans
-  * from `spark.newSession()`, which keeps the session extensions but
-  * not the optimizer rules [[GraftSession.installRules]] adds. Both
-  * sessions size their shuffles with [[GraftSession.tuneShuffleFor]],
-  * as Bench and Verify do, so exchanges show the partition counts
-  * those runs use.
+  * `--run` executes the query first, as Bench does ([[Bench.force]]),
+  * so AQE's final plan (actual join strategies, coalesced partitions,
+  * runtime row counts) is shown instead of the static estimate.
+  * `--ab` also prints the same plans from `spark.newSession()`, which
+  * keeps the session extensions but not the optimizer rules
+  * [[GraftSession.installRules]] adds. Both sessions size their
+  * shuffles with [[GraftSession.tuneShuffleFor]], as Bench and Verify
+  * do, so exchanges show the partition counts those runs use.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -26,11 +27,9 @@ object Explain {
     sessions.foreach { case (_, s) => GraftSession.tuneShuffleFor(s, sfDir) }
     names.foreach { name =>
       sessions.foreach { case (label, s) =>
-        val df = SparkEntry.queries(name)(s, sfDir)
+        val df = Bench.timedForm(name)(s, sfDir)
         println(s"===== $name [$label] =====")
-        if (run) {
-          df.queryExecution.toRdd.foreachPartition(it => while (it.hasNext) it.next())
-        }
+        if (run) Bench.force(df)
         println(df.queryExecution.optimizedPlan.treeString)
         println(df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))

@@ -29,6 +29,10 @@ object GraftSession {
   val extensions: SparkSessionExtensions => Unit =
     _.injectQueryStagePrepRule(_ => graft.plans.ParameterizeLiterals)
 
+  /** AQE's target shuffle partition size, which [[tuneShuffleFor]] also
+    * sizes the initial fan-out by. */
+  val AdvisoryPartitionBytes: Long = 64L << 20
+
   def defaultMaster: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"
 
   def builder(master: String = defaultMaster): SparkSession.Builder = {
@@ -48,9 +52,8 @@ object GraftSession {
       // the sf100 decade stops spilling. The same posture holds on a
       // real cluster: initialPartitionNum >> cores, AQE right-sizes.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_HEADROOM", (cpus.toInt * 4).toString))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64m"))
+        (cpus.toInt * 4).toString)
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", AdvisoryPartitionBytes)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // Deliberately NOT raised above Spark's default: a high threshold
@@ -118,16 +121,12 @@ object GraftSession {
     * rule holds on a real cluster — fan-out follows data volume, AQE
     * coalesces the remainder. */
   def tuneShuffleFor(spark: SparkSession, dir: String): Unit = {
-    // An explicit SPARK_GRAFT_HEADROOM override (read at builder time)
-    // wins over the data-derived estimate — don't clobber it here.
-    if (sys.env.contains("SPARK_GRAFT_HEADROOM")) return
     val bytes = try graft.sources.Tables.diskBytes(new java.io.File(dir))
       catch { case _: Exception => 0L }
     val cpus = spark.sparkContext.defaultParallelism.max(1)
-    val advisory = 64L << 20
     val decompressed = bytes * 4 // mirrors fileCompressionFactor
     val want = math.max(cpus.toLong,
-      math.min(cpus.toLong * 4, decompressed / advisory + 1))
+      math.min(cpus.toLong * 4, decompressed / AdvisoryPartitionBytes + 1))
     spark.conf.set(
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
       want.toString)

@@ -23,24 +23,20 @@ object Ops {
     * position stamp — three range-sorts plus an RDD round trip, all
     * gate machinery. The reference's SortedMerge consumes chunks that
     * are ALREADY sorted, so the throughput number times the MERGE
-    * alone: the sorted halves materialize once per sf dir (memoized
-    * parquet fixture), and the timed plan is one range-exchange
+    * alone: the sorted halves materialize once per `lineitem` table
+    * ([[Tables.derived]]), and the timed plan is one range-exchange
     * merge over them. */
   val benchOnly: Map[String, (SparkSession, String) => DataFrame] = Map(
     "op_merge_sorted" -> ((s, d) => {
       val keys = Seq(col("l_orderkey").asc, col("l_linenumber").asc)
-      val fixture = "/tmp/graft_fixtures/merge_sorted_" +
-        java.lang.Integer.toHexString(d.hashCode)
-      val marker = new java.io.File(s"$fixture/_done")
-      if (!marker.exists()) {
+      val fixture = Tables.derived(s, Tables.path(d, "lineitem"), "merge_sorted") { dir =>
         val li = t(s, d, "lineitem").select(col("l_orderkey"),
           col("l_linenumber").cast("long").as("l_linenumber"),
           col("l_quantity"))
         Operations.sort(li.filter(col("l_orderkey") % 2 === 0), keys)
-          .write.mode("overwrite").parquet(s"$fixture/a")
+          .write.mode("overwrite").parquet(s"$dir/a")
         Operations.sort(li.filter(col("l_orderkey") % 2 =!= 0), keys)
-          .write.mode("overwrite").parquet(s"$fixture/b")
-        marker.getParentFile.mkdirs(); marker.createNewFile()
+          .write.mode("overwrite").parquet(s"$dir/b")
       }
       Operations.mergeSorted(Seq(
         s.read.parquet(s"$fixture/a"), s.read.parquet(s"$fixture/b")), keys)

@@ -99,25 +99,21 @@ object Yql {
   /** The table-path-function fixture: a "cypress directory" of
     * per-month order tables (1996-01..1996-04), one parquet directory
     * per month, derived from the sf dir's `orders` — written once per
-    * sf dir and reused (members are tiny; the INTERESTING part, the
-    * multi-table read, is what the queries exercise). */
+    * `orders` table ([[Tables.derived]]) and reused (members are tiny;
+    * the INTERESTING part, the multi-table read, is what the queries
+    * exercise). */
   private[graft] def tablePathDir(d: String): String =
-    s"/tmp/graft_paths/${new java.io.File(d).getName}/orders_by_month"
+    Tables.derivedDir(SparkSession.active, Tables.path(d, "orders"), "orders_by_month")
 
   private[graft] val tablePathMonths = Seq("1996-01", "1996-02", "1996-03", "1996-04")
 
   private[graft] def tablePathFixture(s: SparkSession, d: String): Unit =
-    this.synchronized {
-      val base = tablePathDir(d)
-      val done = new java.io.File(base, "_FIXTURE_OK")
-      if (done.exists) return
+    Tables.derived(s, Tables.path(d, "orders"), "orders_by_month") { base =>
       val o = t(s, d, "orders")
       tablePathMonths.foreach { m =>
         o.filter(date_format(col("o_orderdate"), "yyyy-MM") === m)
           .write.mode("overwrite").parquet(s"$base/$m")
       }
-      done.createNewFile()
-      ()
     }
 
   /** Per-sf-dir lineitem stored bucketed+sorted by l_orderkey — the

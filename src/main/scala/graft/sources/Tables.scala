@@ -63,10 +63,11 @@ object Tables {
     * session that built it). */
   /** Sessions key WEAKLY (a dropped session's relations become
     * collectable instead of pinning DataFrames for the JVM lifetime);
-    * entries carry the path's (mtime, length) stamp so an in-session
-    * rewrite of a cached path invalidates the stale file index — one
-    * stat() per load, against the tens-of-ms full re-resolution the
-    * cache exists to avoid.
+    * entries carry the (mtime, length) stamp of each path they read so
+    * an in-session rewrite of a cached path invalidates the stale file
+    * index — one stat() per path per load, against the tens-of-ms full
+    * re-resolution the cache exists to avoid. [[load]]'s tables and the
+    * table-path functions' [[pathView]]s share this one cache.
     *
     * The relation map is held through a SoftReference: its DataFrames
     * strongly reference their session, and a WeakHashMap entry whose
@@ -77,9 +78,9 @@ object Tables {
     * System.gc()), so cache hits are unaffected. */
   private val relationCache = new SessionMaps[Cached]
 
-  /** A cached relation with its path stamp, the schema Spark read and
-    * the data file Spark read it from (see [[relisted]]). */
-  private final case class Cached(df: DataFrame, mtime: Long, len: Long,
+  /** A cached relation with the stamps of the files it reads, the schema
+    * Spark read and the data file Spark read it from (see [[relisted]]). */
+  private final case class Cached(df: DataFrame, stamp: Seq[(Long, Long)],
       schema: StructType, first: Option[FileKey])
 
   /** (path, length, mtime) of one data file. */
@@ -110,6 +111,36 @@ object Tables {
     (f.lastModified, f.length)
   }
 
+  /** A name-safe MD5 hex digest of `s`. */
+  private def digest(s: String): String = java.util.UUID.nameUUIDFromBytes(
+    s.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString.replace("-", "")
+
+  /** A fixture derived from the table at `source`, written once by
+    * `write` into [[derivedDir]] and reused while that table keeps its
+    * path and stamp. */
+  private[graft] def derived(spark: SparkSession, source: String, kind: String)(
+      write: String => Unit): String = synchronized {
+    val dir = derivedDir(spark, source, kind)
+    val done = new java.io.File(dir, "_done")
+    if (!done.exists) {
+      write(dir)
+      done.getParentFile.mkdirs()
+      done.createNewFile()
+    }
+    dir
+  }
+
+  /** Where [[derived]] keeps a `kind` fixture of the table at `source`:
+    * under the session's warehouse dir, keyed by the source's absolute
+    * path and [[stampOf]], so another corpus, or a rewrite of this one,
+    * never reads it. */
+  private[graft] def derivedDir(spark: SparkSession, source: String, kind: String): String = {
+    val (mtime, len) = stampOf(source)
+    val key = digest(s"${new java.io.File(source).getAbsolutePath}|$mtime|$len")
+    val warehouse = new Path(spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath
+    s"$warehouse/graft_fixtures/${kind}_$key"
+  }
+
   /** Load one table. Never caches data — Catalyst column pruning +
     * filter pushdown on the parquet scan beat an uncompressed memory
     * cache at 100 TB scale (small dynamic tables read through DynTable
@@ -124,28 +155,53 @@ object Tables {
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val p = path(dir, name)
-    val cache = relationCache(spark)
-    val (mtime, len) = stampOf(p)
-    val hit = cache.get(p)
-    if (hit != null && hit.mtime == mtime && hit.len == len) hit.df
-    else {
+    val stamp = Seq(stampOf(p))
+    hit(spark, p, stamp).getOrElse {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = Option(hit).flatMap(relisted(spark, p, _)).getOrElse(spark.read.parquet(p))
-      val normalized = if (name == "events") {
-        import org.apache.spark.sql.functions._
-        import org.apache.spark.sql.types._
-        df.schema("ts").dataType match {
-          case LongType => // nanos-as-long from TIMESTAMP(NANOS) parquet
-            df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-          case _: TimestampNTZType =>
-            df.withColumn("ts", col("ts").cast(TimestampType))
-          case _ => df
-        }
-      } else df
-      val built = tagUnique(normalized, name)
-      cache.put(p, Cached(built, mtime, len, df.schema, schemaFile(df)))
-      built
+      resolve(spark, p, p, stamp) { df =>
+        val normalized = if (name == "events") {
+          import org.apache.spark.sql.functions._
+          import org.apache.spark.sql.types._
+          df.schema("ts").dataType match {
+            case LongType => // nanos-as-long from TIMESTAMP(NANOS) parquet
+              df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+            case _: TimestampNTZType =>
+              df.withColumn("ts", col("ts").cast(TimestampType))
+            case _ => df
+          }
+        } else df
+        tagUnique(normalized, name)
+      }
     }
+  }
+
+  /** The temp view over the raw parquet relation at `p`, which reads the
+    * member tables `members` (`p` itself, or the members a `dir/{a,b}`
+    * glob names): table-path functions scan it. The relation is cached
+    * like [[load]]'s, stamped by the members, and the view's name is
+    * derived from `p`, so re-resolving after a member changes replaces
+    * the view in place. */
+  private[graft] def pathView(spark: SparkSession, p: String, members: Seq[String]): String = {
+    val view = "__g_tbl_" + digest(p)
+    val stamp = members.map(stampOf)
+    if (hit(spark, view, stamp).isEmpty)
+      resolve(spark, view, p, stamp) { df => df.createOrReplaceTempView(view); df }
+    view
+  }
+
+  /** The relation cached under `key` while its files keep `stamp`. */
+  private def hit(spark: SparkSession, key: String, stamp: Seq[(Long, Long)]): Option[DataFrame] =
+    Option(relationCache(spark).get(key)).filter(_.stamp == stamp).map(_.df)
+
+  /** Read the parquet relation at `p` (with the previous schema when
+    * [[relisted]] allows) and cache `build` of it under `key`. */
+  private def resolve(spark: SparkSession, key: String, p: String, stamp: Seq[(Long, Long)])(
+      build: DataFrame => DataFrame): DataFrame = {
+    val cache = relationCache(spark)
+    val df = Option(cache.get(key)).flatMap(relisted(spark, p, _)).getOrElse(spark.read.parquet(p))
+    val built = build(df)
+    cache.put(key, Cached(built, stamp, df.schema, schemaFile(df)))
+    built
   }
 
   /** A relisted path whose schema needs no inference job: without

@@ -7,7 +7,9 @@ package graft.tools
   * `--ab` INTERLEAVES rule-on and rule-off reps in ONE JVM (shared
   * page cache, same session placement — the SCALING.md adjudication
   * method for cross-session noise). Prints per-rep seconds + medians;
-  * same session posture as Bench.
+  * same session posture as Bench, and each rep times what Bench times:
+  * the query's timed form, drained by `Bench.force` (a `count()` would
+  * let Catalyst prune the projections away).
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
@@ -24,9 +26,9 @@ object TimeQuery {
 
     def rep(s: org.apache.spark.sql.SparkSession, tag: String): Double = {
       val t0 = System.nanoTime()
-      val n = graft.SparkEntry.queries(name)(s, dir).count()
+      graft.Bench.force(graft.Bench.timedForm(name)(s, dir))
       val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[time] $name%s$tag rows=$n%d ${sec}%.3f s")
+      println(f"[time] $name%s$tag ${sec}%.3f s")
       sec
     }
 

@@ -128,21 +128,21 @@ class TablePathsSpec extends SparkSpec {
     // LIKE as an operator survives
     assert(YqlSql.sql(spark, "SELECT 'abc' LIKE 'a%' AS x").as[Boolean].head())
     intercept[IllegalArgumentException] {
-      YqlTablePaths.rewrite("SELECT * FROM RANGE('/nonexistent_graft_dir')")
+      YqlTablePaths.rewrite(spark, "SELECT * FROM RANGE('/nonexistent_graft_dir')")
     }
     intercept[IllegalArgumentException] {
-      YqlTablePaths.rewrite(s"SELECT * FROM CONCAT('$dir/nope')")
+      YqlTablePaths.rewrite(spark, s"SELECT * FROM CONCAT('$dir/nope')")
     }
     // non-constant args pass through to Spark (table-valued functions,
     // the builtin range(n)) — no rewrite, no error here
-    assert(YqlTablePaths.rewrite("SELECT * FROM EACH(table_names)") ==
+    assert(YqlTablePaths.rewrite(spark, "SELECT * FROM EACH(table_names)") ==
       "SELECT * FROM EACH(table_names)")
-    assert(YqlTablePaths.rewrite("SELECT id FROM range(10)") ==
+    assert(YqlTablePaths.rewrite(spark, "SELECT id FROM range(10)") ==
       "SELECT id FROM range(10)")
     assert(YqlSql.sql(spark, "SELECT CAST(COUNT(id) AS BIGINT) AS n FROM range(10)")
       .as[Long].head() == 10L)
     // quoted text never triggers a rewrite
-    assert(YqlTablePaths.rewrite("SELECT 'FROM RANGE(x)' AS s") ==
+    assert(YqlTablePaths.rewrite(spark, "SELECT 'FROM RANGE(x)' AS s") ==
       "SELECT 'FROM RANGE(x)' AS s")
   }
 
@@ -241,5 +241,62 @@ class TablePathsSpec extends SparkSpec {
     val rewritten = Tables.load(spark, dir, "log")
     assert(rewritten.schema == spark.read.parquet(p).schema)
     assert(rewritten.columns.toSeq == Seq("k", "w", "x") && rewritten.count() == 3)
+  }
+
+  test("table-path views: an append to a RANGE member re-resolves with no job") {
+    import java.io.File
+    import java.nio.file.Files
+    val tp = Files.createTempDirectory("tappend").toString
+    Seq("a" -> 0L, "b" -> 10L).foreach { case (m, base) =>
+      spark.range(base, base + 4).selectExpr("id AS k", "CAST(id AS STRING) AS v")
+        .coalesce(1).write.parquet(s"$tp/$m")
+    }
+    val sql = s"SELECT * FROM RANGE('$tp')"
+    assert(YqlSql.sql(spark, sql).count() == 8)
+    // the appended file sorts after the first data file of the scan,
+    // the one Spark infers the schema from
+    Thread.sleep(1100) // distinct directory mtime even on coarse filesystems
+    val tmp = Files.createTempDirectory("tappend_src").toString + "/rows"
+    spark.range(20, 23).selectExpr("id AS k", "CAST(id AS STRING) AS v")
+      .coalesce(1).write.parquet(tmp)
+    val part = new File(tmp).listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    assert(part.renameTo(new File(s"$tp/b", "zz-append.parquet")))
+    var df: org.apache.spark.sql.DataFrame = null
+    val jobs = Jobs.count(spark) { df = YqlSql.sql(spark, sql) }
+    assert(jobs == 0, s"re-resolving the appended member ran $jobs jobs")
+    val fresh = spark.read.parquet(s"$tp/a", s"$tp/b")
+    assert(df.schema == fresh.schema)
+    assert(df.count() == fresh.count() && fresh.count() == 11)
+  }
+
+  test("table-path fixtures are keyed by their source table, not its directory name") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.functions._
+    import graft.sources.Tables
+    // two corpora under the same name whose orders differ
+    val corpora = Seq(Seq(1L -> "1996-02-03", 2L -> "1996-03-09"),
+        Seq(10L -> "1996-02-11", 11L -> "1996-02-12", 12L -> "1996-03-30"))
+      .map { rows =>
+        val d = Files.createTempDirectory("tfixture").toString + "/sfT"
+        rows.toDF("o_orderkey", "day")
+          .select(col("o_orderkey"), (col("o_orderkey") * 100 + 0.5).as("o_totalprice"),
+            to_date(col("day")).as("o_orderdate"))
+          .write.parquet(Tables.path(d, "orders"))
+        d
+      }
+    try corpora.foreach { d =>
+      val got = SparkEntry.queries("yql_table_range")(spark, d)
+        .selectExpr("n", "total", "CAST(lo_date AS STRING)", "CAST(hi_date AS STRING)")
+        .as[(Long, Long, String, String)].head()
+      val own = spark.read.parquet(Tables.path(d, "orders"))
+        .agg(count(lit(1)), sum(floor(col("o_totalprice"))).cast("long"),
+          min(col("o_orderdate")).cast("string"), max(col("o_orderdate")).cast("string"))
+        .as[(Long, Long, String, String)].head()
+      assert(got == own, s"yql_table_range over $d read another corpus's months")
+    } finally corpora.foreach { d =>
+      def rm(f: java.io.File): Unit = { Option(f.listFiles()).foreach(_.foreach(rm)); f.delete() }
+      rm(new java.io.File(Tables.derivedDir(spark, Tables.path(d, "orders"), "orders_by_month")))
+    }
   }
 }
