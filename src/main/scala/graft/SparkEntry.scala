@@ -14,7 +14,7 @@ object SparkEntry {
                             Map[String, String])] =
     Seq((QL.defs, QL.oracles), (Yql.defs, Yql.oracles), (Ops.defs, Ops.oracles),
       (Llm.defs, Llm.oracles), (Fns.defs, Fns.oracles), (Dyn.defs, Dyn.oracles),
-      (Strm.defs, Strm.oracles))
+      (Strm.defs, Strm.oracles), (graft.ql.FuzzDomains.defs, graft.ql.FuzzDomains.oracles))
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

@@ -149,7 +149,7 @@ object ComputedColumns {
   /** Conjoin `computed IN image(f, candidates)` wherever a filter pins
     * every source column of a spec and the plan also carries the
     * computed column. */
-  object DerivedPredicateRule extends Rule[LogicalPlan] {
+  object DerivedPredicateRule extends Rule[LogicalPlan] with PredicateHelper {
     override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
       case f @ Filter(cond, child) =>
         val out = child.outputSet
@@ -163,14 +163,9 @@ object ComputedColumns {
           }
         }.toSeq
         val missing = extras.filterNot(e =>
-          splitConjunctive(cond).exists(_.semanticEquals(e)))
+          splitConjunctivePredicates(cond).exists(_.semanticEquals(e)))
         if (missing.isEmpty) f
         else Filter(missing.foldLeft(cond)(And), child)
-    }
-
-    private def splitConjunctive(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => splitConjunctive(l) ++ splitConjunctive(r)
-      case other => Seq(other)
     }
 
     /** Finite candidate values for one source attribute, from the
@@ -297,11 +292,7 @@ object ComputedColumns {
       * the union is unbounded. */
     private[plans] def derivedForTop(cond: Expression, srcs: Seq[Attribute],
         cmp: Attribute, spec: Spec): Option[Expression] = {
-      def splitDisjunctive(e: Expression): Seq[Expression] = e match {
-        case Or(l, r) => splitDisjunctive(l) ++ splitDisjunctive(r)
-        case other => Seq(other)
-      }
-      splitDisjunctive(cond) match {
+      splitDisjunctivePredicates(cond) match {
         case Seq(single) => derivedFor(single, srcs, cmp, spec)
         case branches =>
           val imgs = branches.map(b => derivedFor(b, srcs, cmp, spec))
@@ -312,7 +303,7 @@ object ComputedColumns {
 
     private[plans] def derivedFor(cond: Expression, srcs: Seq[Attribute],
         cmp: Attribute, spec: Spec): Option[Expression] = {
-      val conj = splitConjunctive(cond)
+      val conj = splitConjunctivePredicates(cond)
       val perSource = srcs.map(a => candidatesFor(conj, a))
       if (perSource.exists(_._1.isEmpty)) {
         // no finite candidate set — a single MONOTONE source with a

@@ -26,7 +26,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * |R| rows — on a large foreign table the join input shrinks by the
   * key fan-in before it ever shuffles.
   */
-object PushDownGroupBy {
+object PushDownGroupBy extends PredicateHelper {
 
   def install(spark: SparkSession): Unit = {
     val existing = spark.experimental.extraOptimizations
@@ -38,6 +38,24 @@ object PushDownGroupBy {
       if (!withPush.exists(_.isInstanceOf[EagerAggUniqueJoinRule.type]))
         withPush :+ EagerAggUniqueJoinRule
       else withPush
+  }
+
+  /** The (left, right) attribute pairs of an inner or left outer
+    * equi-join, or None unless every conjunct of its condition equates
+    * a left attribute with a right one. */
+  private def equiKeyPairs(join: Join): Option[Seq[(Attribute, Attribute)]] = {
+    val Join(left, right, joinType, condOpt, _) = join
+    if (joinType != Inner && joinType != LeftOuter) return None
+    val cond = condOpt.getOrElse(return None)
+    Some(splitConjunctivePredicates(cond).map {
+      case EqualTo(a: Attribute, b: Attribute)
+          if left.outputSet.contains(a) && right.outputSet.contains(b) =>
+        (a, b)
+      case EqualTo(b: Attribute, a: Attribute)
+          if left.outputSet.contains(a) && right.outputSet.contains(b) =>
+        (a, b)
+      case _ => return None
+    })
   }
 
   object PushAggThroughJoinRule extends Rule[LogicalPlan] {
@@ -56,20 +74,7 @@ object PushDownGroupBy {
 
     private def rewrite(agg: Aggregate, join: Join): Option[LogicalPlan] = {
       val Join(left, right, joinType, condOpt, hint) = join
-      if (joinType != Inner && joinType != LeftOuter) return None
-      val cond = condOpt.getOrElse(return None)
-
-      // equi-join on attributes only, one side each
-      val conjuncts = splitConjunctive(cond)
-      val keyPairs = conjuncts.map {
-        case EqualTo(a: Attribute, b: Attribute)
-            if left.outputSet.contains(a) && right.outputSet.contains(b) =>
-          (a, b)
-        case EqualTo(b: Attribute, a: Attribute)
-            if left.outputSet.contains(a) && right.outputSet.contains(b) =>
-          (a, b)
-        case _ => return None
-      }
+      val keyPairs = equiKeyPairs(join).getOrElse(return None)
       val rightKeys = keyPairs.map(_._2).distinct
 
       // idempotence: if the right side is already aggregated by exactly
@@ -137,11 +142,6 @@ object PushDownGroupBy {
       }
       Some(agg.copy(aggregateExpressions = replaced, child = newJoin))
     }
-
-    private def splitConjunctive(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => splitConjunctive(l) ++ splitConjunctive(r)
-      case other => Seq(other)
-    }
   }
 
   /** The LEFT-side eager aggregation the reference fires when the
@@ -173,23 +173,20 @@ object PushDownGroupBy {
     * keeps them with NULL right columns, exactly what each collapse-
     * safe aggregate returns over an absent right row.
     *
-    * COST GATE (the `spark.graft.eagerAggUniqueJoin` conf:
-    * off | auto | force, default auto): the rewrite trades the join's
-    * probe volume for an extra full aggregation pass over L, and that
-    * trade INVERTS when the pre-aggregate needs its own exchange at
-    * low key fan-in — the round-11 interleaved A/B measured
-    * yql_agg_some (~4 lineitem rows/order) at sf10 on=11.8 s vs
-    * off=14.5 s but at sf100 on=308 s vs off=112 s: past memory scale
-    * the extra 600M-row hash pass costs 3× what the 4× probe shrink
-    * saves. The reference fires this rewrite from SORTED-table
+    * COST GATE: the rewrite trades the join's probe volume for an
+    * extra full aggregation pass over L, and that trade INVERTS when
+    * the pre-aggregate needs its own exchange at low key fan-in — an
+    * interleaved A/B (SCALING.md) measured yql_agg_some (~4 lineitem
+    * rows/order) at sf10 on=11.8 s vs off=14.5 s but at sf100 on=308 s
+    * vs off=112 s: past memory scale the extra 600M-row hash pass costs
+    * 3× what the 4× probe shrink saves. The reference fires this rewrite from SORTED-table
     * schemas, where the pre-aggregate rides the existing key order
-    * for free (yql_yt_join_impl.cpp:1030-1150) — `auto` mirrors that
+    * for free (yql_yt_join_impl.cpp:1030-1150) — the gate mirrors that
     * exact condition: fire only when the left leaf's bucket layout
     * covers the grouping keys, so the pre-aggregate inherits the
     * scan's hash partitioning and inserts NO exchange; then the
     * rewrite strictly removes work (agg input = scan either way, join
-    * probe shrinks |L|→|groups|). `force` keeps the unconditional
-    * rewrite for layouts the rule cannot see.
+    * probe shrinks |L|→|groups|).
     */
   object EagerAggUniqueJoinRule extends Rule[LogicalPlan] {
 
@@ -201,24 +198,9 @@ object PushDownGroupBy {
         rewrite(agg, join).getOrElse(agg)
     }
 
-    private def mode: String = org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.eagerAggUniqueJoin", "auto")
-
     private def rewrite(agg: Aggregate, join: Join): Option[LogicalPlan] = {
-      if (mode == "off") return None
       val Join(left, right, joinType, condOpt, hint) = join
-      if (joinType != Inner && joinType != LeftOuter) return None
-      val cond = condOpt.getOrElse(return None)
-
-      val keyPairs = splitConjunctive(cond).map {
-        case EqualTo(a: Attribute, b: Attribute)
-            if left.outputSet.contains(a) && right.outputSet.contains(b) =>
-          (a, b)
-        case EqualTo(b: Attribute, a: Attribute)
-            if left.outputSet.contains(a) && right.outputSet.contains(b) =>
-          (a, b)
-        case _ => return None
-      }
+      val keyPairs = equiKeyPairs(join).getOrElse(return None)
       val leftKeys = keyPairs.map(_._1).distinct
       val rightKeys = keyPairs.map(_._2).distinct
       if (!uniqueOn(rightKeys, right)) return None
@@ -233,11 +215,11 @@ object PushDownGroupBy {
       if (!leftKeys.forall(k => gAttrs.exists(_.semanticEquals(k))))
         return None
 
-      // cost gate (see object Scaladoc): in auto mode the pre-aggregate
-      // must be exchange-free — the left leaf's bucket layout covers
-      // the grouping keys, so the aggregate inherits the scan's hash
+      // cost gate (see object Scaladoc): the pre-aggregate must be
+      // exchange-free — the left leaf's bucket layout covers the
+      // grouping keys, so the aggregate inherits the scan's hash
       // partitioning and the rewrite strictly removes work
-      if (mode != "force" && !exchangeFreePreAgg(gAttrs, left)) return None
+      if (!exchangeFreePreAgg(gAttrs, left)) return None
 
       val aggCalls = agg.aggregateExpressions.flatMap(_.collect {
         case ae: AggregateExpression => ae
@@ -328,11 +310,6 @@ object PushDownGroupBy {
           keys.head.metadata.contains(graft.sources.Tables.UniqueMetaKey) &&
           keys.head.metadata.getBoolean(graft.sources.Tables.UniqueMetaKey)
       case _ => false
-    }
-
-    private def splitConjunctive(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => splitConjunctive(l) ++ splitConjunctive(r)
-      case other => Seq(other)
     }
   }
 }

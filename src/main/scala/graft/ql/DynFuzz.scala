@@ -28,14 +28,16 @@ object DynFuzz {
   final case class Params(keyMod: Long, delMod: Long, valMod: Long,
       cutoff: Long, aggFn: String, maxVersions: Int, stagedRes: Long)
 
+  /** splitmix-style bit mixing: decorrelates the parameter draws of
+    * every dynamic-table fuzz domain. */
+  private[ql] def mix(x: Long): Long = {
+    var z = x + 0x9e3779b97f4a7c15L
+    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
+    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
+    z ^ (z >>> 31)
+  }
+
   def params(seed: Long): Params = {
-    // splitmix-style bit mixing: decorrelate the parameter draws
-    def mix(x: Long): Long = {
-      var z = x + 0x9e3779b97f4a7c15L
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
     val keyMods = Array(13L, 29L, 53L, 83L)
     val delMods = Array(5L, 7L, 11L, 13L)
     val valMods = Array(50L, 100L, 250L)
@@ -56,30 +58,28 @@ object DynFuzz {
   private val TxStartTs = 10000000000L
   private val TxCommitTs = TxStartTs + 1000L
 
-  /** The engine-side log: (k, ts, op, v1, v2) + the partial-write mask
-    * case adds `written`. ts = o_orderkey is a total version order
-    * (unique per key), so every merge is deterministic. */
-  private def baseLog(orders: DataFrame, seed: Long, p: Params): DataFrame =
-    orders.select(
-      (col("o_orderkey") % p.keyMod).as("k"),
-      col("o_orderkey").as("ts"),
-      when((col("o_custkey") + seed) % p.delMod === 0, DynTable.OpDelete)
-        .otherwise(DynTable.OpUpsert).as("op"),
-      (col("o_custkey") % p.valMod).as("v1"),
-      ((col("o_custkey") * 7 + col("o_orderkey")) % p.valMod).as("v2"))
+  /** The seeded write/delete log over `orders`: (k, ts, op, v1, v2).
+    * ts = o_orderkey is a total version order (unique per key), so
+    * every merge is deterministic. Shared with [[DynIndexFuzz]]. */
+  private[ql] def logColumns(seed: Long, keyMod: Long, delMod: Long,
+      valMod: Long): Seq[Column] = Seq(
+    (col("o_orderkey") % keyMod).as("k"),
+    col("o_orderkey").as("ts"),
+    when((col("o_custkey") + seed) % delMod === 0, DynTable.OpDelete)
+      .otherwise(DynTable.OpUpsert).as("op"),
+    (col("o_custkey") % valMod).as("v1"),
+    ((col("o_custkey") * 7 + col("o_orderkey")) % valMod).as("v2"))
 
+  private def baseLog(orders: DataFrame, seed: Long, p: Params): DataFrame =
+    orders.select(logColumns(seed, p.keyMod, p.delMod, p.valMod): _*)
+
+  /** The log plus the partial-write mask `written`. */
   private def maskedLog(orders: DataFrame, seed: Long, p: Params): DataFrame = {
     val m = (col("o_custkey") + seed) % 3
-    orders.select(
-      (col("o_orderkey") % p.keyMod).as("k"),
-      col("o_orderkey").as("ts"),
-      when((col("o_custkey") + seed) % p.delMod === 0, DynTable.OpDelete)
-        .otherwise(DynTable.OpUpsert).as("op"),
-      (col("o_custkey") % p.valMod).as("v1"),
-      ((col("o_custkey") * 7 + col("o_orderkey")) % p.valMod).as("v2"),
+    orders.select(logColumns(seed, p.keyMod, p.delMod, p.valMod) :+
       when(m === 0, array(lit("v1")))
         .when(m === 1, array(lit("v2")))
-        .otherwise(lit(null).cast("array<string>")).as("written"))
+        .otherwise(lit(null).cast("array<string>")).as("written"): _*)
   }
 
   private val duckLog =
@@ -95,7 +95,7 @@ object DynFuzz {
     duckLog.format(p.keyMod, seed, p.delMod, p.valMod, p.valMod, seed)
 
   /** Fold a merged state to the uniform (case_id, n, chk) row. */
-  private def summarize(df: DataFrame, cid: Int, chk: Column): DataFrame =
+  private[ql] def summarize(df: DataFrame, cid: Int, chk: Column): DataFrame =
     df.agg(count(lit(1)).cast("long").as("n"),
         coalesce(sum(chk), lit(0L)).cast("long").as("chk"))
       .select(lit(cid.toLong).as("case_id"), col("n"), col("chk"))

@@ -1,6 +1,6 @@
 package graft.ql
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.DynTable
 
@@ -29,45 +29,24 @@ import graft.operators.DynTable
   *     over it, against a first-principles window replay.
   */
 object DynIndexFuzz {
+  import DynFuzz.{mix, summarize}
 
   final case class Params(keyMod: Long, delMod: Long, valMod: Long,
       cutoff: Long, predRes: Long)
 
-  def params(seed: Long): Params = {
-    def mix(x: Long): Long = {
-      var z = x + 0x9e3779b97f4a7c15L
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
-    Params(
-      keyMod = Array(11L, 23L, 47L, 89L)(((mix(seed) & Long.MaxValue) % 4).toInt),
-      delMod = Array(4L, 6L, 9L, 14L)(((mix(seed + 1) & Long.MaxValue) % 4).toInt),
-      valMod = Array(7L, 19L, 40L)(((mix(seed + 2) & Long.MaxValue) % 3).toInt),
-      cutoff = 1L + ((mix(seed + 3) & Long.MaxValue) % 7) * 2048L,
-      predRes = (mix(seed + 4) & Long.MaxValue) % 3)
-  }
-
-  /** Seeded primary log (identical SQL shape for the oracle): small
-    * valMod makes indexed values FLAP across versions of a key, the
-    * transition the maintenance pass must tombstone correctly. */
-  private def primaryLog(orders: DataFrame, seed: Long, p: Params): DataFrame =
-    orders.select(
-      (col("o_orderkey") % p.keyMod).as("k"),
-      col("o_orderkey").as("ts"),
-      when((col("o_custkey") + seed) % p.delMod === 0, DynTable.OpDelete)
-        .otherwise(DynTable.OpUpsert).as("op"),
-      (col("o_custkey") % p.valMod).as("v1"),
-      ((col("o_custkey") * 7 + col("o_orderkey")) % p.valMod).as("v2"))
-
-  private def summarize(df: DataFrame, cid: Int, chk: Column): DataFrame =
-    df.agg(count(lit(1)).cast("long").as("n"),
-        coalesce(sum(chk), lit(0L)).cast("long").as("chk"))
-      .select(lit(cid.toLong).as("case_id"), col("n"), col("chk"))
+  def params(seed: Long): Params = Params(
+    keyMod = Array(11L, 23L, 47L, 89L)(((mix(seed) & Long.MaxValue) % 4).toInt),
+    delMod = Array(4L, 6L, 9L, 14L)(((mix(seed + 1) & Long.MaxValue) % 4).toInt),
+    valMod = Array(7L, 19L, 40L)(((mix(seed + 2) & Long.MaxValue) % 3).toInt),
+    cutoff = 1L + ((mix(seed + 3) & Long.MaxValue) % 7) * 2048L,
+    predRes = (mix(seed + 4) & Long.MaxValue) % 3)
 
   def run(spark: SparkSession, orders: DataFrame, seed: Long): DataFrame = {
     val p = params(seed)
-    val log = primaryLog(orders, seed, p)
+    // the seeded primary log (identical SQL shape for the oracle): small
+    // valMod makes indexed values FLAP across versions of a key, the
+    // transition the maintenance pass must tombstone correctly
+    val log = orders.select(DynFuzz.logColumns(seed, p.keyMod, p.delMod, p.valMod): _*)
     val chk1 = col("k") * 1000003L + col("v1") * 31L
     val chk2 = chk1 + coalesce(col("v2"), lit(-13L)) * 7L
 

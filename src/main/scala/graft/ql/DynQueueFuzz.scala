@@ -36,17 +36,12 @@ import graft.operators.DynTable
   * queue_client.h:78-152 producer sessions (sequence-number fencing).
   */
 object DynQueueFuzz {
+  import DynFuzz.{mix, summarize}
 
   final case class Params(tablets: Int, batchA: Long, batchB: Long,
       trimEvery: Int, retained: Long, pushSplit: Long, pushOverlap: Long)
 
   def params(seed: Long): Params = {
-    def mix(x: Long): Long = {
-      var z = x + 0x9e3779b97f4a7c15L
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
     def pick(i: Long, m: Int) = ((mix(seed + i) & Long.MaxValue) % m).toInt
     Params(
       tablets = Array(2, 3, 5)(pick(0, 3)),
@@ -73,11 +68,6 @@ object DynQueueFuzz {
 
   private def rowChk: Column =
     col("tablet_index") * 1000003L + col("row_index") * 31L + col("event_id")
-
-  private def summarize(df: DataFrame, cid: Int, chk: Column): DataFrame =
-    df.agg(count(lit(1)).cast("long").as("n"),
-        coalesce(sum(chk), lit(0L)).cast("long").as("chk"))
-      .select(lit(cid.toLong).as("case_id"), col("n"), col("chk"))
 
   /** (n, chk) of one pulled batch, accumulated driver-side. The batch
     * is bounded by the seeded batch size (≤ 509) and the whole run by

@@ -147,27 +147,6 @@ object Dyn {
       DynTable.readAsOf(l, Seq("k"), asOf)
     }),
 
-    // Round-10: pinned seed of the dynamic-table differential fuzz
-    // domain (graft.ql.DynFuzz; FuzzSweep runs `fz_dyn` at fresh
-    // seeds) — a seeded MVCC write/delete log pushed through
-    // readLatest / readAsOf / per-column partial-write merge /
-    // aggregate folds / compaction, each checksummed against a
-    // first-principles DuckDB replay.
-    "dyn_fuzz_log" -> ((s, d) =>
-      graft.ql.DynFuzz.run(s, t(s, d, "orders"), seed = 47L)),
-
-    // Round-11: pinned seeds of the two dyn surfaces fz_dyn doesn't
-    // reach — secondary-index SYNC maintenance under randomized DML
-    // (index view ≡ primary projection at every horizon; the oracle
-    // projects the merged primary, never running the maintenance) and
-    // queue-consumer exactly-once under randomized pull/advance/trim
-    // interleavings (consumed multiset ≡ the queue; the oracle is the
-    // queue itself). FuzzSweep runs `fz_dynidx` / `fz_dynq` fresh.
-    "dyn_fuzz_index" -> ((s, d) =>
-      graft.ql.DynIndexFuzz.run(s, t(s, d, "orders"), seed = 53L)),
-    "dyn_fuzz_queue" -> ((s, d) =>
-      graft.ql.DynQueueFuzz.run(s, t(s, d, "events"), seed = 59L)),
-
     // Point lookup of a key set (MultiLookupRows,
     // dynamic_table_client.h:104-108): key IN-predicate prunes the scan
     // before the merge.
@@ -540,10 +519,6 @@ object Dyn {
               CASE WHEN o_orderkey >= 10000 THEN 1 ELSE 0 END) AS tablet_index
            FROM orders) t
          GROUP BY tablet_index""",
-
-    "dyn_fuzz_log" -> graft.ql.DynFuzz.oracleSql(47L),
-    "dyn_fuzz_index" -> graft.ql.DynIndexFuzz.oracleSql(53L),
-    "dyn_fuzz_queue" -> graft.ql.DynQueueFuzz.oracleSql(59L),
 
     // compaction is invisible: the oracle is the full-history merge
     "dyn_compact" ->

@@ -77,163 +77,6 @@ object Fns {
         Map("//tmp/ev_yp" -> ev))
     }),
 
-    // Seeded differential fuzz (ql/ExprFuzz): 40 random expressions
-    // over (a, b, nullable c), rendered as QL for SelectRows and as
-    // SQL for the oracle from the SAME ASTs — the parser/emitter path
-    // must agree with an independent engine on every value of every
-    // expression on every row. Canonical null relations align the
-    // comparison semantics; the generator design (no int division, a
-    // tracked magnitude bound) rules out engine-divergent edge cases
-    // by construction, so any hash mismatch is a genuine bug.
-    "ql_fuzz_exprs" -> ((s, d) => {
-      // 40 drawn expressions per row on a single-split scan: the
-      // projection is pure per-row compute (measured fully codegen'd,
-      // one core) — spread it (guide §2)
-      val fixture = Tables.loadSpread(s, d, "orders").select(
-        col("o_orderkey").as("a"), col("o_custkey").as("b"),
-        when(col("o_orderkey") % 7 === 0, lit(null).cast("long"))
-          .otherwise(col("o_custkey") % 100).as("c"))
-      val es = graft.ql.ExprFuzz.exprs(40, seed = 42L)
-      val items = es.zipWithIndex
-        .map { case (e, i) => s"${e.ql} as x$i" }.mkString(", ")
-      graft.ql.SelectRows(s, s"a as id, $items from [//tmp/fz]",
-        Map("//tmp/fz" -> fixture),
-        graft.ql.SelectRows.Options(useCanonicalNullRelations = true))
-    }),
-
-    // String-domain differential fuzz: concat/lower/prefix/substr/LIKE
-    // and lexicographic comparisons over ASCII columns, one nullable.
-    "ql_fuzz_strings" -> ((s, d) => {
-      val fixture = t(s, d, "orders").select(
-        col("o_orderkey").as("id"),
-        col("o_orderstatus").as("s"),
-        col("o_orderpriority").as("t"),
-        when(col("o_orderkey") % 5 === 0, lit(null).cast("string"))
-          .otherwise(col("o_orderstatus")).as("u"))
-      val es = graft.ql.ExprFuzz.stringExprs(30, seed = 99L)
-      val items = es.zipWithIndex
-        .map { case (e, i) => s"${e.ql} as x$i" }.mkString(", ")
-      graft.ql.SelectRows(s, s"id, $items from [//tmp/fzs]",
-        Map("//tmp/fzs" -> fixture),
-        graft.ql.SelectRows.Options(useCanonicalNullRelations = true))
-    }),
-
-    // Whole-query differential fuzz: randomized WHERE/GROUP BY/HAVING/
-    // ORDER BY/OFFSET/LIMIT assembly, deterministic paging.
-    "ql_fuzz_queries" -> ((s, d) => {
-      val fixture = t(s, d, "orders").select(
-        col("o_orderkey").as("a"), col("o_custkey").as("b"),
-        when(col("o_orderkey") % 7 === 0, lit(null).cast("long"))
-          .otherwise(col("o_custkey") % 100).as("c"))
-      val cat = Map("//tmp/fq" -> fixture)
-      graft.ql.ExprFuzz.queryCases(12, seed = 33L)
-        .map { case (ql, _) =>
-          graft.ql.SelectRows(s, ql, cat,
-            graft.ql.SelectRows.Options(useCanonicalNullRelations = true)) }
-        .reduce(_ unionByName _)
-    }),
-
-    // Join-domain differential fuzz: 12 whole randomized queries —
-    // INNER/LEFT joins with foreign-side predicates and WHERE clauses,
-    // unioned under a case tag.
-    "ql_fuzz_joins" -> ((s, d) => {
-      val jl = t(s, d, "orders").select(
-        col("o_orderkey").as("a"), (col("o_custkey") % 25).as("k"))
-      val jr = t(s, d, "nation").select(
-        col("n_nationkey").as("k"), col("n_nationkey").as("n"),
-        col("n_regionkey").as("r"))
-      val cat = Map("//tmp/jl" -> jl, "//tmp/jr" -> jr)
-      graft.ql.ExprFuzz.joinCases(12, seed = 21L)
-        .map { case (ql, _) =>
-          graft.ql.SelectRows(s, ql, cat,
-            graft.ql.SelectRows.Options(useCanonicalNullRelations = true)) }
-        .reduce(_ unionByName _)
-    }),
-
-    // Tuple-domain differential fuzz: lexicographic row comparisons
-    // and tuple IN through the conjunction-chain lowering.
-    "ql_fuzz_tuples" -> ((s, d) => {
-      val fixture = t(s, d, "orders").select(
-        col("o_orderkey").as("id"), col("o_orderkey").as("a"),
-        (col("o_custkey") % 23).as("b"))
-      val es = graft.ql.ExprFuzz.tupleExprs(24, seed = 13L)
-      val items = es.zipWithIndex
-        .map { case (e, i) => s"${e.ql} as x$i" }.mkString(", ")
-      graft.ql.SelectRows(s, s"id, $items from [//tmp/fzt]",
-        Map("//tmp/fzt" -> fixture),
-        graft.ql.SelectRows.Options(useCanonicalNullRelations = true))
-    }),
-
-    // uint64-domain differential fuzz: schema-tagged u64 columns +
-    // full-range literals; the string surface's u64 routing vs native
-    // UBIGINT arithmetic.
-    "ql_fuzz_u64" -> ((s, d) => {
-      val md = new org.apache.spark.sql.types.MetadataBuilder()
-        .putString(graft.types.YtTypes.YtTypeKey, "uint64").build()
-      val fixture = t(s, d, "orders").select(
-        col("o_orderkey").as("id"),
-        shiftleft(col("o_orderkey") + 7, 40).as("ua", md),
-        shiftleft(col("o_custkey") * 31 + 5, 38).as("ub", md))
-      val es = graft.ql.ExprFuzz.u64Exprs(24, seed = 77L)
-      val items = es.zipWithIndex
-        .map { case (e, i) => s"${e.ql} as x$i" }.mkString(", ")
-      graft.ql.SelectRows(s, s"id, $items from [//tmp/fzu]",
-        Map("//tmp/fzu" -> fixture))
-    }),
-
-    // Aggregate-domain differential fuzz: sum/min/max/count_if shapes
-    // over generated expressions, grouped by a % 10 — exact int64.
-    "ql_fuzz_aggs" -> ((s, d) => {
-      val fixture = t(s, d, "orders").select(
-        col("o_orderkey").as("a"), col("o_custkey").as("b"),
-        when(col("o_orderkey") % 7 === 0, lit(null).cast("long"))
-          .otherwise(col("o_custkey") % 100).as("c"))
-      val es = graft.ql.ExprFuzz.aggExprs(16, seed = 5L)
-      val items = es.zipWithIndex
-        .map { case (e, i) => s"${e.ql} as x$i" }.mkString(", ")
-      graft.ql.SelectRows(s, s"g, $items from [//tmp/fza] group by a % 10 as g",
-        Map("//tmp/fza" -> fixture),
-        graft.ql.SelectRows.Options(useCanonicalNullRelations = true))
-    }),
-
-    // Window-domain differential fuzz: 14 randomized window columns
-    // (ranking / analytic / framed aggregates) with deterministic
-    // tie-broken orders and integer inputs — shared ANSI text, so the
-    // oracle replays the exact spelling.
-    "ql_fuzz_windows" -> ((s, d) => {
-      t(s, d, "orders").select(
-        col("o_orderkey").as("a"),
-        (col("o_custkey") % 7).as("k"),
-        (col("o_custkey") % 997).as("v"))
-        .createOrReplaceTempView("fw")
-      val cases = graft.ql.ExprFuzz.windowCases(14, seed = 31L)
-      // ~1/3 of the cases deliberately have an empty PARTITION BY —
-      // cross-engine coverage of GLOBAL windows over the 15k-row
-      // fixture. Attribute the resulting WindowExec "No Partition
-      // Defined" WARNs here so a log reader can tell fuzz coverage
-      // from a product plan.
-      val global = cases.count(c => !c.toUpperCase.contains("PARTITION BY"))
-      System.err.println(s"[fuzz] ql_fuzz_windows: $global of " +
-        s"${cases.length} cases use empty PARTITION BY (global windows) " +
-        "by design; WindowExec 'No Partition Defined' WARNs are fuzz " +
-        "coverage, not product plans")
-      val cols = cases
-        .zipWithIndex.map { case (w, i) => s"$w AS w$i" }.mkString(", ")
-      s.sql(s"SELECT a, $cols FROM fw")
-    }),
-
-    // Set-op-domain differential fuzz: UNION / INTERSECT / EXCEPT
-    // (plain and ALL) between filtered projections — shared ANSI text.
-    "ql_fuzz_setops" -> ((s, d) => {
-      t(s, d, "orders").select(
-        col("o_orderkey").as("a"),
-        (col("o_custkey") % 7).as("k"),
-        (col("o_custkey") % 997).as("v"))
-        .createOrReplaceTempView("fw")
-      graft.ql.ExprFuzz.setOpCases(12, seed = 47L)
-        .map(s.sql).reduce(_ unionByName _)
-    }),
-
     // UseCanonicalNullRelations: comparisons keep SQL three-valued
     // logic — exactly DuckDB's semantics, so the oracle is plain SQL.
     "ql_selectrows_canonical_nulls" -> ((s, d) =>
@@ -445,93 +288,6 @@ object Fns {
            CAST(json_extract(props,
              CASE WHEN event_id % 2 = 0 THEN '$.k' ELSE '$.missing' END) AS VARCHAR) AS frag
          FROM events""",
-    "ql_fuzz_exprs" -> {
-      val es = graft.ql.ExprFuzz.exprs(40, seed = 42L)
-      val items = es.zipWithIndex
-        .map { case (e, i) => s"${e.duck} AS x$i" }.mkString(", ")
-      s"""WITH base AS (SELECT o_orderkey AS a, o_custkey AS b,
-         |  CASE WHEN o_orderkey % 7 = 0 THEN NULL
-         |       ELSE o_custkey % 100 END AS c FROM orders)
-         |SELECT a AS id, $items FROM base""".stripMargin
-    },
-
-    "ql_fuzz_strings" -> {
-      val es = graft.ql.ExprFuzz.stringExprs(30, seed = 99L)
-      val items = es.zipWithIndex
-        .map { case (e, i) => s"${e.duck} AS x$i" }.mkString(", ")
-      s"""WITH base AS (SELECT o_orderkey AS id, o_orderstatus AS s,
-         |  o_orderpriority AS t,
-         |  CASE WHEN o_orderkey % 5 = 0 THEN NULL
-         |       ELSE o_orderstatus END AS u FROM orders)
-         |SELECT id, $items FROM base""".stripMargin
-    },
-
-    "ql_fuzz_queries" -> {
-      val unions = graft.ql.ExprFuzz.queryCases(12, seed = 33L)
-        .map(p => s"(${p._2})").mkString("\n         UNION ALL\n         ")
-      s"""WITH fq AS (SELECT o_orderkey AS a, o_custkey AS b,
-         |  CASE WHEN o_orderkey % 7 = 0 THEN NULL
-         |       ELSE o_custkey % 100 END AS c FROM orders)
-         |$unions""".stripMargin
-    },
-
-    "ql_fuzz_joins" -> {
-      val unions = graft.ql.ExprFuzz.joinCases(12, seed = 21L)
-        .map(_._2).mkString("\n         UNION ALL\n         ")
-      s"""WITH jl AS (SELECT o_orderkey AS a, o_custkey % 25 AS k FROM orders),
-         |jr AS (SELECT n_nationkey AS k, n_nationkey AS n,
-         |  n_regionkey AS r FROM nation)
-         |$unions""".stripMargin
-    },
-
-    "ql_fuzz_tuples" -> {
-      val es = graft.ql.ExprFuzz.tupleExprs(24, seed = 13L)
-      val items = es.zipWithIndex
-        .map { case (e, i) => s"${e.duck} AS x$i" }.mkString(", ")
-      s"""WITH base AS (SELECT o_orderkey AS id, o_orderkey AS a,
-         |  o_custkey % 23 AS b FROM orders)
-         |SELECT id, $items FROM base""".stripMargin
-    },
-
-    "ql_fuzz_u64" -> {
-      val es = graft.ql.ExprFuzz.u64Exprs(24, seed = 77L)
-      val items = es.zipWithIndex
-        .map { case (e, i) => s"${e.duck} AS x$i" }.mkString(", ")
-      s"""WITH base AS (SELECT o_orderkey AS id,
-         |  CAST(((o_orderkey + 7)::HUGEINT * 1099511627776) %
-         |    18446744073709551616 AS UBIGINT) AS ua,
-         |  CAST(((o_custkey * 31 + 5)::HUGEINT * 274877906944) %
-         |    18446744073709551616 AS UBIGINT) AS ub
-         |  FROM orders)
-         |SELECT id, $items FROM base""".stripMargin
-    },
-
-    "ql_fuzz_aggs" -> {
-      val es = graft.ql.ExprFuzz.aggExprs(16, seed = 5L)
-      val items = es.zipWithIndex
-        .map { case (e, i) => s"${e.duck} AS x$i" }.mkString(", ")
-      s"""WITH base AS (SELECT o_orderkey AS a, o_custkey AS b,
-         |  CASE WHEN o_orderkey % 7 = 0 THEN NULL
-         |       ELSE o_custkey % 100 END AS c FROM orders)
-         |SELECT a % 10 AS g, $items FROM base GROUP BY a % 10""".stripMargin
-    },
-
-    "ql_fuzz_windows" -> {
-      val cols = graft.ql.ExprFuzz.windowCases(14, seed = 31L)
-        .zipWithIndex.map { case (w, i) => s"$w AS w$i" }.mkString(", ")
-      s"""WITH fw AS (SELECT o_orderkey AS a, o_custkey % 7 AS k,
-         |  o_custkey % 997 AS v FROM orders)
-         |SELECT a, $cols FROM fw""".stripMargin
-    },
-
-    "ql_fuzz_setops" -> {
-      val cases = graft.ql.ExprFuzz.setOpCases(12, seed = 47L)
-        .mkString("\n         UNION ALL\n         ")
-      s"""WITH fw AS (SELECT o_orderkey AS a, o_custkey % 7 AS k,
-         |  o_custkey % 997 AS v FROM orders)
-         |$cases""".stripMargin
-    },
-
     "ql_selectrows_canonical_nulls" ->
       """SELECT event_id,
            CAST(json_extract_string(props, '$.k') AS BIGINT) < 50 AS lt,

@@ -151,26 +151,6 @@ object Yql {
     // PgSql — CTE, ::casts with PG type names, || concat, the ~/~~
     // match-operator family (incl. (?i) via ~*), E'' escapes, ""
     // identifiers, positional $n params, LIMIT/OFFSET.
-    // PG-frontend differential fuzz (PgFuzz): random queries inside
-    // the bound subset, rendered once as PG text for the translator
-    // and once as DuckDB SQL — DuckDB's dialect is itself PG-flavored,
-    // so `::`/`||`/E''/~~-family lexemes ship VERBATIM to the oracle
-    // and any mismatch is a translator bug, not dialect noise.
-    "yql_fuzz_pg" -> ((s, d) => {
-      graft.sources.Tables.registerAll(s, d)
-      val (pg, params, _) = graft.ql.PgFuzz.render(34, seed = 1107L)
-      graft.functions.PgSql.sql(s, pg, params)
-    }),
-    // DISTINCT ON differential (renderDistinctOn): PG's
-    // first-row-per-group keyed window lowering vs DuckDB's NATIVE
-    // DISTINCT ON, with the translator's PG default-null-order
-    // injection (ASC→NULLS LAST / DESC→NULLS FIRST — opposite of
-    // Spark's defaults) left implicit on the PG side.
-    "yql_pg_distinct_on" -> ((s, d) => {
-      graft.sources.Tables.registerAll(s, d)
-      val (pg, _) = graft.ql.PgFuzz.renderDistinctOn(seed = 1111L)
-      graft.functions.PgSql.sql(s, pg)
-    }),
     "yql_pg_select" -> ((s, d) => {
       graft.sources.Tables.registerAll(s, d)
       graft.functions.PgSql.sql(s,
@@ -606,22 +586,6 @@ object Yql {
           |SELECT * WITHOUT ws FROM $src FLATTEN BY ws AS w
           |WHERE length(w) >= 7
           |""".stripMargin)
-    }),
-
-    // Script-domain differential fuzz: randomized YQL SCRIPTS (scalar
-    // bindings, lambda calls + composition, statement-body lambdas,
-    // named subselects, DECLARE defaults, REDUCE) against
-    // hand-expanded plain SQL generated from the SAME random draws —
-    // the substitution/lowering semantics themselves are under test,
-    // value-exact.
-    "yql_fuzz_script" -> ((s, d) => {
-      t(s, d, "orders").select(col("o_orderkey").as("a"),
-        (col("o_custkey") % 7).as("k"),
-        (col("o_custkey") % 997).as("v"))
-        .createOrReplaceTempView("fw")
-      graft.ql.ExprFuzz.scriptCases(12, seed = 61L)
-        .map { case (script, _) => graft.functions.YqlSql.sql(s, script) }
-        .reduce(_ unionByName _)
     }),
 
     // The remaining STATEMENT-level grammar (SQLv1.g.in declare_stmt /
@@ -1301,32 +1265,6 @@ object Yql {
           |FROM events WHERE event_id < 2000""".stripMargin)
     }),
 
-    // Round-10: pinned seed of the Yson::Options differential domain
-    // (ExprFuzz.ysonOptItems; FuzzSweep sweeps fresh seeds) — random
-    // carrier-node × target × mode triples, the DuckDB side re-derived
-    // from base columns by the convert.h rules.
-    "yql_fuzz_ysonopt" -> ((s, d) => {
-      t(s, d, "orders").createOrReplaceTempView("orders")
-      val items = graft.ql.ExprFuzz.ysonOptItems(16, seed = 71L)
-      val ql = items.zipWithIndex
-        .map { case ((y, _), i) => s"$y AS x$i" }.mkString(", ")
-      graft.functions.YqlSql.sql(s,
-        s"SELECT o_orderkey AS id, $ql FROM orders WHERE o_orderkey < 3000")
-    }),
-
-    // Round-9: pinned seed of the string-formatting/math-tail fuzz
-    // domain (ExprFuzz.strFmtItems; FuzzSweep runs it at fresh seeds) —
-    // randomized escape roundtrips, width pins, char-class removals,
-    // erf/gamma differentials vs DuckDB.
-    "yql_fuzz_strfmt" -> ((s, d) => {
-      t(s, d, "orders").createOrReplaceTempView("orders")
-      val items = graft.ql.ExprFuzz.strFmtItems(14, seed = 53L)
-      val ql = items.zipWithIndex
-        .map { case ((y, _), i) => s"$y AS x$i" }.mkString(", ")
-      graft.functions.YqlSql.sql(s,
-        s"SELECT o_orderkey AS id, $ql FROM orders WHERE o_orderkey < 3000")
-    }),
-
     // Url::/Ip::/Digest:: breadth (docs udf/list/{url,ip,digest}.md)
     // over per-row synthesized URLs.
     "yql_fn_url_breadth" -> ((s, d) => {
@@ -1719,48 +1657,6 @@ object Yql {
           |FROM orders WHERE o_custkey < 300""".stripMargin)
     }),
 
-    // MATCH_RECOGNIZE differential fuzz: randomized fixed-length
-    // patterns ({1..2} quantifiers, threshold/type/PREV predicates,
-    // SKIP TO NEXT ROW) — the fixed length makes the DuckDB replay a
-    // mechanical lead()-chain check while the engine runs the full
-    // parse → DEFINE flags → NFA path.
-    "yql_fuzz_matchrec" -> ((s, d) => {
-      t(s, d, "events").createOrReplaceTempView("events")
-      graft.ql.ExprFuzz.matchRecognizeCases(6, seed = 59L)
-        .map { case (q, _) => graft.functions.YqlSql.sql(s, q) }
-        .reduce(_ unionByName _)
-    }),
-
-    // HOP / SessionWindow differential fuzz: randomized hop×interval
-    // multiples, session timeouts, partitioning, and 4-argument
-    // lambda sessions with value-dependent timeouts; the oracle
-    // replays window placement (time_bucket + unnest) and session
-    // islands independently in DuckDB (ExprFuzz.hopSessionCases).
-    "yql_fuzz_hopsession" -> ((s, d) => {
-      t(s, d, "events").createOrReplaceTempView("events")
-      graft.ql.ExprFuzz.hopSessionCases(8, seed = 67L)
-        .map { case (q, _) => graft.functions.YqlSql.sql(s, q) }
-        .reduce(_ unionByName _)
-    }),
-
-    // Table-path-function differential fuzz: randomized RANGE bounds /
-    // LIKE / REGEXP patterns / EACH-CONCAT subsets; the oracle replays
-    // the member selection computed independently over the known month
-    // list.
-    "yql_fuzz_tablepaths" -> ((s, d) => {
-      tablePathFixture(s, d)
-      val dir = tablePathDir(d)
-      graft.ql.ExprFuzz.tablePathCases(10, seed = 83L, tablePathMonths)
-        .zipWithIndex.map { case ((from, _), i) =>
-          graft.functions.YqlSql.sql(s,
-            s"""SELECT CAST($i AS BIGINT) AS case_id,
-               |  CAST(COUNT(o_orderkey) AS BIGINT) AS n,
-               |  CAST(SUM(CAST(floor(o_totalprice) AS BIGINT)) AS BIGINT)
-               |    AS total
-               |FROM ${from.replace("$DIR", dir)}""".stripMargin)
-        }.reduce(_ unionByName _)
-    }),
-
     // ALL ROWS PER MATCH (mkql_match_recognize_rows_formatter.cpp
     // TAllRowsFormatter): every matched row emits with its input
     // columns plus the match-level measures — the reference computes
@@ -1835,23 +1731,6 @@ object Yql {
           |UPSERT INTO dml_ret SELECT k, v FROM $seed;
           |DELETE FROM dml_ret WHERE k % 4 = 1 RETURNING k;
           |UPDATE dml_ret SET v = v + 7 WHERE k % 3 = 0 RETURNING *""".stripMargin)
-    }),
-
-    // Script-DML differential fuzz: randomized UPSERT/REPLACE/DELETE/
-    // UPDATE interleavings on keyed tables vs the hand-expanded
-    // relational algebra of the SAME draws (full-outer key merges,
-    // gated projections) — YqlDml's merge semantics themselves are
-    // under test, value-exact. Same pattern yql_fuzz_script proved.
-    "yql_fuzz_dml" -> ((s, d) => {
-      t(s, d, "orders").select(col("o_orderkey").as("a"),
-        (col("o_custkey") % 7).as("k"),
-        (col("o_custkey") % 997).as("v"))
-        .createOrReplaceTempView("fw")
-      val cases = graft.ql.ExprFuzz.dmlCases(6, seed = 73L)
-      cases.foreach { case (_, _, tbl) =>
-        graft.functions.YqlDml.dropTableDeep(s, tbl) }
-      cases.map { case (script, _, _) => graft.functions.YqlSql.sql(s, script) }
-        .reduce(_ unionByName _)
     }),
 
     // IMPORT/EXPORT library modules (SQLv1.g.in import_stmt/
@@ -2222,18 +2101,8 @@ object Yql {
     * The bench times a 2-case run: the same verbs, the same staged
     * key-merge passes, a representative operator number. */
   val benchOnly: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "yql_fuzz_dml" -> ((s, d) => {
-      t(s, d, "orders").select(col("o_orderkey").as("a"),
-        (col("o_custkey") % 7).as("k"),
-        (col("o_custkey") % 997).as("v"))
-        .createOrReplaceTempView("fw")
-      val cases = graft.ql.ExprFuzz.dmlCases(2, seed = 73L,
-        prefix = "bench_dml")
-      cases.foreach { case (_, _, tbl) =>
-        graft.functions.YqlDml.dropTableDeep(s, tbl) }
-      cases.map { case (script, _, _) => graft.functions.YqlSql.sql(s, script) }
-        .reduce(_ unionByName _)
-    }),
+    "yql_fuzz_dml" -> ((s, d) =>
+      graft.ql.FuzzDomains.dml(2, 73L, prefix = "bench_dml").build(s, d)),
     // Codec throughput over the FULL orders table (the correctness
     // query key-filters to a constant 2000 rows — right for the
     // oracle, wrong for a scale soak): gzip+zstd+snappy roundtrips
@@ -2277,8 +2146,6 @@ object Yql {
                 THEN regexp_extract(p_name, '[a-z]+ss[a-z]*', 0) END AS cap,
            regexp_replace(p_brand, '[aeiou]+', '$.', 'g') AS repl
          FROM part""",
-    "yql_fuzz_pg" -> graft.ql.PgFuzz.render(34, seed = 1107L)._3,
-    "yql_pg_distinct_on" -> graft.ql.PgFuzz.renderDistinctOn(seed = 1111L)._2,
     "yql_pg_select" ->
       """WITH big AS (
            SELECT o_custkey, CAST(count(*) AS BIGINT) AS n,
@@ -2548,13 +2415,6 @@ object Yql {
            FROM documents
            WHERE n_chars >= 50 AND doc_id < 300
          ) WHERE length(w) >= 7""",
-    "yql_fuzz_script" -> {
-      val cases = graft.ql.ExprFuzz.scriptCases(12, seed = 61L)
-        .map(_._2).mkString("\n         UNION ALL\n         ")
-      s"""WITH fw AS (SELECT o_orderkey AS a, o_custkey % 7 AS k,
-         |  o_custkey % 997 AS v FROM orders)
-         |$cases""".stripMargin
-    },
     "yql_sql_reduce" ->
       """SELECT source, lang,
            CAST(COUNT(doc_id) AS BIGINT) AS n_docs,
@@ -2920,18 +2780,6 @@ object Yql {
            o_orderkey AS u64h,
            CAST(NULL AS BIGINT) AS u64bad
          FROM orders WHERE o_orderkey < 2000""",
-    "yql_fuzz_ysonopt" -> {
-      val items = graft.ql.ExprFuzz.ysonOptItems(16, seed = 71L)
-      val dk = items.zipWithIndex
-        .map { case ((_, d), i) => s"$d AS x$i" }.mkString(", ")
-      s"SELECT o_orderkey AS id, $dk FROM orders WHERE o_orderkey < 3000"
-    },
-    "yql_fuzz_strfmt" -> {
-      val items = graft.ql.ExprFuzz.strFmtItems(14, seed = 53L)
-      val dk = items.zipWithIndex
-        .map { case ((_, d), i) => s"$d AS x$i" }.mkString(", ")
-      s"SELECT o_orderkey AS id, $dk FROM orders WHERE o_orderkey < 3000"
-    },
     "yql_fn_compress_module" ->
       """SELECT o_orderkey,
            o_orderpriority AS gz_rt,
@@ -3259,21 +3107,6 @@ object Yql {
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
              AS running_cd
          FROM orders WHERE o_custkey < 300""",
-    "yql_fuzz_matchrec" ->
-      graft.ql.ExprFuzz.matchRecognizeCases(6, seed = 59L)
-        .map { case (_, duck) => s"($duck)" }.mkString("\nUNION ALL\n"),
-    "yql_fuzz_hopsession" ->
-      graft.ql.ExprFuzz.hopSessionCases(8, seed = 67L)
-        .map { case (_, duck) => s"($duck)" }.mkString("\nUNION ALL\n"),
-    "yql_fuzz_tablepaths" ->
-      graft.ql.ExprFuzz.tablePathCases(10, seed = 83L, tablePathMonths)
-        .zipWithIndex.map { case ((_, where), i) =>
-          s"""(SELECT CAST($i AS BIGINT) AS case_id,
-             |  CAST(COUNT(o_orderkey) AS BIGINT) AS n,
-             |  CAST(SUM(CAST(floor(o_totalprice) AS BIGINT)) AS BIGINT)
-             |    AS total
-             |FROM orders WHERE $where)""".stripMargin
-        }.mkString("\nUNION ALL\n"),
     "yql_sql_match_recognize" ->
       """WITH e AS (
            SELECT user_id, event_id, event_type, value,
@@ -3346,13 +3179,6 @@ object Yql {
       """SELECT k, CAST(k * 3 + 7 AS BIGINT) AS v
          FROM (SELECT DISTINCT o_custkey % 60 AS k FROM orders) t
          WHERE k % 3 = 0 AND k % 4 <> 1""",
-    "yql_fuzz_dml" -> {
-      val cases = graft.ql.ExprFuzz.dmlCases(6, seed = 73L)
-        .map(_._2).mkString("\n         UNION ALL\n         ")
-      s"""WITH fw AS (SELECT o_orderkey AS a, o_custkey % 7 AS k,
-         |  o_custkey % 997 AS v FROM orders)
-         |$cases""".stripMargin
-    },
     "yql_sql_import" ->
       """SELECT doc_id,
            CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,

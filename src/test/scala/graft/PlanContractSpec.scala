@@ -182,45 +182,68 @@ class PlanContractSpec extends SparkSpec {
       "to the unrewritten plan (inner + left outer, null keys, " +
       "unmatched groups)") {
     import org.apache.spark.sql.functions._
-    // FORCE mode: the semantic contract must hold wherever the rewrite
-    // can fire, independent of the auto cost gate's layout condition
-    spark.conf.set("spark.graft.eagerAggUniqueJoin", "force")
-    // a session WITHOUT the rewrite rules = the semantic baseline
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    // a new session carries none of the engine's optimizer rules: the
+    // semantic baseline
     val bare = spark.newSession()
-    bare.conf.set("spark.graft.eagerAggUniqueJoin", "off")
-    def results(s: org.apache.spark.sql.SparkSession) = {
-      val l = graft.sources.Tables.load(s, sfDir, "lineitem")
-      val o = graft.sources.Tables.load(s, sfDir, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"))
-      l.join(o, l("l_orderkey") === o("o_orderkey"))
-        .groupBy(col("l_orderkey"))
-        .agg(any_value(col("o_orderstatus")).as("some_status"),
-          count(lit(1)).as("n_lines"),
-          sum(col("l_quantity")).as("qty"))
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-          math.round(r.getDouble(3) * 100))).sortBy(_._1)
+    def preAggBelowJoin(df: DataFrame): Boolean =
+      df.queryExecution.optimizedPlan.collect { case j: Join => j }
+        .exists(_.left.collectFirst { case a: Aggregate => a }.isDefined)
+    // the rule fires only where the left layout makes the pre-aggregate
+    // exchange-free, so each left side is a table bucketed on its key
+    val tables = Seq("pc_eager_li", "pc_eager_syn")
+    def dropTables(): Unit = tables.foreach { t =>
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(
+        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t))
     }
+    dropTables()
     try {
-    assert(results(spark).toSeq == results(bare).toSeq)
-    // synthetic: left outer + null keys + unmatched keys; right made
-    // unique via groupBy (the Aggregate arm of uniqueOn)
-    import spark.implicits._
-    def syn(s: org.apache.spark.sql.SparkSession) = {
-      import s.implicits._
-      val l = Seq((Some(1L), 10), (Some(1L), 20), (Some(2L), 30),
-        (None, 40), (None, 50), (Some(9L), 60))
-        .toDF("k", "v") // k=9 unmatched, None keys
-      val r = Seq((1L, "a"), (1L, "a"), (2L, "b"), (3L, "c"))
-        .toDF("rk", "tag").groupBy("rk").agg(first("tag").as("tag"))
-      l.join(r, l("k") === r("rk"), "left_outer")
-        .groupBy(col("k"))
-        .agg(min(col("tag")).as("t"), count(lit(1)).as("n"),
-          sum(col("v")).as("sv"))
-        .collect().map(r0 => (Option(r0.get(0)), Option(r0.get(1)),
-          r0.getLong(2), r0.getLong(3))).sortBy(_._1.map(_.toString))
-    }
-    assert(syn(spark).toSeq == syn(bare).toSeq)
-    } finally spark.conf.unset("spark.graft.eagerAggUniqueJoin")
+      import spark.implicits._
+      graft.sources.Tables.writeBucketed(
+        graft.sources.Tables.load(spark, sfDir, "lineitem")
+          .select(col("l_orderkey"), col("l_quantity")),
+        "pc_eager_li", 4, Seq("l_orderkey"))
+      // k=9 unmatched, None keys
+      graft.sources.Tables.writeBucketed(
+        Seq((Some(1L), 10), (Some(1L), 20), (Some(2L), 30),
+          (None, 40), (None, 50), (Some(9L), 60)).toDF("k", "v"),
+        "pc_eager_syn", 4, Seq("k"))
+      def tpch(s: org.apache.spark.sql.SparkSession) = {
+        val l = s.table("pc_eager_li")
+        val o = graft.sources.Tables.load(s, sfDir, "orders")
+          .select(col("o_orderkey"), col("o_orderstatus"))
+        l.join(o, l("l_orderkey") === o("o_orderkey"))
+          .groupBy(col("l_orderkey"))
+          .agg(any_value(col("o_orderstatus")).as("some_status"),
+            count(lit(1)).as("n_lines"),
+            sum(col("l_quantity")).as("qty"))
+      }
+      // left outer; right made unique via groupBy (the Aggregate arm of
+      // uniqueOn)
+      def syn(s: org.apache.spark.sql.SparkSession) = {
+        import s.implicits._
+        val l = s.table("pc_eager_syn")
+        val r = Seq((1L, "a"), (1L, "a"), (2L, "b"), (3L, "c"))
+          .toDF("rk", "tag").groupBy("rk").agg(first("tag").as("tag"))
+        l.join(r, l("k") === r("rk"), "left_outer")
+          .groupBy(col("k"))
+          .agg(min(col("tag")).as("t"), count(lit(1)).as("n"),
+            sum(col("v")).as("sv"))
+      }
+      for ((name, q) <- Seq("tpch" -> tpch _, "synthetic" -> syn _)) {
+        val (rewritten, baseline) = (q(spark), q(bare))
+        assert(preAggBelowJoin(rewritten), s"$name: no pre-aggregate " +
+          "below the join:\n" + rewritten.queryExecution.optimizedPlan)
+        assert(!preAggBelowJoin(baseline),
+          s"$name: the baseline session rewrote the plan")
+        def rows(df: DataFrame) = df.collect().map(_.toSeq.map {
+          case d: Double => math.round(d * 100)
+          case v => v
+        }).sortBy(r => String.valueOf(r.head)).toSeq
+        assert(rows(rewritten) == rows(baseline), name)
+      }
+    } finally dropTables()
   }
 
   test("op_join_reduce never re-shuffles the joined stream") {
