@@ -25,9 +25,12 @@ object GraftSession {
 
   /** The engine's session extensions, shared by every session the engine
     * and its specs build: the physical rule that keeps request constants
-    * out of generated code. */
-  val extensions: SparkSessionExtensions => Unit =
-    _.injectQueryStagePrepRule(_ => graft.plans.ParameterizeLiterals)
+    * out of generated code, and its analysis-time part for filters over
+    * local rows. */
+  val extensions: SparkSessionExtensions => Unit = { e =>
+    e.injectQueryStagePrepRule(_ => graft.plans.ParameterizeLiterals)
+    e.injectPostHocResolutionRule(_ => graft.plans.ParameterizeLocalFilters)
+  }
 
   /** AQE's target shuffle partition size, which [[tuneShuffleFor]] also
     * sizes the initial fan-out by. */

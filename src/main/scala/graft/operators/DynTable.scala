@@ -4,17 +4,15 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{shims => S}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.Tables
+import graft.sources.{KeyIndex, Tables}
 
 /** Sorted/ordered dynamic-table semantics (SURVEY.md §2.C) as
   * DataFrame transforms over an immutable write log.
@@ -61,33 +59,64 @@ object DynTable {
     * values merged latest-wins.
     *
     * A log held on the driver (`Tables.held`: a small stored table or
-    * client-sized rows) merges there — the reference's tablet node
-    * answers from its in-memory stores (tablet_node/lookup.cpp) — and
-    * the result is a local frame, so reading it runs no Spark job.
+    * client-sized rows) is answered from its key index — the reference's
+    * tablet node answers from its in-memory stores
+    * (tablet_node/lookup.cpp) — and the result is a local frame of the
+    * result rows, so reading it runs no Spark job.
     */
-  def readLatest(log: DataFrame, keys: Seq[String]): DataFrame = latestWins(log, keys, None)
+  def readLatest(log: DataFrame, keys: Seq[String]): DataFrame =
+    latestWins(log, keys, None)(ix => Some(ix.latest))
 
   /** Versioned read: table state as of timestamp `asOf` — the
     * reference's `LookupRows`/`SelectRows` at a timestamp
     * (dynamic_table_client.h:96-115). The ts filter is applied before
-    * the merge so it pushes to the scan.
+    * the merge so it pushes to the scan; on a held log a literal cut
+    * takes each key's newest version at or below it from the index.
     */
   def readAsOf(log: DataFrame, keys: Seq[String], asOf: Column): DataFrame =
-    latestWins(log, keys, Some(col("ts") <= asOf))
+    latestWins(log, keys, Some(col("ts") <= asOf))(ix =>
+      literalAs(S.convert(asOf), ix.tsType).map(ix.asOf))
 
-  /** The latest-wins verbs: `cut` filters the log before the merge. On
-    * a held log the cut stays a Catalyst filter over the local rows,
-    * which ConvertToLocalRelation evaluates (Spark's own coercion); a
-    * cut that does not fold, or a key type the driver merge does not
-    * group, takes the distributed merge over the held frame. */
-  private def latestWins(log: DataFrame, keys: Seq[String], cut: Option[Column]): DataFrame =
+  /** The latest-wins verbs: `cut` filters the log before the merge, and
+    * `fromIndex` answers the same read from a held log's key index (None
+    * when it cannot, e.g. for a cut that is not a literal). A held log
+    * the index does not answer is cut by a Catalyst filter over its local
+    * rows (Spark's own coercion) and merged on the driver; a key type the
+    * index does not group takes the distributed merge over the held
+    * frame. */
+  private def latestWins(log: DataFrame, keys: Seq[String], cut: => Option[Column])(
+      fromIndex: KeyIndex => Option[Seq[InternalRow]]): DataFrame =
     Tables.held(log) match {
       case Some(held) =>
-        val sliver = cut.fold(held)(held.where)
-        Tables.localRows(sliver).flatMap(mergeHeld(sliver, _, keys))
-          .getOrElse(mergeLatest(sliver, keys))
+        held.index(keys).flatMap(ix => fromIndex(ix).map(local(log, ix, _))).getOrElse {
+          val sliver = cut.fold(held.frame)(held.frame.where)
+          Tables.localRows(sliver).flatMap(rows => KeyIndex(sliver.schema, keys, rows.iterator))
+            .map(ix => local(log, ix, ix.latest))
+            .getOrElse(mergeLatest(sliver, keys))
+        }
       case None => mergeLatest(cut.fold(log)(log.where), keys)
     }
+
+  /** Rows an index returned as a local frame of its output schema. */
+  private def local(log: DataFrame, ix: KeyIndex, rows: Seq[InternalRow]): DataFrame =
+    S.ofRows(log.sparkSession, LocalRelation(DataTypeUtils.toAttributes(ix.outSchema), rows))
+
+  /** The value a literal compares as against a column of type `to`
+    * (`KeyIndex.coerce`); None for an expression that is not a literal. */
+  private def literalAs(e: Expression, to: DataType): Option[Any] = e match {
+    case l: Literal => KeyIndex.coerce(l, to)
+    case _ => None
+  }
+
+  /** Key tuples as values of the index's key types, or None when a tuple
+    * is not a full key of literals that [[literalAs]] coerces. */
+  private def probes(ix: KeyIndex, tuples: Seq[Seq[Expression]]): Option[Seq[Seq[Any]]] = {
+    val vs = tuples.map { t =>
+      val v = t.zip(ix.keyTypes).map { case (e, dt) => literalAs(e, dt) }
+      if (t.size == ix.keyTypes.size && v.forall(_.isDefined)) Some(v.flatten) else None
+    }
+    if (vs.forall(_.isDefined)) Some(vs.flatten) else None
+  }
 
   /** The distributed merge: one hash aggregation per key. */
   private def mergeLatest(log: DataFrame, keys: Seq[String]): DataFrame = {
@@ -100,68 +129,6 @@ object DynTable {
     merged
       .where(col("_latest.op") === OpUpsert)
       .select(keys.map(col) ++ valueCols.map(c => col(s"_latest.$c").as(c)): _*)
-  }
-
-  /** [[mergeLatest]] on the driver over `rows` of `log`'s schema: per
-    * key the max-`ts` row (the first one on a tie; rows with a null `ts`
-    * never win), kept only if its `op` is upsert. Null keys group
-    * together and float keys group normalized (-0.0 as 0.0, one NaN), as
-    * in `groupBy`. The schema equals the distributed merge's: keys as in
-    * the log, values nullable. None for a key type this grouping does not
-    * cover (complex or collated). */
-  private def mergeHeld(log: DataFrame, rows: Seq[InternalRow],
-      keys: Seq[String]): Option[DataFrame] = {
-    val schema = log.schema
-    val keyIdx = keys.map(schema.fieldIndex)
-    val tsIdx = schema.fieldIndex("ts")
-    val opIdx = schema.fieldIndex("op")
-    val groupable = keyIdx.forall(i => schema(i).dataType match {
-      case StringType => true // the binary collation only
-      case _: NumericType | BooleanType | BinaryType | DateType |
-          TimestampType | TimestampNTZType => true
-      case _ => false
-    })
-    if (!groupable || schema(opIdx).dataType != StringType) None
-    else {
-      val valueIdx = schema.indices.filterNot(i => keyIdx.contains(i) || i == tsIdx || i == opIdx)
-      val tsType = schema(tsIdx).dataType
-      val tsOrder = TypeUtils.getInterpretedOrdering(tsType)
-      // grouping uses the normalized key; a float compares by its bits
-      // (so NaN equals NaN) and a binary key by its content
-      def keyOf(r: InternalRow): Seq[Any] = keyIdx.map { i =>
-        if (r.isNullAt(i)) null
-        else r.get(i, schema(i).dataType) match {
-          case d: Double => if (d.isNaN) Double.NaN else if (d == 0.0d) 0.0d else d
-          case f: Float => if (f.isNaN) Float.NaN else if (f == 0.0f) 0.0f else f
-          case v => v
-        }
-      }
-      def groupOf(key: Seq[Any]): Seq[Any] = key.map {
-        case d: Double => java.lang.Double.doubleToLongBits(d)
-        case f: Float => java.lang.Float.floatToIntBits(f)
-        case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
-        case v => v
-      }
-      val latest = new java.util.LinkedHashMap[Seq[Any], InternalRow]()
-      rows.foreach { r =>
-        if (!r.isNullAt(tsIdx)) {
-          val g = groupOf(keyOf(r))
-          val cur = latest.get(g)
-          if (cur == null || tsOrder.gt(r.get(tsIdx, tsType), cur.get(tsIdx, tsType)))
-            latest.put(g, r)
-        }
-      }
-      val upsert = UTF8String.fromString(OpUpsert)
-      val out = latest.values.asScala.collect {
-        case r if !r.isNullAt(opIdx) && r.getUTF8String(opIdx) == upsert =>
-          new GenericInternalRow((keyOf(r) ++
-            valueIdx.map(i => r.get(i, schema(i).dataType))).toArray): InternalRow
-      }.toSeq
-      val outSchema = StructType(keyIdx.map(schema(_)) ++
-        valueIdx.map(i => StructField(schema(i).name, schema(i).dataType, nullable = true)))
-      Some(S.ofRows(log.sparkSession,
-        LocalRelation(DataTypeUtils.toAttributes(outSchema), out)))
-    }
   }
 
   /** Per-COLUMN latest-wins merge — partial upserts (`insert_rows`
@@ -364,7 +331,9 @@ object DynTable {
     * laziness is preserved and a retried evaluation re-validates. On a
     * held log (`Tables.held`) without `written`/`agg` columns and a
     * client-sized staged frame, the count is taken on the driver when
-    * the plan is built, over the snapshot the log frame pins.
+    * the plan is built, over the snapshot the log frame pins: with
+    * literal timestamps it probes the staged keys in the key index for
+    * versions in `(startTs, commitTs]`.
     */
   def commitTransaction(log: DataFrame, staged: DataFrame, keys: Seq[String],
       startTs: Column, commitTs: Column): DataFrame = {
@@ -390,23 +359,28 @@ object DynTable {
     val stagedKeys = staged.select(stagedSel: _*)
     // the commit unions onto the held frame, so its write is its only job
     val held = if (hasLogMask || hasLogAgg) None else Tables.held(log)
-    val base = held.getOrElse(log)
-    val recent = base.where(col("ts") > startTs && col("ts") <= commitTs)
-    val heldConflicts: Option[Long] = held.flatMap { _ =>
+    val base = held.map(_.frame).getOrElse(log)
+    def recent = base.where(col("ts") > startTs && col("ts") <= commitTs)
+    val heldConflicts: Option[Long] = held.flatMap { h =>
       Tables.localRows(staged.select(keys.map(col): _*)).flatMap { ks =>
         val types = keys.map(staged.schema(_).dataType)
-        val literals = ks.map(r => types.indices.map(i =>
-          S.column(Literal(r.get(i, types(i)), types(i)))))
-        Tables.localRows(recent.where(keyPredicate(keys, literals))).map(_.size.toLong)
+        val literals = ks.map(r => types.indices.map(i => Literal(r.get(i, types(i)), types(i))))
+        val probed = for {
+          ix <- h.index(keys)
+          after <- literalAs(S.convert(startTs), ix.tsType)
+          upTo <- literalAs(S.convert(commitTs), ix.tsType)
+          ps <- probes(ix, literals)
+        } yield ix.versionsIn(ps, after, upTo)
+        probed.orElse(Tables.localRows(
+          recent.where(keyPredicate(keys, literals.map(_.map(S.column))))).map(_.size.toLong))
       }
     }
-    val touched = recent.join(broadcast(stagedKeys), keys)
-    val maskDisjoint: Column =
+    def maskDisjoint: Column =
       if (hasLogMask && hasStagedMask)
         col("op") =!= OpDelete && col("written").isNotNull &&
           col("__sw").isNotNull && !arrays_overlap(col("written"), col("__sw"))
       else lit(false)
-    val bothDeltas: Column =
+    def bothDeltas: Column =
       if (hasLogAgg && hasStagedAgg)
         col("op") =!= OpDelete &&
           coalesce(col("agg"), lit(false)) && coalesce(col("__sa"), lit(false))
@@ -417,7 +391,8 @@ object DynTable {
     // driver-side count enters as a literal, so raise_error still fires
     // only when the plan runs.
     val nConflicts = heldConflicts.map(lit).getOrElse(
-      touched.where(!(maskDisjoint || bothDeltas)).agg(count(lit(1))).scalar())
+      recent.join(broadcast(stagedKeys), keys)
+        .where(!(maskDisjoint || bothDeltas)).agg(count(lit(1))).scalar())
     val checked = staged
       .filter(when(nConflicts > 0,
         raise_error(lit("Row lock conflict due to concurrent write"))
@@ -483,7 +458,11 @@ object DynTable {
     * sliver.
     */
   def lookup(log: DataFrame, keys: Seq[String], keyValues: Seq[Seq[Any]]): DataFrame =
-    latestWins(log, keys, Some(keyPredicate(keys, keyValues.map(_.map(lit)))))
+    latestWins(log, keys, Some(keyPredicate(keys, keyValues.map(_.map(lit)))))(ix =>
+      probes(ix, keyValues.map(_.map {
+        case c: Column => S.convert(c)
+        case v => Literal(v) // what `lit(v)` becomes
+      })).map(ix.lookup))
 
   /** Rows whose key equals one of `keyValues`: an OR of per-row key
     * equalities (false for no rows). */

@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen._
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan}
 import org.apache.spark.sql.types._
@@ -30,15 +31,19 @@ import org.apache.spark.sql.types._
   * they run), and string, decimal, complex or null literals (Spark
   * already passes the non-primitive ones by reference). Plans without
   * AQE, such as streaming micro-batches, are not rewritten.
+  *
+  * A filter directly over a `LocalRelation` never reaches a physical
+  * plan: the optimizer's ConvertToLocalRelation evaluates it through a
+  * generated predicate first. Its analysis-time part,
+  * [[ParameterizeLocalFilters]], swaps the same operands when such a
+  * filter is resolved, so a caller's filter over a driver-held result
+  * compiles one predicate class per shape.
   */
 object ParameterizeLiterals extends Rule[SparkPlan] {
 
   override def apply(plan: SparkPlan): SparkPlan = plan.transformUp {
     case f: FilterExec =>
-      val cond = f.condition.transformUp {
-        case c: BinaryComparison => c.withNewChildren(c.children.map(param))
-        case in: In => in.withNewChildren(in.children.map(param))
-      }
+      val cond = parameterize(f.condition)
       if (cond fastEquals f.condition) f else f.copy(condition = cond)
     case p: ProjectExec =>
       val list = p.projectList.map {
@@ -49,15 +54,45 @@ object ParameterizeLiterals extends Rule[SparkPlan] {
       if (list == p.projectList) p else p.copy(projectList = list)
   }
 
+  /** `cond` with the direct comparison and `IN` operands swapped. */
+  private[plans] def parameterize(cond: Expression): Expression = cond.transformUp {
+    case c: BinaryComparison => c.withNewChildren(c.children.map(param))
+    case in: In => in.withNewChildren(in.children.map(param))
+  }
+
   private def bindable(l: Literal): Boolean = l.value != null && (l.dataType match {
     case BooleanType | ByteType | ShortType | IntegerType | LongType |
          FloatType | DoubleType | DateType | TimestampType | TimestampNTZType => true
     case _ => false
   })
 
+  /** A bindable literal, or (in an analyzed plan, before constant
+    * folding) a literal the analyzer widened with an up-cast, as a
+    * [[ParamLiteral]] of its value. */
   private def param(e: Expression): Expression = e match {
     case l: Literal if bindable(l) => ParamLiteral(l.value, l.dataType)
+    case c @ Cast(l: Literal, to, _, _) if Cast.canUpCast(l.dataType, to) =>
+      Literal.create(c.eval(), to) match {
+        case folded if bindable(folded) => ParamLiteral(folded.value, to)
+        case _ => c
+      }
     case other => other
+  }
+}
+
+/** The analysis-time part of [[ParameterizeLiterals]] (a post-hoc
+  * resolution rule): the direct comparison and `IN` operands of a
+  * `Filter` directly over a non-streaming `LocalRelation` become
+  * [[ParamLiteral]]s, so ConvertToLocalRelation's generated predicate
+  * is the same class for every value. If the filter is not folded into
+  * the relation, constant folding turns the operands back into
+  * literals.
+  */
+object ParameterizeLocalFilters extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp {
+    case f @ Filter(cond, l: LocalRelation) if f.resolved && !l.isStreaming =>
+      val c = ParameterizeLiterals.parameterize(cond)
+      if (c fastEquals cond) f else f.copy(condition = c)
   }
 }
 

@@ -3,11 +3,18 @@ package graft.sources
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.catalyst.expressions.{Attribute, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.graft.{shims => S}
 import org.apache.spark.sql.types.StructType
 
@@ -78,10 +85,9 @@ object Tables {
     * System.gc()), so cache hits are unaffected. */
   private val relationCache = new SessionMaps[Cached]
 
-  /** A cached relation with the stamps of the files it reads, the schema
-    * Spark read and the data file Spark read it from (see [[relisted]]). */
-  private final case class Cached(df: DataFrame, stamp: Seq[(Long, Long)],
-      schema: StructType, first: Option[FileKey])
+  /** A cached relation with the stamps of the files it reads and the
+    * parquet relation Spark read (see [[relisted]]). */
+  private final case class Cached(df: DataFrame, stamp: Seq[(Long, Long)], raw: DataFrame)
 
   /** (path, length, mtime) of one data file. */
   private type FileKey = (String, Long, Long)
@@ -200,21 +206,52 @@ object Tables {
     val cache = relationCache(spark)
     val df = Option(cache.get(key)).flatMap(relisted(spark, p, _)).getOrElse(spark.read.parquet(p))
     val built = build(df)
-    cache.put(key, Cached(built, stamp, df.schema, schemaFile(df)))
+    cache.put(key, Cached(built, stamp, df))
     built
   }
 
   /** A relisted path whose schema needs no inference job: without
     * `mergeSchema`, Spark infers a parquet schema from the first data
-    * file of the listing (by path) alone, so when that file is the one
-    * the cached schema came from — same path, length and mtime, as after
-    * an append — the relation is built with that schema. None when the
-    * file changed (a rewrite, or an appended file that sorts first). */
+    * file of the listing (by path) alone. When that file is the one the
+    * cached schema came from — same path, length and mtime, as after an
+    * append — the relation is built with that schema; when it is another
+    * data file (a rewrite, or an appended file that sorts first), with
+    * the schema Spark's converter reads from that file's footer, on the
+    * driver instead of in the inference job. None when the listing has
+    * summary files or partitions. */
   private def relisted(spark: SparkSession, p: String, prev: Cached): Option[DataFrame] =
-    prev.first.filter(_ => spark.conf.get("spark.sql.parquet.mergeSchema") == "false").flatMap { f =>
-      val df = spark.read.schema(prev.schema).parquet(p)
-      if (schemaFile(df).contains(f)) Some(df) else None
-    }
+    if (spark.conf.get("spark.sql.parquet.mergeSchema") != "false") None
+    else for {
+      f <- schemaFile(prev.raw)
+      (_, r) <- fsScan(prev.raw)
+      df = relist(spark, p, r)
+      first <- schemaFile(df)
+      (_, now) <- fsScan(df)
+    } yield if (first == f) df
+      else S.ofRows(spark, LogicalRelation(
+        now.copy(dataSchema = S.asNullable(footerSchema(spark, first._1)))(spark), false))
+
+  /** The parquet relation at `p`, read before as `r`, relisted with `r`'s
+    * schema: what `spark.read.schema(...).parquet(p)` builds. A path with
+    * one root and no glob is relisted into a copy of `r`, which skips the
+    * data source lookup and path checks. */
+  private def relist(spark: SparkSession, p: String, r: HadoopFsRelation): DataFrame =
+    Some(r.location.rootPaths).filter(ps => ps.size == 1 && !p.exists("{}[]*?\\".contains(_)))
+      .map(new InMemoryFileIndex(spark, _, r.options, None)).filter(_.partitionSchema.isEmpty)
+      .fold(spark.read.schema(r.dataSchema).parquet(p)) { index =>
+        S.ofRows(spark, LogicalRelation(r.copy(location = index)(spark), false))
+      }
+
+  /** The schema Spark infers from the parquet file at `file` alone. */
+  private def footerSchema(spark: SparkSession, file: String): StructType = {
+    val path = new Path(file)
+    val conf = S.hadoopConf(spark, Map.empty)
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(path.getFileSystem(conf).getFileStatus(path), conf),
+      ParquetMetadataConverter.NO_FILTER)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(path, footer),
+      new ParquetToSparkSchemaConverter(SQLConf.get))
+  }
 
   /** The file Spark infers a parquet relation's schema from: the first
     * data file by path. None when summary files exist (Spark reads those
@@ -250,26 +287,71 @@ object Tables {
     * discipline as [[relationCache]]. */
   private val heldCache = new SessionMaps[Held]
 
-  /** One table's held rows per data file, all read with `schema`. */
-  private final case class Held(schema: StructType, files: Map[FileKey, Array[InternalRow]])
+  /** One table's held rows per data file, all read with `schema` by
+    * `reader`, in listing order, and the key indexes built over exactly
+    * those files. */
+  private final class Held(val schema: StructType, val reader: FileReader,
+      val files: Seq[FileKey], val rows: Map[FileKey, Array[InternalRow]],
+      carried: Map[Seq[String], Option[KeyIndex]]) {
+    private val built = new java.util.concurrent.ConcurrentHashMap[Seq[String], Option[KeyIndex]](
+      carried.asJava)
 
-  /** The rows of `df` as a driver-held frame (a LocalRelation with the
-    * same schema), or None when `df` is not eligible. Eligible are
+    def all: Seq[InternalRow] = files.flatMap(rows(_))
+
+    def indexes: Seq[KeyIndex] = built.values.asScala.flatten.toSeq
+
+    /** The index by `keys`, built on first use. */
+    def index(keys: Seq[String]): Option[KeyIndex] =
+      built.computeIfAbsent(keys, k => KeyIndex(schema, k, files.iterator.flatMap(rows(_))))
+
+    /** This store relisted as `now`, with `read` holding the rows of the
+      * files it does not hold yet. When `now` only adds files, each built
+      * index is carried over with the new files' rows appended (only the
+      * keys they touch change); otherwise indexes are rebuilt on use. */
+    def relisted(now: Seq[FileKey], read: Map[FileKey, Array[InternalRow]]): Held = {
+      val appended =
+        if (!files.forall(now.contains)) Map.empty[Seq[String], Option[KeyIndex]]
+        else built.asScala.toMap.map { case (keys, ix) =>
+          keys -> ix.map(_.append(now.iterator.filter(read.contains).flatMap(read(_))))
+        }
+      new Held(schema, reader, now, now.map(f => f -> rows.getOrElse(f, read(f))).toMap, appended)
+    }
+  }
+
+  /** A driver-held log: `frame` plans as a LocalRelation over its rows,
+    * and `index` gives its key index by the given key columns (None for
+    * a key type the index does not group). A stored table's indexes are kept with
+    * its rows; a client-sized frame's are built per call. */
+  private[graft] final class HeldLog(frameOf: => DataFrame,
+      indexOf: Seq[String] => Option[KeyIndex]) {
+    lazy val frame: DataFrame = frameOf
+    def index(keys: Seq[String]): Option[KeyIndex] = indexOf(keys)
+  }
+
+  /** `df` as a driver-held log, or None when `df` is not eligible.
+    * Eligible are
     *   - a bare file scan with no partition columns whose plan-estimated
     *     size is at most `spark.sql.autoBroadcastJoinThreshold`, the size
     *     Spark already collects to the driver for a broadcast: its rows
     *     come from the held store, which reads only the files it does not
-    *     hold yet, in one job;
+    *     hold yet, on the driver;
     *   - a client-sized frame: a LocalRelation or a Union of them.
     * A negative threshold turns holding off. */
-  private[graft] def held(df: DataFrame): Option[DataFrame] = {
+  private[graft] def held(df: DataFrame): Option[HeldLog] = {
     val spark = df.sparkSession
     fsScan(df) match {
       case Some((l, r)) =>
         if (r.partitionSchema.nonEmpty || l.stats.sizeInBytes > S.broadcastThreshold(spark)) None
-        else Some(localFrame(spark, l.output, heldRows(spark, r)))
+        else {
+          val h = heldStore(spark, r)
+          Some(new HeldLog(localFrame(spark, l.output, h.all), h.index))
+        }
       case None =>
-        localRows(df).map(localFrame(spark, df.queryExecution.optimizedPlan.output, _))
+        localRows(df).map { rows =>
+          val output = df.queryExecution.optimizedPlan.output
+          new HeldLog(localFrame(spark, output, rows),
+            KeyIndex(DataTypeUtils.fromAttributes(output), _, rows.iterator))
+        }
     }
   }
 
@@ -291,45 +373,59 @@ object Tables {
       rows: Seq[InternalRow]): DataFrame =
     S.ofRows(spark, LocalRelation(output.map(_.newInstance()), rows))
 
-  /** The store's rows for a file relation's listing, reading its new
-    * files in one labelled job. */
-  private def heldRows(spark: SparkSession, r: HadoopFsRelation): Seq[InternalRow] = {
+  /** The store for a file relation's listing, reading its new files. */
+  private def heldStore(spark: SparkSession, r: HadoopFsRelation): Held = {
     val table = r.location.rootPaths.mkString(",")
     val store = heldCache(spark)
     val files = listed(r)
     val prev = Option(store.get(table)).filter(_.schema == r.dataSchema)
-      .map(_.files).getOrElse(Map.empty)
-    val fresh = files.filterNot(prev.contains)
-    val read = if (fresh.isEmpty) Map.empty[FileKey, Array[InternalRow]]
-      else readFiles(spark, r, fresh, s"dyn:held:$table: ${fresh.size} new files")
-    val now = files.map(f => f -> prev.getOrElse(f, read(f))).toMap
-    store.put(table, Held(r.dataSchema, now))
-    files.flatMap(now(_))
+      .getOrElse(new Held(r.dataSchema, new FileReader(spark, r), Nil, Map.empty, Map.empty))
+    if (prev.files == files) prev
+    else {
+      val now = prev.relisted(files, prev.reader(files.filterNot(prev.rows.contains)))
+      store.put(table, now)
+      now
+    }
   }
 
-  /** Read `files` of relation `r` in one job, returning each file's rows.
-    * Each file is its own scan, so the partitions of the union map back
-    * to their file. */
-  private def readFiles(spark: SparkSession, r: HadoopFsRelation,
-      files: Seq[FileKey], description: String): Map[FileKey, Array[InternalRow]] = {
-    val sc = spark.sparkContext
-    val rdds = files.map { f =>
-      val index = new InMemoryFileIndex(spark, Seq(new Path(f._1)), r.options, None)
-      S.ofRows(spark, LogicalRelation(r.copy(location = index)(spark), false))
-        .queryExecution.toRdd
+  /** Reads data files of relation `r` on the driver through its file
+    * format, returning each file's rows copied out of the reader's
+    * buffers. The reader is built on first use and kept with the store:
+    * building it broadcasts the Hadoop configuration, which costs more
+    * than reading a small file. Like the rows the store already holds,
+    * it keeps the session's confs of that moment. */
+  private final class FileReader(spark: SparkSession, r: HadoopFsRelation) {
+    private lazy val read = r.fileFormat.buildReaderWithPartitionValues(spark, r.dataSchema,
+      r.partitionSchema, r.dataSchema, Nil, r.options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      S.hadoopConf(spark, r.options))
+    private lazy val unsafe = UnsafeProjection.create(r.dataSchema)
+
+    def apply(files: Seq[FileKey]): Map[FileKey, Array[InternalRow]] = synchronized {
+      files.map { case f @ (p, length, mtime) =>
+        val it = read(PartitionedFile(InternalRow.empty, SparkPath.fromPathString(p), 0, length,
+          Array.empty[String], mtime, length))
+        try f -> it.map(row => unsafe(row).copy(): InternalRow).toArray
+        finally it match {
+          case c: java.io.Closeable => c.close()
+          case _ =>
+        }
+      }.toMap
     }
-    val prevDescription = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(description)
-    val parts = try sc.runJob(sc.union(rdds),
-        (it: Iterator[InternalRow]) => it.map(_.copy()).toArray)
-      finally sc.setJobDescription(prevDescription)
-    val ends = rdds.map(_.getNumPartitions).scanLeft(0)(_ + _)
-    files.indices.map(i => files(i) -> parts.slice(ends(i), ends(i + 1)).flatten).toMap
   }
 
   /** Data files the store holds for a table (spec hook). */
   private[graft] def heldFiles(spark: SparkSession): Map[String, Set[String]] =
-    heldCache(spark).asScala.map { case (t, h) => t -> h.files.keySet.map(_._1) }.toMap
+    heldCache(spark).asScala.map { case (t, h) => t -> h.files.map(_._1).toSet }.toMap
+
+  /** Data files whose rows a table's key indexes hold, found by identity
+    * among the rows of the files the store holds; an indexed row that no
+    * held file holds counts as file "" (spec hook). */
+  private[graft] def indexedFiles(spark: SparkSession): Map[String, Set[String]] =
+    heldCache(spark).asScala.map { case (t, h) =>
+      val fileOf = new java.util.IdentityHashMap[InternalRow, String]()
+      h.files.foreach(f => h.rows(f).foreach(fileOf.put(_, f._1)))
+      t -> h.indexes.flatMap(_.versionRows).map(r => Option(fileOf.get(r)).getOrElse("")).toSet
+    }.toMap
 
   /** Recursive on-disk footprint of a table path (file or directory).
     * The spread gate uses TOTAL bytes, not file count: a sub-split
@@ -360,7 +456,7 @@ object Tables {
     val df = load(spark, dir, name)
     val bytes = try diskBytes(new java.io.File(path(dir, name)))
       catch { case _: Exception => Long.MaxValue }
-    val maxSplit = org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes
+    val maxSplit = SQLConf.get.filesMaxPartitionBytes
     val cores = spark.sparkContext.defaultParallelism
     if (bytes > 0 && bytes <= maxSplit && cores > 1) df.repartition(cores)
     else df

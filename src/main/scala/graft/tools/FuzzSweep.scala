@@ -19,10 +19,12 @@ object FuzzSweep {
     val (sfDir, outDir) = (args(0), args(1))
     val seedLo = args.lift(2).map(_.toLong).getOrElse(100L)
     val seedHi = args.lift(3).map(_.toLong).getOrElse(110L)
-    // the engine's own session, so the sweep checks the shipped rule set
+    // the engine's own session at Verify's posture, so the sweep checks
+    // the shipped rule set under the shuffle settings the oracle gate runs
     val spark = graft.GraftSession.get(
-      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
     graft.GraftSession.quietLogs(spark, "ERROR")
+    graft.GraftSession.tuneShuffleFor(spark, sfDir)
     val es = entries(seedLo, seedHi)
     graft.Verify.dump(spark, sfDir, outDir, es.map { case (n, d) => n -> d.oracle },
       es.map { case (n, d) => n -> d.build }, "fuzzsweep")

@@ -70,6 +70,11 @@ object shims {
   def copyValue(v: Any): Any =
     org.apache.spark.sql.catalyst.InternalRow.copyValue(v)
 
+  /** `s` with every field nullable, as a file source reads it
+    * (`asNullable` is `private[spark]`). */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+
   def sameTypeIgnoreNullability(a: org.apache.spark.sql.types.DataType,
       b: org.apache.spark.sql.types.DataType): Boolean =
     a.asNullable == b.asNullable
@@ -90,6 +95,13 @@ object shims {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** The session's Hadoop configuration with a relation's `options`
+    * (`sessionState` is `private[sql]`). */
+  def hadoopConf(spark: org.apache.spark.sql.SparkSession,
+      options: Map[String, String]): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.newHadoopConfWithOptions(options)
 
   /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes. */
   def broadcastThreshold(spark: org.apache.spark.sql.SparkSession): Long =

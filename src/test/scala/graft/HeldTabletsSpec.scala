@@ -2,13 +2,15 @@ package graft
 
 import java.io.File
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -56,12 +58,18 @@ class HeldTabletsSpec extends SparkSpec {
     (schema, rnd.shuffle(rows))
   }
 
+  /** A seeded log; `range` bounds the first key for a range `where`. */
   private case class Log(name: String, keys: Seq[String], schema: StructType,
-      rows: Seq[Row], lookups: Seq[Seq[Any]]) {
+      rows: Seq[Row], lookups: Seq[Seq[Any]], range: (Any, Any)) {
     private val tsIdx = keys.size // rows are key..., ts, op, v, s
     def ts(r: Row): Option[Long] = if (r.isNullAt(tsIdx)) None else Some(r.getLong(tsIdx))
     def keyOf(r: Row): Seq[Any] = keys.indices.map(r.get)
     val maxTs: Long = rows.flatMap(ts).max
+    val minTs: Long = rows.flatMap(ts).min
+    /** Keys whose newest version is a tombstone. */
+    val tombstoned: Seq[Seq[Any]] = rows.filter(ts(_).nonEmpty).groupBy(keyOf).values
+      .map(_.maxBy(ts(_).get)).filter(_.getString(tsIdx + 1) == DynTable.OpDelete)
+      .map(keyOf).filter(_.forall(_ != null)).toSeq
     def client: DataFrame = spark.createDataFrame(rows.asJava, schema)
     lazy val dir: String = {
       val d = Files.createTempDirectory(s"graft-held-$name").toString + "/log"
@@ -81,21 +89,25 @@ class HeldTabletsSpec extends SparkSpec {
     val (ds, dr) = seededLog(14, Seq(StructField("k", DoubleType)),
       i => Seq(if (i == 39) null else Seq(Double.NaN, -0.0, 0.0, 1.5, -2.25)(i % 5)))
     Seq(
-      // int literals looked up against the long key
-      Log("long", Seq("k"), ls, lr, Seq(Seq(3), Seq(7), Seq(-5), Seq(1000))),
-      Log("string", Seq("k"), ss, sr, Seq(Seq("k3"), Seq("k17"), Seq("nope"))),
-      Log("pair", Seq("a", "b"), ts, tr, Seq(Seq(1L, "b1"), Seq(3L, "b3"), Seq(6L, "b0"))),
-      // NaN and -0.0 keys group as in groupBy
-      Log("double", Seq("k"), ds, dr, Seq(Seq(Double.NaN), Seq(-0.0), Seq(1.5))))
+      // int literals looked up against the long key, an absent and a null key
+      Log("long", Seq("k"), ls, lr, Seq(Seq(3), Seq(7), Seq(-5), Seq(1000), Seq(null)), (2, 20)),
+      Log("string", Seq("k"), ss, sr, Seq(Seq("k3"), Seq("k17"), Seq("nope")), ("k1", "k3")),
+      Log("pair", Seq("a", "b"), ts, tr,
+        Seq(Seq(1L, "b1"), Seq(3L, "b3"), Seq(6L, "b0"), Seq(null, "b1")), (1L, 3L)),
+      // NaN and -0.0 keys group as in groupBy; a NaN and a -0.0 probe
+      // find them, and NaN sorts above every other double
+      Log("double", Seq("k"), ds, dr, Seq(Seq(Double.NaN), Seq(-0.0), Seq(1.5), Seq(null)),
+        (-0.0, Double.NaN)))
   }
 
   private def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
 
   /** Held and distributed frames of one verb: same schema, same rows;
-    * the held frame is a LocalRelation, the distributed one an aggregate. */
+    * the held frame optimizes to a LocalRelation, the distributed one
+    * plans an aggregate. */
   private def same(what: String, verb: () => DataFrame): Unit = {
     val held = verb()
-    assert(held.queryExecution.analyzed.isInstanceOf[LocalRelation], s"$what: not held")
+    assert(held.queryExecution.optimizedPlan.isInstanceOf[LocalRelation], s"$what: not held")
     val (dSchema, dRows) = distributed {
       val d = verb()
       assert(d.queryExecution.analyzed.collectFirst { case a: Aggregate => a }.nonEmpty,
@@ -117,6 +129,51 @@ class HeldTabletsSpec extends SparkSpec {
         same(s"$tag readAsOf $t", () => DynTable.readAsOf(log(), l.keys, lit(t)))
       }
       same(s"$tag lookup", () => DynTable.lookup(log(), l.keys, l.lookups))
+    }
+  }
+
+  test("held index reads equal the distributed merge: absent, tombstoned and null " +
+      "keys, a range where over readLatest, and cuts below, at and above every version") {
+    for (l <- logs; (form, log) <- Seq("stored" -> (() => l.stored), "client" -> (() => l.client))) {
+      val tag = s"${l.name}/$form"
+      assert(l.tombstoned.nonEmpty, tag)
+      same(s"$tag lookup tombstoned", () => DynTable.lookup(log(), l.keys, l.tombstoned :+ l.lookups.head))
+      val (lo, hi) = l.range
+      same(s"$tag readLatest range", () =>
+        DynTable.readLatest(log(), l.keys).where(col(l.keys.head).between(lo, hi)))
+      // an int cut against the long ts, and ts values of the log itself
+      Seq(lit(0), lit(l.minTs - 1), lit(l.minTs), lit(l.maxTs / 2), lit(l.maxTs),
+          lit(l.maxTs + 1), lit(Long.MaxValue)).foreach { t =>
+        same(s"$tag readAsOf $t", () => DynTable.readAsOf(log(), l.keys, t))
+      }
+      same(s"$tag readAsOf range", () =>
+        DynTable.readAsOf(log(), l.keys, lit(l.maxTs / 2)).where(col(l.keys.head).between(lo, hi)))
+    }
+  }
+
+  /** Optimizer runs while `body` runs, counted by a pass-through rule
+    * added to the session's extra optimizations. */
+  private def optimizerRuns(body: => Any): Int = {
+    val runs = new AtomicInteger
+    val counter = new Rule[LogicalPlan] {
+      override def apply(plan: LogicalPlan): LogicalPlan = { runs.incrementAndGet(); plan }
+    }
+    val prev = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = prev :+ counter
+    try { body; runs.get } finally spark.experimental.extraOptimizations = prev
+  }
+
+  test("held lookups and versioned reads at a literal cut probe the key index: " +
+      "building them optimizes no plan") {
+    for (l <- logs) {
+      // a stored log: a client-sized frame's rows come from its optimized plan
+      val log = l.stored
+      DynTable.readLatest(log, l.keys).collect()
+      assert(optimizerRuns(DynTable.readLatest(log, l.keys)) == 0, l.name)
+      assert(optimizerRuns(DynTable.lookup(log, l.keys, l.lookups)) == 0, l.name)
+      assert(optimizerRuns(DynTable.readAsOf(log, l.keys, lit(l.maxTs / 2))) == 0, l.name)
+      // a cut that is not a literal is a filter over the held rows
+      assert(optimizerRuns(DynTable.readAsOf(log, l.keys, lit(l.maxTs / 2) + 1)) > 0, l.name)
     }
   }
 
@@ -158,7 +215,7 @@ class HeldTabletsSpec extends SparkSpec {
     }
   }
 
-  test("the held store reads only new files, in one job, and keeps only listed files") {
+  test("the held store reads new files on the driver and keeps only listed files") {
     val l = logs.head
     val schema = l.stored.schema
     // a user schema: relisting the directory runs no inference job
@@ -176,7 +233,7 @@ class HeldTabletsSpec extends SparkSpec {
     DynTable.commitTransaction(log, staged, l.keys, lit(l.maxTs), lit(l.maxTs + 1))
       .where(col("ts") === l.maxTs + 1).coalesce(1).write.mode("append").parquet(l.dir)
     var latest: Seq[String] = Nil
-    assert(Jobs.count(spark) { latest = sorted(DynTable.readLatest(log, l.keys)) } == 1,
+    assert(Jobs.count(spark) { latest = sorted(DynTable.readLatest(log, l.keys)) } == 0,
       "a read after appending one file")
     assert(latest.contains("[1000,0.5,new]"))
     assert(latest == distributed(sorted(DynTable.readLatest(log, l.keys))))
@@ -190,10 +247,41 @@ class HeldTabletsSpec extends SparkSpec {
       distributed(sorted(DynTable.readLatest(log, l.keys))))
     val listed = new File(l.dir).listFiles().map(_.getName)
       .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSet
-    val held = Tables.heldFiles(spark).collect {
-      case (table, files) if table.endsWith(l.dir) => files.map(new org.apache.hadoop.fs.Path(_).getName)
-    }
-    assert(held.toSeq == Seq(listed))
+    assert(files(Tables.heldFiles(spark), l.dir) == Seq(listed))
+  }
+
+  /** Names of the files `hook` reports for the table at `dir`. */
+  private def files(hook: Map[String, Set[String]], dir: String): Seq[Set[String]] =
+    hook.collect {
+      case (table, fs) if table.endsWith(dir) => fs.map(new org.apache.hadoop.fs.Path(_).getName)
+    }.toSeq
+
+  test("the held index holds the rows of listed files only: an appended file is " +
+      "added, a compaction drops every old file's entries") {
+    val l = logs(1)
+    val schema = l.stored.schema
+    def log: DataFrame = spark.read.schema(schema).parquet(l.dir)
+    def listed: Set[String] = new File(l.dir).listFiles().map(_.getName)
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSet
+    DynTable.readLatest(log, l.keys).collect()
+    assert(files(Tables.indexedFiles(spark), l.dir) == Seq(listed))
+
+    val staged = spark.createDataFrame(Seq(Row("k-new", DynTable.OpUpsert, 0.5, "new")).asJava,
+      StructType(Seq(StructField("k", StringType), StructField("op", StringType),
+        StructField("v", DoubleType), StructField("s", StringType))))
+    DynTable.commitTransaction(log, staged, l.keys, lit(l.maxTs), lit(l.maxTs + 1))
+      .where(col("ts") === l.maxTs + 1).coalesce(1).write.mode("append").parquet(l.dir)
+    val before = listed
+    same("after an append", () => DynTable.lookup(log, l.keys, Seq(Seq("k-new"), Seq("k3"))))
+    assert(files(Tables.indexedFiles(spark), l.dir) == Seq(before))
+
+    val tmp = new File(l.dir + ".compacting")
+    DynTable.compact(log, l.keys).coalesce(1).write.parquet(tmp.getPath)
+    FileUtils.deleteDirectory(new File(l.dir))
+    assert(tmp.renameTo(new File(l.dir)))
+    same("after a compaction", () => DynTable.readAsOf(log, l.keys, lit(l.maxTs + 1)))
+    val after = files(Tables.indexedFiles(spark), l.dir)
+    assert(after == Seq(listed) && (after.head & before).isEmpty, after)
   }
 
   test("consumer registry and producer table reads run no job, nulls included") {

@@ -75,6 +75,25 @@ class ParameterizeLiteralsSpec extends SparkSpec {
     }
   }
 
+  test("held: second lookup and versioned range read of a pair compile no class") {
+    // the same pairs over the log held on the driver: a read probes the
+    // key index, and a filter over its local result binds its constants
+    val pairs: Seq[(String, () => DataFrame, () => DataFrame)] = Seq(
+      ("lookup", () => lookup(3L, 17L), () => lookup(8L, 29L)),
+      ("readAsOf range", () => rangeAsOf(5L, 200L), () => rangeAsOf(21L, 333L)))
+    pairs.foreach { case (what, first, second) =>
+      assert(first().collect().nonEmpty, what)
+      var rows: Array[Row] = Array.empty
+      val n = compiles { rows = second().collect() }
+      assert(rows.nonEmpty, what)
+      assert(n == 0, s"$what: the second call compiled $n generated classes")
+    }
+    assert(lookup(8L, 29L).collect().map(_.getLong(0)).toSet == Set(8L, 29L))
+    assert(rangeAsOf(21L, 333L).collect().map(_.getLong(0)).toSet == Set(21L, 22L, 23L, 24L, 25L))
+    assert(commit(33L, 600L, 601L).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      Seq((33L, 601L)))
+  }
+
   test("the scan's pushed filters keep the key equality and the range bounds") {
     distributed {
       def pushed(df: DataFrame): String = {

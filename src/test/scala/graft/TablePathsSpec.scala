@@ -243,6 +243,33 @@ class TablePathsSpec extends SparkSpec {
     assert(rewritten.columns.toSeq == Seq("k", "w", "x") && rewritten.count() == 3)
   }
 
+  test("Tables.load: an appended file that sorts first gives its schema, read from " +
+      "its footer with no job") {
+    import java.io.File
+    import graft.sources.Tables
+    val dir = java.nio.file.Files.createTempDirectory("tfirst").toString
+    val p = Tables.path(dir, "log")
+    spark.range(0, 5).selectExpr("id AS k", "id * 2 AS v")
+      .coalesce(1).write.parquet(p)
+    assert(Tables.load(spark, dir, "log").count() == 5)
+    // Spark infers a parquet schema from the first data file by path: the
+    // appended file goes in first, with a column more
+    Thread.sleep(1100) // distinct directory mtime even on coarse filesystems
+    val tmp = s"$dir/append.tmp"
+    spark.range(5, 8).selectExpr("id AS k", "id * 2 AS v", "CAST(id AS INT) AS w")
+      .coalesce(1).write.parquet(tmp)
+    val part = new File(tmp).listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    assert(part.renameTo(new File(p, "a-append.parquet")))
+    var reloaded: org.apache.spark.sql.DataFrame = null
+    val jobs = Jobs.count(spark) { reloaded = Tables.load(spark, dir, "log") }
+    assert(jobs == 0, s"the reload ran $jobs jobs")
+    assert(reloaded.schema == spark.read.parquet(p).schema)
+    assert(reloaded.columns.toSeq == Seq("k", "v", "w"))
+    assert(reloaded.collect().map(r => (r.getLong(0), r.isNullAt(2))).sorted.toSeq ==
+      (0L until 8L).map(k => (k, k < 5)))
+  }
+
   test("table-path views: an append to a RANGE member re-resolves with no job") {
     import java.io.File
     import java.nio.file.Files
