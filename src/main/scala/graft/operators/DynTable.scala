@@ -88,18 +88,18 @@ object DynTable {
       fromIndex: KeyIndex => Option[Seq[InternalRow]]): DataFrame =
     Tables.held(log) match {
       case Some(held) =>
-        held.index(keys).flatMap(ix => fromIndex(ix).map(local(log, ix, _))).getOrElse {
+        held.index(keys).flatMap(ix => fromIndex(ix).map(local(log, ix.outSchema, _))).getOrElse {
           val sliver = cut.fold(held.frame)(held.frame.where)
           Tables.localRows(sliver).flatMap(rows => KeyIndex(sliver.schema, keys, rows.iterator))
-            .map(ix => local(log, ix, ix.latest))
+            .map(ix => local(log, ix.outSchema, ix.latest))
             .getOrElse(mergeLatest(sliver, keys))
         }
       case None => mergeLatest(cut.fold(log)(log.where), keys)
     }
 
-  /** Rows an index returned as a local frame of its output schema. */
-  private def local(log: DataFrame, ix: KeyIndex, rows: Seq[InternalRow]): DataFrame =
-    S.ofRows(log.sparkSession, LocalRelation(DataTypeUtils.toAttributes(ix.outSchema), rows))
+  /** Rows an index returned as a local frame of `schema`. */
+  private def local(log: DataFrame, schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    S.ofRows(log.sparkSession, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
   /** The value a literal compares as against a column of type `to`
     * (`KeyIndex.coerce`); None for an expression that is not a literal. */
@@ -186,32 +186,6 @@ object DynTable {
       withTimestamps: Boolean = false): DataFrame =
     readLatestColumns(log.where(col("ts") <= asOf), keys, withTimestamps)
 
-  /** Major compaction (the reference's tablet compaction: dynamic
-    * stores flush to chunks, compaction merges chunks and discards
-    * shadowed versions — yt/yt/server/node/tablet_node/store_compactor.cpp
-    * semantics over our log model). The write log collapses to an
-    * EQUIVALENT minimal log: one upsert per live key at that key's
-    * newest upsert version; tombstoned keys, overwritten versions and
-    * spent tombstones are dropped. For aggregate columns the folded
-    * state is emitted as an `aggregate=%false` (overwrite) write, so
-    * later delta writes fold onto the compacted base exactly as they
-    * would onto the full history. A `written` partial-update mask, if
-    * present, compacts to a full write (null mask).
-    *
-    * Contract (DynTableSpec): for any future writes W with versions
-    * above the log's, read*(compact(log) ∪ W) == read*(log ∪ W), for
-    * the latest-wins, per-column and aggregate-column read verbs.
-    * Versioned reads BELOW the compaction horizon are discarded, and
-    * per-column write timestamps collapse to the key's newest upsert
-    * version — major compaction drops old versions, as the reference
-    * does past min_data_versions/TTL.
-    *
-    * Plan shape: ONE shuffle — the same merge aggregation as the read
-    * verbs, with each key's newest version surfaced from the very same
-    * hash aggregate (no recovery join, no second pass over the log).
-    * The output is a fraction of the log: compaction is the cheapest
-    * possible rewrite of the store.
-    */
   /** Bulk insert (bulk_insert.md; test_bulk_insert.py): a static-table
     * operation writes straight into a sorted dynamic table — every
     * output row lands as an upsert bearing ONE shared commit timestamp
@@ -291,8 +265,60 @@ object DynTable {
     ups.unionByName(dels)
   }
 
+  /** Major compaction (the reference's tablet compaction: dynamic
+    * stores flush to chunks, compaction merges chunks and discards
+    * shadowed versions — yt/yt/server/node/tablet_node/store_compactor.cpp
+    * semantics over our log model). The write log collapses to an
+    * EQUIVALENT minimal log: one upsert per live key at that key's
+    * newest upsert version; tombstoned keys, overwritten versions and
+    * spent tombstones are dropped. For aggregate columns the folded
+    * state is emitted as an `aggregate=%false` (overwrite) write, so
+    * later delta writes fold onto the compacted base exactly as they
+    * would onto the full history. A `written` partial-update mask, if
+    * present, compacts to a full write (null mask).
+    *
+    * Contract (DynTableSpec): for any future writes W with versions
+    * above the log's, read*(compact(log) ∪ W) == read*(log ∪ W), for
+    * the latest-wins, per-column and aggregate-column read verbs.
+    * Versioned reads BELOW the compaction horizon are discarded, and
+    * per-column write timestamps collapse to the key's newest upsert
+    * version — major compaction drops old versions, as the reference
+    * does past min_data_versions/TTL.
+    *
+    * Plan shape: ONE shuffle — the same merge aggregation as the read
+    * verbs, with each key's newest version surfaced from the very same
+    * hash aggregate (no recovery join, no second pass over the log).
+    * The output is a fraction of the log: compaction is the cheapest
+    * possible rewrite of the store.
+    *
+    * A log held on the driver (`Tables.held`) with a long `ts`, no
+    * `written` or `agg` column and no aggregate columns compacts from its
+    * key index instead, as the reference's compactor merges a tablet's
+    * own sorted stores: the result is a local frame of the surviving
+    * versions (`KeyIndex.surviving`, the aggregate's rule) referencing the
+    * held rows, built with no aggregate, no job and no generated class.
+    */
   def compact(log: DataFrame, keys: Seq[String],
-      aggColumns: Map[String, String] = Map.empty): DataFrame = {
+      aggColumns: Map[String, String] = Map.empty): DataFrame =
+    heldCompaction(log, keys, aggColumns).getOrElse(mergeCompaction(log, keys, aggColumns))
+
+  /** [[compact]] of a held log from its key index; None when the log is
+    * not held, has a `written` or `agg` column, aggregate columns, a `ts`
+    * that is not a long, or keys the index does not group. The floor is
+    * the aggregate's horizon for a key with no delete,
+    * `coalesce(max delete ts, Long.MinValue)`. */
+  private def heldCompaction(log: DataFrame, keys: Seq[String],
+      aggColumns: Map[String, String]): Option[DataFrame] =
+    if (aggColumns.nonEmpty || log.columns.exists(c => c == "written" || c == "agg")) None
+    else for {
+      held <- Tables.held(log)
+      ix <- held.index(keys) if ix.tsType == LongType
+    } yield local(log, ix.compactSchema, ix.surviving(Long.MinValue))
+
+  /** [[compact]] through the merge aggregation: the path of every log
+    * that is not compacted from a key index, and its arbiter. */
+  private def mergeCompaction(log: DataFrame, keys: Seq[String],
+      aggColumns: Map[String, String]): DataFrame = {
     val hasMask = log.columns.contains("written")
     val hasAggFlag = log.columns.contains("agg")
     val state =
@@ -333,7 +359,12 @@ object DynTable {
     * client-sized staged frame, the count is taken on the driver when
     * the plan is built, over the snapshot the log frame pins: with
     * literal timestamps it probes the staged keys in the key index for
-    * versions in `(startTs, commitTs]`.
+    * versions in `(startTs, commitTs]`. The held rows then enter the
+    * union as they are when the log is already in the commit's layout
+    * (keys, `ts`, `op`, values), and a `where(ts === commitTs)` the
+    * optimizer pushes onto them and onto the staged rows binds its
+    * timestamp (`plans.ParameterizePushedLocalFilters`), so a held
+    * commit compiles no class after the first and projects no held row.
     */
   def commitTransaction(log: DataFrame, staged: DataFrame, keys: Seq[String],
       startTs: Column, commitTs: Column): DataFrame = {
@@ -412,9 +443,13 @@ object DynTable {
       else Seq((if (hasLogMask) col("written")
         else lit(null).cast(org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.StringType))).as("written"))
-    base.select((keys.map(col) ++ Seq(col("ts"), col("op")) ++ logMask ++
-        valueCols.map(col)): _*)
-      .unionByName(appended)
+    // a log already in that layout unions as it is: a projection over
+    // held rows would copy every version on each commit
+    val lead = keys ++ Seq("ts", "op")
+    val logSide =
+      if (logMask.isEmpty && base.columns.toSeq == lead ++ valueCols) base
+      else base.select((lead.map(col) ++ logMask ++ valueCols.map(col)): _*)
+    logSide.unionByName(appended)
   }
 
   /** Version-retention compaction (sorted-dynamic-tables.md:97-118:

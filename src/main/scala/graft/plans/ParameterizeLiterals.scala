@@ -34,10 +34,12 @@ import org.apache.spark.sql.types._
   *
   * A filter directly over a `LocalRelation` never reaches a physical
   * plan: the optimizer's ConvertToLocalRelation evaluates it through a
-  * generated predicate first. Its analysis-time part,
-  * [[ParameterizeLocalFilters]], swaps the same operands when such a
-  * filter is resolved, so a caller's filter over a driver-held result
-  * compiles one predicate class per shape.
+  * generated predicate first. Two logical parts swap the same operands
+  * there: [[ParameterizeLocalFilters]] when such a filter is resolved,
+  * so a caller's filter over a driver-held result compiles one
+  * predicate class per shape, and [[ParameterizePushedLocalFilters]]
+  * when the optimizer has pushed a filter onto local rows, so a held
+  * commit's write filter compiles nothing after the first commit.
   */
 object ParameterizeLiterals extends Rule[SparkPlan] {
 
@@ -89,11 +91,27 @@ object ParameterizeLiterals extends Rule[SparkPlan] {
   * literals.
   */
 object ParameterizeLocalFilters extends Rule[LogicalPlan] {
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp(bind)
+
+  private[plans] val bind: PartialFunction[LogicalPlan, LogicalPlan] = {
     case f @ Filter(cond, l: LocalRelation) if f.resolved && !l.isStreaming =>
       val c = ParameterizeLiterals.parameterize(cond)
       if (c fastEquals cond) f else f.copy(condition = c)
   }
+}
+
+/** The optimizer-time part of [[ParameterizeLiterals]] (a pre-CBO rule,
+  * which runs once after the operator optimization batch and before the
+  * `LocalRelation` batch): binds the operands of a filter that predicate
+  * pushdown moved directly over local rows after analysis, as
+  * [[ParameterizeLocalFilters]] binds one written there. A filter over a
+  * union of local rows, such as a held commit's
+  * `.where(ts === commitTs)`, reaches each branch only after constant
+  * folding, so without this part ConvertToLocalRelation compiles one
+  * predicate class per branch and per value.
+  */
+object ParameterizePushedLocalFilters extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp(ParameterizeLocalFilters.bind)
 }
 
 /** A non-null primitive constant whose generated code reads it from

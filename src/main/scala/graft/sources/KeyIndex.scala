@@ -30,11 +30,15 @@ private[graft] final class KeyIndex private (
     layout: KeyIndex.Layout,
     versions: Map[Seq[Any], Array[InternalRow]],
     live: Map[Seq[Any], InternalRow]) {
-  import layout.{group, isLive, normalize, project, ts, tsIdx, tsOrder, keyOf}
+  import layout.{group, isDelete, isLive, normalize, project, ts, tsIdx, tsOrder, keyOf}
 
   /** The output schema: keys as in the log, values nullable (the schema
     * of the distributed merge). */
   def outSchema: StructType = layout.outSchema
+  /** The schema of [[surviving]]'s rows: keys as in the log, `ts`, `op`
+    * (never null) and the values, `ts` and values nullable (the schema of
+    * the distributed compaction). */
+  def compactSchema: StructType = layout.compactSchema
   def keyTypes: Seq[DataType] = layout.keyTypes
   def tsType: DataType = layout.tsType
 
@@ -62,6 +66,22 @@ private[graft] final class KeyIndex private (
     else groups(probes).iterator.flatMap(versions.get).map { vs =>
       math.max(0, countUpTo(vs, upTo) - countUpTo(vs, after))
     }.sum.toLong
+
+  /** The versions a major compaction keeps: per key its newest upsert
+    * (the first indexed on a `ts` tie), if its `ts` is above both the
+    * key's newest delete and `floor`. A version whose `op` is neither
+    * (null included) is ignored, and a delete that ties the newest
+    * upsert drops the key. Rows come in [[compactSchema]]'s layout. */
+  def surviving(floor: Any): Seq[InternalRow] =
+    versions.valuesIterator.flatMap { vs =>
+      var up: InternalRow = null
+      var horizon = floor
+      vs.foreach { r =>
+        if (isLive(r)) { if (up == null || tsOrder.gt(ts(r), ts(up))) up = r }
+        else if (isDelete(r)) horizon = tsOrder.max(horizon, ts(r))
+      }
+      Option(up).filter(u => tsOrder.gt(ts(u), horizon)).map(layout.compacted)
+    }.toIndexedSeq
 
   /** The log rows held as versions. */
   def versionRows: Iterator[InternalRow] = versions.valuesIterator.flatMap(_.iterator)
@@ -151,15 +171,21 @@ private[graft] object KeyIndex {
     val tsOrder: Ordering[Any] = TypeUtils.getInterpretedOrdering(tsType)
     private val valueIdx = schema.indices.filterNot(i => keyIdx.contains(i) || i == tsIdx || i == opIdx)
     private val liveOp = UTF8String.fromString("upsert")
-    val outSchema: StructType = StructType(keyIdx.map(schema(_)) ++
-      valueIdx.map(i => StructField(schema(i).name, schema(i).dataType, nullable = true)))
+    private val deleteOp = UTF8String.fromString("delete")
+    private val valueFields = valueIdx.map(i => StructField(schema(i).name, schema(i).dataType, nullable = true))
+    val outSchema: StructType = StructType(keyIdx.map(schema(_)) ++ valueFields)
+    val compactSchema: StructType = StructType(keyIdx.map(schema(_)) ++ Seq(
+      StructField("ts", tsType), StructField("op", StringType, nullable = false)) ++ valueFields)
 
     def ts(r: InternalRow): Any = r.get(tsIdx, tsType)
     def isLive(r: InternalRow): Boolean = !r.isNullAt(opIdx) && r.getUTF8String(opIdx) == liveOp
+    def isDelete(r: InternalRow): Boolean = !r.isNullAt(opIdx) && r.getUTF8String(opIdx) == deleteOp
     def keyOf(r: InternalRow): Seq[Any] =
       keyIdx.map(i => if (r.isNullAt(i)) null else normalize(r.get(i, schema(i).dataType)))
-    def project(r: InternalRow): InternalRow =
-      new GenericInternalRow((keyOf(r) ++ valueIdx.map(i => r.get(i, schema(i).dataType))).toArray)
+    private def values(r: InternalRow): Seq[Any] = valueIdx.map(i => r.get(i, schema(i).dataType))
+    def project(r: InternalRow): InternalRow = new GenericInternalRow((keyOf(r) ++ values(r)).toArray)
+    def compacted(r: InternalRow): InternalRow =
+      new GenericInternalRow((keyOf(r) ++ Seq(ts(r), liveOp) ++ values(r)).toArray)
 
     /** -0.0 as 0.0 and one NaN, as `groupBy` normalizes floats. */
     def normalize(v: Any): Any = v match {

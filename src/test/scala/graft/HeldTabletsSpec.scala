@@ -151,6 +151,47 @@ class HeldTabletsSpec extends SparkSpec {
     }
   }
 
+  test("held compaction equals the merge compaction, runs no job and plans a " +
+      "LocalRelation: seeded logs, appended files and edge versions") {
+    // edge versions, stored as three files (the later two appended) and as
+    // a client-sized frame: a key whose newest version has a null `op`, a
+    // delete tying the newest upsert's `ts` (in one file and across files),
+    // a delete below an upsert, an upsert at Long.MinValue, a key with only
+    // a null-`ts` version, an `op` that is neither verb, and a null key
+    val schema = StructType(Seq(StructField("k", LongType), StructField("ts", LongType),
+      StructField("op", StringType), StructField("v", DoubleType), StructField("s", StringType)))
+    val (up, del) = (DynTable.OpUpsert, DynTable.OpDelete)
+    val files = Seq(
+      Seq(Row(1L, 10L, up, 1.0, "a"), Row(1L, 20L, null, 2.0, "b"),
+        Row(2L, 30L, up, 3.0, "c"), Row(2L, 30L, del, null, null),
+        Row(3L, 5L, del, null, null), Row(3L, 6L, up, 4.0, "d"),
+        Row(4L, Long.MinValue, up, 5.0, "e"),
+        Row(5L, 7L, up, 6.0, null), Row(5L, 8L, del, null, null),
+        Row(6L, 11L, up, 8.0, "g"),
+        Row(7L, null, up, 0.5, "n"),
+        Row(8L, 13L, "other", 1.0, "o"), Row(8L, 3L, up, 1.5, "z"),
+        Row(null, 12L, up, 9.0, "h")),
+      Seq(Row(5L, 9L, up, 7.0, "f"), Row(6L, 11L, del, null, null)),
+      Seq(Row(1L, 25L, null, null, null), Row(9L, 40L, up, 2.5, "i")))
+    val edgeDir = Files.createTempDirectory("graft-held-edges").toString + "/log"
+    files.foreach(rs => spark.createDataFrame(rs.asJava, schema).coalesce(1)
+      .write.mode("append").parquet(edgeDir))
+    val edgeClient = () => spark.createDataFrame(files.flatten.asJava, schema)
+
+    val cases = logs.flatMap { l =>
+      Seq((s"${l.name}/stored", l.keys, () => l.stored), (s"${l.name}/client", l.keys, () => l.client))
+    } ++ Seq(("edges/stored", Seq("k"), () => spark.read.parquet(edgeDir)),
+      ("edges/client", Seq("k"), edgeClient))
+    for ((tag, keys, log) <- cases) {
+      same(s"$tag compact", () => DynTable.compact(log(), keys))
+      val built = log()
+      assert(Jobs.count(spark)(sorted(DynTable.compact(built, keys))) == 0, s"$tag: a held compaction ran a job")
+    }
+    val compacted = sorted(DynTable.compact(spark.read.parquet(edgeDir), Seq("k")))
+    assert(compacted == Seq("[1,10,upsert,1.0,a]", "[3,6,upsert,4.0,d]", "[5,9,upsert,7.0,f]",
+      "[8,3,upsert,1.5,z]", "[9,40,upsert,2.5,i]", "[null,12,upsert,9.0,h]"), compacted)
+  }
+
   /** Optimizer runs while `body` runs, counted by a pass-through rule
     * added to the session's extra optimizations. */
   private def optimizerRuns(body: => Any): Int = {

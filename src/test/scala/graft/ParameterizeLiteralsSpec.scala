@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectEx
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.DynTable
+import graft.sources.Tables
 
 /** Request constants do not mint generated classes: DynTable reads and
   * commits that differ only in key or timestamp constants reuse the
@@ -92,6 +93,30 @@ class ParameterizeLiteralsSpec extends SparkSpec {
     assert(rangeAsOf(21L, 333L).collect().map(_.getLong(0)).toSet == Set(21L, 22L, 23L, 24L, 25L))
     assert(commit(33L, 600L, 601L).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
       Seq((33L, 601L)))
+  }
+
+  test("held: consecutive commits written to a 15k-version log compile no class " +
+      "after the first") {
+    // dyn_rw's log and write: the commit's `where(ts === commitTs)` is
+    // pushed onto the held rows and the staged rows
+    val base = Files.createTempDirectory("graft-param-commit").toString
+    (1L to 15000L).map(i => (i % 1500, i, if (i % 17 == 0) "delete" else "upsert", i * 1.5, s"s${i % 3}"))
+      .toDF("k", "ts", "op", "v", "s").coalesce(1).write.parquet(Tables.path(base, "log"))
+    val perCommit = (1L to 8L).map { i =>
+      val commitTs = 15000L + i
+      compiles {
+        val staged = Seq((i * 7, "upsert", i * 1.0, "c"), (i * 11 + 3000, "delete", 0.0, "d"))
+          .toDF("k", "op", "v", "s")
+        DynTable.commitTransaction(Tables.load(spark, base, "log"), staged, Seq("k"),
+          lit(commitTs - 1), lit(commitTs)).where(col("ts") === commitTs)
+          .coalesce(1).write.mode("append").parquet(Tables.path(base, "log"))
+      }
+    }
+    assert(perCommit.tail.forall(_ == 0), s"compiles per commit: $perCommit")
+    val written = spark.read.parquet(Tables.path(base, "log")).where(col("ts") > 15000L)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    assert(written == (1L to 8L).flatMap(i =>
+      Seq((i * 7, 15000L + i, "upsert"), (i * 11 + 3000, 15000L + i, "delete"))).toSet)
   }
 
   test("the scan's pushed filters keep the key equality and the range bounds") {

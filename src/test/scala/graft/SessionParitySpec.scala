@@ -1,0 +1,55 @@
+package graft
+
+import java.io.File
+import java.nio.file.Files
+
+import org.apache.spark.sql.graft.SessionRules
+
+/** One session posture: every main builds its session through
+  * `GraftSession.get`, and the specs' session runs every rule that
+  * `get` gives a session (the extensions' and `installRules`'), so the
+  * specs check the rule set the oracle gate and the bench run. */
+class SessionParitySpec extends SparkSpec {
+
+  /** `ScaleUp` writes perfbench's batch_relaid corpus with its own
+    * session: changing it changes the benchmark's data. */
+  private val ownSession = Set("ScaleUp.scala")
+
+  private def sources(dir: File): Seq[File] =
+    Option(dir.listFiles()).toSeq.flatten.flatMap(f =>
+      if (f.isDirectory) sources(f) else Seq(f).filter(_.getName.endsWith(".scala")))
+
+  test("every main under src/main builds its session through GraftSession.get") {
+    val mains = sources(new File("src/main/scala"))
+      .map(f => f -> new String(Files.readAllBytes(f.toPath), "UTF-8"))
+      .filter { case (_, src) => src.contains("def main(") }
+    assert(mains.map(_._1.getName).toSet.contains("Verify.scala"), mains.map(_._1))
+    assert(ownSession.subsetOf(mains.map(_._1.getName).toSet), "an exception that is no main")
+    for ((f, src) <- mains if !ownSession(f.getName)) {
+      assert(src.contains("GraftSession.get("), s"$f builds no session through GraftSession.get")
+      Seq("SparkSession.builder", "GraftSession.builder(", ".getOrCreate(").foreach { bypass =>
+        assert(!src.contains(bypass), s"$f builds a session with $bypass")
+      }
+    }
+  }
+
+  test("the specs' session carries every rule GraftSession.extensions injects") {
+    val injected = SessionRules.injectedBy(spark, GraftSession.extensions)
+    Seq(graft.plans.ParameterizeLiterals, graft.plans.ParameterizeLocalFilters,
+        graft.plans.ParameterizePushedLocalFilters).foreach { r =>
+      assert(injected.contains(r.getClass.getName), r)
+    }
+    val missing = injected -- SessionRules.of(spark)
+    assert(missing.isEmpty, s"rules the specs' session does not run: $missing")
+  }
+
+  test("the specs' session carries every rule installRules adds") {
+    val fresh = spark.newSession()
+    val before = SessionRules.of(fresh)
+    GraftSession.installRules(fresh)
+    val added = SessionRules.of(fresh) -- before
+    assert(added.nonEmpty)
+    val missing = added -- SessionRules.of(spark)
+    assert(missing.isEmpty, s"rules the specs' session does not run: $missing")
+  }
+}
