@@ -25,12 +25,14 @@ object GraftSession {
 
   /** The engine's session extensions, shared by every session the engine
     * and its specs build: the physical rule that keeps request constants
-    * out of generated code, and its analysis-time and optimizer-time
-    * parts for filters over local rows. */
+    * out of generated code, its analysis-time and optimizer-time parts
+    * for filters over local rows, and the planner strategy that writes
+    * rows already on the driver without a job. */
   val extensions: SparkSessionExtensions => Unit = { e =>
     e.injectQueryStagePrepRule(_ => graft.plans.ParameterizeLiterals)
     e.injectPostHocResolutionRule(_ => graft.plans.ParameterizeLocalFilters)
     e.injectPreCBORule(_ => graft.plans.ParameterizePushedLocalFilters)
+    e.injectPlannerStrategy(_ => org.apache.spark.sql.graft.LocalWrite)
   }
 
   /** AQE's target shuffle partition size, which [[tuneShuffleFor]] also

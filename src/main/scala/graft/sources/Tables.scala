@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.catalyst.expressions.{Attribute, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
@@ -355,19 +355,13 @@ object Tables {
     }
   }
 
-  /** Rows of a client-sized frame: its optimized plan is a LocalRelation
-    * or a Union of them (ConvertToLocalRelation folds projections and
-    * filters over local rows). None for any other plan, and when holding
-    * is off. */
+  /** Rows of a client-sized frame: its optimized plan is local rows
+    * ([[graft.plans.LocalRows]]). None for any other plan, and when
+    * holding is off. */
   private[graft] def localRows(df: DataFrame): Option[Seq[InternalRow]] =
     if (S.broadcastThreshold(df.sparkSession) < 0 || df.isStreaming ||
         !df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
-    else df.queryExecution.optimizedPlan match {
-      case l: LocalRelation => Some(l.data)
-      case u: Union if u.children.forall(_.isInstanceOf[LocalRelation]) =>
-        Some(u.children.flatMap(_.asInstanceOf[LocalRelation].data))
-      case _ => None
-    }
+    else graft.plans.LocalRows.unapply(df.queryExecution.optimizedPlan)
 
   private def localFrame(spark: SparkSession, output: Seq[Attribute],
       rows: Seq[InternalRow]): DataFrame =

@@ -325,6 +325,51 @@ class HeldTabletsSpec extends SparkSpec {
     assert(after == Seq(listed) && (after.head & before).isEmpty, after)
   }
 
+  test("held round trip: commits written with coalesce(1) append and the reads after " +
+      "them run no job, equal the distributed arbiter, and the index holds the written files") {
+    val l = logs.head
+    val staged = StructType(Seq(StructField("k", LongType), StructField("op", StringType),
+      StructField("v", DoubleType), StructField("s", StringType)))
+    val rnd = new Random(21)
+    // a transaction writes each key once
+    val commits = (1 to 8).map { _ =>
+      rnd.shuffle((-5L to 40L).toVector).take(1 + rnd.nextInt(4)).map(k => Row(k,
+        if (rnd.nextInt(5) == 0) DynTable.OpDelete else DynTable.OpUpsert, rnd.nextInt(100) / 4.0, "c"))
+    }
+    /** dyn_rw's commit and reads against a copy of the log; the reads
+      * after each commit and the log's rows at the end. */
+    def roundTrip(): (Int, Seq[Seq[String]], Seq[String], String) = {
+      val base = Files.createTempDirectory("graft-held-round-trip").toString
+      l.client.coalesce(1).write.parquet(Tables.path(base, "log"))
+      def log: DataFrame = Tables.load(spark, base, "log")
+      log.collect()
+      val reads = Seq.newBuilder[Seq[String]]
+      val jobs = Jobs.count(spark) {
+        commits.zipWithIndex.foreach { case (rows, i) =>
+          val commitTs = l.maxTs + 1 + i
+          DynTable.commitTransaction(log, spark.createDataFrame(rows.asJava, staged), l.keys,
+            lit(commitTs - 1), lit(commitTs)).where(col("ts") === commitTs)
+            .coalesce(1).write.mode("append").parquet(Tables.path(base, "log"))
+          reads += sorted(DynTable.lookup(log, l.keys, rows.map(r => Seq(r.getLong(0))) :+ Seq(3L)))
+          reads += sorted(DynTable.readLatest(log, l.keys))
+          reads += sorted(DynTable.readAsOf(log, l.keys, lit(commitTs - 1)))
+        }
+      }
+      (jobs, reads.result(), sorted(spark.read.parquet(Tables.path(base, "log"))),
+        Tables.path(base, "log"))
+    }
+    val (jobs, reads, rows, dir) = roundTrip()
+    assert(jobs == 0, "the commits' writes and reads ran jobs")
+    val (_, dReads, dRows, _) = distributed(roundTrip())
+    assert(reads == dReads)
+    assert(rows == dRows)
+    assert(rows.size == l.rows.size + commits.map(_.size).sum)
+    val written = new File(dir).listFiles().map(_.getName)
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSet
+    assert(written.size == 1 + commits.size)
+    assert(files(Tables.indexedFiles(spark), dir) == Seq(written))
+  }
+
   test("consumer registry and producer table reads run no job, nulls included") {
     var reg = DynTable.emptyConsumerRegistry(spark)
     reg = DynTable.advanceConsumer(reg, "c1", 1L, 2L, ts = 10L)

@@ -6,9 +6,10 @@ import java.nio.file.Files
 import org.apache.spark.sql.graft.SessionRules
 
 /** One session posture: every main builds its session through
-  * `GraftSession.get`, and the specs' session runs every rule that
-  * `get` gives a session (the extensions' and `installRules`'), so the
-  * specs check the rule set the oracle gate and the bench run. */
+  * `GraftSession.get`, and the specs' session runs every rule and
+  * planner strategy that `get` gives a session (the extensions' and
+  * `installRules`'), so the specs check the rule set the oracle gate and
+  * the bench run. */
 class SessionParitySpec extends SparkSpec {
 
   /** `ScaleUp` writes perfbench's batch_relaid corpus with its own
@@ -36,7 +37,7 @@ class SessionParitySpec extends SparkSpec {
   test("the specs' session carries every rule GraftSession.extensions injects") {
     val injected = SessionRules.injectedBy(spark, GraftSession.extensions)
     Seq(graft.plans.ParameterizeLiterals, graft.plans.ParameterizeLocalFilters,
-        graft.plans.ParameterizePushedLocalFilters).foreach { r =>
+        graft.plans.ParameterizePushedLocalFilters, org.apache.spark.sql.graft.LocalWrite).foreach { r =>
       assert(injected.contains(r.getClass.getName), r)
     }
     val missing = injected -- SessionRules.of(spark)
