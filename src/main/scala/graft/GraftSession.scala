@@ -23,14 +23,26 @@ object GraftSession {
     * per-run classes; a full cache costs about 110 MB of heap. */
   val CodegenCacheEntries = 4096
 
+  /** Confs fixed when the session's context starts, which `builder` and
+    * the specs' session both apply: the generated-class cache's size and
+    * the engine's `file:` file system ([[graft.sources.LocalFs]], which
+    * sets permissions without forking `chmod`). */
+  val StaticConfs: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.hadoop.fs.file.impl" -> classOf[graft.sources.LocalFs].getName)
+
   /** The engine's session extensions, shared by every session the engine
     * and its specs build: the physical rule that keeps request constants
     * out of generated code, its analysis-time and optimizer-time parts
-    * for filters over local rows, and the planner strategy that writes
-    * rows already on the driver without a job. */
+    * for filters over local rows, the held-log leaf's rules (a `ts`
+    * filter no held row passes prunes the leaf; a surviving leaf becomes
+    * local rows before the filter binding), and the planner strategy that
+    * writes rows already on the driver without a job. */
   val extensions: SparkSessionExtensions => Unit = { e =>
     e.injectQueryStagePrepRule(_ => graft.plans.ParameterizeLiterals)
     e.injectPostHocResolutionRule(_ => graft.plans.ParameterizeLocalFilters)
+    e.injectOptimizerRule(_ => graft.plans.PruneHeldTs)
+    e.injectPreCBORule(_ => graft.plans.HeldToLocal)
     e.injectPreCBORule(_ => graft.plans.ParameterizePushedLocalFilters)
     e.injectPlannerStrategy(_ => org.apache.spark.sql.graft.LocalWrite)
   }
@@ -77,7 +89,7 @@ object GraftSession {
       .config("spark.sql.sources.fileCompressionFactor", "4.0")
       .config("spark.sql.warehouse.dir",
         sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", "/tmp/graft-warehouse"))
-      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config(StaticConfs)
       .withExtensions(extensions)
   }
 

@@ -364,10 +364,19 @@ object DynTable {
     * (keys, `ts`, `op`, values), and a `where(ts === commitTs)` the
     * optimizer pushes onto them and onto the staged rows binds its
     * timestamp (`plans.ParameterizePushedLocalFilters`), so a held
-    * commit compiles no class after the first and projects no held row.
+    * commit compiles no class after the first and projects no held row;
+    * that filter prunes the held rows without reading one
+    * (`plans.PruneHeldTs`), so the written plan is the staged rows alone.
+    *
+    * A key staged twice as full writes commits its last write, as a
+    * tablet's write buffer keeps the last row per key ([[lastPerKey]]).
+    * Partial writes (a `written` mask) and aggregate deltas (an `agg`
+    * column) all commit: the reads merge them per column and fold the
+    * deltas, so keeping one of them would drop the others' columns.
     */
   def commitTransaction(log: DataFrame, staged: DataFrame, keys: Seq[String],
       startTs: Column, commitTs: Column): DataFrame = {
+    val stagedRows = Tables.localRows(staged)
     val valueCols = log.columns
       .filterNot(c => keys.contains(c) || c == "ts" || c == "op" || c == "written").toSeq
     // column-granular locks (sorted-dynamic-tables.md locking: writes
@@ -384,18 +393,20 @@ object DynTable {
     // non-delta write. Flagged by the log model's `agg` column.
     val hasLogAgg = log.columns.contains("agg")
     val hasStagedAgg = staged.columns.contains("agg")
+    val writes = if (hasStagedMask || hasStagedAgg) staged else lastPerKey(staged, stagedRows, keys)
     val stagedSel = keys.map(col) ++
       (if (hasStagedMask) Seq(col("written").as("__sw")) else Nil) ++
       (if (hasStagedAgg) Seq(col("agg").as("__sa")) else Nil)
+    // every staged row takes its locks, a key's earlier writes included
     val stagedKeys = staged.select(stagedSel: _*)
     // the commit unions onto the held frame, so its write is its only job
     val held = if (hasLogMask || hasLogAgg) None else Tables.held(log)
     val base = held.map(_.frame).getOrElse(log)
     def recent = base.where(col("ts") > startTs && col("ts") <= commitTs)
     val heldConflicts: Option[Long] = held.flatMap { h =>
-      Tables.localRows(staged.select(keys.map(col): _*)).flatMap { ks =>
-        val types = keys.map(staged.schema(_).dataType)
-        val literals = ks.map(r => types.indices.map(i => Literal(r.get(i, types(i)), types(i))))
+      stagedRows.flatMap { rows =>
+        val fields = keys.map(staged.schema.fieldIndex).map(i => i -> staged.schema(i).dataType)
+        val literals = rows.map(r => fields.map { case (i, dt) => Literal(r.get(i, dt), dt) })
         val probed = for {
           ix <- h.index(keys)
           after <- literalAs(S.convert(startTs), ix.tsType)
@@ -424,7 +435,7 @@ object DynTable {
     val nConflicts = heldConflicts.map(lit).getOrElse(
       recent.join(broadcast(stagedKeys), keys)
         .where(!(maskDisjoint || bothDeltas)).agg(count(lit(1))).scalar())
-    val checked = staged
+    val checked = writes
       .filter(when(nConflicts > 0,
         raise_error(lit("Row lock conflict due to concurrent write"))
           .cast("boolean")).otherwise(lit(true)))
@@ -451,6 +462,26 @@ object DynTable {
       else base.select((lead.map(col) ++ logMask ++ valueCols.map(col)): _*)
     logSide.unionByName(appended)
   }
+
+  /** `staged` with only the last row written for each key (keys grouped
+    * as `groupBy` groups them): client-sized rows (`stagedRows`) in their
+    * row order, on the driver, and `staged` itself when no key repeats;
+    * any other frame in `monotonically_increasing_id` order, through a
+    * window per key (one shuffle). That order is the frame's partition
+    * order, which a frame with no defined row order (a multi-file scan,
+    * whose splits Spark packs largest first) does not tie to its files,
+    * so which of a key's writes is last is then undefined. */
+  private def lastPerKey(staged: DataFrame, stagedRows: Option[Seq[InternalRow]],
+      keys: Seq[String]): DataFrame =
+    stagedRows.flatMap(rows =>
+      KeyIndex.lastPerKey(staged.schema, keys, rows).map(kept =>
+        if (kept.size == rows.size) staged else local(staged, staged.schema, kept)))
+      .getOrElse {
+        val (seq, last) = ("__seq", "__last")
+        staged.withColumn(seq, monotonically_increasing_id())
+          .withColumn(last, max(col(seq)).over(Window.partitionBy(keys.map(col): _*)))
+          .where(col(seq) === col(last)).drop(seq, last)
+      }
 
   /** Version-retention compaction (sorted-dynamic-tables.md:97-118:
     * min_data_versions / max_data_versions / min_data_ttl /

@@ -105,8 +105,9 @@ object ParameterizeLocalFilters extends Rule[LogicalPlan] {
   * `LocalRelation` batch): binds the operands of a filter that predicate
   * pushdown moved directly over local rows after analysis, as
   * [[ParameterizeLocalFilters]] binds one written there. A filter over a
-  * union of local rows, such as a held commit's
-  * `.where(ts === commitTs)`, reaches each branch only after constant
+  * union of local rows, or over a held log ([[HeldRelation]], which
+  * [[HeldToLocal]] turns into local rows just before this rule) that its
+  * `ts` range does not prune, reaches each branch only after constant
   * folding, so without this part ConvertToLocalRelation compiles one
   * predicate class per branch and per value.
   */

@@ -30,7 +30,8 @@ private[graft] final class KeyIndex private (
     layout: KeyIndex.Layout,
     versions: Map[Seq[Any], Array[InternalRow]],
     live: Map[Seq[Any], InternalRow]) {
-  import layout.{group, isDelete, isLive, normalize, project, ts, tsIdx, tsOrder, keyOf}
+  import layout.{isDelete, isLive, project, ts, tsIdx, tsOrder, keyOf}
+  import KeyIndex.{group, normalize}
 
   /** The output schema: keys as in the log, values nullable (the schema
     * of the distributed merge). */
@@ -186,21 +187,35 @@ private[graft] object KeyIndex {
     def project(r: InternalRow): InternalRow = new GenericInternalRow((keyOf(r) ++ values(r)).toArray)
     def compacted(r: InternalRow): InternalRow =
       new GenericInternalRow((keyOf(r) ++ Seq(ts(r), liveOp) ++ values(r)).toArray)
+  }
 
-    /** -0.0 as 0.0 and one NaN, as `groupBy` normalizes floats. */
-    def normalize(v: Any): Any = v match {
-      case d: Double => if (d.isNaN) Double.NaN else if (d == 0.0d) 0.0d else d
-      case f: Float => if (f.isNaN) Float.NaN else if (f == 0.0f) 0.0f else f
-      case v => v
-    }
+  /** -0.0 as 0.0 and one NaN, as `groupBy` normalizes floats. */
+  private def normalize(v: Any): Any = v match {
+    case d: Double => if (d.isNaN) Double.NaN else if (d == 0.0d) 0.0d else d
+    case f: Float => if (f.isNaN) Float.NaN else if (f == 0.0f) 0.0f else f
+    case v => v
+  }
 
-    /** The grouping form of a normalized key: a float by its bits (so NaN
-      * equals NaN), a binary key by its content. */
-    def group(key: Seq[Any]): Seq[Any] = key.map {
-      case d: Double => java.lang.Double.doubleToLongBits(d)
-      case f: Float => java.lang.Float.floatToIntBits(f)
-      case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
-      case v => v
+  /** The grouping form of a normalized key: a float by its bits (so NaN
+    * equals NaN), a binary key by its content. */
+  private def group(key: Seq[Any]): Seq[Any] = key.map {
+    case d: Double => java.lang.Double.doubleToLongBits(d)
+    case f: Float => java.lang.Float.floatToIntBits(f)
+    case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
+    case v => v
+  }
+
+  /** `rows` (of `schema`) with only the last row of each key in `keys`,
+    * keys grouped as `groupBy` groups them, in row order; None for a key
+    * type this grouping does not cover. */
+  def lastPerKey(schema: StructType, keys: Seq[String], rows: Seq[InternalRow]): Option[Seq[InternalRow]] = {
+    val idx = keys.map(schema.fieldIndex)
+    if (!idx.forall(i => groupable(schema(i).dataType))) None
+    else {
+      def key(r: InternalRow): Seq[Any] = group(idx.map(i =>
+        if (r.isNullAt(i)) null else normalize(r.get(i, schema(i).dataType))))
+      val last = rows.zipWithIndex.map { case (r, i) => key(r) -> i }.toMap
+      Some(rows.zipWithIndex.collect { case (r, i) if last(key(r)) == i => r })
     }
   }
 }

@@ -18,6 +18,8 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.graft.{shims => S}
 import org.apache.spark.sql.types.StructType
 
+import graft.plans.HeldRelation
+
 /** Table catalog over a testdata scale-factor directory.
   *
   * The reference addresses tables by Cypress path (`//path/to/table`,
@@ -296,7 +298,11 @@ object Tables {
     private val built = new java.util.concurrent.ConcurrentHashMap[Seq[String], Option[KeyIndex]](
       carried.asJava)
 
-    def all: Seq[InternalRow] = files.flatMap(rows(_))
+    /** The held rows as one array, in listing order, for the plan leaf. */
+    lazy val all: Array[InternalRow] = files.iterator.flatMap(rows(_)).toArray
+
+    /** The range of the held rows' `ts`, once per listing. */
+    lazy val ts: Option[HeldRelation.TsRange] = HeldRelation.tsRange(schema, all)
 
     def indexes: Seq[KeyIndex] = built.values.asScala.flatten.toSeq
 
@@ -318,10 +324,11 @@ object Tables {
     }
   }
 
-  /** A driver-held log: `frame` plans as a LocalRelation over its rows,
-    * and `index` gives its key index by the given key columns (None for
-    * a key type the index does not group). A stored table's indexes are kept with
-    * its rows; a client-sized frame's are built per call. */
+  /** A driver-held log: `frame` plans over its rows, and `index` gives
+    * its key index by the given key columns (None for a key type the
+    * index does not group). A stored table's frame is a [[HeldRelation]]
+    * leaf and its indexes are kept with its rows; a client-sized frame is
+    * a LocalRelation and its indexes are built per call. */
   private[graft] final class HeldLog(frameOf: => DataFrame,
       indexOf: Seq[String] => Option[KeyIndex]) {
     lazy val frame: DataFrame = frameOf
@@ -344,7 +351,8 @@ object Tables {
         if (r.partitionSchema.nonEmpty || l.stats.sizeInBytes > S.broadcastThreshold(spark)) None
         else {
           val h = heldStore(spark, r)
-          Some(new HeldLog(localFrame(spark, l.output, h.all), h.index))
+          Some(new HeldLog(S.ofRows(spark, HeldRelation(l.output.map(_.newInstance()), h.all, h.ts)),
+            h.index))
         }
       case None =>
         localRows(df).map { rows =>
@@ -355,12 +363,15 @@ object Tables {
     }
   }
 
-  /** Rows of a client-sized frame: its optimized plan is local rows
-    * ([[graft.plans.LocalRows]]). None for any other plan, and when
-    * holding is off. */
+  /** Rows of a client-sized frame: a plan over local or held rows
+    * whose optimized plan is local rows ([[graft.plans.LocalRows]]). None
+    * for any other plan, and when holding is off. */
   private[graft] def localRows(df: DataFrame): Option[Seq[InternalRow]] =
     if (S.broadcastThreshold(df.sparkSession) < 0 || df.isStreaming ||
-        !df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
+        !df.queryExecution.analyzed.collectLeaves().forall {
+          case _: LocalRelation | _: HeldRelation => true
+          case _ => false
+        }) None
     else graft.plans.LocalRows.unapply(df.queryExecution.optimizedPlan)
 
   private def localFrame(spark: SparkSession, output: Seq[Attribute],

@@ -641,6 +641,39 @@ class DynTableSpec extends SparkSpec {
     assert(messages(ex).exists(_.contains("Row lock conflict")))
   }
 
+  test("commitTransaction: one transaction's disjoint partial writes of a key and its " +
+      "aggregate deltas to a key all commit, over held rows and at threshold -1") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    // each result over local rows (held) and with holding off
+    def heldAndDistributed[T](body: => T): Seq[T] = {
+      val prev = spark.conf.get(threshold)
+      Seq(prev, "-1").map { v =>
+        spark.conf.set(threshold, v)
+        try body finally spark.conf.set(threshold, prev)
+      }
+    }
+    // a full write at ts=10, then one transaction writing v1, then v2, of key 1
+    val log = Seq((1L, 10L, "upsert", Some(1.0), Some(10.0))).toDF("k", "ts", "op", "v1", "v2")
+    val partial = Seq(
+      (1L, "upsert", Seq("v1"), Some(5.0), Option.empty[Double]),
+      (1L, "upsert", Seq("v2"), Option.empty[Double], Some(50.0))
+    ).toDF("k", "op", "written", "v1", "v2")
+    val merged = heldAndDistributed(DynTable.readLatestColumns(
+      DynTable.commitTransaction(log, partial, Seq("k"), lit(12L), lit(20L)), Seq("k"))
+      .select("k", "v1", "v2").as[(Long, Double, Double)].collect().toSeq)
+    assert(merged == Seq.fill(2)(Seq((1L, 5.0, 50.0))))
+    // two deltas of key 1 in one transaction both fold into the sum
+    val aggLog = Seq((1L, 10L, "upsert", true, Some(10L))).toDF("k", "ts", "op", "agg", "v")
+    val deltas = Seq((1L, "upsert", true, Some(3L)), (1L, "upsert", true, Some(4L)))
+      .toDF("k", "op", "agg", "v")
+    val sums = heldAndDistributed(DynTable.readWithAggregates(
+      DynTable.commitTransaction(aggLog, deltas, Seq("k"), lit(12L), lit(20L)), Seq("k"),
+      Map("v" -> "sum")).select("v").as[Long].collect().toSeq)
+    assert(sums == Seq.fill(2)(Seq(17L)))
+  }
+
   test("lookupKeepMissing: one row per requested key IN REQUEST ORDER, " +
       "nulls for absent and tombstoned keys") {
     import org.apache.spark.sql.functions._

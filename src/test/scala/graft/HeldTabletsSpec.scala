@@ -15,6 +15,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.DynTable
+import graft.plans.{HeldRelation, HeldToLocal, LocalRows, PruneHeldTs}
 import graft.sources.Tables
 
 /** Held tablets: DynTable's latest-wins verbs and commit check over a log
@@ -256,6 +257,134 @@ class HeldTabletsSpec extends SparkSpec {
     }
   }
 
+  test("a key staged twice commits its last write, held and distributed, from local " +
+      "rows and from a frame that is not local") {
+    for (l <- logs; (form, log) <- Seq("stored" -> (() => l.stored), "client" -> (() => l.client))) {
+      val tag = s"${l.name}/$form"
+      // -0.0 and 0.0 are one key, as groupBy groups them
+      val (k1, k1Again, k2) = l.name match {
+        case "double" => (Seq(-0.0), Seq(0.0), Seq(Double.NaN))
+        case _ =>
+          val ks = l.rows.map(l.keyOf).filter(_.forall(_ != null)).distinct
+          (ks(0), ks(0), ks(1))
+      }
+      val (up, del) = (DynTable.OpUpsert, DynTable.OpDelete)
+      val rows = Seq(k1 ++ Seq(up, 1.0, "a"), k2 ++ Seq(up, 2.0, "b"), k1Again ++ Seq(del, null, null),
+        k1Again ++ Seq(up, 3.0, "c"), k2 ++ Seq(del, null, null)).map(Row.fromSeq)
+      val stagedSchema = StructType(l.keys.map(l.schema(_)) ++ Seq(StructField("op", StringType),
+        StructField("v", DoubleType), StructField("s", StringType)))
+      val localStaged = () => spark.createDataFrame(rows.asJava, stagedSchema)
+      val stagedDir = Files.createTempDirectory("graft-held-staged").toString + "/staged"
+      distributed(localStaged().coalesce(1).write.parquet(stagedDir))
+      val commitTs = l.maxTs + 1
+      val expected = Seq(k1Again ++ Seq(commitTs, up, 3.0, "c"), k2 ++ Seq(commitTs, del, null, null))
+        .map(r => Row.fromSeq(r).toString).sorted
+      for ((stagedForm, staged) <- Seq("local" -> localStaged, "parquet" -> (() => spark.read.parquet(stagedDir)))) {
+        val commit = () => DynTable.commitTransaction(log(), staged(), l.keys, lit(l.maxTs), lit(commitTs))
+          .where(col("ts") === commitTs)
+        assert(sorted(commit()) == expected, s"$tag, $stagedForm staged rows")
+        assert(distributed(sorted(commit())) == expected, s"$tag, $stagedForm staged rows, distributed")
+      }
+    }
+  }
+
+  /** Runs of `rule` that changed the plan while `df` was optimized. */
+  private def effective(df: DataFrame, rule: Rule[LogicalPlan]): Long = {
+    df.queryExecution.optimizedPlan
+    df.queryExecution.tracker.rules.get(rule.ruleName).fold(0L)(_.numEffectiveInvocations)
+  }
+
+  /** `df`'s rows, after checking that no held leaf reaches its optimized
+    * or physical plan. */
+  private def planned(df: DataFrame): Seq[String] = {
+    assert(df.queryExecution.optimizedPlan.find(_.isInstanceOf[HeldRelation]).isEmpty, "a held leaf was planned")
+    assert(df.queryExecution.executedPlan != null)
+    sorted(df)
+  }
+
+  test("a held commit's where(ts === commitTs) optimizes to exactly its staged rows: " +
+      "the held branch is pruned before any pass copies a held row") {
+    for (l <- logs) {
+      val staged = spark.createDataFrame(
+        l.rows.map(l.keyOf).filter(_.forall(_ != null)).distinct.take(3)
+          .map(k => Row.fromSeq(k ++ Seq(DynTable.OpUpsert, 0.25, "w"))).asJava,
+        StructType(l.keys.map(l.schema(_)) ++ Seq(StructField("op", StringType),
+          StructField("v", DoubleType), StructField("s", StringType))))
+      val commitTs = l.maxTs + 1
+      val commit = () => DynTable.commitTransaction(l.stored, staged, l.keys, lit(l.maxTs), lit(commitTs))
+        .where(col("ts") === commitTs)
+      val held = commit()
+      assert(held.queryExecution.analyzed.exists(_.isInstanceOf[HeldRelation]), l.name)
+      assert(LocalRows.unapply(held.queryExecution.optimizedPlan).map(_.size).contains(3), l.name)
+      assert(effective(held, PruneHeldTs) > 0 && effective(held, HeldToLocal) == 0, l.name)
+      assert(planned(held) == distributed(sorted(commit())), l.name)
+    }
+  }
+
+  /** A stored copy of `l`'s log with `ts` replaced by `ts`. */
+  private def withTs(l: Log, name: String, ts: org.apache.spark.sql.Column): DataFrame = {
+    val d = Files.createTempDirectory(s"graft-held-$name").toString + "/log"
+    l.client.withColumn("ts", ts).coalesce(1).write.parquet(d)
+    spark.read.parquet(d)
+  }
+
+  test("a ts filter over a held log equals the parquet read: a bound no ts passes " +
+      "prunes it, the range's min, max and inner values keep rows; null ts values, " +
+      "a log with no ts value and a non-long ts") {
+    val ops: Seq[(String, (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
+        org.apache.spark.sql.Column)] =
+      Seq("=" -> (_ === _), "<" -> (_ < _), "<=" -> (_ <= _), ">" -> (_ > _), ">=" -> (_ >= _))
+    /** Checks every comparison of `ts` with the values at and around
+      * `[lo, hi]`, either way round; `pruned(op, v)` says whether `ts op v`
+      * is refuted by the range. */
+    def check(tag: String, log: DataFrame, lo: Long, hi: Long, pruned: (String, Long) => Boolean): Unit = {
+      val frame = Tables.held(log).get.frame
+      for (v <- Seq(lo - 1, lo, lo + (hi - lo) / 2, hi, hi + 1); (op, f) <- ops;
+           (side, c) <- Seq("ts op v" -> f(col("ts"), lit(v)), "v op ts" -> f(lit(v), col("ts")))) {
+        val what = s"$tag: $side, $op $v"
+        val df = frame.where(c)
+        assert(planned(df) == sorted(log.where(c)), what)
+        val flipped = if (side == "ts op v") op else op.map(Map('<' -> '>', '>' -> '<').withDefault(identity))
+        assert((effective(df, PruneHeldTs) > 0) == pruned(flipped, v), what)
+      }
+    }
+    val l = logs.head
+    assert(l.rows.exists(l.ts(_).isEmpty), "the log has no null ts")
+    check("long ts with nulls", l.stored, l.minTs, l.maxTs, {
+      case ("=", v) => v < l.minTs || v > l.maxTs
+      case ("<", v) => v <= l.minTs
+      case ("<=", v) => v < l.minTs
+      case (">", v) => v >= l.maxTs
+      case (">=", v) => v > l.maxTs
+    })
+    check("no ts value", withTs(l, "null-ts", lit(null).cast(LongType)), l.minTs, l.maxTs, (_, _) => true)
+    val intTs = withTs(l, "int-ts", col("ts").cast(IntegerType))
+    check("int ts", intTs, l.minTs, l.maxTs, (_, _) => false)
+    assert(intTs.where(col("ts") > l.maxTs / 2).count() > 0)
+  }
+
+  test("a held frame's self-union and self-join resolve and equal the parquet read; " +
+      "EXPLAIN prints the leaf's row count and ts range, not its rows") {
+    val l = logs.head
+    val frame = Tables.held(l.stored).get.frame
+    val log = l.stored
+    assert(planned(frame.union(frame)) == sorted(log.union(log)))
+    def selfJoin(d: DataFrame): DataFrame = d.as("a").join(d.as("b"),
+      col("a.k") === col("b.k") && col("a.ts") < col("b.ts")).select(col("a.k"), col("a.ts"), col("b.ts"))
+    assert(planned(selfJoin(frame)) == sorted(selfJoin(log)))
+    assert(sorted(selfJoin(log)).nonEmpty)
+
+    val leaf = frame.queryExecution.analyzed.treeString
+    assert(leaf.linesIterator.size == 1 && leaf.length < 200, leaf)
+    assert(leaf.contains(s"${l.rows.size} held rows, ts [${l.minTs}, ${l.maxTs}]"), leaf)
+    val explained = frame.queryExecution.explainString(org.apache.spark.sql.execution.ExtendedMode)
+    assert(explained.contains(s"${l.rows.size} held rows, ts [${l.minTs}, ${l.maxTs}]"), explained)
+    val noTs = Tables.held(withTs(l, "explain-null-ts", lit(null).cast(LongType))).get.frame
+    assert(noTs.queryExecution.analyzed.treeString.contains(s"${l.rows.size} held rows, no ts"))
+    val intTs = Tables.held(withTs(l, "explain-int-ts", col("ts").cast(IntegerType))).get.frame
+    assert(intTs.queryExecution.analyzed.treeString.trim.endsWith(s"${l.rows.size} held rows"))
+  }
+
   test("the held store reads new files on the driver and keeps only listed files") {
     val l = logs.head
     val schema = l.stored.schema
@@ -331,11 +460,13 @@ class HeldTabletsSpec extends SparkSpec {
     val staged = StructType(Seq(StructField("k", LongType), StructField("op", StringType),
       StructField("v", DoubleType), StructField("s", StringType)))
     val rnd = new Random(21)
-    // a transaction writes each key once
+    // a transaction may write a key more than once: its last write commits
     val commits = (1 to 8).map { _ =>
-      rnd.shuffle((-5L to 40L).toVector).take(1 + rnd.nextInt(4)).map(k => Row(k,
+      Seq.fill(1 + rnd.nextInt(5))(rnd.nextInt(12) - 5L).map(k => Row(k,
         if (rnd.nextInt(5) == 0) DynTable.OpDelete else DynTable.OpUpsert, rnd.nextInt(100) / 4.0, "c"))
     }
+    def distinctKeys(rows: Seq[Row]): Int = rows.map(_.getLong(0)).distinct.size
+    assert(commits.exists(c => distinctKeys(c) < c.size), "no transaction writes a key twice")
     /** dyn_rw's commit and reads against a copy of the log; the reads
       * after each commit and the log's rows at the end. */
     def roundTrip(): (Int, Seq[Seq[String]], Seq[String], String) = {
@@ -363,7 +494,7 @@ class HeldTabletsSpec extends SparkSpec {
     val (_, dReads, dRows, _) = distributed(roundTrip())
     assert(reads == dReads)
     assert(rows == dRows)
-    assert(rows.size == l.rows.size + commits.map(_.size).sum)
+    assert(rows.size == l.rows.size + commits.map(distinctKeys).sum)
     val written = new File(dir).listFiles().map(_.getName)
       .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSet
     assert(written.size == 1 + commits.size)

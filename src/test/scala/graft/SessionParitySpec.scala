@@ -1,9 +1,12 @@
 package graft
 
 import java.io.File
+import java.net.URI
 import java.nio.file.Files
 
-import org.apache.spark.sql.graft.SessionRules
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileSystem
+import org.apache.spark.sql.graft.{shims => S, SessionRules}
 
 /** One session posture: every main builds its session through
   * `GraftSession.get`, and the specs' session runs every rule and
@@ -37,7 +40,8 @@ class SessionParitySpec extends SparkSpec {
   test("the specs' session carries every rule GraftSession.extensions injects") {
     val injected = SessionRules.injectedBy(spark, GraftSession.extensions)
     Seq(graft.plans.ParameterizeLiterals, graft.plans.ParameterizeLocalFilters,
-        graft.plans.ParameterizePushedLocalFilters, org.apache.spark.sql.graft.LocalWrite).foreach { r =>
+        graft.plans.ParameterizePushedLocalFilters, graft.plans.PruneHeldTs, graft.plans.HeldToLocal,
+        org.apache.spark.sql.graft.LocalWrite).foreach { r =>
       assert(injected.contains(r.getClass.getName), r)
     }
     val missing = injected -- SessionRules.of(spark)
@@ -52,5 +56,19 @@ class SessionParitySpec extends SparkSpec {
     assert(added.nonEmpty)
     val missing = added -- SessionRules.of(spark)
     assert(missing.isEmpty, s"rules the specs' session does not run: $missing")
+  }
+
+  test("the specs' session applies GraftSession's static confs and resolves file: to " +
+      "the file system GraftSession.get's session resolves it to") {
+    val engine = SessionRules.confs(GraftSession.builder())
+    GraftSession.StaticConfs.foreach { case (k, v) =>
+      assert(engine.get(k).contains(v), s"GraftSession.builder does not set $k")
+      assert(spark.sparkContext.getConf.getOption(k).contains(v), s"the specs' session does not set $k")
+    }
+    val engineConf = new Configuration()
+    engine.collect { case (k, v) if k.startsWith("spark.hadoop.") => engineConf.set(k.stripPrefix("spark.hadoop."), v) }
+    val specs = FileSystem.get(URI.create("file:///"), S.hadoopConf(spark, Map.empty)).getClass
+    assert(specs == FileSystem.getFileSystemClass("file", engineConf))
+    assert(specs == classOf[graft.sources.LocalFs])
   }
 }

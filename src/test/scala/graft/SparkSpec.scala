@@ -17,8 +17,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      // same codegen cache and session extensions as the engine session
-      .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries.toLong)
+      // same static confs and session extensions as the engine session
+      .config(GraftSession.StaticConfs)
       .withExtensions(GraftSession.extensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")

@@ -8,7 +8,8 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
   * as rules: analyzer resolution and post-hoc resolution rules,
   * optimizer rules of every batch (operator, pre-CBO and the
   * experimental extra optimizations), planner strategies, and AQE's
-  * query-stage, runtime-optimizer and post-planner rules. */
+  * query-stage, runtime-optimizer and post-planner rules; and the confs
+  * a session builder sets. */
 object SessionRules {
   def of(spark: SparkSession): Set[String] = {
     val st = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
@@ -27,6 +28,12 @@ object SessionRules {
       e.buildQueryStagePrepRules(spark) ++ e.buildRuntimeOptimizerRules(spark) ++
       e.buildQueryStageOptimizerRules(spark) ++ e.buildQueryPostPlannerStrategyRules(spark))
   }
+
+  /** The confs a session builder sets (its options are protected; the
+    * accessor is public in byte code). */
+  def confs(builder: SparkSession.Builder): Map[String, String] =
+    classOf[org.apache.spark.sql.SparkSessionBuilder].getMethod("options").invoke(builder)
+      .asInstanceOf[scala.collection.mutable.HashMap[String, String]].toMap
 
   private def names(rules: Seq[AnyRef]): Set[String] = rules.map(_.getClass.getName).toSet
 }
