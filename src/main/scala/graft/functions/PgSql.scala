@@ -15,6 +15,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * positional `$n` parameters, `~ ~* ~~ ~~*` (and `!`-negated) match
   * operators, E'' escape strings, `""` identifiers and `''` doubling.
   *
+  * The translator rewrites only what Spark 4.1's own grammar cannot
+  * parse. `a IS [NOT] DISTINCT FROM b`, `x::type` (once the PG type
+  * name is mapped), `now()`, `cardinality`, and `string_agg` (NULL on
+  * an empty group, `DISTINCT`, running `OVER (ORDER BY ...)`) reach
+  * Spark's parser as written, with its precedence; `strpos` is a
+  * registered builtin ([[YqlSql.registerAll]]).
+  *
   * PG semantics faithfully preserved where Spark's defaults differ:
   * - plain `'a\nb'` literals are RAW (standard_conforming_strings=on):
   *   the translator re-escapes backslashes so Spark sees the same
@@ -26,21 +33,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * first-row-per-group — rewritten to a row_number window, the exact
   * lowering pg_sql.cpp's plan reaches), `ARRAY[...]` literals and
   * 1-based subscripts (out-of-range and index<1 → NULL, as PG),
-  * `IS [NOT] DISTINCT FROM` (→ Spark's null-safe `<=>`),
-  * `string_agg` (NULL on empty group, unlike a bare concat),
   * `array_agg` (NULL elements KEPT, via a struct wrap),
   * `BETWEEN SYMMETRIC`, dollar-quoted strings (`$tag$...$tag$`),
   * `[NOT] SIMILAR TO` with literal patterns (+ ESCAPE),
-  * `unnest(...)` in FROM position incl. WITH ORDINALITY,
-  * `cardinality`/`array_length(a,1)`/`array_to_string`/
-  * `string_to_array`, PG default NULL ordering (NULLS LAST asc /
-  * FIRST desc — the opposite of Spark's) injected into every sort.
+  * `unnest(...)` and `generate_series(...)` in FROM position (the
+  * latter empty when the step points away from the stop, as PG),
+  * `array_length(a,1)`/`array_to_string`/`string_to_array`, PG
+  * default NULL ordering (NULLS LAST asc / FIRST desc — the opposite
+  * of Spark's) injected into every sort.
   *
   * Out-of-subset constructs raise with a named reason (the repo-wide
   * contract for unimplementable/unscoped surface): DML/DDL under PG
   * syntax, array slices `a[i:j]`, select-list set-returning
-  * functions, windowed/ordered string_agg and array_agg, multi-arg
-  * unnest, non-literal SIMILAR TO patterns.
+  * functions, ordered string_agg and array_agg, multi-arg unnest,
+  * non-literal SIMILAR TO patterns.
   */
 object PgSql {
 
@@ -72,7 +78,7 @@ object PgSql {
           "--!syntax_pg — use the v1 dialect (pg_sql.cpp parses the " +
           "full statement surface; the scoped subset is read-side)")
     rewriteOrderNulls(rewriteFunctions(rewriteCasts(rewriteArrays(
-      rewriteIsDistinct(rewriteDistinctOn(rewriteMatchOps(normalized)))))))
+      rewriteDistinctOn(rewriteMatchOps(normalized))))))
   }
 
   /** PG's default null ordering is the OPPOSITE of Spark's: PG sorts
@@ -233,7 +239,7 @@ object PgSql {
       } else if (c == '-' && i + 1 < n && q.charAt(i + 1) == '-') {
         val eol = q.indexOf('\n', i)
         val end = if (eol < 0) n else eol
-        out.append(q, i, end)
+        out.append(q.substring(i, end))
         i = end
       } else { out.append(c); i += 1 }
     }
@@ -482,29 +488,11 @@ object PgSql {
     b.toString
   }
 
-  /** `a IS [NOT] DISTINCT FROM b` → Spark's null-safe `<=>` (negated
-    * for the plain form). Operands extend to the nearest same-depth
-    * boundary (comma, comparison, AND/OR/clause keyword), so
-    * arithmetic and `||` chains stay inside the comparison exactly as
-    * PG's precedence places them. */
-  private def rewriteIsDistinct(sql: String): String = {
-    val masked = YqlScript.maskQuotes(sql)
-    val m = "(?is)\\bIS\\s+(NOT\\s+)?DISTINCT\\s+FROM\\b".r
-      .findFirstMatchIn(masked).getOrElse(return sql)
-    val not = m.group(1) != null
-    val lStart = operandStart(masked, m.start)
-    val rEnd = operandEnd(masked, m.end)
-    val l = sql.substring(lStart, m.start).trim
-    val r = sql.substring(m.end, rEnd).trim
-    if (l.isEmpty || r.isEmpty) throw new IllegalArgumentException(
-      "IS DISTINCT FROM with a missing operand near offset " + m.start)
-    val repl =
-      if (not) s" (($l) <=> ($r)) " else s" (NOT (($l) <=> ($r))) "
-    rewriteIsDistinct(sql.substring(0, lStart) + repl + sql.substring(rEnd))
-  }
-
   /** Keywords that END an operand scan in either direction (anything
-    * at or below comparison precedence, plus clause heads). */
+    * at or below comparison precedence, plus clause heads). `IS`
+    * bounds `x IS NULL`, `DISTINCT` bounds `SELECT DISTINCT`; `CASE`
+    * and `END` stop a scan only when they open or close an ENCLOSING
+    * case expression — a whole `CASE ... END` is one operand. */
   private val operandStopWords: Set[String] = Set(
     "AND", "OR", "NOT", "IS", "IN", "LIKE", "ILIKE", "RLIKE", "BETWEEN",
     "SELECT", "FROM", "WHERE", "GROUP", "HAVING", "WINDOW", "ORDER",
@@ -513,9 +501,38 @@ object PgSql {
     "END", "DISTINCT", "ALL", "ASC", "DESC", "NULLS", "SYMMETRIC",
     "ESCAPE", "OVER", "PARTITION", "VALUES", "WITH", "SET", "RETURNING")
 
+  private val caseOrEnd =
+    "(?i)(?<![A-Za-z0-9_.$])(CASE|END)(?![A-Za-z0-9_.$])".r
+
+  /** Index just past the `END` that closes the `CASE` at `at`. */
+  private def caseEnd(masked: String, at: Int): Int = {
+    var depth = 0
+    caseOrEnd.findAllMatchIn(masked).filter(_.start >= at).foreach { m =>
+      depth += (if (m.group(1).equalsIgnoreCase("CASE")) 1 else -1)
+      if (depth == 0) return m.end
+    }
+    throw new IllegalArgumentException(
+      s"CASE without END near offset $at")
+  }
+
+  /** Start of the `CASE` that the `END` at `at` closes. */
+  private def caseStart(masked: String, at: Int): Int = {
+    var depth = 0
+    caseOrEnd.findAllMatchIn(masked).takeWhile(_.start <= at).toSeq
+      .reverseIterator.foreach { m =>
+        depth += (if (m.group(1).equalsIgnoreCase("END")) 1 else -1)
+        if (depth == 0) return m.start
+      }
+    throw new IllegalArgumentException(
+      s"END without CASE near offset $at")
+  }
+
   /** Backward scan from `end` (exclusive) over one comparison operand:
-    * skips bracketed groups and quoted regions whole; stops at a
-    * same-depth comma, comparison char, opening paren, or stop word. */
+    * skips bracketed groups, quoted regions and `CASE ... END` whole,
+    * and takes a `::type` suffix with its operand (the type pass has
+    * already reduced the name to one Spark word, plus `(p, s)`); stops
+    * at a same-depth comma, comparison char, opening paren, or stop
+    * word. */
   private def operandStart(masked: String, end: Int): Int = {
     var i = end - 1
     var start = end
@@ -537,6 +554,7 @@ object PgSql {
         while (i >= 0 && masked.charAt(i) != c) i -= 1
         start = i; i -= 1
       } else if (c.isWhitespace) { i -= 1 }
+      else if (c == ':' && i > 0 && masked.charAt(i - 1) == ':') { i -= 2 }
       else if (c == ',' || c == '(' || c == '[' ||
           "<>=!".indexOf(c) >= 0) { done = true }
       else if (c.isLetterOrDigit || c == '_' || c == '.' || c == '$') {
@@ -544,11 +562,12 @@ object PgSql {
         while (j >= 0 && (masked.charAt(j).isLetterOrDigit ||
           masked.charAt(j) == '_' || masked.charAt(j) == '.' ||
           masked.charAt(j) == '$')) j -= 1
-        val word = masked.substring(j + 1, i + 1)
-        if (operandStopWords.contains(word.toUpperCase)) done = true
+        val word = masked.substring(j + 1, i + 1).toUpperCase
+        if (word == "END") { start = caseStart(masked, j + 1); i = start - 1 }
+        else if (operandStopWords.contains(word)) done = true
         else { start = j + 1; i = j }
       } else if ("+-*/%|&#^~".indexOf(c) >= 0) {
-        // keep unary +/- with their operand: `-5 IS DISTINCT FROM x`
+        // keep unary +/- with their operand: `-5 = ANY(...)`
         start = i; i -= 1
       } else done = true
     }
@@ -578,6 +597,7 @@ object PgSql {
         while (i < n && masked.charAt(i) != c) i += 1
         i += 1; end = i
       } else if (c.isWhitespace) { i += 1 }
+      else if (c == ':' && i + 1 < n && masked.charAt(i + 1) == ':') { i += 2 }
       else if (c == ',' || c == ')' || c == ']' ||
           "<>=!".indexOf(c) >= 0) { done = true }
       else if (c.isLetterOrDigit || c == '_' || c == '.' || c == '$') {
@@ -585,8 +605,9 @@ object PgSql {
         while (j < n && (masked.charAt(j).isLetterOrDigit ||
           masked.charAt(j) == '_' || masked.charAt(j) == '.' ||
           masked.charAt(j) == '$')) j += 1
-        val word = masked.substring(i, j)
-        if (operandStopWords.contains(word.toUpperCase)) done = true
+        val word = masked.substring(i, j).toUpperCase
+        if (word == "CASE") { i = caseEnd(masked, i); end = i }
+        else if (operandStopWords.contains(word)) done = true
         else { i = j; end = i }
       } else if ("+-*/%|&#^~".indexOf(c) >= 0) { i += 1 }
       else done = true
@@ -738,87 +759,25 @@ object PgSql {
     math.max(j, at + 1)
   }
 
-  /** `expr::type` → `CAST(expr AS sparktype)`, innermost-first (the
-    * rewritten CAST(...) is itself a primary, so chained casts
-    * resolve on the next pass). The operand is the immediately
-    * preceding primary — `::` binds tighter than any operator. */
+  /** `expr::pgtype` → `expr::sparktype`: Spark 4.1 parses `::` itself
+    * (a postfix on a primary, as in PG), so only the type name after
+    * each `::` is rewritten; the operand is left to Spark's parser. */
   private def rewriteCasts(sql: String): String = {
-    val masked = YqlScript.maskQuotes(sql)
-    val at = masked.indexOf("::")
-    if (at < 0) return sql
-    // backward scan over the operand primary
-    var s = at - 1
-    while (s >= 0 && sql.charAt(s).isWhitespace) s -= 1
-    val opEnd = s + 1
-    var start =
-      if (s >= 0 && (masked.charAt(s) == ')' || masked.charAt(s) == ']')) {
-        val close = masked.charAt(s)
-        val open = if (close == ')') '(' else '['
-        var depth = 0
-        var k = s
-        while (k >= 0) {
-          val c = masked.charAt(k)
-          if (c == close) depth += 1
-          else if (c == open) { depth -= 1; if (depth == 0) { s = k; k = -1 } }
-          if (k >= 0) k -= 1
-        }
-        // include a function/CAST name directly before the paren
-        var k2 = s - 1
-        while (k2 >= 0 && (sql.charAt(k2).isLetterOrDigit ||
-          sql.charAt(k2) == '_' || sql.charAt(k2) == '.')) k2 -= 1
-        k2 + 1
-      } else if (s >= 0 && masked.charAt(s) == '\'') {
-        var k = s - 1
-        while (k >= 0 && masked.charAt(k) != '\'') k -= 1
-        k
-      } else if (s >= 0 && masked.charAt(s) == '`') {
-        var k = s - 1
-        while (k >= 0 && masked.charAt(k) != '`') k -= 1
-        k
-      } else {
-        var k = s
-        while (k >= 0 && (sql.charAt(k).isLetterOrDigit ||
-          sql.charAt(k) == '_' || sql.charAt(k) == '.' ||
-          sql.charAt(k) == '$')) k -= 1
-        k + 1
+    val out = new StringBuilder(sql)
+    castType.findAllMatchIn(YqlScript.maskQuotes(sql)).toSeq.reverseIterator
+      .foreach { m =>
+        out.replace(m.start, m.end, "::" + pgType(
+          m.group(1).toLowerCase.split("\\s+").mkString(" "),
+          Option(m.group(2)).getOrElse("")))
       }
-    if (start < 0) start = 0
-    val operand = sql.substring(start, opEnd)
-    if (operand.isEmpty) throw new IllegalArgumentException(
-      s"PG cast '::' with no operand near offset $at")
-    // forward scan over the type name: idents + spaces (double
-    // precision / character varying) + optional (p[,s])
-    var j = at + 2
-    while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
-    val tb = new StringBuilder
-    var done = false
-    while (j < sql.length && !done) {
-      val c = sql.charAt(j)
-      if (c.isLetterOrDigit || c == '_') { tb.append(c); j += 1 }
-      else if (c == ' ' && j + 1 < sql.length &&
-          sql.charAt(j + 1).isLetter &&
-          isTwoWordTypePrefix(tb.toString)) { tb.append(' '); j += 1 }
-      else done = true
-    }
-    var args = ""
-    if (j < sql.length && sql.charAt(j) == '(') {
-      val close = YqlScript.matchParen(sql, j)
-      args = sql.substring(j, close + 1)
-      j = close + 1
-    }
-    val sparkType = pgType(tb.toString.trim, args)
-    rewriteCasts(sql.substring(0, start) +
-      s"CAST($operand AS $sparkType)" + sql.substring(j))
+    out.toString
   }
 
-  private def isTwoWordTypePrefix(t: String): Boolean = {
-    val l = t.toLowerCase
-    l == "double" || l == "character" || l == "timestamp" ||
-      l == "timestamp with" || l == "timestamp without" ||
-      l == "time" || l == "time with" || l == "time without" ||
-      l == "character varying" || l.endsWith(" time") ||
-      l.endsWith(" with") || l.endsWith(" without")
-  }
+  /** `::` and the PG type name after it — one word or a multi-word
+    * name [[pgType]] knows — with its optional `(p[, s])`. */
+  private val castType = ("(?i)::\\s*(double\\s+precision|" +
+    "character\\s+varying|timestamp\\s+with(?:out)?\\s+time\\s+zone|\\w*)" +
+    "(\\([^)]*\\))?").r
 
   /** PG type name → Spark type (pg_sql.cpp resolves through the PG
     * catalog OIDs; this is the scalar subset). */
@@ -846,23 +805,10 @@ object PgSql {
           "timestamp[tz], bytea, json)")
     }
 
-  /** The handful of PG spellings whose Spark builtin differs. */
+  /** The PG spellings whose Spark builtin or grammar differs. */
   private def rewriteFunctions(sql: String): String = {
     var s = sql
-    // strpos(str, sub) → position(sub, str): argument order swaps
-    val masked = YqlScript.maskQuotes(s)
-    "(?i)(?<![A-Za-z0-9_])strpos\\s*\\(".r.findFirstMatchIn(masked)
-      .foreach { m =>
-        val close = YqlScript.matchParen(s, m.end - 1)
-        val args = YqlScript.splitTopLevel(s.substring(m.end, close))
-        require(args.length == 2, "strpos takes (string, substring)")
-        s = rewriteFunctions(s.substring(0, m.start) +
-          s"position(${args(1).trim}, ${args(0).trim})" +
-          s.substring(close + 1))
-      }
-    s = replaceTopLevel(s, "(?i)(?<![A-Za-z0-9_])now\\s*\\(\\s*\\)",
-      "current_timestamp()")
-    s = rewriteStringAgg(s)
+    s = rejectOrderedStringAgg(s)
     s = rewriteArrayAgg(s)
     s = rewriteArrayFns(s)
     s = rewriteSimilarTo(s)
@@ -982,7 +928,6 @@ object PgSql {
   }
 
   /** The PG array toolkit whose Spark spelling differs:
-    * `cardinality` → size (PG: 0 for empty, NULL for NULL — same),
     * `array_length(a, 1)` → nullif(size, 0) (PG: NULL for the empty
     * array, which has no dimensions; dims ≠ 1 raise named),
     * `array_to_string` → array_join (both skip NULL elements; the
@@ -992,8 +937,6 @@ object PgSql {
     * separators raise named). */
   private def rewriteArrayFns(sql: String): String = {
     var s = sql
-    s = replaceTopLevel(s, "(?i)(?<![A-Za-z0-9_])cardinality(?=\\s*\\()",
-      "size")
     s = replaceTopLevel(s,
       "(?i)(?<![A-Za-z0-9_])array_to_string(?=\\s*\\()", "array_join")
     // one match per pass, innermost recursion re-masks the text
@@ -1201,35 +1144,21 @@ object PgSql {
     s
   }
 
-  /** `string_agg(e, sep)` → `array_join(collect_list(e), sep)`,
-    * guarded to NULL when the group has no non-NULL inputs (PG
-    * returns NULL there; a bare join returns ''). `DISTINCT` inside
-    * passes through (collect_list/count both accept it). Aggregate
-    * ORDER BY inside the args and windowed `OVER` use raise named —
-    * collect_list has no deterministic order contract. */
-  private def rewriteStringAgg(sql: String): String = {
+  /** `string_agg` is Spark's own (NULL on an empty group, `DISTINCT`,
+    * running `OVER (ORDER BY ...)`); only PG's in-call ORDER BY has no
+    * Spark spelling and raises named. */
+  private def rejectOrderedStringAgg(sql: String): String = {
     val masked = YqlScript.maskQuotes(sql)
-    val m = "(?i)(?<![A-Za-z0-9_])string_agg\\s*\\(".r
-      .findFirstMatchIn(masked).getOrElse(return sql)
-    val close = YqlScript.matchParen(sql, m.end - 1)
-    val argText = sql.substring(m.end, close)
-    if (YqlScript.maskQuotes(argText)
-        .matches("(?is).*\\bORDER\\s+BY\\b.*"))
-      throw new IllegalArgumentException(
-        "string_agg with an aggregate ORDER BY is not in the bound " +
-          "PG subset — the distributed collect has no order contract")
-    var j = close + 1
-    while (j < masked.length && masked.charAt(j).isWhitespace) j += 1
-    if (masked.regionMatches(true, j, "OVER", 0, 4))
-      throw new IllegalArgumentException(
-        "windowed string_agg(...) OVER is not in the bound PG subset")
-    val args = YqlScript.splitTopLevel(argText).map(_.trim)
-    require(args.length == 2, "string_agg takes (expression, delimiter)")
-    val (e, sep) = (args(0), args(1))
-    rewriteStringAgg(sql.substring(0, m.start) +
-      s"(CASE WHEN count($e) = 0 THEN NULL " +
-      s"ELSE array_join(collect_list($e), $sep) END)" +
-      sql.substring(close + 1))
+    "(?i)(?<![A-Za-z0-9_])string_agg\\s*\\(".r.findAllMatchIn(masked)
+      .foreach { m =>
+        val close = YqlScript.matchParen(masked, m.end - 1)
+        if (masked.substring(m.end, close)
+            .matches("(?is).*\\bORDER\\s+BY\\b.*"))
+          throw new IllegalArgumentException(
+            "string_agg with an aggregate ORDER BY is not in the bound " +
+              "PG subset")
+      }
+    sql
   }
 
   /** `a BETWEEN SYMMETRIC x AND y` → bounds sorted with
@@ -1278,9 +1207,13 @@ object PgSql {
     * generator — becomes a Spark lateral-free subquery
     * `(SELECT explode(sequence(a, b [, step])) AS generate_series)`;
     * a following `AS g(i)` column-alias list is Spark-native and
-    * passes through. Outside table position (select-list SRFs) the
-    * construct raises with a named reason, like the other
-    * out-of-subset PG forms. */
+    * passes through. Spark's `sequence` picks its own direction (and
+    * rejects a step that points away from `b`), so a guard gives PG's
+    * rule: no rows when the step points away from `b`, an error for a
+    * zero step. The step's sign is read as `a + step` against `a`,
+    * which also holds for timestamp bounds with an interval step.
+    * Outside table position (select-list SRFs) the construct raises
+    * with a named reason, like the other out-of-subset PG forms. */
   private def rewriteGenerateSeries(sql: String): String = {
     var s = sql
     var found = true
@@ -1313,8 +1246,18 @@ object PgSql {
           val args = YqlScript.splitTopLevel(s.substring(open + 1, close))
           require(args.length == 2 || args.length == 3,
             "generate_series takes (start, stop [, step])")
+          val Seq(a, b) = args.take(2).map(t => s"(${t.trim})")
+          val series = args.length match {
+            case 2 => s"CASE WHEN $a <= $b THEN sequence($a, $b)"
+            case _ =>
+              val st = s"(${args(2).trim})"
+              s"CASE WHEN $a + $st > $a AND $a <= $b OR " +
+                s"$a + $st < $a AND $a >= $b THEN sequence($a, $b, $st) " +
+                s"WHEN $a + $st = $a THEN " +
+                "raise_error('generate_series step size cannot equal zero')"
+          }
           s = s.substring(0, m.start) +
-            s"(SELECT explode(sequence(${args.map(_.trim).mkString(", ")})) " +
+            s"(SELECT explode($series ELSE array() END) " +
             "AS generate_series)" + s.substring(close + 1)
       }
     }

@@ -1404,6 +1404,16 @@ object YqlSql {
       "murmurhash2a32", "blake2b", "xxh3", "xxh3_128", "argon2",
       "highwayhash").foreach(fn =>
       reg(s"digest_$fn")(es => DigestFnExpr(fn, es)))
+    // PG's strpos(string, substring) (PgSql): Spark's `position` with
+    // the arguments swapped, printed and named as `position`
+    reg("strpos") { es =>
+      require(es.length == 2, "strpos takes (string, substring)")
+      val e = new org.apache.spark.sql.catalyst.expressions.StringLocate(
+        es(1), es(0))
+      e.setTagValue(org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+        .FUNC_ALIAS, "position")
+      e
+    }
 
     // ——— the struct-builtins family (struct.md; StructModule.scala).
     // AddMember/ExpandStruct/RemoveMember(s) ride Spark's own

@@ -473,4 +473,91 @@ class PgSqlSpec extends SparkSpec {
     assert(r.getInt(1) == 2)
     assert(r.getBoolean(2))
   }
+
+  test("IS [NOT] DISTINCT FROM parses natively: boolean, with ::-cast " +
+      "and CASE operands") {
+    val r = one(
+      """--!syntax_pg
+        |SELECT 2 IS DISTINCT FROM 2::int8 AS d,
+        |  2::int8 IS DISTINCT FROM 3 AS e,
+        |  CASE WHEN true THEN 1 END IS DISTINCT FROM 2 AS f""".stripMargin)
+    assert(r.schema.fields.forall(_.dataType ==
+      org.apache.spark.sql.types.BooleanType), r.schema.simpleString)
+    assert(!r.getBoolean(0))
+    assert(r.getBoolean(1))
+    assert(r.getBoolean(2))
+  }
+
+  test("windowed string_agg(...) OVER (ORDER BY ...) is PG's running " +
+      "concatenation") {
+    val rows = PgSql.sql(spark,
+      """--!syntax_pg
+        |SELECT string_agg(v, ',') OVER (ORDER BY v) AS s
+        |FROM (VALUES ('a'), ('b')) AS t(v)
+        |ORDER BY v""".stripMargin).collect()
+    assert(rows.map(_.getString(0)).toSeq == Seq("a", "a,b"))
+  }
+
+  test("= ANY and BETWEEN SYMMETRIC operands take a ::type suffix, " +
+      "incl. (p, s) and two-word type names") {
+    val r = one(
+      """--!syntax_pg
+        |SELECT DISTINCT 2::int8 = ANY(ARRAY[1, 2]) AS a,
+        |  5 BETWEEN SYMMETRIC 10 AND 1::int8 AS b,
+        |  5::int8 BETWEEN SYMMETRIC 10 AND 1 AS c,
+        |  '2.50'::numeric(4,2) = ANY(ARRAY[2.5]) AS d,
+        |  '1.5'::double precision = ANY(ARRAY[1.5]) AS e,
+        |  5 BETWEEN SYMMETRIC 10 AND '1'::double precision AS f
+        |""".stripMargin)
+    for (i <- 0 until 6) assert(r.getBoolean(i), s"col $i")
+  }
+
+  test("a type name takes the next word only when it continues a " +
+      "multi-word PG type name") {
+    val r = one(
+      """--!syntax_pg
+        |SELECT '2020-01-01'::timestamp AS t,
+        |  '2020-01-01'::timestamp without time zone BETWEEN SYMMETRIC
+        |    '2020-01-02'::timestamp AND '2019-12-31'::timestamp AS g""".stripMargin)
+    assert(r.getTimestamp(0).toString == "2020-01-01 00:00:00.0")
+    assert(r.getBoolean(1))
+  }
+
+  test("CASE ... END is one operand of = ANY and BETWEEN SYMMETRIC") {
+    val r = one(
+      """--!syntax_pg
+        |SELECT CASE WHEN true THEN 2 END = ANY(ARRAY[1, 2]) AS a,
+        |  5 BETWEEN SYMMETRIC CASE WHEN true THEN 10 END AND 1 AS b,
+        |  CASE WHEN CASE WHEN true THEN 1 END = ANY(ARRAY[1])
+        |    THEN 5 BETWEEN SYMMETRIC 1 AND CASE 1 WHEN 1 THEN 10 END
+        |  END AS c""".stripMargin)
+    for (i <- 0 until 3) assert(r.getBoolean(i), s"col $i")
+  }
+
+  test("generate_series returns no rows when the step points away " +
+      "from stop, as PG; a zero step raises") {
+    def series(args: String): Seq[String] = PgSql.sql(spark,
+      s"--!syntax_pg\nSELECT i FROM generate_series($args) AS g(i)")
+      .collect().map(_.get(0).toString).toSeq
+    assert(series("3, 1") == Seq.empty)
+    assert(series("1, 3, -1") == Seq.empty)
+    assert(series("3, 1, -1") == Seq("3", "2", "1"))
+    assert(series("1, 5, 2") == Seq("1", "3", "5"))
+    assert(series("'2020-01-03'::timestamp, '2020-01-01'::timestamp, " +
+      "INTERVAL '1 day'") == Seq.empty)
+    assert(series("'2020-01-02'::timestamp, '2020-01-01'::timestamp, " +
+      "INTERVAL '-1 day'") ==
+      Seq("2020-01-02 00:00:00.0", "2020-01-01 00:00:00.0"))
+    val zero = intercept[Exception](series("1, 1, 0"))
+    assert(causeMessages(zero).contains("step size cannot equal zero"),
+      causeMessages(zero))
+  }
+
+  test("-- comment lines pass through the translator") {
+    val r = one(
+      """--!syntax_pg
+        |-- the answer
+        |SELECT 42 AS x -- trailing""".stripMargin)
+    assert(r.getInt(0) == 42)
+  }
 }
