@@ -13,7 +13,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * constructs real PG-dialect users write — SELECT / CTE / set ops,
   * `expr::type` casts with PG type names, `||` concat, LIMIT/OFFSET,
   * positional `$n` parameters, `~ ~* ~~ ~~*` (and `!`-negated) match
-  * operators, E'' escape strings, `""` identifiers and `''` doubling.
+  * operators, E'' escape strings, `""` identifiers, `''` doubling,
+  * and `--` and (nested) `/* */` comments.
   *
   * The translator rewrites only what Spark 4.1's own grammar cannot
   * parse. `a IS [NOT] DISTINCT FROM b`, `x::type` (once the PG type
@@ -151,7 +152,8 @@ object PgSql {
 
   /** Pass 1 — lexeme-level normalization: PG string literals (raw /
     * E-escape / '' doubling) → Spark literals, `"ident"` → backticks,
-    * `$n` → bound literal text. Comments copy through. */
+    * `$n` → bound literal text, and `--` / `/* */` comments → a
+    * space. */
   private def normalizeLexemes(q: String,
       params: Map[String, String]): String = {
     val out = new StringBuilder
@@ -237,10 +239,24 @@ object PgSql {
         out.append(sparkStringLiteral(q.substring(bodyStart, close)))
         i = close + delim.length
       } else if (c == '-' && i + 1 < n && q.charAt(i + 1) == '-') {
+        // a comment is whitespace to PG; later passes do not lex
+        // comments, so none reaches them
         val eol = q.indexOf('\n', i)
-        val end = if (eol < 0) n else eol
-        out.append(q.substring(i, end))
-        i = end
+        out.append(' ')
+        i = if (eol < 0) n else eol
+      } else if (c == '/' && i + 1 < n && q.charAt(i + 1) == '*') {
+        // block comments nest in PG
+        var depth = 1
+        var j = i + 2
+        while (j < n && depth > 0) {
+          if (q.startsWith("/*", j)) { depth += 1; j += 2 }
+          else if (q.startsWith("*/", j)) { depth -= 1; j += 2 }
+          else j += 1
+        }
+        if (depth > 0) throw new IllegalArgumentException(
+          s"unterminated /* comment at offset $i")
+        out.append(' ')
+        i = j
       } else { out.append(c); i += 1 }
     }
     out.toString
@@ -1210,8 +1226,9 @@ object PgSql {
     * passes through. Spark's `sequence` picks its own direction (and
     * rejects a step that points away from `b`), so a guard gives PG's
     * rule: no rows when the step points away from `b`, an error for a
-    * zero step. The step's sign is read as `a + step` against `a`,
-    * which also holds for timestamp bounds with an interval step.
+    * zero step. The step's sign is read against `step - step`, a
+    * zero of the step's own type (numeric or ANSI interval) that
+    * cannot overflow, unlike `a + step` near the type's bounds.
     * Outside table position (select-list SRFs) the construct raises
     * with a named reason, like the other out-of-subset PG forms. */
   private def rewriteGenerateSeries(sql: String): String = {
@@ -1251,9 +1268,10 @@ object PgSql {
             case 2 => s"CASE WHEN $a <= $b THEN sequence($a, $b)"
             case _ =>
               val st = s"(${args(2).trim})"
-              s"CASE WHEN $a + $st > $a AND $a <= $b OR " +
-                s"$a + $st < $a AND $a >= $b THEN sequence($a, $b, $st) " +
-                s"WHEN $a + $st = $a THEN " +
+              val zero = s"($st - $st)"
+              s"CASE WHEN $st > $zero AND $a <= $b OR " +
+                s"$st < $zero AND $a >= $b THEN sequence($a, $b, $st) " +
+                s"WHEN $st = $zero THEN " +
                 "raise_error('generate_series step size cannot equal zero')"
           }
           s = s.substring(0, m.start) +

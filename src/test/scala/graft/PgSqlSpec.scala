@@ -543,6 +543,9 @@ class PgSqlSpec extends SparkSpec {
     assert(series("1, 3, -1") == Seq.empty)
     assert(series("3, 1, -1") == Seq("3", "2", "1"))
     assert(series("1, 5, 2") == Seq("1", "3", "5"))
+    // the step's sign is read without adding it to a bound
+    assert(series("2147483600, 2147483647, 100") == Seq("2147483600"))
+    assert(series("-2147483600, -2147483648, -100") == Seq("-2147483600"))
     assert(series("'2020-01-03'::timestamp, '2020-01-01'::timestamp, " +
       "INTERVAL '1 day'") == Seq.empty)
     assert(series("'2020-01-02'::timestamp, '2020-01-01'::timestamp, " +
@@ -553,11 +556,32 @@ class PgSqlSpec extends SparkSpec {
       causeMessages(zero))
   }
 
-  test("-- comment lines pass through the translator") {
+  test("-- comments are whitespace: no pass reads into them") {
+    // PG's NULL ordering is still injected after an ORDER BY that a
+    // comment ends
+    def order(dir: String): Seq[Any] = PgSql.sql(spark,
+      s"""--!syntax_pg
+         |SELECT v FROM (VALUES (1), (NULL), (2)) AS t(v)
+         |ORDER BY v $dir -- c
+         |""".stripMargin).collect().map(_.get(0)).toSeq
+    assert(order("") == Seq(1, 2, null))
+    assert(order("DESC") == Seq(null, 2, 1))
     val r = one(
       """--!syntax_pg
-        |-- the answer
-        |SELECT 42 AS x -- trailing""".stripMargin)
-    assert(r.getInt(0) == 42)
+        |-- don't
+        |SELECT 1::int8 AS x -- trailing END x::point
+        |""".stripMargin)
+    assert(r.get(0) == 1L)
+  }
+
+  test("/* */ comments nest and are whitespace") {
+    val r = one(
+      """--!syntax_pg
+        |/* it's /* nested, END x::point */ */ SELECT 1::int8 AS x""".stripMargin)
+    assert(r.get(0) == 1L)
+    val open = intercept[IllegalArgumentException](
+      PgSql.translate("--!syntax_pg\nSELECT 1 /* /* */"))
+    assert(open.getMessage.contains("unterminated /* comment"),
+      open.getMessage)
   }
 }
