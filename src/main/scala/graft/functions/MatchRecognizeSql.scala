@@ -51,11 +51,11 @@ object MatchRecognizeSql {
   /** Splice every `src MATCH_RECOGNIZE (...)` in `sql` with a temp
     * view holding the matched rows; fixpoint over multiple clauses. */
   def rewrite(spark: SparkSession, sql: String): String = {
-    val masked = YqlScript.maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     val m = "(?i)\\bMATCH_RECOGNIZE\\s*\\(".r.findFirstMatchIn(masked)
       .getOrElse(return sql)
     val open = m.end - 1
-    val close = YqlScript.matchParen(masked, open)
+    val close = SqlText.matchBracket(masked, open)
     val body = sql.substring(open + 1, close)
     // the source immediately precedes the clause (grammar: the rpr
     // clause binds BEFORE the alias): an identifier chain or a
@@ -64,19 +64,8 @@ object MatchRecognizeSql {
     while (e >= 0 && masked.charAt(e).isWhitespace) e -= 1
     require(e >= 0, "MATCH_RECOGNIZE without a source")
     val srcStart =
-      if (masked.charAt(e) == ')') {
-        var d = 0; var p = e; var found = -1
-        while (p >= 0 && found < 0) {
-          masked.charAt(p) match {
-            case ')' => d += 1
-            case '(' => d -= 1; if (d == 0) found = p
-            case _ =>
-          }
-          p -= 1
-        }
-        require(found >= 0, "unbalanced parentheses before MATCH_RECOGNIZE")
-        found
-      } else {
+      if (masked.charAt(e) == ')') SqlText.openerOf(masked, e)
+      else {
         var s0 = e
         while (s0 >= 0 && (masked.charAt(s0).isLetterOrDigit ||
           masked.charAt(s0) == '_' || masked.charAt(s0) == '.')) s0 -= 1
@@ -100,34 +89,13 @@ object MatchRecognizeSql {
   private case class CountM(name: String, v: String) extends Measure
 
   private[functions] def build(src: DataFrame, body: String): DataFrame = {
-    val mb = YqlScript.maskQuotes(body)
-    // depth at each index, for depth-0 section keyword checks
-    val depth = new Array[Int](mb.length)
-    locally {
-      var d = 0
-      var i = 0
-      while (i < mb.length) {
-        mb.charAt(i) match {
-          case '(' | '{' => depth(i) = d; d += 1
-          case ')' | '}' => d -= 1; depth(i) = d
-          case _ => depth(i) = d
-        }
-        i += 1
-      }
-    }
-    val sectionRes = Seq(
-      "PARTITION\\s+BY" -> "PARTITION BY",
-      "ORDER\\s+BY" -> "ORDER BY",
-      "MEASURES" -> "MEASURES",
-      "ONE\\s+ROW\\s+PER\\s+MATCH" -> "ONE ROW PER MATCH",
-      "ALL\\s+ROWS\\s+PER\\s+MATCH" -> "ALL ROWS PER MATCH",
-      "AFTER\\s+MATCH" -> "AFTER MATCH",
-      "PATTERN" -> "PATTERN",
-      "DEFINE" -> "DEFINE")
-    val marks = sectionRes.flatMap { case (re, kw) =>
-      ("(?i)\\b" + re + "\\b").r.findAllMatchIn(mb)
-        .filter(m => depth(m.start) == 0).map(m => (m.start, m.end, kw))
-    }.sortBy(_._1)
+    val marks = Seq("PARTITION BY", "ORDER BY", "MEASURES",
+      "ONE ROW PER MATCH", "ALL ROWS PER MATCH", "AFTER MATCH", "PATTERN",
+      "DEFINE").flatMap { kw =>
+        val at = SqlText.findKw(body, kw)
+        if (at < 0) None
+        else Some((at, SqlText.kwEnd(body, at, kw), kw))
+      }.sortBy(_._1)
     def section(kw: String): Option[String] =
       marks.zipWithIndex.collectFirst { case ((_, e0, k), i) if k == kw =>
         val until = if (i + 1 < marks.length) marks(i + 1)._1 else body.length
@@ -138,7 +106,7 @@ object MatchRecognizeSql {
     val allRows = section("ALL ROWS PER MATCH").isDefined
 
     def idents(s: String): Seq[String] =
-      YqlScript.splitTopLevel(s).map(_.trim).filter(_.nonEmpty).map { it =>
+      SqlText.split(s).map(_.trim).filter(_.nonEmpty).map { it =>
         val up = it.toUpperCase
         require(!up.endsWith(" DESC"),
           s"MATCH_RECOGNIZE ORDER BY is ascending (event-time order): $it")
@@ -155,13 +123,13 @@ object MatchRecognizeSql {
     val patText0 = section("PATTERN").getOrElse(
       throw new IllegalArgumentException("MATCH_RECOGNIZE requires PATTERN"))
     require(patText0.startsWith("("), s"malformed PATTERN: $patText0")
-    val patClose = YqlScript.matchParen(patText0, 0)
+    val patClose = SqlText.matchBracket(patText0, 0)
     val patText = patText0.substring(1, patClose)
 
     // DEFINE V AS expr, ... — vars without a DEFINE are always-true
     val defs: Map[String, String] = section("DEFINE").map { s =>
-      YqlScript.splitTopLevel(s).map(_.trim).filter(_.nonEmpty).map { item =>
-        val at = YqlScript.findTopKw(item, "AS")
+      SqlText.split(s).map(_.trim).filter(_.nonEmpty).map { item =>
+        val at = SqlText.findKw(item, "AS")
         require(at > 0, s"malformed DEFINE item: $item")
         val v = item.substring(0, at).trim
         require(v.matches("[A-Za-z_][A-Za-z0-9_]*"),
@@ -172,7 +140,7 @@ object MatchRecognizeSql {
 
     // pattern variable set (for X.col qualifier stripping)
     val varNames = "[A-Za-z_][A-Za-z0-9_]*".r.findAllIn(
-      YqlScript.maskQuotes(patText)).toSeq.map(_.toUpperCase).distinct
+      SqlText.mask(patText)).toSeq.map(_.toUpperCase).distinct
 
     // rewrite one DEFINE expr: PREV(col)/PREV(X.col) → __mr_prev_col;
     // X.col → col; FIRST/LAST/NEXT navigation raises
@@ -182,9 +150,9 @@ object MatchRecognizeSql {
       var changed = true
       while (changed) {
         changed = false
-        val mm = "(?i)\\bPREV\\s*\\(".r.findFirstMatchIn(YqlScript.maskQuotes(ex))
+        val mm = "(?i)\\bPREV\\s*\\(".r.findFirstMatchIn(SqlText.mask(ex))
         mm.foreach { m =>
-          val close = YqlScript.matchParen(YqlScript.maskQuotes(ex), m.end - 1)
+          val close = SqlText.matchBracket(SqlText.mask(ex), m.end - 1)
           val inner0 = ex.substring(m.end, close).trim
           val inner = inner0.split("\\.") match {
             case Array(v, c) if varNames.contains(v.toUpperCase) => c.trim
@@ -202,7 +170,7 @@ object MatchRecognizeSql {
       }
       Seq("NEXT", "FIRST", "LAST").foreach { kw =>
         require(("(?i)\\b" + kw + "\\s*\\(").r
-          .findFirstIn(YqlScript.maskQuotes(ex)).isEmpty,
+          .findFirstIn(SqlText.mask(ex)).isEmpty,
           s"$kw() navigation in DEFINE is not supported (PREV only)")
       }
       // strip pattern-variable qualifiers: conditions evaluate on the
@@ -214,7 +182,7 @@ object MatchRecognizeSql {
           "\\.(?=[A-Za-z_])").r
         val out = new StringBuilder
         var last = 0
-        re.findAllMatchIn(YqlScript.maskQuotes(e0)).foreach { m =>
+        re.findAllMatchIn(SqlText.mask(e0)).foreach { m =>
           out.append(e0.substring(last, m.start)); last = m.end
         }
         out.append(e0.substring(last)).toString
@@ -263,7 +231,7 @@ object MatchRecognizeSql {
         val c = s.charAt(i)
         if (c.isWhitespace) i += 1
         else if (c == '(') {
-          val close = YqlScript.matchParen(s, i)
+          val close = SqlText.matchBracket(s, i)
           val inner = s.substring(i + 1, close)
           val options = inner.split("\\|").toSeq.map(_.trim).filter(_.nonEmpty)
           require(options.size >= 2,
@@ -301,8 +269,8 @@ object MatchRecognizeSql {
     // MEASURES
     val inSchema = src.schema
     val measures: Seq[Measure] = section("MEASURES").map { s =>
-      YqlScript.splitTopLevel(s).map(_.trim).filter(_.nonEmpty).map { item =>
-        val at = YqlScript.findTopKw(item, "AS")
+      SqlText.split(s).map(_.trim).filter(_.nonEmpty).map { item =>
+        val at = SqlText.findKw(item, "AS")
         require(at > 0, s"MEASURES items need an alias: $item")
         val name = item.substring(at + 2).trim
         val it0 = item.substring(0, at).trim

@@ -89,7 +89,7 @@ object PgSql {
     * explicit NULLS clause — top-level sorts AND window-spec sorts —
     * gets PG's default injected. */
   private def rewriteOrderNulls(sql: String): String = {
-    val stops = Set("LIMIT", "OFFSET", "FETCH", "UNION", "INTERSECT",
+    val stops = Seq("LIMIT", "OFFSET", "FETCH", "UNION", "INTERSECT",
       "EXCEPT", "ROWS", "RANGE", "GROUPS", "WINDOW", "FOR")
     // rightmost-first so a nested window ORDER BY is finished before
     // its enclosing list is re-measured on the updated text
@@ -97,7 +97,7 @@ object PgSql {
     var searchEnd = text.length
     var go = true
     while (go) {
-      val masked = YqlScript.maskQuotes(text)
+      val masked = SqlText.mask(text)
       // lookahead, not \s: `ORDER BY(a)` is legal PG — the item scan
       // starts right after BY either way
       val m = "(?is)\\bORDER\\s+BY(?=[\\s(])".r.findAllMatchIn(masked)
@@ -109,32 +109,9 @@ object PgSql {
         case None => go = false
         case Some(mm) =>
           // list end: same-depth clause keyword, enclosing ')', or EOS
-          var i = mm.end
-          var depth = 0
-          var end = masked.length
-          var stopped = false
-          while (i < masked.length && !stopped) {
-            val c = masked.charAt(i)
-            if (c == '(') depth += 1
-            else if (c == ')') {
-              depth -= 1
-              if (depth < 0) { end = i; stopped = true }
-            } else if (depth == 0 && c.isLetter &&
-                !(masked.charAt(i - 1).isLetterOrDigit ||
-                  masked.charAt(i - 1) == '_' ||
-                  masked.charAt(i - 1) == '.')) {
-              var j = i
-              while (j < masked.length &&
-                (masked.charAt(j).isLetterOrDigit ||
-                  masked.charAt(j) == '_')) j += 1
-              if (stops.contains(masked.substring(i, j).toUpperCase)) {
-                end = i; stopped = true
-              }
-              i = j - 1
-            }
-            i += 1
-          }
-          val items = YqlScript.splitTopLevel(text.substring(mm.end, end))
+          val stop = SqlText.findKw(text, stops, mm.end)
+          val end = if (stop >= 0) stop else SqlText.groupEnd(text, mm.end)
+          val items = SqlText.split(text.substring(mm.end, end))
           val rebuilt = items.map { raw =>
             val it = raw.trim
             if (it.isEmpty ||
@@ -276,8 +253,8 @@ object PgSql {
     } + "'"
 
   private def firstKeyword(sql: String): String = {
-    val masked = YqlScript.maskQuotes(sql)
-    val m = "(?is)^\\s*(?:--[^\n]*\n|\\s|\\()*([A-Za-z_]+)".r
+    val masked = SqlText.mask(sql)
+    val m = "(?is)^[\\s(]*([A-Za-z_]+)".r
       .findFirstMatchIn(masked)
     m.map(_.group(1).toUpperCase).getOrElse("")
   }
@@ -300,7 +277,7 @@ object PgSql {
     * hides range names. DISTINCT ON combined with GROUP BY/HAVING or
     * a qualified `t.*` raises named. */
   private def rewriteDistinctOn(sql: String): String = {
-    val masked = YqlScript.maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     val m = "(?is)\\bSELECT\\s+DISTINCT\\s+ON\\s*\\(".r
       .findFirstMatchIn(masked).getOrElse {
         if (masked.matches("(?is).*\\bDISTINCT\\s+ON\\s*\\(.*"))
@@ -309,47 +286,24 @@ object PgSql {
         return sql
       }
     val onOpen = m.end - 1
-    val onClose = YqlScript.matchParen(sql, onOpen)
-    val onExprs = YqlScript.splitTopLevel(
+    val onClose = SqlText.matchBracket(sql, onOpen)
+    val onExprs = SqlText.split(
       sql.substring(onOpen + 1, onClose)).map(_.trim)
 
     // clause positions at this SELECT's own depth, up to the span end
     // (enclosing ')' or a top-level set-op keyword)
-    var spanEnd = sql.length
-    val kw = scala.collection.mutable.Map.empty[String, Int]
-    var limitStart = -1
-    locally {
-      var depth = 0
-      var i = onClose + 1
-      var stopped = false
-      while (i < masked.length && !stopped) {
-        val c = masked.charAt(i)
-        if (c == '(') depth += 1
-        else if (c == ')') {
-          depth -= 1
-          if (depth < 0) { spanEnd = i; stopped = true }
-        } else if (depth == 0 && c.isLetter &&
-            (i == 0 || !(masked.charAt(i - 1).isLetterOrDigit ||
-              masked.charAt(i - 1) == '_' || masked.charAt(i - 1) == '.'))) {
-          var j = i
-          while (j < masked.length && (masked.charAt(j).isLetterOrDigit ||
-            masked.charAt(j) == '_')) j += 1
-          val word = masked.substring(i, j).toUpperCase
-          word match {
-            case "UNION" | "INTERSECT" | "EXCEPT" =>
-              spanEnd = i; stopped = true
-            case "FROM" | "WHERE" | "GROUP" | "HAVING" | "WINDOW" |
-                "ORDER" | "LIMIT" | "OFFSET" | "FETCH" =>
-              if (!kw.contains(word)) kw(word) = i
-              if ((word == "LIMIT" || word == "OFFSET" || word == "FETCH")
-                  && limitStart < 0) limitStart = i
-            case _ =>
-          }
-          i = j - 1
-        }
-        i += 1
-      }
+    val spanEnd = {
+      val setOp = SqlText.findKw(sql, Seq("UNION", "INTERSECT", "EXCEPT"),
+        onClose + 1)
+      if (setOp >= 0) setOp else SqlText.groupEnd(sql, onClose + 1)
     }
+    def clauseAt(kws: String*): Int = {
+      val at = SqlText.findKw(sql, kws, onClose + 1)
+      if (at < spanEnd) at else -1
+    }
+    val kw = Seq("FROM", "WHERE", "GROUP", "HAVING", "WINDOW", "ORDER")
+      .map(k => k -> clauseAt(k)).filter(_._2 >= 0).toMap
+    val limitStart = clauseAt("LIMIT", "OFFSET", "FETCH")
     for (bad <- Seq("GROUP", "HAVING", "WINDOW"))
       if (kw.contains(bad)) throw new IllegalArgumentException(
         s"DISTINCT ON combined with $bad is not in the bound PG " +
@@ -370,7 +324,7 @@ object PgSql {
 
     // alias / ordinal → expression, for ORDER BY items that name
     // select-list outputs (not yet in scope inside the window)
-    val itemList = YqlScript.splitTopLevel(items).map(_.trim)
+    val itemList = SqlText.split(items).map(_.trim)
     if (itemList.exists(it => it.endsWith(".*")))
       throw new IllegalArgumentException(
         "qualified `t.*` under DISTINCT ON is not in the bound PG " +
@@ -399,7 +353,7 @@ object PgSql {
     val dirRe =
       "(?is)^(.*?)\\s*((?:ASC|DESC)?\\s*(?:NULLS\\s+(?:FIRST|LAST))?)$".r
     val orderItems = orderListText.map(t =>
-      YqlScript.splitTopLevel(t).map(_.trim)).getOrElse(Seq.empty)
+      SqlText.split(t).map(_.trim)).getOrElse(Seq.empty)
     val substituted = orderItems.map { it =>
       val dirRe(core, dir) = it
       val c = core.trim
@@ -460,7 +414,7 @@ object PgSql {
     * by the mask; function names (ident followed by `(`) and the
     * right side of `.` chains keep their text. */
   private def unqualifyTop(item: String): String = {
-    val masked = YqlScript.maskQuotes(item)
+    val masked = SqlText.mask(item)
     val re = "(?<![A-Za-z0-9_.`])([A-Za-z_][A-Za-z0-9_]*)\\.(?=[A-Za-z_`])".r
     val b = new StringBuilder(item)
     re.findAllMatchIn(masked).toSeq.reverseIterator.foreach { mm =>
@@ -486,7 +440,7 @@ object PgSql {
     s = replaceTopLevel(s, "!~(?![*~])", " NOT RLIKE ")
     // infix ~ only (a prefix ~ is PG bitwise-not; out of subset and
     // left for Spark to reject): require an operand on the left
-    val masked = YqlScript.maskQuotes(s)
+    val masked = SqlText.mask(s)
     val b = new StringBuilder(s)
     var at = masked.length - 1
     while (at >= 0) {
@@ -556,15 +510,7 @@ object PgSql {
     while (i >= 0 && !done) {
       val c = masked.charAt(i)
       if (c == ')' || c == ']') {
-        val open = if (c == ')') '(' else '['
-        var depth = 0
-        while (i >= 0 && depth >= 0) {
-          val d = masked.charAt(i)
-          if (d == c) depth += 1
-          else if (d == open) depth -= 1
-          if (depth == 0 && d == open) { depth = -1 } else i -= 1
-        }
-        start = i; i -= 1
+        start = SqlText.openerOf(masked, i); i = start - 1
       } else if (c == '\'' || c == '`') {
         i -= 1
         while (i >= 0 && masked.charAt(i) != c) i -= 1
@@ -573,11 +519,10 @@ object PgSql {
       else if (c == ':' && i > 0 && masked.charAt(i - 1) == ':') { i -= 2 }
       else if (c == ',' || c == '(' || c == '[' ||
           "<>=!".indexOf(c) >= 0) { done = true }
-      else if (c.isLetterOrDigit || c == '_' || c == '.' || c == '$') {
+      else if (SqlText.isIdent(c) || c == '.') {
         var j = i
-        while (j >= 0 && (masked.charAt(j).isLetterOrDigit ||
-          masked.charAt(j) == '_' || masked.charAt(j) == '.' ||
-          masked.charAt(j) == '$')) j -= 1
+        while (j >= 0 &&
+          (SqlText.isIdent(masked.charAt(j)) || masked.charAt(j) == '.')) j -= 1
         val word = masked.substring(j + 1, i + 1).toUpperCase
         if (word == "END") { start = caseStart(masked, j + 1); i = start - 1 }
         else if (operandStopWords.contains(word)) done = true
@@ -599,15 +544,7 @@ object PgSql {
     while (i < n && !done) {
       val c = masked.charAt(i)
       if (c == '(' || c == '[') {
-        val close = if (c == '(') ')' else ']'
-        var depth = 0
-        while (i < n && depth >= 0) {
-          val d = masked.charAt(i)
-          if (d == c) depth += 1
-          else if (d == close) depth -= 1
-          if (depth == 0 && d == close) depth = -1 else i += 1
-        }
-        i += 1; end = i
+        i = SqlText.matchBracket(masked, i) + 1; end = i
       } else if (c == '\'' || c == '`') {
         i += 1
         while (i < n && masked.charAt(i) != c) i += 1
@@ -616,11 +553,10 @@ object PgSql {
       else if (c == ':' && i + 1 < n && masked.charAt(i + 1) == ':') { i += 2 }
       else if (c == ',' || c == ')' || c == ']' ||
           "<>=!".indexOf(c) >= 0) { done = true }
-      else if (c.isLetterOrDigit || c == '_' || c == '.' || c == '$') {
+      else if (SqlText.isIdent(c) || c == '.') {
         var j = i
-        while (j < n && (masked.charAt(j).isLetterOrDigit ||
-          masked.charAt(j) == '_' || masked.charAt(j) == '.' ||
-          masked.charAt(j) == '$')) j += 1
+        while (j < n &&
+          (SqlText.isIdent(masked.charAt(j)) || masked.charAt(j) == '.')) j += 1
         val word = masked.substring(i, j).toUpperCase
         if (word == "CASE") { i = caseEnd(masked, i); end = i }
         else if (operandStopWords.contains(word)) done = true
@@ -642,12 +578,12 @@ object PgSql {
     * array is non-foldable and repeated). Slices `a[i:j]` raise
     * named. */
   private def rewriteArrays(sql: String): String = {
-    val masked = YqlScript.maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     // literals first (innermost-last; the loop re-masks every pass)
     val lit = "(?is)\\bARRAY\\s*\\[".r.findFirstMatchIn(masked)
     if (lit.isDefined) {
       val open = lit.get.end - 1
-      val close = matchBracket(masked, open)
+      val close = SqlText.matchBracket(masked, open)
       return rewriteArrays(sql.substring(0, lit.get.start) +
         s"array(${sql.substring(open + 1, close)})" +
         sql.substring(close + 1))
@@ -660,9 +596,9 @@ object PgSql {
       val prim = k >= 0 && (masked.charAt(k).isLetterOrDigit ||
         "_')]`".indexOf(masked.charAt(k)) >= 0)
       if (prim) {
-        val close = matchBracket(masked, at)
+        val close = SqlText.matchBracket(masked, at)
         val idx = sql.substring(at + 1, close)
-        if (YqlScript.maskQuotes(idx).contains(":"))
+        if (SqlText.mask(idx).contains(":"))
           throw new IllegalArgumentException(
             "PG array slices a[i:j] are not in the bound subset — " +
               "use slice(arr, start, length) semantics via explicit calls")
@@ -687,23 +623,10 @@ object PgSql {
     if (i < 0) return end
     val c = masked.charAt(i)
     if (c == ')' || c == ']') {
-      val open = if (c == ')') '(' else '['
-      var depth = 0
-      while (i >= 0) {
-        val d = masked.charAt(i)
-        if (d == c) depth += 1
-        else if (d == open) {
-          depth -= 1
-          if (depth == 0) {
-            var j = i - 1
-            while (j >= 0 && (masked.charAt(j).isLetterOrDigit ||
-              masked.charAt(j) == '_' || masked.charAt(j) == '.')) j -= 1
-            return j + 1
-          }
-        }
-        i -= 1
-      }
-      0
+      var j = SqlText.openerOf(masked, i) - 1
+      while (j >= 0 && (masked.charAt(j).isLetterOrDigit ||
+        masked.charAt(j) == '_' || masked.charAt(j) == '.')) j -= 1
+      j + 1
     } else if (c == '\'' || c == '`') {
       var j = i - 1
       while (j >= 0 && masked.charAt(j) != c) j -= 1
@@ -716,22 +639,9 @@ object PgSql {
     }
   }
 
-  private def matchBracket(masked: String, open: Int): Int = {
-    var i = open
-    var depth = 0
-    while (i < masked.length) {
-      val c = masked.charAt(i)
-      if (c == '[') depth += 1
-      else if (c == ']') { depth -= 1; if (depth == 0) return i }
-      i += 1
-    }
-    throw new IllegalArgumentException(
-      s"unbalanced brackets in: ${masked.take(80)}")
-  }
-
   private def replaceTopLevel(sql: String, opRe: String,
       replacement: String): String = {
-    val masked = YqlScript.maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     val re = opRe.r
     val b = new StringBuilder(sql)
     re.findAllMatchIn(masked).toSeq.reverseIterator.foreach { m =>
@@ -745,7 +655,7 @@ object PgSql {
     * captured by a forward scan. */
   private def rewriteCiRegex(sql: String, opRe: String,
       negate: Boolean): String = {
-    val masked = YqlScript.maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     val m = opRe.r.findFirstMatchIn(masked).getOrElse(return sql)
     var j = m.end
     while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
@@ -771,7 +681,7 @@ object PgSql {
     }
     while (j < n && (sql.charAt(j).isLetterOrDigit ||
         sql.charAt(j) == '_' || sql.charAt(j) == '.')) j += 1
-    if (j < n && sql.charAt(j) == '(') j = YqlScript.matchParen(sql, j) + 1
+    if (j < n && sql.charAt(j) == '(') j = SqlText.matchBracket(sql, j) + 1
     math.max(j, at + 1)
   }
 
@@ -780,7 +690,7 @@ object PgSql {
     * each `::` is rewritten; the operand is left to Spark's parser. */
   private def rewriteCasts(sql: String): String = {
     val out = new StringBuilder(sql)
-    castType.findAllMatchIn(YqlScript.maskQuotes(sql)).toSeq.reverseIterator
+    castType.findAllMatchIn(SqlText.mask(sql)).toSeq.reverseIterator
       .foreach { m =>
         out.replace(m.start, m.end, "::" + pgType(
           m.group(1).toLowerCase.split("\\s+").mkString(" "),
@@ -843,7 +753,7 @@ object PgSql {
     * comparisons (no match + a NULL element → NULL, not false). The
     * sub-link form `ANY (SELECT ...)` raises named (use IN/EXISTS). */
   private def rewriteAnyAll(sql: String): String = {
-    val masked = YqlScript.maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     val m = "([=<>!]{1,2})\\s*(?i:(ANY|SOME|ALL))\\s*\\(".r
       .findFirstMatchIn(masked).getOrElse(return sql)
     val op = m.group(1)
@@ -851,7 +761,7 @@ object PgSql {
       throw new IllegalArgumentException(
         s"'$op ${m.group(2)}(...)' is not a bound quantified comparison")
     val open = m.end - 1
-    val close = YqlScript.matchParen(sql, open)
+    val close = SqlText.matchBracket(sql, open)
     val inner = sql.substring(open + 1, close).trim
     if (inner.matches("(?is)^(SELECT|WITH|VALUES)\\b.*"))
       throw new IllegalArgumentException(
@@ -875,7 +785,7 @@ object PgSql {
     * the unit keyword. `WITH TIES` raises named (needs a rank
     * window, not a LIMIT). */
   private def rewriteFetchFirst(sql: String): String = {
-    if (YqlScript.maskQuotes(sql)
+    if (SqlText.mask(sql)
         .matches("(?is).*\\bWITH\\s+TIES\\b.*"))
       throw new IllegalArgumentException(
         "FETCH FIRST ... WITH TIES is not in the bound PG subset — " +
@@ -890,7 +800,7 @@ object PgSql {
     // PG's standard clause order is OFFSET-then-FETCH; Spark's
     // grammar only accepts LIMIT-then-OFFSET
     val re = "(?i)\\bOFFSET\\s+(\\d+)\\s+LIMIT\\s+(\\d+)".r
-    val masked = YqlScript.maskQuotes(s)
+    val masked = SqlText.mask(s)
     val b = new StringBuilder(s)
     re.findAllMatchIn(masked).toSeq.reverseIterator.foreach { m =>
       b.replace(m.start, m.end, s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}")
@@ -902,7 +812,7 @@ object PgSql {
     * capture groups ($1). */
   private def replaceTopLevelKeepGroups(sql: String, opRe: String,
       replacement: String): String = {
-    val masked = YqlScript.maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     val re = opRe.r
     val b = new StringBuilder(sql)
     re.findAllMatchIn(masked).toSeq.reverseIterator.foreach { m =>
@@ -919,12 +829,12 @@ object PgSql {
     * (struct distinctness ≡ value distinctness); aggregate ORDER BY
     * raises named like string_agg. */
   private def rewriteArrayAgg(sql: String): String = {
-    val masked = YqlScript.maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     val m = "(?i)(?<![A-Za-z0-9_])array_agg\\s*\\(".r
       .findFirstMatchIn(masked).getOrElse(return sql)
-    val close = YqlScript.matchParen(sql, m.end - 1)
+    val close = SqlText.matchBracket(sql, m.end - 1)
     val argText = sql.substring(m.end, close).trim
-    if (YqlScript.maskQuotes(argText)
+    if (SqlText.mask(argText)
         .matches("(?is).*\\bORDER\\s+BY\\b.*"))
       throw new IllegalArgumentException(
         "array_agg with an aggregate ORDER BY is not in the bound " +
@@ -956,13 +866,13 @@ object PgSql {
     s = replaceTopLevel(s,
       "(?i)(?<![A-Za-z0-9_])array_to_string(?=\\s*\\()", "array_join")
     // one match per pass, innermost recursion re-masks the text
-    val masked = YqlScript.maskQuotes(s)
+    val masked = SqlText.mask(s)
     val lenM = "(?i)(?<![A-Za-z0-9_])array_length\\s*\\(".r
       .findFirstMatchIn(masked)
     if (lenM.isDefined) {
       val m = lenM.get
-      val close = YqlScript.matchParen(s, m.end - 1)
-      val args = YqlScript.splitTopLevel(s.substring(m.end, close))
+      val close = SqlText.matchBracket(s, m.end - 1)
+      val args = SqlText.split(s.substring(m.end, close))
       if (args.length != 2 || args(1).trim != "1")
         throw new IllegalArgumentException(
           "array_length with a dimension other than 1 is not in " +
@@ -974,8 +884,8 @@ object PgSql {
       .findFirstMatchIn(masked)
     if (staM.isDefined) {
       val m = staM.get
-      val close = YqlScript.matchParen(s, m.end - 1)
-      val args = YqlScript.splitTopLevel(s.substring(m.end, close))
+      val close = SqlText.matchBracket(s, m.end - 1)
+      val args = SqlText.split(s.substring(m.end, close))
         .map(_.trim)
       if (args.length != 2)
         throw new IllegalArgumentException(
@@ -1033,7 +943,7 @@ object PgSql {
     * escaped for Java. The pattern must be a literal (the translation
     * happens at parse time, as in similar_escape's const-fold path). */
   private def rewriteSimilarTo(sql: String): String = {
-    val masked = YqlScript.maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     val m = "(?is)\\b(NOT\\s+)?SIMILAR\\s+TO\\b".r
       .findFirstMatchIn(masked).getOrElse(return sql)
     var j = m.end
@@ -1122,7 +1032,7 @@ object PgSql {
     var s = sql
     var found = true
     while (found) {
-      val masked = YqlScript.maskQuotes(s)
+      val masked = SqlText.mask(s)
       "(?i)(?<![A-Za-z0-9_])unnest\\s*\\(".r
         .findFirstMatchIn(masked) match {
         case None => found = false
@@ -1138,8 +1048,8 @@ object PgSql {
               "in the select list — not in the bound PG subset; move " +
               "it to the FROM clause")
           val open = s.indexOf('(', m.start)
-          val close = YqlScript.matchParen(s, open)
-          val args = YqlScript.splitTopLevel(s.substring(open + 1, close))
+          val close = SqlText.matchBracket(s, open)
+          val args = SqlText.split(s.substring(open + 1, close))
           if (args.length != 1) throw new IllegalArgumentException(
             "multi-argument unnest (PG's zip-unnest) is not in the " +
               "bound PG subset — unnest each array separately")
@@ -1164,10 +1074,10 @@ object PgSql {
     * running `OVER (ORDER BY ...)`); only PG's in-call ORDER BY has no
     * Spark spelling and raises named. */
   private def rejectOrderedStringAgg(sql: String): String = {
-    val masked = YqlScript.maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     "(?i)(?<![A-Za-z0-9_])string_agg\\s*\\(".r.findAllMatchIn(masked)
       .foreach { m =>
-        val close = YqlScript.matchParen(masked, m.end - 1)
+        val close = SqlText.matchBracket(masked, m.end - 1)
         if (masked.substring(m.end, close)
             .matches("(?is).*\\bORDER\\s+BY\\b.*"))
           throw new IllegalArgumentException(
@@ -1180,7 +1090,7 @@ object PgSql {
   /** `a BETWEEN SYMMETRIC x AND y` → bounds sorted with
     * least/greatest (PG swaps the endpoints when x > y). */
   private def rewriteBetweenSymmetric(sql: String): String = {
-    val masked = YqlScript.maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     val m = "(?is)\\bBETWEEN\\s+SYMMETRIC\\b".r
       .findFirstMatchIn(masked).getOrElse(return sql)
     val xEnd = operandEnd(masked, m.end)
@@ -1205,16 +1115,16 @@ object PgSql {
   private def rewriteExtractEpoch(sql: String): String = {
     var s = sql
     var m = "(?i)(?<![A-Za-z0-9_])extract\\s*\\(\\s*epoch\\s+from\\s".r
-      .findFirstMatchIn(YqlScript.maskQuotes(s))
+      .findFirstMatchIn(SqlText.mask(s))
     while (m.isDefined) {
       val open = s.indexOf('(', m.get.start)
-      val close = YqlScript.matchParen(s, open)
+      val close = SqlText.matchBracket(s, open)
       val inner = s.substring(m.get.end - 1, close).trim
       s = s.substring(0, m.get.start) +
         s"(CAST(unix_micros(CAST(($inner) AS TIMESTAMP)) AS DOUBLE) / 1000000.0)" +
         s.substring(close + 1)
       m = "(?i)(?<![A-Za-z0-9_])extract\\s*\\(\\s*epoch\\s+from\\s".r
-        .findFirstMatchIn(YqlScript.maskQuotes(s))
+        .findFirstMatchIn(SqlText.mask(s))
     }
     s
   }
@@ -1235,7 +1145,7 @@ object PgSql {
     var s = sql
     var found = true
     while (found) {
-      val masked = YqlScript.maskQuotes(s)
+      val masked = SqlText.mask(s)
       "(?i)(?<![A-Za-z0-9_])generate_series\\s*\\(".r
         .findFirstMatchIn(masked) match {
         case None => found = false
@@ -1259,8 +1169,8 @@ object PgSql {
               "function in the select list — not in the bound PG " +
               "subset; move it to the FROM clause")
           val open = s.indexOf('(', m.start)
-          val close = YqlScript.matchParen(s, open)
-          val args = YqlScript.splitTopLevel(s.substring(open + 1, close))
+          val close = SqlText.matchBracket(s, open)
+          val args = SqlText.split(s.substring(open + 1, close))
           require(args.length == 2 || args.length == 3,
             "generate_series takes (start, stop [, step])")
           val Seq(a, b) = args.take(2).map(t => s"(${t.trim})")
@@ -1282,33 +1192,20 @@ object PgSql {
     s
   }
 
-  /** The text of the CURRENT clause: characters at the same paren
-    * depth as the end of `before`, from where that depth was last
-    * entered; everything nested deeper (subqueries) or shallower
-    * (enclosing query) blanks to spaces. */
+  /** The text of the CURRENT clause: `before` from the paren that
+    * encloses its end, with every nested group (subqueries) blanked to
+    * spaces. */
   private def clauseContext(before: String): String = {
-    val n = before.length
-    val atDepth = new Array[Int](n)
-    var depth = 0
-    var i = 0
-    while (i < n) {
-      val ch = before.charAt(i)
-      if (ch == '(') { atDepth(i) = depth; depth += 1 }
-      else if (ch == ')') { depth -= 1; atDepth(i) = depth }
-      else atDepth(i) = depth
-      i += 1
+    val sb = new StringBuilder(before)
+    var i = before.length - 1
+    while (i >= 0 && before.charAt(i) != '(') {
+      if (")]}".indexOf(before.charAt(i)) >= 0) {
+        val open = SqlText.openerOf(before, i)
+        for (k <- open to i) sb.setCharAt(k, ' ')
+        i = open
+      }
+      i -= 1
     }
-    var start = 0
-    i = 0
-    while (i < n) { if (atDepth(i) < depth) start = i + 1; i += 1 }
-    val sb = new StringBuilder
-    i = start
-    while (i < n) {
-      val ch = before.charAt(i)
-      sb.append(
-        if (atDepth(i) == depth && ch != '(' && ch != ')') ch else ' ')
-      i += 1
-    }
-    sb.toString
+    sb.substring(i + 1)
   }
 }

@@ -47,20 +47,7 @@ object SessionLambda {
   private[functions] def parseLam(text: String, arity: Int,
       what: String): Lam = {
     val t = text.trim
-    // first top-level `->` (quote/paren aware)
-    var i = 0; var depth = 0; var quote: Char = 0; var at = -1
-    while (i < t.length - 1 && at < 0) {
-      val c = t.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' | '[' => depth += 1
-        case ')' | ']' => depth -= 1
-        case '-' if depth == 0 && t.charAt(i + 1) == '>' => at = i
-        case _ =>
-      }
-      i += 1
-    }
+    val at = SqlText.indexOfTop(t, "->")
     require(at > 0, s"SessionWindow $what argument must be a lambda " +
       s"(named `$$lambda` or `param -> body`), got: ${t.take(60)}")
     val head = t.substring(0, at).trim
@@ -82,55 +69,44 @@ object SessionLambda {
     * rewrites to group on the session ordinal. 2-argument forms were
     * already lowered textually; anything else raises there. */
   def rewrite(spark: SparkSession, sql: String): String = {
-    val masked = YqlScript.maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     val re = "(?i)\\bSessionWindow\\s*\\(".r
     val m = re.findFirstMatchIn(masked).getOrElse(return sql)
     // nested scope? recurse into the innermost enclosing parens
-    var depth = 0
-    for (i <- 0 until m.start) masked.charAt(i) match {
-      case '(' => depth += 1
-      case ')' => depth -= 1
-      case _ =>
+    var open = m.start - 1
+    while (open >= 0 && masked.charAt(open) != '(') {
+      if (")]}".indexOf(masked.charAt(open)) >= 0)
+        open = SqlText.openerOf(masked, open)
+      open -= 1
     }
-    if (depth > 0) {
-      // find the innermost '(' still open at m.start
-      var i = m.start - 1; var d = 0; var open = -1
-      while (i >= 0 && open < 0) {
-        masked.charAt(i) match {
-          case ')' => d += 1
-          case '(' => if (d == 0) open = i else d -= 1
-          case _ =>
-        }
-        i -= 1
-      }
-      val close = YqlScript.matchParen(masked, open)
+    if (open >= 0) {
+      val close = SqlText.matchBracket(masked, open)
       return sql.substring(0, open + 1) +
         rewrite(spark, sql.substring(open + 1, close)) + sql.substring(close)
     }
-    val close = YqlScript.matchParen(sql, m.end - 1)
-    val args = YqlScript.splitTopLevel(sql.substring(m.end, close))
+    val close = SqlText.matchBracket(sql, m.end - 1)
+    val args = SqlText.split(sql.substring(m.end, close))
       .map(_.trim)
     if (args.length != 4) return sql // the 2-arg lowering owns the rest
     require(re.findFirstMatchIn(masked.substring(close)).isEmpty,
       "Duplicate session window specification.")
 
     // ——— carve the enclosing SELECT ———
-    val selAt = YqlScript.findTopKw(sql, "SELECT")
-    val fromAt = YqlScript.findTopKw(sql, "FROM")
-    val groupAt = YqlScript.findTopKw(sql, "GROUP")
+    val selAt = SqlText.findKw(sql, "SELECT")
+    val fromAt = SqlText.findKw(sql, "FROM")
+    val groupAt = SqlText.findKw(sql, "GROUP")
     require(selAt >= 0 && fromAt > selAt && groupAt > fromAt &&
         groupAt < m.start,
       "SessionWindow(...) is only valid in GROUP BY " +
         "(docs syntax/group_by.md#session-window)")
-    val byAt = YqlScript.findTopKw(sql, "BY", groupAt)
+    val byAt = SqlText.findKw(sql, "BY", groupAt)
     val whereAt = {
-      val w = YqlScript.findTopKw(sql, "WHERE", fromAt)
+      val w = SqlText.findKw(sql, "WHERE", fromAt)
       if (w >= 0 && w < groupAt) w else -1
     }
-    val groupEnd = Seq("HAVING", "ORDER", "LIMIT", "OFFSET", "WINDOW",
-        "UNION", "INTERSECT", "EXCEPT")
-      .map(k => YqlScript.findTopKw(sql, k, byAt))
-      .filter(_ >= 0).sorted.headOption.getOrElse(sql.length)
+    val groupEnd = Some(SqlText.findKw(sql, Seq("HAVING", "ORDER", "LIMIT",
+        "OFFSET", "WINDOW", "UNION", "INTERSECT", "EXCEPT"), byAt))
+      .filter(_ >= 0).getOrElse(sql.length)
     val selectList = sql.substring(selAt + 6, fromAt)
     val fromText = sql.substring(fromAt + 4,
       if (whereAt >= 0) whereAt else groupAt).trim
@@ -142,13 +118,13 @@ object SessionLambda {
 
     // the SessionWindow item (+ optional AS alias) vs the other keys
     var alias: Option[String] = None
-    val keys = YqlScript.splitTopLevel(groupText).map(_.trim)
+    val keys = SqlText.split(groupText).map(_.trim)
       .filter(_.nonEmpty).flatMap { item =>
-        if (re.findFirstIn(YqlScript.maskQuotes(item)).isEmpty) Some(item)
+        if (re.findFirstIn(SqlText.mask(item)).isEmpty) Some(item)
         else {
-          val after = item.substring(YqlScript.matchParen(item,
+          val after = item.substring(SqlText.matchBracket(item,
             item.indexOf('(', re.findFirstMatchIn(
-              YqlScript.maskQuotes(item)).get.start)) + 1).trim
+              SqlText.mask(item)).get.start)) + 1).trim
           if (after.nonEmpty) {
             val am = "(?i)^AS\\s+([A-Za-z_][A-Za-z0-9_]*)$".r
               .findFirstMatchIn(after)

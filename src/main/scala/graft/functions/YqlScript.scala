@@ -158,7 +158,7 @@ object YqlScript {
       evalCond: Option[String => Boolean] = None,
       libraries: Map[String, String] = Map.empty): Lowered = {
     val sts = scala.collection.mutable.ArrayBuffer(
-      splitStatements(script).map(_.trim).filter(_.nonEmpty): _*)
+      SqlText.split(script, ";").map(_.trim).filter(_.nonEmpty): _*)
     val scalars = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val lambdas = scala.collection.mutable.LinkedHashMap.empty[String, Lambda]
     val actions = scala.collection.mutable.LinkedHashMap
@@ -185,7 +185,7 @@ object YqlScript {
     val anonRun = anonCounter.incrementAndGet()
     val anonNames = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def rewriteAnon(text: String): String = {
-      val masked = maskQuotes(text)
+      val masked = SqlText.mask(text)
       val re = "@(\\$?[A-Za-z_][A-Za-z0-9_]*)".r
       val sb = new StringBuilder
       var last = 0
@@ -217,10 +217,10 @@ object YqlScript {
       // ELSE branch's) has its closing END DO
       if (st.takeWhile(_.isLetter).toUpperCase
             .matches("DO|EVALUATE|IF|FOR|PARALLEL") &&
-          findTopKw(st, "BEGIN") >= 0) {
+          SqlText.findKw(st, "BEGIN") >= 0) {
         def countTopKw(s: String, kw: String): Int = {
-          var c = 0; var at = findTopKw(s, kw)
-          while (at >= 0) { c += 1; at = findTopKw(s, kw, at + kw.length) }
+          var c = 0; var at = SqlText.findKw(s, kw)
+          while (at >= 0) { c += 1; at = SqlText.findKw(s, kw, at + kw.length) }
           c
         }
         while (countTopKw(st, "BEGIN") > countTopKw(st, "END DO")) {
@@ -249,7 +249,7 @@ object YqlScript {
       }
       if (firstWord != "PRAGMA" && pragmaFiles.nonEmpty &&
           "(?i)\\b(FileContent|FilePath|FolderPath|ParseFile)\\s*\\(".r
-            .findFirstIn(maskQuotes(st)).isDefined)
+            .findFirstIn(SqlText.mask(st)).isDefined)
         st = lowerFileFns(st, pragmaFiles)
       if (firstWord == "PRAGMA") {
         val p = st.drop("PRAGMA".length).trim
@@ -411,7 +411,7 @@ object YqlScript {
           .findFirstMatchIn(st).getOrElse(throw new IllegalArgumentException(
             s"malformed IMPORT (IMPORT lib SYMBOLS $$a, ...): ${st.take(60)}"))
         val lib = m.group(1).stripPrefix("`").stripSuffix("`")
-        val syms = splitTopLevel(m.group(2)).map(_.trim).filter(_.nonEmpty)
+        val syms = SqlText.split(m.group(2)).map(_.trim).filter(_.nonEmpty)
           .map { s0 =>
             require(s0.matches("\\$[A-Za-z_][A-Za-z0-9_]*"),
               s"malformed IMPORT symbol: ${s0.take(40)}")
@@ -460,7 +460,7 @@ object YqlScript {
               val curried = factory
                 .filterNot(_.group(2).equalsIgnoreCase("options"))
                 .filter { fm =>
-                  matchParen(rhs.trim, fm.end - 1) == rhs.trim.length - 1 }
+                  SqlText.matchBracket(rhs.trim, fm.end - 1) == rhs.trim.length - 1 }
               curried match {
                 case Some(fm) =>
                   val fn = fm.group(2).toLowerCase
@@ -479,7 +479,7 @@ object YqlScript {
                   val body = lowerSelect(substitute(rhs.trim, scalars, lambdas))
                   // wrap unless already ONE balanced group (a subselect)
                   scalars(name) =
-                    if (body.startsWith("(") && matchParen(body, 0) == body.length - 1)
+                    if (body.startsWith("(") && SqlText.matchBracket(body, 0) == body.length - 1)
                       body
                     else "(" + body + ")"
               }
@@ -495,8 +495,6 @@ object YqlScript {
       anonNames.values.toSeq)
   }
 
-  /** First index of keyword `kw` in `s` at paren depth 0 outside
-    * quotes (whole-word match), or -1. */
   /** Pragmas whose semantics CHANGE query results relative to this
     * engine's behavior (reference pragma table sql_query.cpp:2939-3337;
     * docs yt/docs/en/yql/syntax/pragma.md) → lowercase name → why it
@@ -527,27 +525,6 @@ object YqlScript {
   // rewrites agg(DISTINCT) OVER onto collect_set when the pragma is
   // set, and raises the reference's error without it.)
 
-  private[functions] def findTopKw(s: String, kw: String, from: Int = 0): Int = {
-    var i = from; var quote: Char = 0; var depth = 0
-    val up = s.toUpperCase
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' | '{' => depth += 1
-        case ')' | '}' => depth -= 1
-        case _ =>
-          if (depth == 0 && up.startsWith(kw, i) &&
-              (i == 0 || !s.charAt(i - 1).isLetterOrDigit) &&
-              (i + kw.length >= s.length ||
-                !s.charAt(i + kw.length).isLetterOrDigit)) return i
-      }
-      i += 1
-    }
-    -1
-  }
-
   /** The `Streaming::Process` / `Streaming::ProcessInline` spelling of
     * PROCESS USING (streaming_udf.cpp:694,765; signature
     * (stream, command[, arguments][, inputDelimiter][, outputDelimiter])):
@@ -558,17 +535,17 @@ object YqlScript {
   private def lowerProcessPipe(st: String,
       scalars: collection.Map[String, String],
       lambdas: collection.Map[String, Lambda]): Option[PipeStmt] = {
-    val usingAt = findTopKw(st, "USING")
+    val usingAt = SqlText.findKw(st, "USING")
     if (usingAt < 0) return None
-    val whereAt = findTopKw(st, "WHERE")
+    val whereAt = SqlText.findKw(st, "WHERE")
     val usingEnd = if (whereAt > usingAt) whereAt else st.length
     val call = substitute(st.substring(usingAt + 5, usingEnd).trim,
       scalars, lambdas)
     val m = "(?i)^Streaming\\s*::\\s*(Process|ProcessInline)\\s*\\("
       .r.findFirstMatchIn(call).getOrElse(return None)
     val open = call.indexOf('(', m.end - 1)
-    val close = matchParen(call, open)
-    val args = splitTopLevel(call.substring(open + 1, close))
+    val close = SqlText.matchBracket(call, open)
+    val args = SqlText.split(call.substring(open + 1, close))
       .map(_.trim).filter(_.nonEmpty)
     require(args.nonEmpty &&
       args.head.replaceAll("\\s", "").equalsIgnoreCase("TableRows()"),
@@ -587,8 +564,8 @@ object YqlScript {
       if (args.length >= 3 && args(2).replaceAll("\\s", "")
           .toLowerCase.startsWith("aslist(")) {
         val o2 = args(2).indexOf('(')
-        splitTopLevel(args(2).substring(o2 + 1,
-          matchParen(args(2), o2))).map(a => strLit(a, "an argument"))
+        SqlText.split(args(2).substring(o2 + 1,
+          SqlText.matchBracket(args(2), o2))).map(a => strLit(a, "an argument"))
       } else Seq.empty
     val delims = args.drop(if (extra.nonEmpty) 3 else 2)
       .map(a => strLit(a, "a delimiter"))
@@ -621,7 +598,7 @@ object YqlScript {
   private def lowerProcess(st: String,
       scalars: collection.Map[String, String],
       lambdas: collection.Map[String, Lambda]): String = {
-    def findKw(kw: String): Int = findTopKw(st, kw)
+    def findKw(kw: String): Int = SqlText.findKw(st, kw)
     val usingAt = findKw("USING")
     val whereAt = findKw("WHERE")
     val srcEnd = Seq(usingAt, whereAt, st.length).filter(_ >= 0).min
@@ -664,10 +641,10 @@ object YqlScript {
     val m = "(?i)^AsStruct\\s*\\(".r.findFirstMatchIn(t)
       .getOrElse(throw new IllegalArgumentException(
         s"$ctx lambda body must be AsStruct(expr AS name, ...)"))
-    val close = matchParen(t, m.end - 1)
+    val close = SqlText.matchBracket(t, m.end - 1)
     require(close == t.length - 1,
       s"$ctx lambda body must be a single AsStruct(...) call")
-    splitTopLevel(t.substring(m.end, close))
+    SqlText.split(t.substring(m.end, close))
       .map(_.trim).filter(_.nonEmpty).mkString(", ")
   }
 
@@ -699,30 +676,30 @@ object YqlScript {
       scalars: collection.Map[String, String],
       lambdas: collection.Map[String, Lambda]): String = {
     import java.util.regex.{Matcher, Pattern}
-    val presortAt = findTopKw(st, "PRESORT")
-    val onAt = findTopKw(st, "ON")
-    val usingAt = findTopKw(st, "USING")
+    val presortAt = SqlText.findKw(st, "PRESORT")
+    val onAt = SqlText.findKw(st, "ON")
+    val usingAt = SqlText.findKw(st, "USING")
     require(onAt >= 0 && usingAt > onAt, "REDUCE requires ON ... USING ...")
-    val whereAt = findTopKw(st, "WHERE", usingAt)
-    val havingAt = findTopKw(st, "HAVING", usingAt)
-    val assumeAt = findTopKw(st, "ASSUME", usingAt)
+    val whereAt = SqlText.findKw(st, "WHERE", usingAt)
+    val havingAt = SqlText.findKw(st, "HAVING", usingAt)
+    val assumeAt = SqlText.findKw(st, "ASSUME", usingAt)
     val usingEnd = Seq(whereAt, havingAt, assumeAt, st.length)
       .filter(_ >= 0).min
     val srcEnd = if (presortAt >= 0) presortAt else onAt
     val head = st.substring(0, srcEnd).trim.substring("REDUCE".length).trim
-    require(splitTopLevel(head).length == 1,
+    require(SqlText.split(head).length == 1,
       "multi-input REDUCE is not supported")
     val src = substitute(head, scalars, lambdas)
     val presort: Seq[(String, Boolean)] =
       if (presortAt < 0) Nil
-      else splitTopLevel(st.substring(presortAt + "PRESORT".length, onAt))
+      else SqlText.split(st.substring(presortAt + "PRESORT".length, onAt))
         .map(_.trim).filter(_.nonEmpty).map { item =>
           val up = item.toUpperCase
           if (up.endsWith(" DESC")) (item.dropRight(5).trim, false)
           else if (up.endsWith(" ASC")) (item.dropRight(4).trim, true)
           else (item, true)
         }.map { case (e, asc) => (substitute(e, scalars, lambdas), asc) }
-    val keys = splitTopLevel(st.substring(onAt + 2, usingAt))
+    val keys = SqlText.split(st.substring(onAt + 2, usingAt))
       .map(_.trim).filter(_.nonEmpty)
     require(keys.nonEmpty, "REDUCE ON requires at least one key column")
     var call = st.substring(usingAt + "USING".length, usingEnd).trim
@@ -734,7 +711,7 @@ object YqlScript {
     val m = "^\\$([A-Za-z_][A-Za-z0-9_]*)\\s*\\(".r.findFirstMatchIn(call)
       .getOrElse(throw new IllegalArgumentException(
         s"REDUCE USING supports `$$lambda(arg)`, got: ${call.take(60)}"))
-    val close = matchParen(call, m.end - 1)
+    val close = SqlText.matchBracket(call, m.end - 1)
     require(call.substring(close + 1).trim.isEmpty,
       "trailing text after the REDUCE USING call")
     val lam = lambdas.getOrElse(m.group(1),
@@ -847,12 +824,12 @@ object YqlScript {
     // optional column list `(a, b)` between target and source
     var colList = ""
     if (src.startsWith("(")) {
-      val close = matchParen(src, 0)
+      val close = SqlText.matchBracket(src, 0)
       val inner = src.substring(1, close)
       val rest = src.substring(close + 1).trim
       val restKw = rest.takeWhile(_.isLetter).toUpperCase
       if ((restKw == "SELECT" || restKw == "VALUES") &&
-          splitTopLevel(inner).forall(
+          SqlText.split(inner).forall(
             _.trim.matches("[A-Za-z_][A-Za-z0-9_]*|`[^`]+`"))) {
         colList = s" ($inner)"; src = rest
       }
@@ -876,14 +853,14 @@ object YqlScript {
     * a column list counts — `returning` as an identifier elsewhere is
     * left alone. */
   private def stripReturning(st: String): (String, Option[Seq[String]]) = {
-    var at = findTopKw(st, "RETURNING")
+    var at = SqlText.findKw(st, "RETURNING")
     var last = -1
-    while (at >= 0) { last = at; at = findTopKw(st, "RETURNING", at + 9) }
+    while (at >= 0) { last = at; at = SqlText.findKw(st, "RETURNING", at + 9) }
     if (last < 0) return (st, None)
     val tail = st.substring(last + "RETURNING".length).trim
     if (tail == "*") (st.substring(0, last).trim, Some(Nil))
     else {
-      val cols = splitTopLevel(tail).map(_.trim)
+      val cols = SqlText.split(tail).map(_.trim)
       if (cols.nonEmpty &&
           cols.forall(_.matches("[A-Za-z_][A-Za-z0-9_]*|`[^`]+`")))
         (st.substring(0, last).trim, Some(cols))
@@ -910,14 +887,14 @@ object YqlScript {
     var src = m.group(3).trim
     var cols: Seq[String] = Nil
     if (src.startsWith("(")) {
-      val close = matchParen(src, 0)
+      val close = SqlText.matchBracket(src, 0)
       val inner = src.substring(1, close)
       val rest = src.substring(close + 1).trim
       val restKw = rest.takeWhile(_.isLetter).toUpperCase
       if ((restKw == "SELECT" || restKw == "VALUES") &&
-          splitTopLevel(inner).forall(
+          SqlText.split(inner).forall(
             _.trim.matches("[A-Za-z_][A-Za-z0-9_]*|`[^`]+`"))) {
-        cols = splitTopLevel(inner).map(_.trim); src = rest
+        cols = SqlText.split(inner).map(_.trim); src = rest
       }
     }
     val kw = src.takeWhile(_.isLetter).toUpperCase
@@ -946,14 +923,14 @@ object YqlScript {
     var src = m.group(2).trim
     var cols: Seq[String] = Nil
     if (src.startsWith("(")) {
-      val close = matchParen(src, 0)
+      val close = SqlText.matchBracket(src, 0)
       val inner = src.substring(1, close)
       val rest = src.substring(close + 1).trim
       val restKw = rest.takeWhile(_.isLetter).toUpperCase
       if ((restKw == "SELECT" || restKw == "VALUES") &&
-          splitTopLevel(inner).forall(
+          SqlText.split(inner).forall(
             _.trim.matches("[A-Za-z_][A-Za-z0-9_]*|`[^`]+`"))) {
-        cols = splitTopLevel(inner).map(_.trim); src = rest
+        cols = SqlText.split(inner).map(_.trim); src = rest
       }
     }
     val kw = src.takeWhile(_.isLetter).toUpperCase
@@ -969,7 +946,7 @@ object YqlScript {
   /** Unwrap one level of full-statement parentheses (`ON (SELECT ...)`). */
   private def unwrapGroup(s0: String): String = {
     var s = s0.trim
-    while (s.startsWith("(") && matchParen(s, 0) == s.length - 1)
+    while (s.startsWith("(") && SqlText.matchBracket(s, 0) == s.length - 1)
       s = s.substring(1, s.length - 1).trim
     s
   }
@@ -1022,10 +999,10 @@ object YqlScript {
         unwrapGroup(rest.drop("ON".length)), scalars, lambdas))), returning)
     else {
       require(kw == "SET", s"UPDATE expects SET or ON, got: ${rest.take(60)}")
-      val whereAt = findTopKw(rest, "WHERE")
+      val whereAt = SqlText.findKw(rest, "WHERE")
       val setText = rest.substring("SET".length,
         if (whereAt >= 0) whereAt else rest.length)
-      val sets = splitTopLevel(setText).map(_.trim).filter(_.nonEmpty).map { item =>
+      val sets = SqlText.split(setText).map(_.trim).filter(_.nonEmpty).map { item =>
         val mm = "^([A-Za-z_][A-Za-z0-9_]*|`[^`]+`)\\s*=\\s*([\\s\\S]+)$".r
           .findFirstMatchIn(item).getOrElse(
             throw new IllegalArgumentException(
@@ -1089,9 +1066,9 @@ object YqlScript {
       val name = m.group(2)
       val rest = m.group(3).trim
       if (rest.startsWith("(")) {
-        val close = matchParen(rest, 0)
+        val close = SqlText.matchBracket(rest, 0)
         var keys = Seq.empty[String]
-        val cols = splitTopLevel(rest.substring(1, close)).map(_.trim)
+        val cols = SqlText.split(rest.substring(1, close)).map(_.trim)
           .filter(_.nonEmpty).flatMap { item =>
             val pk = "(?i)^PRIMARY\\s+KEY\\s*\\(([^)]*)\\)$".r
               .findFirstMatchIn(item)
@@ -1142,7 +1119,7 @@ object YqlScript {
             val wm = "(?i)^WITH\\s*\\(([\\s\\S]*)\\)$".r.findFirstMatchIn(w)
               .getOrElse(throw new IllegalArgumentException(
                 s"malformed WITH table settings: ${w.take(60)}"))
-            splitTopLevel(wm.group(1)).map(_.trim).filter(_.nonEmpty)
+            SqlText.split(wm.group(1)).map(_.trim).filter(_.nonEmpty)
               .foreach { entry =>
                 val em = "^([A-Za-z_][A-Za-z0-9_]*)\\s*=\\s*([\\s\\S]+)$".r
                   .findFirstMatchIn(entry).getOrElse(
@@ -1251,8 +1228,8 @@ object YqlScript {
         "DEFINE ACTION (side-effect templates) is not supported; " +
         "use DEFINE SUBQUERY")
     val name = m.group(2)
-    val close = matchParen(st, m.end - 1)
-    val params = splitTopLevel(st.substring(m.end, close)).map(_.trim)
+    val close = SqlText.matchBracket(st, m.end - 1)
+    val params = SqlText.split(st.substring(m.end, close)).map(_.trim)
       .filter(_.nonEmpty).map(_.stripSuffix("?").stripPrefix("$"))
     val rest = st.substring(close + 1).trim
     require(rest.take(2).equalsIgnoreCase("AS"),
@@ -1264,7 +1241,7 @@ object YqlScript {
     val locals = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val localLams = scala.collection.mutable.LinkedHashMap.empty[String, Lambda]
     var select: Option[String] = None
-    splitStatements(body).map(_.trim).filter(_.nonEmpty).foreach { s0 =>
+    SqlText.split(body, ";").map(_.trim).filter(_.nonEmpty).foreach { s0 =>
       val scope = scalars ++ locals
       val lamScope = lambdas ++ localLams
       bindingOf(s0) match {
@@ -1278,7 +1255,7 @@ object YqlScript {
               val b = lowerSelect(substitute(rhs.trim, scope, lamScope,
                 keep0 = params.toSet))
               locals(n) =
-                if (b.startsWith("(") && matchParen(b, 0) == b.length - 1) b
+                if (b.startsWith("(") && SqlText.matchBracket(b, 0) == b.length - 1) b
                 else "(" + b + ")"
           }
         case None =>
@@ -1303,8 +1280,8 @@ object YqlScript {
       .findFirstMatchIn(st).getOrElse(throw new IllegalArgumentException(
         s"malformed DEFINE ACTION: ${st.take(60)}"))
     val name = m.group(1)
-    val close = matchParen(st, m.end - 1)
-    val params = splitTopLevel(st.substring(m.end, close)).map(_.trim)
+    val close = SqlText.matchBracket(st, m.end - 1)
+    val params = SqlText.split(st.substring(m.end, close)).map(_.trim)
       .filter(_.nonEmpty).map(_.stripSuffix("?").stripPrefix("$"))
     val rest = st.substring(close + 1).trim
     require(rest.take(2).equalsIgnoreCase("AS"),
@@ -1329,13 +1306,13 @@ object YqlScript {
     val lambdas = scala.collection.mutable.LinkedHashMap.empty[String, Lambda]
     var exports = Set.empty[String]
     val sts = scala.collection.mutable.ArrayBuffer(
-      splitStatements(text).map(_.trim).filter(_.nonEmpty): _*)
+      SqlText.split(text, ";").map(_.trim).filter(_.nonEmpty): _*)
     var idx = 0
     while (idx < sts.length) {
       var st = sts(idx)
       val first = st.takeWhile(_.isLetter).toUpperCase
       if (first == "EXPORT") {
-        val names = splitTopLevel(st.drop("EXPORT".length)).map(_.trim)
+        val names = SqlText.split(st.drop("EXPORT".length)).map(_.trim)
           .filter(_.nonEmpty).map { s0 =>
             require(s0.matches("\\$[A-Za-z_][A-Za-z0-9_]*"),
               s"library `$name`: malformed EXPORT symbol: ${s0.take(40)}")
@@ -1360,7 +1337,7 @@ object YqlScript {
             case None =>
               val body = lowerSelect(substitute(rhs.trim, scalars, lambdas))
               scalars(n) =
-                if (body.startsWith("(") && matchParen(body, 0) == body.length - 1)
+                if (body.startsWith("(") && SqlText.matchBracket(body, 0) == body.length - 1)
                   body
                 else "(" + body + ")"
           }
@@ -1387,25 +1364,25 @@ object YqlScript {
     if (body.toUpperCase.startsWith("BEGIN")) {
       val up = body.toUpperCase
       require(up.endsWith("END DO"), "DO BEGIN without END DO")
-      splitStatements(
-        body.substring("BEGIN".length, body.length - "END DO".length))
+      SqlText.split(
+        body.substring("BEGIN".length, body.length - "END DO".length), ";")
         .map(_.trim).filter(_.nonEmpty)
     } else if (body.matches("(?i)EMPTY_ACTION\\s*\\(\\s*\\)")) Nil
     else {
       val m = "^\\$([A-Za-z_][A-Za-z0-9_]*)\\s*\\(".r.findFirstMatchIn(body)
         .getOrElse(throw new IllegalArgumentException(
           s"DO expects $$action(args), BEGIN...END DO, or EMPTY_ACTION(): ${body.take(60)}"))
-      val close = matchParen(body, m.end - 1)
+      val close = SqlText.matchBracket(body, m.end - 1)
       require(body.substring(close + 1).trim.isEmpty,
         "trailing text after the DO call")
       val (params, tmpl) = actions.getOrElse(m.group(1),
         throw new IllegalArgumentException(s"undeclared action $$${m.group(1)}"))
-      val args = splitTopLevel(body.substring(m.end, close)).map(_.trim)
+      val args = SqlText.split(body.substring(m.end, close)).map(_.trim)
         .filter(_.nonEmpty)
       require(args.length == params.length,
         s"action $$${m.group(1)} expects ${params.length} args, got ${args.length}")
       val bound = params.zip(args).map { case (p, a) => p -> s"($a)" }.toMap
-      splitStatements(replaceNames(tmpl, bound))
+      SqlText.split(replaceNames(tmpl, bound), ";")
         .map(_.trim).filter(_.nonEmpty)
     }
   }
@@ -1424,23 +1401,23 @@ object YqlScript {
       .findFirstMatchIn(st).getOrElse(throw new IllegalArgumentException(
         s"malformed EVALUATE FOR: ${st.take(60)}"))
     val x = m.group(1)
-    val doAt = findTopKw(st, "DO", m.end)
+    val doAt = SqlText.findKw(st, "DO", m.end)
     require(doAt > 0, "EVALUATE FOR requires DO")
     var listText = substitute(st.substring(m.end, doAt).trim, scalars, lambdas)
     // a $binding substitutes as one parenthesized group — unwrap it
     while (listText.startsWith("(") &&
-        matchParen(listText, 0) == listText.length - 1)
+        SqlText.matchBracket(listText, 0) == listText.length - 1)
       listText = listText.substring(1, listText.length - 1).trim
     val elems: Seq[String] = {
       val asList = "(?i)^AsList\\s*\\(".r.findFirstMatchIn(listText)
       if (asList.isDefined) {
-        val close = matchParen(listText, asList.get.end - 1)
+        val close = SqlText.matchBracket(listText, asList.get.end - 1)
         require(listText.substring(close + 1).trim.isEmpty,
           "EVALUATE FOR list must be a single AsList(...) literal")
-        splitTopLevel(listText.substring(asList.get.end, close))
+        SqlText.split(listText.substring(asList.get.end, close))
           .map(_.trim).filter(_.nonEmpty)
       } else if (listText.startsWith("[") && listText.endsWith("]"))
-        splitTopLevel(listText.substring(1, listText.length - 1))
+        SqlText.split(listText.substring(1, listText.length - 1))
           .map(_.trim).filter(_.nonEmpty)
       else throw new IllegalArgumentException(
         "EVALUATE FOR supports literal lists (AsList(...) or [...]); " +
@@ -1449,8 +1426,8 @@ object YqlScript {
     // the loop DO body ends either at a top-level ELSE or at the end
     val afterDo = st.substring(doAt + 2).trim
     val (loopBody, elseBody) = {
-      val endDo = findTopKw(st, "END DO", doAt)
-      val elseAt = findTopKw(st, "ELSE",
+      val endDo = SqlText.findKw(st, "END DO", doAt)
+      val elseAt = SqlText.findKw(st, "ELSE",
         if (endDo >= 0) endDo else doAt)
       if (elseAt < 0) (afterDo, None)
       else {
@@ -1478,13 +1455,13 @@ object YqlScript {
       lambdas: collection.Map[String, Lambda],
       evalCond: Option[String => Boolean]): Seq[String] = {
     val m = "(?i)^EVALUATE\\s+IF\\s+".r.findFirstMatchIn(st).get
-    val doAt = findTopKw(st, "DO", m.end)
+    val doAt = SqlText.findKw(st, "DO", m.end)
     require(doAt > 0, "EVALUATE IF requires DO")
     val cond = substitute(st.substring(m.end, doAt).trim, scalars, lambdas)
     val hook = evalCond.getOrElse(throw new IllegalArgumentException(
       "EVALUATE IF needs a condition evaluator; run through YqlSql.sql"))
-    val endDo = findTopKw(st, "END DO", doAt)
-    val elseAt = findTopKw(st, "ELSE", if (endDo >= 0) endDo else doAt)
+    val endDo = SqlText.findKw(st, "END DO", doAt)
+    val elseAt = SqlText.findKw(st, "ELSE", if (endDo >= 0) endDo else doAt)
     val (thenBody, elseBody) =
       if (elseAt < 0) (st.substring(doAt + 2).trim, None)
       else {
@@ -1500,7 +1477,7 @@ object YqlScript {
   /** Strip a trailing top-level `INTO RESULT name` (select_kind
     * suffix), validating its shape. */
   private def stripIntoResult(st: String): String = {
-    val at = findTopKw(st, "INTO RESULT")
+    val at = SqlText.findKw(st, "INTO RESULT")
     // `INSERT/UPSERT/REPLACE INTO result ...` is a write to a table
     // named "result", not the select_kind suffix
     val first = st.trim.takeWhile(_.isLetter).toUpperCase
@@ -1519,36 +1496,18 @@ object YqlScript {
     * expanded before their spliced statements resolve bindings). */
   private def replaceNames(text: String, map: Map[String, String]): String = {
     val out = new StringBuilder
-    var i = 0; var quote: Char = 0
-    val n = text.length
-    while (i < n) {
-      val c = text.charAt(i)
-      if (quote != 0) {
-        out.append(c)
-        if (c == quote) quote = 0
-        else if (c == '\\' && quote != '`' && i + 1 < n) {
-          out.append(text.charAt(i + 1)); i += 1
-        }
-        i += 1
-      } else if (c == '\'' || c == '"' || c == '`') {
-        quote = c; out.append(c); i += 1
-      } else if (c == '$' && i + 1 < n &&
-          (text.charAt(i + 1).isLetter || text.charAt(i + 1) == '_')) {
-        var j = i + 1
-        while (j < n && (text.charAt(j).isLetterOrDigit || text.charAt(j) == '_')) j += 1
-        val name = text.substring(i + 1, j)
-        map.get(name) match {
-          case Some(repl) => out.append(repl)
-          case None => out.append(text.substring(i, j))
-        }
-        i = j
-      } else { out.append(c); i += 1 }
+    var last = 0
+    NamedRef.findAllMatchIn(SqlText.mask(text)).foreach { m =>
+      map.get(m.group(1)).foreach { repl =>
+        out.append(text.substring(last, m.start)).append(repl); last = m.end
+      }
     }
-    out.toString
+    out.append(text.substring(last)).toString
   }
 
-  // ——— statement splitting (quote- and comment-aware, ';' at paren
-  // depth 0 only) ———
+  /** A `$name` reference (matched over [[SqlText.mask]]). */
+  private val NamedRef = "\\$([\\p{L}_][\\p{L}\\p{Nd}_]*)".r
+
   /** FileContent / FilePath / FolderPath / ParseFile over the
     * PRAGMA File/Folder attachments (basic.md#file-content-path):
     * everything resolves at LOWERING time — content and paths inline
@@ -1568,12 +1527,12 @@ object YqlScript {
     }
     var st = st0
     val re = "(?i)\\b(FileContent|FilePath|FolderPath|ParseFile)\\s*\\(".r
-    var m = re.findFirstMatchIn(maskQuotes(st))
+    var m = re.findFirstMatchIn(SqlText.mask(st))
     while (m.isDefined) {
       val mm = m.get
       val fn = mm.group(1).toLowerCase
-      val close = matchParen(st, mm.end - 1)
-      val args = splitTopLevel(st.substring(mm.end, close)).map(_.trim)
+      val close = SqlText.matchBracket(st, mm.end - 1)
+      val args = SqlText.split(st.substring(mm.end, close)).map(_.trim)
       def pathOf(alias: String): String =
         files.getOrElse(alias, throw new IllegalArgumentException(
           s"${mm.group(1)}: no attached file '$alias' " +
@@ -1625,40 +1584,9 @@ object YqlScript {
             s"CAST(array(${lines.map(lit).mkString(", ")}) AS ARRAY<${t.sql}>)"
       }
       st = st.substring(0, mm.start) + repl + st.substring(close + 1)
-      m = re.findFirstMatchIn(maskQuotes(st))
+      m = re.findFirstMatchIn(SqlText.mask(st))
     }
     st
-  }
-
-  private[functions] def splitStatements(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var i = 0; var depth = 0; var quote: Char = 0
-    val n = s.length
-    while (i < n) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        cur.append(c)
-        if (c == quote) quote = 0
-        else if (c == '\\' && quote != '`' && i + 1 < n) {
-          cur.append(s.charAt(i + 1)); i += 1
-        }
-        i += 1
-      } else if (c == '-' && i + 1 < n && s.charAt(i + 1) == '-') {
-        while (i < n && s.charAt(i) != '\n') i += 1 // drop -- comments
-      } else {
-        c match {
-          case '\'' | '"' | '`' => quote = c; cur.append(c)
-          case '(' | '{' => depth += 1; cur.append(c)
-          case ')' | '}' => depth -= 1; cur.append(c)
-          case ';' if depth == 0 => out += cur.toString; cur.clear()
-          case _ => cur.append(c)
-        }
-        i += 1
-      }
-    }
-    out += cur.toString
-    out.toSeq
   }
 
   /** `$name = rhs` (single-bind form of `named_nodes_stmt`). */
@@ -1689,7 +1617,7 @@ object YqlScript {
       .map(_.trim.stripSuffix("?").stripPrefix("$"))
     if (m.group(2) == "(") {
       val bodyStart = m.end
-      val bodyEnd = matchParen(t, bodyStart - 1)
+      val bodyEnd = SqlText.matchBracket(t, bodyStart - 1)
       if (bodyEnd != t.length - 1) return None
       Some(Lambda(params, t.substring(bodyStart, bodyEnd).trim))
     } else { // statement body: { stmt; ...; RETURN expr; }
@@ -1697,7 +1625,7 @@ object YqlScript {
       val body = t.substring(m.end, t.length - 1)
       val locals = scala.collection.mutable.LinkedHashMap.empty[String, String]
       var ret: Option[String] = None
-      splitStatements(body).map(_.trim).filter(_.nonEmpty).foreach { st =>
+      SqlText.split(body, ";").map(_.trim).filter(_.nonEmpty).foreach { st =>
         def scope = outerScalars ++ locals // locals shadow outer names
         if (st.take(6).equalsIgnoreCase("RETURN")) {
           require(ret.isEmpty, "lambda body has multiple RETURN statements")
@@ -1717,46 +1645,6 @@ object YqlScript {
     }
   }
 
-  /** index of the ')' matching the '(' at `open` (quote-aware). */
-  private[functions] def matchParen(s: String, open: Int): Int = {
-    var i = open; var depth = 0; var quote: Char = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == quote) quote = 0
-        else if (c == '\\' && quote != '`') i += 1
-      } else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    throw new IllegalArgumentException(s"unbalanced parentheses in: ${s.take(80)}")
-  }
-
-  private[functions] def splitTopLevel(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var d = 0; var start = 0; var i = 0; var quote: Char = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == quote) quote = 0
-        else if (c == '\\' && quote != '`') i += 1
-      } else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' => d += 1
-        case ')' => d -= 1
-        case ',' if d == 0 => out += s.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.toSeq
-  }
-
   /** Expand `$name` references: lambda calls inline their body with
     * arguments substituted; bare lambda refs lower to Spark lambda
     * literals; scalars substitute their bound text. Quote-aware; an
@@ -1770,71 +1658,59 @@ object YqlScript {
     // e.g. an AggregateTransformInput argument) bind their own $params
     // — those names stay verbatim for the downstream lambda lowering
     // rather than erroring as undeclared bindings
+    val masked = SqlText.mask(text)
     val keep = keep0 ++
       "\\(\\s*\\$[A-Za-z_][A-Za-z0-9_]*(\\s*,\\s*\\$[A-Za-z_][A-Za-z0-9_]*)*\\s*\\)\\s*->".r
-        .findAllIn(maskQuotes(text))
+        .findAllIn(masked)
         .flatMap(h => "\\$([A-Za-z_][A-Za-z0-9_]*)".r.findAllMatchIn(h)
           .map(_.group(1)))
         .toSet
     val out = new StringBuilder
-    var i = 0; var quote: Char = 0
+    var i = 0
     val n = text.length
-    while (i < n) {
-      val c = text.charAt(i)
-      if (quote != 0) {
-        out.append(c)
-        if (c == quote) quote = 0
-        else if (c == '\\' && quote != '`' && i + 1 < n) {
-          out.append(text.charAt(i + 1)); i += 1
-        }
-        i += 1
-      } else if (c == '\'' || c == '"' || c == '`') {
-        quote = c; out.append(c); i += 1
-      } else if (c == '$' && i + 1 < n &&
-          (text.charAt(i + 1).isLetter || text.charAt(i + 1) == '_')) {
-        var j = i + 1
-        while (j < n && (text.charAt(j).isLetterOrDigit || text.charAt(j) == '_')) j += 1
-        val name = text.substring(i + 1, j)
-        var k = j
-        while (k < n && text.charAt(k).isWhitespace) k += 1
-        val isCall = k < n && text.charAt(k) == '(' && lambdas.contains(name)
-        if (keep(name)) {
-          out.append(text.substring(i, j)); i = j
-        } else if (isCall) {
-          val close = matchParen(text, k)
-          // arguments resolve in the CALLER's scope before binding
-          val args = splitTopLevel(text.substring(k + 1, close)).map(_.trim)
-            .filter(_.nonEmpty)
-            .map(a => substitute(a, scalars, lambdas, keep))
-          val lam = lambdas(name)
-          require(args.length == lam.params.length,
-            s"lambda $$$name expects ${lam.params.length} args, got ${args.length}")
-          val bound = lam.params.zip(args).map { case (p, a) =>
-            p -> ("(" + a + ")")
-          }.toMap
-          out.append("(")
-            .append(substitute(lam.body, bound, Map.empty[String, Lambda]))
-            .append(")")
-          i = close + 1
-        } else if (lambdas.contains(name)) {
-          // bare lambda reference → Spark SQL lambda literal
-          val lam = lambdas(name)
-          val fresh = lam.params.map(p => p -> s"__la_$p").toMap
-          val body = substitute(lam.body, fresh.map { case (k2, v) => k2 -> v },
-            Map.empty[String, Lambda])
-          val head =
-            if (lam.params.length == 1) fresh(lam.params.head)
-            else lam.params.map(fresh).mkString("(", ", ", ")")
-          out.append(head).append(" -> ").append(body)
-          i = j
-        } else scalars.get(name) match {
-          case Some(repl) => out.append(repl); i = j
-          case None => throw new IllegalArgumentException(
-            s"undeclared named expression $$$name")
-        }
-      } else { out.append(c); i += 1 }
+    for (m <- NamedRef.findAllMatchIn(masked) if m.start >= i) {
+      out.append(text.substring(i, m.start))
+      val j = m.end
+      val name = m.group(1)
+      var k = j
+      while (k < n && text.charAt(k).isWhitespace) k += 1
+      val isCall = k < n && text.charAt(k) == '(' && lambdas.contains(name)
+      if (keep(name)) {
+        out.append(text.substring(m.start, j)); i = j
+      } else if (isCall) {
+        val close = SqlText.matchBracket(text, k)
+        // arguments resolve in the CALLER's scope before binding
+        val args = SqlText.split(text.substring(k + 1, close)).map(_.trim)
+          .filter(_.nonEmpty)
+          .map(a => substitute(a, scalars, lambdas, keep))
+        val lam = lambdas(name)
+        require(args.length == lam.params.length,
+          s"lambda $$$name expects ${lam.params.length} args, got ${args.length}")
+        val bound = lam.params.zip(args).map { case (p, a) =>
+          p -> ("(" + a + ")")
+        }.toMap
+        out.append("(")
+          .append(substitute(lam.body, bound, Map.empty[String, Lambda]))
+          .append(")")
+        i = close + 1
+      } else if (lambdas.contains(name)) {
+        // bare lambda reference → Spark SQL lambda literal
+        val lam = lambdas(name)
+        val fresh = lam.params.map(p => p -> s"__la_$p").toMap
+        val body = substitute(lam.body, fresh.map { case (k2, v) => k2 -> v },
+          Map.empty[String, Lambda])
+        val head =
+          if (lam.params.length == 1) fresh(lam.params.head)
+          else lam.params.map(fresh).mkString("(", ", ", ")")
+        out.append(head).append(" -> ").append(body)
+        i = j
+      } else scalars.get(name) match {
+        case Some(repl) => out.append(repl); i = j
+        case None => throw new IllegalArgumentException(
+          s"undeclared named expression $$$name")
+      }
     }
-    out.toString
+    out.append(text.substring(i)).toString
   }
 
   // ——— select-level lowerings ———
@@ -1879,9 +1755,9 @@ object YqlScript {
       }
       if (best >= 0) {
         val open = text.indexOf('(', best)
-        val close = matchParen(text, open)
+        val close = SqlText.matchBracket(text, open)
         val inner = text.substring(open + 1, close)
-        val parts = splitTopLevel(inner).map(_.trim)
+        val parts = SqlText.split(inner).map(_.trim)
         require(parts.length == 2,
           s"$bestName takes (json, 'path' [clauses])")
         val jsonExpr = parts.head
@@ -1982,12 +1858,12 @@ object YqlScript {
     */
   def lowerBitcast(sql: String): String = {
     val re = "(?i)\\bBITCAST\\s*\\(".r
-    re.findFirstMatchIn(maskQuotes(sql)) match {
+    re.findFirstMatchIn(SqlText.mask(sql)) match {
       case None => sql
       case Some(m) =>
-        val close = matchParen(sql, m.end - 1)
+        val close = SqlText.matchBracket(sql, m.end - 1)
         val inner = sql.substring(m.end, close)
-        val at = findTopKw(inner, "AS")
+        val at = SqlText.findKw(inner, "AS")
         require(at > 0, s"BITCAST takes (expr AS IntType): ${inner.take(40)}")
         val x = inner.substring(0, at).trim
         val t = inner.substring(at + 2).trim
@@ -2027,7 +1903,7 @@ object YqlScript {
     * owns state eviction.
     */
   def lowerHop(sql: String): String = {
-    val masked = maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     "(?i)\\bHOP\\s*\\(".r.findFirstMatchIn(masked) match {
       case None => sql
       case Some(m) =>
@@ -2035,8 +1911,8 @@ object YqlScript {
         require(gb.exists(_.end <= m.start),
           "HOP(...) is only valid as a GROUP BY hopping window " +
             "specification (SQLv1.g.in:533)")
-        val close = matchParen(sql, m.end - 1)
-        val args = splitTopLevel(sql.substring(m.end, close)).map(_.trim)
+        val close = SqlText.matchBracket(sql, m.end - 1)
+        val args = SqlText.split(sql.substring(m.end, close)).map(_.trim)
         require(args.length == 4,
           s"HOP takes (time_extractor, hop, interval, delay), got " +
             s"${args.length} argument(s)")
@@ -2056,7 +1932,7 @@ object YqlScript {
         // duplicate spec raises, as the reference does
         // (sql_group_by.cpp:366)
         require("(?i)\\bHOP\\s*\\(".r
-          .findFirstIn(maskQuotes(lowered)).isEmpty,
+          .findFirstIn(SqlText.mask(lowered)).isEmpty,
           "Duplicate hopping window specification.")
         // HOP_START()/HOP_END() → the grouped window's bounds (scan
         // the mask, splice the original)
@@ -2064,7 +1940,7 @@ object YqlScript {
         Seq("HOP_START" -> "window.start", "HOP_END" -> "window.end")
           .foreach { case (kw, repl) =>
             val re = s"(?i)\\b$kw\\s*\\(\\s*\\)".r
-            val msk = maskQuotes(out)
+            val msk = SqlText.mask(out)
             val sb = new StringBuilder
             var last = 0
             re.findAllMatchIn(msk).foreach { mm =>
@@ -2124,11 +2000,11 @@ object YqlScript {
     * (keys, time) sort order, so one exchange serves the whole stack.
     */
   private[graft] def lowerSessionWindowOver(sql: String): String = {
-    val masked = maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     // a window-definition region: inline `OVER (...)` or `WINDOW w AS (...)`
     val regionRe = "(?i)\\b(OVER|WINDOW\\s+[A-Za-z_][A-Za-z0-9_]*\\s+AS)\\s*\\(".r
     val region = regionRe.findAllMatchIn(masked).flatMap { m =>
-      val close = matchParen(sql, m.end - 1)
+      val close = SqlText.matchBracket(sql, m.end - 1)
       val inner = masked.substring(m.end, close)
       "(?i)\\bSessionWindow\\s*\\(".r.findFirstMatchIn(inner)
         .map(sm => (m, close, sm))
@@ -2141,18 +2017,17 @@ object YqlScript {
         "SessionWindow in a window definition needs PARTITION BY " +
           "(docs syntax/window.md#partition)"))
     // the PARTITION BY list runs to ORDER BY / ROWS / RANGE / end
-    val stop = Seq("ORDER", "ROWS", "RANGE")
-      .map(k => findTopKw(inner, k, pb.end)).filter(_ >= 0)
-      .sorted.headOption.getOrElse(inner.length)
-    val items = splitTopLevel(inner.substring(pb.end, stop))
+    val stop = Some(SqlText.findKw(inner, Seq("ORDER", "ROWS", "RANGE"),
+      pb.end)).filter(_ >= 0).getOrElse(inner.length)
+    val items = SqlText.split(inner.substring(pb.end, stop))
       .map(_.trim).filter(_.nonEmpty)
     val (sessItems, keys) = items.partition(i =>
       "(?i)^SessionWindow\\s*\\(".r.findFirstIn(i).isDefined)
     require(sessItems.length == 1,
       "exactly one SessionWindow(...) per window definition")
     val sm = "(?i)^SessionWindow\\s*\\(".r.findFirstMatchIn(sessItems.head).get
-    val sClose = matchParen(sessItems.head, sm.end - 1)
-    val sArgs = splitTopLevel(sessItems.head.substring(sm.end, sClose))
+    val sClose = SqlText.matchBracket(sessItems.head, sm.end - 1)
+    val sArgs = SqlText.split(sessItems.head.substring(sm.end, sClose))
       .map(_.trim)
     require(sArgs.length == 2,
       "SessionWindow in a window definition takes (time_expr, timeout)")
@@ -2161,13 +2036,12 @@ object YqlScript {
     require(!gap.isZero && !gap.isNegative,
       s"SessionWindow timeout must be a positive interval, got: ${sArgs(1)}")
     // splice the sessionized derived table around FROM [... WHERE ...]
-    val fromAt = findTopKw(sql, "FROM")
+    val fromAt = SqlText.findKw(sql, "FROM")
     require(fromAt >= 0, "SessionWindow window needs a FROM source")
-    require(findTopKw(sql, "GROUP") < 0,
+    require(SqlText.findKw(sql, "GROUP") < 0,
       "SessionWindow in a window definition cannot combine with GROUP BY")
-    val fromEndCandidates = Seq("WINDOW", "ORDER", "LIMIT", "HAVING")
-      .map(k => findTopKw(sql, k, fromAt + 4)).filter(_ >= 0)
-    val fromEnd = fromEndCandidates.sorted.headOption.getOrElse(sql.length)
+    val fromEnd = Some(SqlText.findKw(sql, Seq("WINDOW", "ORDER", "LIMIT",
+      "HAVING"), fromAt + 4)).filter(_ >= 0).getOrElse(sql.length)
     val src = sql.substring(fromAt + 4, fromEnd).trim // incl. WHERE
     val pbKeys = if (keys.isEmpty) "" else keys.mkString(", ") + ", "
     val pbOnly = if (keys.isEmpty) "" else "PARTITION BY " + keys.mkString(", ")
@@ -2203,7 +2077,7 @@ object YqlScript {
   }
 
   def lowerSessionWindow(sql: String): String = {
-    val masked = maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     "(?i)\\bSessionWindow\\s*\\(".r.findFirstMatchIn(masked) match {
       case None => sql
       case Some(m) =>
@@ -2211,8 +2085,8 @@ object YqlScript {
         require(gb.exists(_.end <= m.start),
           "SessionWindow(...) is only valid in GROUP BY " +
             "(docs syntax/group_by.md#session-window)")
-        val close = matchParen(sql, m.end - 1)
-        val args = splitTopLevel(sql.substring(m.end, close)).map(_.trim)
+        val close = SqlText.matchBracket(sql, m.end - 1)
+        val args = SqlText.split(sql.substring(m.end, close)).map(_.trim)
         // the extended 4-argument form (order, init, update, calculate)
         // needs a session — [[SessionLambda.rewrite]] owns it later in
         // the pipeline; pass the text through untouched
@@ -2233,7 +2107,7 @@ object YqlScript {
           s"session_window($te, '${gap.toMillis} milliseconds')" +
           sql.substring(tailStart)
         require("(?i)\\bSessionWindow\\s*\\(".r
-          .findFirstIn(maskQuotes(lowered)).isEmpty,
+          .findFirstIn(SqlText.mask(lowered)).isEmpty,
           "Duplicate session window specification.")
         // the alias and SessionStart() read the session key. A BARE
         // select-list occurrence of the alias (preceded by SELECT or a
@@ -2247,7 +2121,7 @@ object YqlScript {
           (("(?i)\\bSessionStart\\s*\\(\\s*\\)", None: Option[String]))
         repls.foreach { case (pat, name) =>
           val re = pat.r
-          val msk = maskQuotes(out)
+          val msk = SqlText.mask(out)
           val sb = new StringBuilder
           var last = 0
           re.findAllMatchIn(msk).foreach { mm =>
@@ -2292,13 +2166,13 @@ object YqlScript {
   def lowerDistinctOverWindow(sql: String, enabled: Boolean): String = {
     val re = "(?i)\\b(count|sum|avg|min|max)(\\s*\\()\\s*distinct\\b".r
     def step(s: String, from: Int): String = {
-      val masked = maskQuotes(s)
+      val masked = SqlText.mask(s)
       re.findFirstMatchIn(masked.substring(from))
         .map(m => (m, m.start + from, m.end + from)) match {
         case None => s
         case Some((m, start, end)) =>
           val open = s.indexOf('(', from + m.start(2))
-          val close = matchParen(s, open)
+          val close = SqlText.matchBracket(s, open)
           val expr = s.substring(end, close).trim
           // OVER follows? if not, it's an ordinary distinct aggregate —
           // Spark handles those natively
@@ -2312,13 +2186,13 @@ object YqlScript {
             "Aggregation with distinct is not allowed over window " +
               "(source.cpp AddAggregationOverWindow); set PRAGMA " +
               "DistinctOverWindow to enable it")
-          require(splitTopLevel(expr).length == 1,
+          require(SqlText.split(expr).length == 1,
             "DISTINCT over window supports a single argument, got: " +
               expr.take(60))
           var j = i + 4
           while (j < s.length && s.charAt(j).isWhitespace) j += 1
           val overEnd =
-            if (j < s.length && s.charAt(j) == '(') matchParen(s, j) + 1
+            if (j < s.length && s.charAt(j) == '(') SqlText.matchBracket(s, j) + 1
             else {
               var k = j
               while (k < s.length &&
@@ -2342,32 +2216,12 @@ object YqlScript {
     step(sql, 0)
   }
 
-  /** Copy of `s` with the INSIDE of quoted spans overwritten by \u0001
-    * so keyword/regex scans cannot match into string literals. Same
-    * length as `s`, so match positions map 1:1 onto the original —
-    * scan the mask, splice from the original. */
-  private[functions] def maskQuotes(s: String): String = {
-    val a = s.toCharArray
-    var i = 0; var quote: Char = 0
-    while (i < a.length) {
-      val c = a(i)
-      if (quote != 0) {
-        if (c == quote) quote = 0
-        else if (c == '\\' && quote != '`' && i + 1 < a.length) {
-          a(i) = '\u0001'; i += 1; a(i) = '\u0001'
-        } else a(i) = '\u0001'
-      } else if (c == '\'' || c == '"' || c == '`') quote = c
-      i += 1
-    }
-    new String(a)
-  }
-
   /** `* WITHOUT a, b` → `* EXCEPT (a, b)` (matched against the
     * quote mask, so the words inside a string literal pass through). */
   def lowerWithout(sql: String): String = {
     val ident = "[A-Za-z_][A-Za-z0-9_]*(?:\\.[A-Za-z_][A-Za-z0-9_]*)?"
     val re = s"(?i)\\*\\s+WITHOUT\\s+(?:IF\\s+EXISTS\\s+)?($ident(?:\\s*,\\s*$ident)*)".r
-    val masked = maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     val out = new StringBuilder
     var last = 0
     re.findAllMatchIn(masked).foreach { m =>
@@ -2394,7 +2248,7 @@ object YqlScript {
     // quote mask, so 'FLATTEN BY x' inside a string literal (and
     // quoted parens in the source) can't derail the rewrite; the
     // matched spans are spliced from the original text
-    val masked = maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     val m = re.findFirstMatchIn(masked).getOrElse(return sql)
     val mode = Option(m.group(1)).map(_.toUpperCase).getOrElse("LIST")
     // one (col, alias) per flattened column: single-ident form or the
@@ -2426,8 +2280,7 @@ object YqlScript {
       val (w, before) = wordEndingAt(e)
       var b = before
       while (b >= 0 && masked.charAt(b).isWhitespace) b -= 1
-      if (b >= 1 && masked.substring(b - 1, b + 1).equalsIgnoreCase("AS") &&
-          (b < 2 || !(masked.charAt(b - 2).isLetterOrDigit || masked.charAt(b - 2) == '_'))) {
+      if (b >= 1 && SqlText.kwEnd(masked, b - 1, "AS") >= 0) {
         srcAlias = Some(w)
         srcEnd = b - 2
         while (srcEnd >= 0 && masked.charAt(srcEnd).isWhitespace) srcEnd -= 1
@@ -2487,13 +2340,12 @@ object YqlScript {
     * over the quote mask; the spellings inside string literals pass
     * through untouched. */
   def lowerHints(sql: String): String = {
-    def isW(c: Char) = c.isLetterOrDigit || c == '_'
     // COMPACT hint: drop the word, keep the construct
     var text = sql
     var changed = true
     while (changed) {
       changed = false
-      val masked = maskQuotes(text)
+      val masked = SqlText.mask(text)
       "(?i)\\b(GROUP|PARTITION|IN)\\s+COMPACT\\b".r
         .findFirstMatchIn(masked).foreach { m =>
           text = text.substring(0, m.start) +
@@ -2506,25 +2358,11 @@ object YqlScript {
     changed = true
     while (changed) {
       changed = false
-      val masked = maskQuotes(text)
+      val masked = SqlText.mask(text)
       "(?i)\\bASSUME\\s+ORDER\\s+BY\\b".r.findFirstMatchIn(masked).foreach { mm =>
-        val up = masked.toUpperCase
-        var i = mm.end; var depth = 0; var cut = -1
-        while (i < up.length && cut < 0) {
-          up.charAt(i) match {
-            case '(' | '{' => depth += 1
-            case ')' | '}' => if (depth == 0) cut = i else depth -= 1
-            case _ => if (depth == 0) {
-              def word(kw: String) = up.startsWith(kw, i) &&
-                !isW(up.charAt(i - 1)) &&
-                (i + kw.length >= up.length || !isW(up.charAt(i + kw.length)))
-              if (Seq("LIMIT", "OFFSET", "UNION", "INTO", "HAVING",
-                  "WINDOW").exists(word)) cut = i
-            }
-          }
-          if (cut < 0) i += 1
-        }
-        if (cut < 0) cut = text.length
+        val stop = SqlText.findKw(text, Seq("LIMIT", "OFFSET", "UNION",
+          "INTO", "HAVING", "WINDOW"), mm.end)
+        val cut = if (stop >= 0) stop else SqlText.groupEnd(text, mm.end)
         text = text.substring(0, mm.start) + text.substring(cut)
         changed = true
       }
@@ -2554,7 +2392,7 @@ object YqlScript {
     var changed = true
     while (changed) {
       changed = false
-      val masked = maskQuotes(text)
+      val masked = SqlText.mask(text)
       re.findFirstMatchIn(masked).foreach { m =>
         val tbl = text.substring(m.start(2), m.end(2))
         var i = m.end
@@ -2563,8 +2401,8 @@ object YqlScript {
         val hints = scala.collection.mutable.ArrayBuffer.empty[String]
         var end = i
         if (i < masked.length && masked.charAt(i) == '(') {
-          val close = matchParen(masked, i)
-          hints ++= splitTopLevel(text.substring(i + 1, close))
+          val close = SqlText.matchBracket(masked, i)
+          hints ++= SqlText.split(text.substring(i + 1, close))
             .map(_.trim).filter(_.nonEmpty)
           end = close + 1
         } else {
@@ -2580,7 +2418,7 @@ object YqlScript {
             while (k < masked.length && masked.charAt(k).isWhitespace) k += 1
           }
           if (k < masked.length && masked.charAt(k) == '(')
-            k = matchParen(masked, k) + 1
+            k = SqlText.matchBracket(masked, k) + 1
           else if (text.substring(i, j).equalsIgnoreCase("SCHEMA") ||
               text.substring(i, j).equalsIgnoreCase("COLUMNS")) {
             // unparenthesized type form: consume one type token
@@ -2605,7 +2443,7 @@ object YqlScript {
             val open = h.indexOf('(')
             require(open > 0 && h.endsWith(")"),
               s"unsupported SCHEMA hint form: $h")
-            val items = splitTopLevel(h.substring(open + 1, h.length - 1))
+            val items = SqlText.split(h.substring(open + 1, h.length - 1))
               .map(_.trim).filter(_.nonEmpty)
             require(items.nonEmpty, "empty SCHEMA hint")
             val casts = items.map { it =>
@@ -2673,13 +2511,13 @@ object YqlScript {
     var changed = true
     while (changed) {
       changed = false
-      val masked = maskQuotes(text)
+      val masked = SqlText.mask(text)
       val m1 = "(?i)\\bTABLESAMPLE\\s+(BERNOULLI|SYSTEM)\\s*\\(".r
         .findFirstMatchIn(masked)
       m1 match {
         case Some(m) =>
           val open = m.end - 1
-          val close = matchParen(masked, open)
+          val close = SqlText.matchBracket(masked, open)
           val pct = text.substring(open + 1, close).trim
           text = text.substring(0, m.start) +
             s"TABLESAMPLE ($pct PERCENT)" + text.substring(close + 1)
@@ -2738,7 +2576,7 @@ object YqlScript {
   def lowerFlattenColumns(sql: String,
       schemaOf: String => Seq[(String, org.apache.spark.sql.types.DataType)])
       : String = {
-    val masked = maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     val re = "(?i)\\bFLATTEN\\s+COLUMNS\\b".r
     re.findFirstMatchIn(masked) match {
       case None => sql
@@ -2760,8 +2598,7 @@ object YqlScript {
           val is = identStart()
           var k = is - 1
           while (k >= 0 && sql.charAt(k).isWhitespace) k -= 1
-          if (k >= 1 && sql.substring(k - 1, k + 1).equalsIgnoreCase("AS") &&
-              (k - 2 < 0 || !sql.charAt(k - 2).isLetterOrDigit)) {
+          if (k >= 1 && SqlText.kwEnd(sql, k - 1, "AS") >= 0) {
             alias = sql.substring(is, j + 1)
             j = k - 2
             skipWs()
@@ -2769,15 +2606,8 @@ object YqlScript {
         }
         val srcEnd = j + 1
         val srcStart =
-          if (j >= 0 && sql.charAt(j) == ')') {
-            // backward paren matching on the mask
-            var depth = 0; var k = j
-            while (k >= 0 && { val c = masked.charAt(k)
-              if (c == ')') depth += 1 else if (c == '(') depth -= 1
-              depth != 0 }) k -= 1
-            require(k >= 0, s"unbalanced parens before FLATTEN COLUMNS")
-            k
-          } else identStart()
+          if (j >= 0 && sql.charAt(j) == ')') SqlText.openerOf(sql, j)
+          else identStart()
         val src = sql.substring(srcStart, srcEnd)
         require(src.nonEmpty, "FLATTEN COLUMNS needs a FROM source")
         val cols = schemaOf(s"SELECT * FROM $src")
@@ -2800,15 +2630,14 @@ object YqlScript {
       schemaOf: String => Seq[(String, org.apache.spark.sql.types.DataType)])
       : String = {
     if (positional) return sql
-    def isW(c: Char) = c.isLetterOrDigit || c == '_'
     // recurse into parenthesized groups that could hold a select chain
     val text = {
       val out = new StringBuilder
-      val masked = maskQuotes(sql)
+      val masked = SqlText.mask(sql)
       var i = 0; var last = 0
       while (i < masked.length) {
         if (masked.charAt(i) == '(') {
-          val close = matchParen(masked, i)
+          val close = SqlText.matchBracket(masked, i)
           val innerUp = masked.substring(i + 1, close).toUpperCase
           if (innerUp.contains("UNION") && innerUp.contains("SELECT")) {
             out.append(sql.substring(last, i + 1))
@@ -2824,28 +2653,12 @@ object YqlScript {
     }
     // the top-level UNION [ALL] chain at THIS level
     final case class Op(start: Int, end: Int, all: Boolean)
-    val masked = maskQuotes(text)
-    val up = masked.toUpperCase
     val ops = scala.collection.mutable.ArrayBuffer.empty[Op]
-    locally {
-      var i = 0; var depth = 0
-      while (i < up.length) {
-        up.charAt(i) match {
-          case '(' | '{' => depth += 1; i += 1
-          case ')' | '}' => depth -= 1; i += 1
-          case _ =>
-            if (depth == 0 && up.startsWith("UNION", i) &&
-                (i == 0 || !isW(up.charAt(i - 1))) &&
-                (i + 5 >= up.length || !isW(up.charAt(i + 5)))) {
-              var j = i + 5
-              while (j < up.length && up.charAt(j).isWhitespace) j += 1
-              if (up.startsWith("ALL", j) &&
-                  (j + 3 >= up.length || !isW(up.charAt(j + 3)))) {
-                ops += Op(i, j + 3, all = true); i = j + 3
-              } else { ops += Op(i, i + 5, all = false); i += 5 }
-            } else i += 1
-        }
-      }
+    var at = SqlText.findKw(text, "UNION")
+    while (at >= 0) {
+      val allEnd = SqlText.kwEnd(text, at, "UNION ALL")
+      ops += Op(at, if (allEnd >= 0) allEnd else at + 5, allEnd >= 0)
+      at = SqlText.findKw(text, "UNION", ops.last.end)
     }
     if (ops.isEmpty) return text
     var branches = (0 +: ops.map(_.end).toSeq)
@@ -2855,7 +2668,7 @@ object YqlScript {
     // keep it in front, analyze every branch under it
     var prefix = ""
     if ("(?is)^\\s*WITH\\b".r.findFirstIn(branches.head).isDefined) {
-      val selAt = findTopKw(branches.head, "SELECT")
+      val selAt = SqlText.findKw(branches.head, "SELECT")
       require(selAt > 0,
         s"cannot locate the main SELECT after WITH in: ${branches.head.take(80)}")
       prefix = branches.head.substring(0, selAt)
@@ -2865,22 +2678,8 @@ object YqlScript {
     var tail = ""
     locally {
       val lb = branches.last
-      val lup = maskQuotes(lb).toUpperCase
-      var i = 0; var depth = 0; var cut = -1
-      while (i < lup.length && cut < 0) {
-        lup.charAt(i) match {
-          case '(' | '{' => depth += 1
-          case ')' | '}' => depth -= 1
-          case _ => if (depth == 0 && i > 0) {
-            def word(kw: String) = lup.startsWith(kw, i) &&
-              !isW(lup.charAt(i - 1)) &&
-              (i + kw.length >= lup.length || !isW(lup.charAt(i + kw.length)))
-            if (word("ORDER") || word("LIMIT") || word("OFFSET")) cut = i
-          }
-        }
-        if (cut < 0) i += 1
-      }
-      if (cut >= 0) {
+      val cut = SqlText.findKw(lb, Seq("ORDER", "LIMIT", "OFFSET"), 0)
+      if (cut > 0) {
         tail = " " + lb.substring(cut)
         branches = branches.updated(branches.length - 1, lb.substring(0, cut))
       }

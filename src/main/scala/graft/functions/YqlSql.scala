@@ -57,6 +57,10 @@ object YqlSql {
     * under a `yql__` prefix instead. */
   private val CollidesWithBuiltin: Set[String] = Set("url_decode", "url_encode")
 
+  /** `Module::Function(`, at an identifier boundary. */
+  private val ModuleCall =
+    "(?<![\\p{L}\\p{Nd}_$])([A-Za-z_][A-Za-z0-9_]*)::([A-Za-z_][A-Za-z0-9_]*)(\\s*)\\(".r
+
   /** `Module::Function(` → `module_function(`, outside string literals
     * and backtick-quoted identifiers. Only call sites of the known
     * modules are rewritten: the match must start at an identifier
@@ -66,67 +70,46 @@ object YqlSql {
   def rewrite(sql: String): String = {
     val out = new StringBuilder
     var i = 0
-    var quote: Char = 0
     val n = sql.length
-    val id = "[A-Za-z_][A-Za-z0-9_]*"
-    val call = s"^($id)::($id)(\\s*)\\(".r
-    def identChar(c: Char) = c.isLetterOrDigit || c == '_'
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (quote != 0) {
-        out.append(c)
-        if (c == quote) quote = 0
-        else if (c == '\\' && quote != '`' && i + 1 < n) {
-          out.append(sql.charAt(i + 1)); i += 1
-        }
-        i += 1
-      } else if (c == '\'' || c == '"' || c == '`') {
-        quote = c; out.append(c); i += 1
-      } else {
-        val atBoundary = i == 0 || !identChar(sql.charAt(i - 1))
-        val m =
-          if (atBoundary) call.findFirstMatchIn(sql.substring(i)) else None
-        m match {
-          case Some(mm) if KnownModules(mm.group(1).toLowerCase) =>
-            val lowered =
-              moduleName(mm.group(1)) + "_" + mm.group(2).toLowerCase
-            // module functions whose lowered name collides with a Spark
-            // builtin register prefixed — never shadow the session
-            val name = if (CollidesWithBuiltin(lowered)) "yql__" + lowered
-              else lowered
-            // curried inline application `Re2::Grep(p)(s)` fuses to the
-            // flat registered call `re2_grep(s, p)` (replace:
-            // `re2_replace(s, p, rewrite)`)
-            val open = i + mm.end - 1
-            val fused =
-              if (!CurriedModules(mm.group(1).toLowerCase)) None
-              else try {
-                val close = YqlScript.matchParen(sql, open)
-                var j = close + 1
-                while (j < n && sql.charAt(j).isWhitespace) j += 1
-                if (j < n && sql.charAt(j) == '(') {
-                  val close2 = YqlScript.matchParen(sql, j)
-                  val args1 = sql.substring(open + 1, close)
-                  val args2 = YqlScript
-                    .splitTopLevel(sql.substring(j + 1, close2))
-                    .map(_.trim).filter(_.nonEmpty)
-                  require(args2.nonEmpty,
-                    s"$name application needs at least the string argument")
-                  Some((s"$name(${rewrite(args2.head)}, ${rewrite(args1)}" +
-                    args2.tail.map(a => s", ${rewrite(a)}").mkString + ")",
-                    close2 + 1))
-                } else None
-              } catch { case _: IllegalArgumentException => None }
-            fused match {
-              case Some((text, next)) => out.append(text); i = next
-              case None =>
-                out.append(name).append(mm.group(3)).append('(')
-                i += mm.end
-            }
-          case _ => out.append(c); i += 1
-        }
+    for (mm <- ModuleCall.findAllMatchIn(SqlText.mask(sql))
+        if mm.start >= i && KnownModules(mm.group(1).toLowerCase)) {
+      out.append(sql.substring(i, mm.start))
+      val lowered =
+        moduleName(mm.group(1)) + "_" + mm.group(2).toLowerCase
+      // module functions whose lowered name collides with a Spark
+      // builtin register prefixed — never shadow the session
+      val name = if (CollidesWithBuiltin(lowered)) "yql__" + lowered
+        else lowered
+      // curried inline application `Re2::Grep(p)(s)` fuses to the
+      // flat registered call `re2_grep(s, p)` (replace:
+      // `re2_replace(s, p, rewrite)`)
+      val open = mm.end - 1
+      val fused =
+        if (!CurriedModules(mm.group(1).toLowerCase)) None
+        else try {
+          val close = SqlText.matchBracket(sql, open)
+          var j = close + 1
+          while (j < n && sql.charAt(j).isWhitespace) j += 1
+          if (j < n && sql.charAt(j) == '(') {
+            val close2 = SqlText.matchBracket(sql, j)
+            val args1 = sql.substring(open + 1, close)
+            val args2 = SqlText.split(sql.substring(j + 1, close2))
+              .map(_.trim).filter(_.nonEmpty)
+            require(args2.nonEmpty,
+              s"$name application needs at least the string argument")
+            Some((s"$name(${rewrite(args2.head)}, ${rewrite(args1)}" +
+              args2.tail.map(a => s", ${rewrite(a)}").mkString + ")",
+              close2 + 1))
+          } else None
+        } catch { case _: IllegalArgumentException => None }
+      fused match {
+        case Some((text, next)) => out.append(text); i = next
+        case None =>
+          out.append(name).append(mm.group(3)).append('(')
+          i = mm.end
       }
     }
+    out.append(sql.substring(i))
     tupleAccess(inlineLambdas(aggSpellings(lowerAggregateBy(
       lowerContainerAggregate(structSugar(re2OptionsSugar(ysonOptionsSugar(
         containerLiterals(coalesceOp(typeArgSugar(out.toString)))))))))))
@@ -141,11 +124,11 @@ object YqlSql {
     * here, at fold time, when set true. */
   private def re2OptionsSugar(sql: String): String = {
     val re = "(?i)(?<![A-Za-z0-9_])re2_options\\s*\\(".r
-    val m = re.findAllMatchIn(YqlScript.maskQuotes(sql))
+    val m = re.findAllMatchIn(SqlText.mask(sql))
       .find(mm => !sql.substring(mm.end).trim.startsWith("'re2opts:"))
       .getOrElse(return sql)
-    val close = YqlScript.matchParen(sql, m.end - 1)
-    val args = YqlScript.splitTopLevel(sql.substring(m.end, close))
+    val close = SqlText.matchBracket(sql, m.end - 1)
+    val args = SqlText.split(sql.substring(m.end, close))
       .map(_.trim).filter(_.nonEmpty)
     var caseSens = true; var dotNl = false; var literal = false
     val named = ("(?i)^(TRUE|FALSE|NULL|[0-9]+)\\s+AS\\s+" +
@@ -197,11 +180,11 @@ object YqlSql {
     * no runtime resource value exists in the plan. */
   private def ysonOptionsSugar(sql: String): String = {
     val re = "(?i)(?<![A-Za-z0-9_])yson_options\\s*\\(".r
-    val m = re.findAllMatchIn(YqlScript.maskQuotes(sql))
+    val m = re.findAllMatchIn(SqlText.mask(sql))
       .find(mm => !sql.substring(mm.end).trim.startsWith("'ysonopts:"))
       .getOrElse(return sql)
-    val close = YqlScript.matchParen(sql, m.end - 1)
-    val args = YqlScript.splitTopLevel(sql.substring(m.end, close))
+    val close = SqlText.matchBracket(sql, m.end - 1)
+    val args = SqlText.split(sql.substring(m.end, close))
       .map(_.trim).filter(_.nonEmpty)
     var auto = false; var strict = false
     val named = "(?i)^(TRUE|FALSE|NULL)\\s+AS\\s+(AutoConvert|Strict)$".r
@@ -238,7 +221,7 @@ object YqlSql {
     * one coalesce (associative either way). The NVL alias is Spark's
     * own nvl. */
   private def coalesceOp(sql: String): String = {
-    val masked = YqlScript.maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     val at = masked.indexOf("??")
     if (at < 0) return sql
     val stops = Set("SELECT", "FROM", "WHERE", "GROUP", "ORDER", "HAVING",
@@ -250,67 +233,37 @@ object YqlSql {
       "AND", "OR", "XOR", "NOT", "IN", "IS", "LIKE", "ILIKE", "GLOB",
       "REGEXP", "RLIKE", "MATCH", "BETWEEN", "ESCAPE")
     val stopChars = Set('<', '>', '=', '!')
-    def isIdent(c: Char) = c.isLetterOrDigit || c == '_'
-    // the expression slot around position `at`: scan out to depth
-    // drops, top-level commas, or clause keywords
+    // the expression slot around position `at`: scan out over whole
+    // bracket groups to an enclosing bracket, a top-level comma, or a
+    // clause keyword
     var lo = at
-    var depth = 0
     var done = false
     while (lo > 0 && !done) {
       val c = masked.charAt(lo - 1)
-      c match {
-        case ')' | ']' | '}' => depth += 1; lo -= 1
-        case '(' | '[' | '{' => if (depth == 0) done = true else { depth -= 1; lo -= 1 }
-        case ',' | ';' if depth == 0 => done = true
-        case ch if depth == 0 && stopChars(ch) => done = true
-        case _ =>
-          if (depth == 0 && isIdent(c)) {
-            var ws = lo - 1
-            while (ws > 0 && isIdent(masked.charAt(ws - 1))) ws -= 1
-            val w = masked.substring(ws, lo).toUpperCase
-            if (stops(w) && (ws == 0 || !isIdent(masked.charAt(ws - 1))))
-              done = true
-            else lo = ws
-          } else lo -= 1
-      }
+      if (")]}".indexOf(c) >= 0) lo = SqlText.openerOf(masked, lo - 1)
+      else if ("([{,;".indexOf(c) >= 0 || stopChars(c)) done = true
+      else if (SqlText.isIdent(c)) {
+        var ws = lo - 1
+        while (ws > 0 && SqlText.isIdent(masked.charAt(ws - 1))) ws -= 1
+        if (stops(masked.substring(ws, lo).toUpperCase)) done = true
+        else lo = ws
+      } else lo -= 1
     }
     var hi = at + 2
-    depth = 0
     done = false
     while (hi < masked.length && !done) {
       val c = masked.charAt(hi)
-      c match {
-        case '(' | '[' | '{' => depth += 1; hi += 1
-        case ')' | ']' | '}' =>
-          if (depth == 0) done = true else { depth -= 1; hi += 1 }
-        case ',' | ';' if depth == 0 => done = true
-        case ch if depth == 0 && stopChars(ch) => done = true
-        case _ =>
-          if (depth == 0 && isIdent(c) &&
-              (hi == 0 || !isIdent(masked.charAt(hi - 1)))) {
-            var we = hi
-            while (we < masked.length && isIdent(masked.charAt(we))) we += 1
-            if (stops(masked.substring(hi, we).toUpperCase)) done = true
-            else hi = we
-          } else hi += 1
-      }
+      if ("([{".indexOf(c) >= 0) hi = SqlText.matchBracket(masked, hi) + 1
+      else if (")]},;".indexOf(c) >= 0 || stopChars(c)) done = true
+      else if (SqlText.isIdent(c)) {
+        var we = hi
+        while (we < masked.length && SqlText.isIdent(masked.charAt(we))) we += 1
+        if (stops(masked.substring(hi, we).toUpperCase)) done = true
+        else hi = we
+      } else hi += 1
     }
     val slot = sql.substring(lo, hi)
-    val slotMasked = masked.substring(lo, hi)
-    // split the slot at its top-level `??`s
-    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    var start = 0; var i = 0; var d = 0
-    while (i < slotMasked.length) {
-      slotMasked.charAt(i) match {
-        case '(' | '[' | '{' => d += 1; i += 1
-        case ')' | ']' | '}' => d -= 1; i += 1
-        case '?' if d == 0 && i + 1 < slotMasked.length &&
-            slotMasked.charAt(i + 1) == '?' =>
-          parts += slot.substring(start, i); start = i + 2; i += 2
-        case _ => i += 1
-      }
-    }
-    parts += slot.substring(start)
+    val parts = SqlText.split(slot, "??")
     val trimmed = parts.map(_.trim)
     require(trimmed.forall(_.nonEmpty),
       s"malformed ?? expression: ${slot.take(60)}")
@@ -328,34 +281,22 @@ object YqlSql {
   private def inlineLambdas(sql: String): String = {
     val headRe = ("\\(\\s*\\$([A-Za-z_][A-Za-z0-9_]*)" +
       "((\\s*,\\s*\\$[A-Za-z_][A-Za-z0-9_]*)*)\\s*\\)\\s*->\\s*").r
-    val masked = YqlScript.maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     val m = headRe.findFirstMatchIn(masked).getOrElse(return sql)
     val params = ("\\$([A-Za-z_][A-Za-z0-9_]*)".r
       .findAllMatchIn(masked.substring(m.start, m.end))
       .map(_.group(1))).toSeq
     // body: a parenthesized/braced group, or a single expression the
     // caller delimits (leave the latter's extent alone)
-    var i = m.end
+    val i = m.end
     var body: String = null
     var bodyEnd = m.end
     if (i < sql.length && sql.charAt(i) == '(') {
-      val close = YqlScript.matchParen(sql, i)
+      val close = SqlText.matchBracket(sql, i)
       body = sql.substring(i, close + 1) // keep the parens
       bodyEnd = close + 1
     } else if (i < sql.length && sql.charAt(i) == '{') {
-      // matchParen tracks () only — braces need their own scan
-      var depth = 0; var j = i
-      var close = -1
-      val mk = masked
-      while (j < mk.length && close < 0) {
-        mk.charAt(j) match {
-          case '{' => depth += 1
-          case '}' => depth -= 1; if (depth == 0) close = j
-          case _ =>
-        }
-        j += 1
-      }
-      require(close > 0, s"unbalanced lambda body braces: ${sql.take(80)}")
+      val close = SqlText.matchBracket(sql, i)
       val stmts = sql.substring(i + 1, close).trim.stripSuffix(";").trim
       val rm = "(?i)^RETURN\\b".r.findFirstMatchIn(stmts).getOrElse(
         throw new IllegalArgumentException(
@@ -365,19 +306,9 @@ object YqlSql {
       bodyEnd = close + 1
     } else {
       // un-delimited body: runs to the end of the current argument
-      // (top-level comma or closing paren)
-      var depth = 0
-      var j = i
-      val mk = masked
-      while (j < mk.length && (depth > 0 ||
-          (mk.charAt(j) != ',' && mk.charAt(j) != ')'))) {
-        mk.charAt(j) match {
-          case '(' | '[' | '{' => depth += 1
-          case ')' | ']' | '}' => depth -= 1
-          case _ =>
-        }
-        j += 1
-      }
+      // (top-level comma or closing bracket)
+      val comma = SqlText.indexOfTop(sql, ",", i)
+      val j = if (comma >= 0) comma else SqlText.groupEnd(sql, i)
       body = sql.substring(i, j)
       bodyEnd = j
     }
@@ -404,11 +335,11 @@ object YqlSql {
     * codegen'd projection. */
   private def lowerContainerAggregate(sql: String): String = {
     val re = "(?i)\\b(List|Dict)Aggregate\\s*\\(".r
-    val m = re.findFirstMatchIn(YqlScript.maskQuotes(sql))
+    val m = re.findFirstMatchIn(SqlText.mask(sql))
       .getOrElse(return sql)
     val dict = m.group(1).equalsIgnoreCase("Dict")
-    val close = YqlScript.matchParen(sql, m.end - 1)
-    val args = YqlScript.splitTopLevel(sql.substring(m.end, close))
+    val close = SqlText.matchBracket(sql, m.end - 1)
+    val args = SqlText.split(sql.substring(m.end, close))
       .map(_.trim)
     require(args.length == 2,
       s"${m.group(1)}Aggregate takes (container, aggregation factory)")
@@ -475,7 +406,7 @@ object YqlSql {
   private def typeArgSugar(sql: String): String = {
     val re = ("(?i)(?<![A-Za-z0-9_])(Nothing|FromBytes|Unpickle|" +
       "ListCreate|DictCreate|SetCreate|Variant|Enum)\\s*\\(").r
-    val masked = YqlScript.maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     var out = sql
     // right-to-left so earlier offsets stay valid after replacement
     // split args tracking <> depth too: Tuple<Utf8,Double?> must stay
@@ -496,7 +427,7 @@ object YqlSql {
       outB.toSeq.map(_.trim)
     }
     for (m <- re.findAllMatchIn(masked).toSeq.reverseIterator) {
-      val close = YqlScript.matchParen(out, m.end - 1)
+      val close = SqlText.matchBracket(out, m.end - 1)
       val args = splitAngleAware(out.substring(m.end, close))
       val tis: Seq[Int] = m.group(1).toLowerCase match {
         case "frombytes" => Seq(1)
@@ -511,7 +442,7 @@ object YqlSql {
         // substituted $type bindings arrive parenthesized
         var t = args(ti)
         while (t.startsWith("(") && t.endsWith(")") &&
-            YqlScript.matchParen(t, 0) == t.length - 1)
+            SqlText.matchBracket(t, 0) == t.length - 1)
           t = t.substring(1, t.length - 1).trim
         val isType = t.nonEmpty && t.head.isLetter &&
           t.forall(c => c.isLetterOrDigit || "<>?,:_ ".contains(c)) &&
@@ -536,20 +467,19 @@ object YqlSql {
     * literal; `{` inside a MATCH_RECOGNIZE PATTERN(...) is a
     * quantifier, so PATTERN regions are skipped. */
   private def containerLiterals(sql: String): String = {
-    val masked0 = YqlScript.maskQuotes(sql)
+    val masked0 = SqlText.mask(sql)
     // mask PATTERN ( ... ) regions — `{n,m}` quantifiers live there
     val masked = {
       val sb = new StringBuilder(masked0)
       val p = "(?i)\\bPATTERN\\s*\\(".r
       for (m <- p.findAllMatchIn(masked0)) {
         try {
-          val close = YqlScript.matchParen(masked0, m.end - 1)
+          val close = SqlText.matchBracket(masked0, m.end - 1)
           for (i <- m.end until close) sb.setCharAt(i, 'x')
         } catch { case _: IllegalArgumentException => }
       }
       sb.toString
     }
-    def identChar(c: Char) = c.isLetterOrDigit || c == '_'
     def prevNonSpace(i: Int): Char = {
       var j = i - 1
       while (j >= 0 && masked.charAt(j).isWhitespace) j -= 1
@@ -566,7 +496,7 @@ object YqlSql {
       var j = i - 1
       while (j >= 0 && masked.charAt(j).isWhitespace) j -= 1
       val end = j
-      while (j >= 0 && identChar(masked.charAt(j))) j -= 1
+      while (j >= 0 && SqlText.isIdent(masked.charAt(j))) j -= 1
       end > j && kw(masked.substring(j + 1, end + 1).toUpperCase)
     }
     // matching closer with <| |> / [ ] / { } / ( ) depth tracking
@@ -590,60 +520,44 @@ object YqlSql {
           i += 1
         }
       }
-      throw new IllegalArgumentException(
-        s"unbalanced container literal at $open: ${sql.take(80)}")
+      SqlText.fail(sql, open, "unbalanced container literal")
     }
-    // split items at top level of the SAME bracket classes
-    def splitItems(s: String): Seq[String] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      var depth = 0; var start = 0; var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (c == '<' && i + 1 < s.length && s.charAt(i + 1) == '|') {
-          depth += 1; i += 2
-        } else if (c == '|' && i + 1 < s.length &&
-            (s.charAt(i + 1) == '|' || s.charAt(i + 1) == '>')) {
-          if (s.charAt(i + 1) == '>') depth -= 1
-          i += 2
-        } else {
+    // depth-0 positions of `s` (over its mask) under the SAME bracket
+    // classes, `<| |>` included
+    def topLevel(s: String): Seq[Int] = {
+      val m = SqlText.mask(s)
+      val out = scala.collection.mutable.ArrayBuffer.empty[Int]
+      var depth = 0; var i = 0
+      while (i < m.length) {
+        val c = m.charAt(i)
+        if (m.startsWith("<|", i)) { depth += 1; i += 2 }
+        else if (m.startsWith("||", i)) i += 2 // string concat operator
+        else if (m.startsWith("|>", i)) { depth -= 1; i += 2 }
+        else {
           if (c == '(' || c == '[' || c == '{') depth += 1
           else if (c == ')' || c == ']' || c == '}') depth -= 1
-          else if (c == ',' && depth == 0) { out += s.substring(start, i); start = i + 1 }
+          else if (depth == 0) out += i
           i += 1
         }
       }
-      out += s.substring(start)
-      out.toSeq.map(_.trim).filter(_.nonEmpty)
+      out.toSeq
+    }
+    def splitItems(s: String): Seq[String] = {
+      val cuts = topLevel(s).filter(s.charAt(_) == ',')
+      (-1 +: cuts).zip(cuts :+ s.length)
+        .map { case (a, b) => s.substring(a + 1, b).trim }.filter(_.nonEmpty)
     }
     // first top-level single ':' (':: module calls don't split)
-    def splitColon(s: String): Option[(String, String)] = {
-      var depth = 0; var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (c == '<' && i + 1 < s.length && s.charAt(i + 1) == '|') {
-          depth += 1; i += 2
-        } else if (c == '|' && i + 1 < s.length &&
-            (s.charAt(i + 1) == '|' || s.charAt(i + 1) == '>')) {
-          if (s.charAt(i + 1) == '>') depth -= 1
-          i += 2
-        } else if (c == ':' && depth == 0) {
-          if (i + 1 < s.length && s.charAt(i + 1) == ':') i += 2
-          else if (i > 0 && s.charAt(i - 1) == ':') i += 1
-          else return Some((s.substring(0, i).trim, s.substring(i + 1).trim))
-        } else {
-          if (c == '(' || c == '[' || c == '{') depth += 1
-          else if (c == ')' || c == ']' || c == '}') depth -= 1
-          i += 1
-        }
-      }
-      None
-    }
+    def splitColon(s: String): Option[(String, String)] =
+      topLevel(s).find(i => s.charAt(i) == ':' &&
+          !s.startsWith("::", i) && !(i > 0 && s.charAt(i - 1) == ':'))
+        .map(i => (s.substring(0, i).trim, s.substring(i + 1).trim))
     def structName(raw: String): String = {
       val t = raw.trim
       if (t.startsWith("`") && t.endsWith("`") && t.length >= 2)
         "'" + t.substring(1, t.length - 1).replace("'", "\\'") + "'"
       else if (t.nonEmpty && (t.head.isLetter || t.head == '_') &&
-          t.forall(identChar))
+          t.forall(SqlText.isIdent))
         s"'$t'"
       else t // expression form — the builder requires it foldable
     }
@@ -663,7 +577,7 @@ object YqlSql {
         return containerLiterals(sql.substring(0, i) +
           s"yql_asstruct(${parts.mkString(", ")})" + sql.substring(close + 2))
       } else if (c == '[' &&
-          ((!identChar(prevNonSpace(i)) && prevNonSpace(i) != ')' &&
+          ((!SqlText.isIdent(prevNonSpace(i)) && prevNonSpace(i) != ')' &&
             prevNonSpace(i) != ']') || prevWordIsKeyword(i))) {
         val close = matchClose(i)
         val items = splitItems(sql.substring(i + 1, close))
@@ -705,38 +619,24 @@ object YqlSql {
     * arguments of the registered builders. */
   private def structSugar(sql: String): String = {
     val re = "(?i)(?<![A-Za-z0-9_])(ExpandStruct|AsStruct|StructType)\\s*\\(".r
-    val m = re.findFirstMatchIn(YqlScript.maskQuotes(sql))
+    val m = re.findFirstMatchIn(SqlText.mask(sql))
       .getOrElse(return sql)
     val fn = m.group(1).toLowerCase
-    val close = YqlScript.matchParen(sql, m.end - 1)
-    val args = YqlScript.splitTopLevel(sql.substring(m.end, close))
+    val close = SqlText.matchBracket(sql, m.end - 1)
+    val args = SqlText.split(sql.substring(m.end, close))
       .map(_.trim).filter(_.nonEmpty)
     // split one argument at its TOP-LEVEL trailing `AS name` (the AS
     // inside CAST(x AS t) sits behind parens and is ignored)
     def asItem(a: String): (String, String) = {
-      val masked = YqlScript.maskQuotes(a)
-      var depth = 0; var at = -1; var nm = ""
-      // anchored: the AS at position i must run to the END of the item
+      // anchored: the AS must run to the END of the item
       val re2 = "(?i)^AS\\s+([A-Za-z_][A-Za-z0-9_]*)\\s*$".r
-      var i = 0
-      while (i < masked.length) {
-        masked.charAt(i) match {
-          case '(' | '[' | '{' => depth += 1
-          case ')' | ']' | '}' => depth -= 1
-          case 'a' | 'A' if depth == 0 =>
-            re2.findFirstMatchIn(masked.substring(i)).foreach { mm =>
-              if (i == 0 || (!masked.charAt(i - 1).isLetterOrDigit &&
-                  masked.charAt(i - 1) != '_')) {
-                at = i; nm = mm.group(1)
-              }
-            }
-          case _ =>
-        }
-        i += 1
-      }
+      var at = SqlText.findKw(a, "AS")
+      while (at >= 0 && re2.findFirstIn(a.substring(at)).isEmpty)
+        at = SqlText.findKw(a, "AS", at + 2)
       require(at > 0, s"$fn items must be spelled `value AS name`, " +
         s"got: ${a.take(60)}")
-      (nm, a.substring(0, at).trim)
+      (re2.findFirstMatchIn(a.substring(at)).get.group(1),
+        a.substring(0, at).trim)
     }
     val (head, items) =
       if (fn == "expandstruct") (Seq(rewrite(args.head)), args.tail)
@@ -775,11 +675,11 @@ object YqlSql {
       "VARIANCE_SAMPLE", "SAMPLE_VARIANCE", "VARSAMP",
       "TOPFREQ", "MODE", "SOME", "BOOL_AND", "BOOL_OR", "BOOL_XOR")
     val re = ("(?i)(?<![A-Za-z0-9_])(" + names.mkString("|") + ")\\s*\\(").r
-    val masked = YqlScript.maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     val m = re.findFirstMatchIn(masked).getOrElse(return sql)
     val name = m.group(1).toUpperCase
-    val close = YqlScript.matchParen(sql, m.end - 1)
-    val rawArgs = YqlScript.splitTopLevel(sql.substring(m.end, close))
+    val close = SqlText.matchBracket(sql, m.end - 1)
+    val rawArgs = SqlText.split(sql.substring(m.end, close))
       .map(_.trim).filter(_.nonEmpty)
     // DISTINCT prefix (AGGREGATE_LIST(DISTINCT x))
     val dm = rawArgs.headOption.flatMap(a =>
@@ -878,7 +778,7 @@ object YqlSql {
   /** One-argument lambda text `($x) -> (body)` → textual application. */
   private def lambdaTx(t0: String, ctx: String): String => String = {
     var t = t0.trim
-    while (t.startsWith("(") && YqlScript.matchParen(t, 0) == t.length - 1 &&
+    while (t.startsWith("(") && SqlText.matchBracket(t, 0) == t.length - 1 &&
         !"(?s)^\\(\\s*\\$".r.findFirstIn(t).isDefined)
       t = t.substring(1, t.length - 1).trim
     val m = "(?s)^\\(\\s*\\$([A-Za-z_][A-Za-z0-9_]*)\\s*\\)\\s*->\\s*".r
@@ -887,7 +787,7 @@ object YqlSql {
           t0.take(60)))
     val param = m.group(1)
     var body = t.substring(m.end).trim
-    if (body.startsWith("(") && YqlScript.matchParen(body, 0) == body.length - 1)
+    if (body.startsWith("(") && SqlText.matchBracket(body, 0) == body.length - 1)
       body = body.substring(1, body.length - 1).trim
     val pat = java.util.regex.Pattern.compile(
       java.util.regex.Pattern.quote("$" + param) + "(?![A-Za-z0-9_])")
@@ -900,14 +800,14 @@ object YqlSql {
     * AggregateFlatten combinators (arbitrarily nested). */
   private def parseFactory(fac0: String, ctx: String): Factory = {
     var fac = fac0.trim
-    while (fac.startsWith("(") && YqlScript.matchParen(fac, 0) == fac.length - 1)
+    while (fac.startsWith("(") && SqlText.matchBracket(fac, 0) == fac.length - 1)
       fac = fac.substring(1, fac.length - 1).trim
     def wrapped(kw: String): Option[Seq[String]] =
       s"(?i)^$kw\\s*\\(".r.findFirstMatchIn(fac).map { m =>
-        val close = YqlScript.matchParen(fac, m.end - 1)
+        val close = SqlText.matchBracket(fac, m.end - 1)
         require(fac.substring(close + 1).trim.isEmpty,
           s"trailing text after $kw: ${fac0.take(60)}")
-        YqlScript.splitTopLevel(fac.substring(m.end, close)).map(_.trim)
+        SqlText.split(fac.substring(m.end, close)).map(_.trim)
       }
     wrapped("AggregateTransformInput") match {
       case Some(args) =>
@@ -939,8 +839,8 @@ object YqlSql {
       .getOrElse(throw new IllegalArgumentException(
         s"$ctx factory must be AggregationFactory('name'[, ...]) or a " +
           s"combinator over one, got: ${fac0.take(60)}"))
-    val fclose = YqlScript.matchParen(fac, fm.end - 1)
-    val fargs = YqlScript.splitTopLevel(fac.substring(fm.end, fclose))
+    val fclose = SqlText.matchBracket(fac, fm.end - 1)
+    val fargs = SqlText.split(fac.substring(fm.end, fclose))
       .map(_.trim)
     require(fargs.nonEmpty && fargs.head.length >= 2 &&
       (fargs.head.head == '\'' || fargs.head.head == '"'),
@@ -951,11 +851,11 @@ object YqlSql {
 
   private def lowerAggregateBy(sql: String): String = {
     val re = "(?i)\\b(MULTI_)?(AGGREGATE_BY|AGGREGATEBY)\\s*\\(".r
-    val m = re.findFirstMatchIn(YqlScript.maskQuotes(sql))
+    val m = re.findFirstMatchIn(SqlText.mask(sql))
       .getOrElse(return sql)
     val multi = m.group(1) != null
-    val close = YqlScript.matchParen(sql, m.end - 1)
-    val args = YqlScript.splitTopLevel(sql.substring(m.end, close))
+    val close = SqlText.matchBracket(sql, m.end - 1)
+    val args = SqlText.split(sql.substring(m.end, close))
       .map(_.trim)
     require(args.length == 2,
       "AGGREGATE_BY takes (expression, aggregation factory)")
@@ -1061,9 +961,8 @@ object YqlSql {
     * pure digits stays a numeric literal (`1.5`, `1.0e3`); nested
     * accesses (`t.0.1`) resolve through the fixpoint. */
   private def tupleAccess(sql: String): String = {
-    def identChar(c: Char) = c.isLetterOrDigit || c == '_'
     def pass(s: String): String = {
-      val masked = YqlScript.maskQuotes(s)
+      val masked = SqlText.mask(s)
       val sb = new StringBuilder
       var i = 0
       while (i < s.length) {
@@ -1073,15 +972,15 @@ object YqlSql {
           val prev = s.charAt(i - 1)
           val isAccess =
             if (prev == ')' || prev == ']') true
-            else if (identChar(prev)) {
+            else if (SqlText.isIdent(prev)) {
               var j = i - 1
-              while (j >= 0 && identChar(s.charAt(j))) j -= 1
+              while (j >= 0 && SqlText.isIdent(s.charAt(j))) j -= 1
               !s.substring(j + 1, i).forall(_.isDigit)
             } else false
           var e = i + 1
           while (e < s.length && s.charAt(e).isDigit) e += 1
           val after = if (e < s.length) s.charAt(e) else ' '
-          if (isAccess && !identChar(after)) {
+          if (isAccess && !SqlText.isIdent(after)) {
             sb.append("._").append(s.substring(i + 1, e).toInt + 1)
             i = e
           } else { sb.append(c); i += 1 }
@@ -1111,13 +1010,13 @@ object YqlSql {
     * subquery FROM, non-streaming sources. */
   private[functions] def hopStreamRewrite(spark: SparkSession,
       sql0: String): String = {
-    val masked = YqlScript.maskQuotes(sql0)
+    val masked = SqlText.mask(sql0)
     val m = "(?i)\\bHOP\\s*\\(".r.findFirstMatchIn(masked)
       .getOrElse(return sql0)
     val close =
-      try YqlScript.matchParen(sql0, m.end - 1)
+      try SqlText.matchBracket(sql0, m.end - 1)
       catch { case _: IllegalArgumentException => return sql0 }
-    val args = YqlScript.splitTopLevel(sql0.substring(m.end, close))
+    val args = SqlText.split(sql0.substring(m.end, close))
       .map(_.trim)
     if (args.length != 4 || args.exists(_.contains("$"))) return sql0
     val delay =
@@ -1130,7 +1029,7 @@ object YqlSql {
       if (e < 0) sql0.length else e
     }
     val stmt = sql0.substring(stmtStart, stmtEnd)
-    val fromAt = YqlScript.findTopKw(stmt, "FROM")
+    val fromAt = SqlText.findKw(stmt, "FROM")
     if (fromAt < 0) return sql0
     val afterFrom = stmt.substring(fromAt + 4)
     val leadWs = afterFrom.indexWhere(!_.isWhitespace)
@@ -1176,7 +1075,10 @@ object YqlSql {
     // EVALUATE IF conditions fold through Catalyst: a constant boolean
     // expression evaluated once at lowering time (matching the
     // reference's evaluation phase)
-    val lowered = YqlScript.lower(hopStreamRewrite(spark, query),
+    // comments are whitespace: they go once, here, so no pass below
+    // scans or splices one
+    val lowered = YqlScript.lower(
+        hopStreamRewrite(spark, SqlText.dropComments(query)),
         params, Some { cond =>
       val r = spark.sql(s"SELECT CAST((${rewrite(cond)}) AS BOOLEAN) AS c").head
       !r.isNullAt(0) && r.getBoolean(0)
@@ -1238,7 +1140,7 @@ object YqlSql {
         // INSERT — never analyze the INSERT head itself (spark.sql
         // on a command would execute it)
         val f = full(s)
-        val selAt = YqlScript.findTopKw(f, "SELECT")
+        val selAt = SqlText.findKw(f, "SELECT")
         val stmt = if (selAt < 0) f
           else f.substring(0, selAt) + unions(f.substring(selAt))
         // first write to an @anonymous table creates it (docs
@@ -1299,7 +1201,7 @@ object YqlSql {
       sql: String): String = {
     val re = ("(?i)\\b(FROM|JOIN)\\s+([A-Za-z_][A-Za-z0-9_.]*|`[^`]+`)" +
       "\\s+VIEW\\s+([A-Za-z_][A-Za-z0-9_]*)").r
-    val masked = YqlScript.maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     re.findFirstMatchIn(masked) match {
       case None => sql
       case Some(m) =>

@@ -67,11 +67,11 @@ object YqlTablePaths {
     // Caveat: `SELECT *` then includes __g_tp; these functions are
     // used with explicit projections (GROUP BY TableName()).
     val wantPath = PseudoRe
-      .findFirstIn(YqlScript.maskQuotes(sql)).isDefined
+      .findFirstIn(SqlText.mask(sql)).isDefined
     val (out, loweredCalls) = rewriteFrom(spark, sql, 0, wantPath, 0)
     if (!wantPath || loweredCalls == 0) out
     else {
-      val masked = YqlScript.maskQuotes(out)
+      val masked = SqlText.mask(out)
       val sb = new StringBuilder
       var last = 0
       PseudoRe.findAllMatchIn(masked).foreach { m =>
@@ -93,14 +93,14 @@ object YqlTablePaths {
   @annotation.tailrec
   private def rewriteFrom(spark: SparkSession, sql: String, from: Int,
       withPath: Boolean, lowered: Int): (String, Int) = {
-    val masked = YqlScript.maskQuotes(sql)
+    val masked = SqlText.mask(sql)
     CallRe.findAllMatchIn(masked).find(_.start >= from) match {
       case None => (sql, lowered)
       case Some(m) =>
         val fn = m.group(2).toUpperCase
         val open = m.end - 1
-        val close = YqlScript.matchParen(sql, open)
-        val args = YqlScript.splitTopLevel(sql.substring(open + 1, close))
+        val close = SqlText.matchBracket(sql, open)
+        val args = SqlText.split(sql.substring(open + 1, close))
           .map(_.trim).filter(_.nonEmpty)
         if (!eligible(fn, args)) rewriteFrom(spark, sql, close + 1, withPath, lowered)
         else {
@@ -187,7 +187,7 @@ object YqlTablePaths {
     * `$bindings` arrive as one parenthesized group). */
   private def unwrap(a0: String): String = {
     var a = a0.trim
-    while (a.startsWith("(") && YqlScript.matchParen(a, 0) == a.length - 1)
+    while (a.startsWith("(") && SqlText.matchBracket(a, 0) == a.length - 1)
       a = a.substring(1, a.length - 1).trim
     a
   }
@@ -196,7 +196,7 @@ object YqlTablePaths {
     * by the regex `fns`. */
   private def callBody(s: String, fns: String, what: String): Option[String] =
     s"(?i)^($fns)\\s*\\(".r.findFirstMatchIn(s).map { m =>
-      val close = YqlScript.matchParen(s, m.end - 1)
+      val close = SqlText.matchBracket(s, m.end - 1)
       require(s.substring(close + 1).trim.isEmpty,
         s"trailing text after $what: ${s.take(60)}")
       s.substring(m.end, close)
@@ -221,7 +221,7 @@ object YqlTablePaths {
       if (a.startsWith("[") && a.endsWith("]")) a.substring(1, a.length - 1)
       else callBody(a, "AsList|array", s"the $fn list").getOrElse(
         throw new IllegalArgumentException(s"$fn expects $expected; got: ${a0.take(60)}"))
-    YqlScript.splitTopLevel(inner).map(_.trim).filter(_.nonEmpty)
+    SqlText.split(inner).map(_.trim).filter(_.nonEmpty)
   }
 
   /** A literal list: `AsList('a', 'b')` or `['a', 'b']`. */
@@ -241,7 +241,7 @@ object YqlTablePaths {
         val body = callBody(r, "AsStruct", "an AS_TABLE row").getOrElse(
           throw new IllegalArgumentException(
             s"AS_TABLE rows must be AsStruct(expr AS name, ...): ${r.take(60)}"))
-        YqlScript.splitTopLevel(body).map(_.trim).filter(_.nonEmpty).map { item =>
+        SqlText.split(body).map(_.trim).filter(_.nonEmpty).map { item =>
           val am = "(?i)^([\\s\\S]+?)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*)$".r
             .findFirstMatchIn(item).getOrElse(
               throw new IllegalArgumentException(

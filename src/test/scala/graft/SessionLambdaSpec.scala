@@ -128,4 +128,27 @@ class SessionLambdaSpec extends SparkSpec {
     assert(r2.getDecimal(0).doubleValue() == 1.5 &&
       r2.getDouble(1) == 25.0)
   }
+
+  private def runKw(select: String): Seq[(Long, Long)] = {
+    Seq((1L, 0L), (1L, 1L), (2L, 5L)).toDF("k", "ts")
+      .createOrReplaceTempView("ev_kw")
+    YqlSql.sql(spark,
+      s"""$$init = ($$row) -> ($$row.ts);
+         |$$update = ($$row, $$state) -> (AsTuple(false, $$row.ts));
+         |$$calculate = ($$row, $$state) -> ($$state);
+         |$select
+         |GROUP BY k, SessionWindow(ts, $$init, $$update, $$calculate)""".stripMargin)
+      .orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+  }
+
+  test("SELECT carving: a keyword inside an identifier is not a clause") {
+    // valid_from holds FROM: it names a column, not the FROM clause
+    assert(runKw("SELECT k, COUNT(*) AS valid_from FROM ev_kw") ==
+      Seq((1L, 2L), (2L, 1L)))
+  }
+
+  test("SELECT carving: a FROM after an escaped quote stays in the literal") {
+    assert(runKw("SELECT k, COUNT(*) AS n, 'it\\'s FROM x' AS lit " +
+      "FROM ev_kw") == Seq((1L, 2L), (2L, 1L)))
+  }
 }

@@ -309,6 +309,15 @@ class YqlScriptSpec extends SparkSpec {
     assert(df2.as[(Long, String)].collect().toSeq == Seq((1L, "b,c,a")))
   }
 
+  test("REDUCE clause keywords match whole identifiers only") {
+    // created_on and on_x hold ON; neither starts the ON clause
+    val l = YqlScript.lower(
+      """$r = ($k, $vs) -> (AsStruct($k AS key, SUM($vs) AS s));
+        |REDUCE t PRESORT created_on ON k USING $r(on_x)""".stripMargin)
+    assert(l.selects.head ==
+      "SELECT (k) AS key, SUM((on_x)) AS s FROM t GROUP BY k")
+  }
+
   // ——— DECLARE (SQLv1.g.in declare_stmt) ———
 
   test("DECLARE binds typed parameters from the caller or the default") {
@@ -373,6 +382,18 @@ class YqlScriptSpec extends SparkSpec {
       "SELECT 1 AS a;\nSELECT 2 AS b;")
     assert(df.columns.toSeq == Seq("b"))
     assert(df.as[Int].head() == 2)
+  }
+
+  test("comments are whitespace: ';' and quotes inside them split nothing") {
+    val df = YqlSql.sql(spark, "SELECT 1 AS a; /* x; */ SELECT 2 AS b;")
+    assert(df.columns.toSeq == Seq("b") && df.as[Int].head() == 2)
+    val df2 = YqlSql.sql(spark,
+      """$x = 1; /* a ; it's /* nested ' */ */
+        |-- don't ; split here
+        |SELECT /* ; ' */ $x AS a, -- it's ; mid-statement
+        |  'it\'s; -- not /* a comment' AS b; /* trailing ; ' */""".stripMargin)
+    assert(df2.as[(Int, String)].collect().toSeq ==
+      Seq((1, "it's; -- not /* a comment")))
   }
 
   // ——— USE / COMMIT / INSERT INTO (SQLv1.g.in use_stmt,
