@@ -52,7 +52,7 @@ object MatchRecognizeSql {
     * view holding the matched rows; fixpoint over multiple clauses. */
   def rewrite(spark: SparkSession, sql: String): String = {
     val masked = SqlText.mask(sql)
-    val m = "(?i)\\bMATCH_RECOGNIZE\\s*\\(".r.findFirstMatchIn(masked)
+    val m = SqlText.re("(?i)\\bMATCH_RECOGNIZE\\s*\\(").findFirstMatchIn(masked)
       .getOrElse(return sql)
     val open = m.end - 1
     val close = SqlText.matchBracket(masked, open)
@@ -67,8 +67,8 @@ object MatchRecognizeSql {
       if (masked.charAt(e) == ')') SqlText.openerOf(masked, e)
       else {
         var s0 = e
-        while (s0 >= 0 && (masked.charAt(s0).isLetterOrDigit ||
-          masked.charAt(s0) == '_' || masked.charAt(s0) == '.')) s0 -= 1
+        while (s0 >= 0 && (SqlText.isIdent(masked.charAt(s0)) ||
+          masked.charAt(s0) == '.')) s0 -= 1
         s0 + 1
       }
     val srcText = sql.substring(srcStart, e + 1)
@@ -150,7 +150,7 @@ object MatchRecognizeSql {
       var changed = true
       while (changed) {
         changed = false
-        val mm = "(?i)\\bPREV\\s*\\(".r.findFirstMatchIn(SqlText.mask(ex))
+        val mm = SqlText.re("(?i)\\bPREV\\s*\\(").findFirstMatchIn(SqlText.mask(ex))
         mm.foreach { m =>
           val close = SqlText.matchBracket(SqlText.mask(ex), m.end - 1)
           val inner0 = ex.substring(m.end, close).trim
@@ -169,7 +169,7 @@ object MatchRecognizeSql {
         }
       }
       Seq("NEXT", "FIRST", "LAST").foreach { kw =>
-        require(("(?i)\\b" + kw + "\\s*\\(").r
+        require(SqlText.re("(?i)\\b" + kw + "\\s*\\(")
           .findFirstIn(SqlText.mask(ex)).isEmpty,
           s"$kw() navigation in DEFINE is not supported (PREV only)")
       }
@@ -178,8 +178,8 @@ object MatchRecognizeSql {
       // original (as the PREV rewrite does) so a string literal
       // containing e.g. 'A.foo' survives untouched.
       varNames.foldLeft(ex) { (e0, v) =>
-        val re = ("(?i)\\b" + java.util.regex.Pattern.quote(v) +
-          "\\.(?=[A-Za-z_])").r
+        val re = SqlText.re("(?i)\\b" + java.util.regex.Pattern.quote(v) +
+          "\\.(?=[A-Za-z_])")
         val out = new StringBuilder
         var last = 0
         re.findAllMatchIn(SqlText.mask(e0)).foreach { m =>

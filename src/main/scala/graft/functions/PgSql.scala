@@ -100,7 +100,7 @@ object PgSql {
       val masked = SqlText.mask(text)
       // lookahead, not \s: `ORDER BY(a)` is legal PG — the item scan
       // starts right after BY either way
-      val m = "(?is)\\bORDER\\s+BY(?=[\\s(])".r.findAllMatchIn(masked)
+      val m = SqlText.re("(?is)\\bORDER\\s+BY(?=[\\s(])").findAllMatchIn(masked)
         .filter(_.start < searchEnd).foldLeft(
           Option.empty[scala.util.matching.Regex.Match]) {
           (acc, mm) => if (acc.forall(_.start < mm.start)) Some(mm) else acc
@@ -115,8 +115,8 @@ object PgSql {
           val rebuilt = items.map { raw =>
             val it = raw.trim
             if (it.isEmpty ||
-                it.matches("(?is).*\\bNULLS\\s+(FIRST|LAST)\\s*$")) raw
-            else if (it.matches("(?is).*\\bDESC\\s*$")) s" $it NULLS FIRST"
+                SqlText.re("(?is).*\\bNULLS\\s+(FIRST|LAST)\\s*$").matches(it)) raw
+            else if (SqlText.re("(?is).*\\bDESC\\s*$").matches(it)) s" $it NULLS FIRST"
             else s" $it NULLS LAST"
           }.mkString(",")
           text = text.substring(0, mm.end) + rebuilt + " " +
@@ -278,9 +278,9 @@ object PgSql {
     * a qualified `t.*` raises named. */
   private def rewriteDistinctOn(sql: String): String = {
     val masked = SqlText.mask(sql)
-    val m = "(?is)\\bSELECT\\s+DISTINCT\\s+ON\\s*\\(".r
+    val m = SqlText.re("(?is)\\bSELECT\\s+DISTINCT\\s+ON\\s*\\(")
       .findFirstMatchIn(masked).getOrElse {
-        if (masked.matches("(?is).*\\bDISTINCT\\s+ON\\s*\\(.*"))
+        if (SqlText.re("(?is).*\\bDISTINCT\\s+ON\\s*\\(.*").matches(masked))
           throw new IllegalArgumentException(
             "DISTINCT ON must directly follow SELECT (PG grammar)")
         return sql
@@ -415,7 +415,7 @@ object PgSql {
     * right side of `.` chains keep their text. */
   private def unqualifyTop(item: String): String = {
     val masked = SqlText.mask(item)
-    val re = "(?<![A-Za-z0-9_.`])([A-Za-z_][A-Za-z0-9_]*)\\.(?=[A-Za-z_`])".r
+    val re = SqlText.re("(?<![.`])\\b([A-Za-z_][A-Za-z0-9_]*)\\.(?=[A-Za-z_`])")
     val b = new StringBuilder(item)
     re.findAllMatchIn(masked).toSeq.reverseIterator.foreach { mm =>
       b.replace(mm.start, mm.end, "")
@@ -449,8 +449,8 @@ object PgSql {
           (at + 1 >= masked.length || "~*".indexOf(masked.charAt(at + 1)) < 0)) {
         var k = at - 1
         while (k >= 0 && masked.charAt(k).isWhitespace) k -= 1
-        val lhs = k >= 0 && (masked.charAt(k).isLetterOrDigit ||
-          "_')`".indexOf(masked.charAt(k)) >= 0)
+        val lhs = k >= 0 && (SqlText.isIdent(masked.charAt(k)) ||
+          "')`".indexOf(masked.charAt(k)) >= 0)
         if (lhs) b.replace(at, at + 1, " RLIKE ")
       }
       at -= 1
@@ -472,7 +472,7 @@ object PgSql {
     "ESCAPE", "OVER", "PARTITION", "VALUES", "WITH", "SET", "RETURNING")
 
   private val caseOrEnd =
-    "(?i)(?<![A-Za-z0-9_.$])(CASE|END)(?![A-Za-z0-9_.$])".r
+    SqlText.re("(?i)(?<!\\.)\\b(CASE|END)\\b(?!\\.)")
 
   /** Index just past the `END` that closes the `CASE` at `at`. */
   private def caseEnd(masked: String, at: Int): Int = {
@@ -580,7 +580,7 @@ object PgSql {
   private def rewriteArrays(sql: String): String = {
     val masked = SqlText.mask(sql)
     // literals first (innermost-last; the loop re-masks every pass)
-    val lit = "(?is)\\bARRAY\\s*\\[".r.findFirstMatchIn(masked)
+    val lit = SqlText.re("(?is)\\bARRAY\\s*\\[").findFirstMatchIn(masked)
     if (lit.isDefined) {
       val open = lit.get.end - 1
       val close = SqlText.matchBracket(masked, open)
@@ -593,8 +593,8 @@ object PgSql {
     while (at >= 0) {
       var k = at - 1
       while (k >= 0 && masked.charAt(k).isWhitespace) k -= 1
-      val prim = k >= 0 && (masked.charAt(k).isLetterOrDigit ||
-        "_')]`".indexOf(masked.charAt(k)) >= 0)
+      val prim = k >= 0 && (SqlText.isIdent(masked.charAt(k)) ||
+        "')]`".indexOf(masked.charAt(k)) >= 0)
       if (prim) {
         val close = SqlText.matchBracket(masked, at)
         val idx = sql.substring(at + 1, close)
@@ -624,8 +624,8 @@ object PgSql {
     val c = masked.charAt(i)
     if (c == ')' || c == ']') {
       var j = SqlText.openerOf(masked, i) - 1
-      while (j >= 0 && (masked.charAt(j).isLetterOrDigit ||
-        masked.charAt(j) == '_' || masked.charAt(j) == '.')) j -= 1
+      while (j >= 0 && (SqlText.isIdent(masked.charAt(j)) ||
+        masked.charAt(j) == '.')) j -= 1
       j + 1
     } else if (c == '\'' || c == '`') {
       var j = i - 1
@@ -633,8 +633,8 @@ object PgSql {
       math.max(j, 0)
     } else {
       var j = i
-      while (j >= 0 && (masked.charAt(j).isLetterOrDigit ||
-        masked.charAt(j) == '_' || masked.charAt(j) == '.')) j -= 1
+      while (j >= 0 && (SqlText.isIdent(masked.charAt(j)) ||
+        masked.charAt(j) == '.')) j -= 1
       j + 1
     }
   }
@@ -642,7 +642,7 @@ object PgSql {
   private def replaceTopLevel(sql: String, opRe: String,
       replacement: String): String = {
     val masked = SqlText.mask(sql)
-    val re = opRe.r
+    val re = SqlText.re(opRe)
     val b = new StringBuilder(sql)
     re.findAllMatchIn(masked).toSeq.reverseIterator.foreach { m =>
       b.replace(m.start, m.end, replacement)
@@ -656,7 +656,7 @@ object PgSql {
   private def rewriteCiRegex(sql: String, opRe: String,
       negate: Boolean): String = {
     val masked = SqlText.mask(sql)
-    val m = opRe.r.findFirstMatchIn(masked).getOrElse(return sql)
+    val m = SqlText.re(opRe).findFirstMatchIn(masked).getOrElse(return sql)
     var j = m.end
     while (j < sql.length && sql.charAt(j).isWhitespace) j += 1
     val rhsEnd = endOfPrimary(sql, masked, j)
@@ -679,8 +679,8 @@ object PgSql {
       while (j < n && masked.charAt(j) != q) j += 1
       return j + 1
     }
-    while (j < n && (sql.charAt(j).isLetterOrDigit ||
-        sql.charAt(j) == '_' || sql.charAt(j) == '.')) j += 1
+    while (j < n && (SqlText.isIdent(sql.charAt(j)) ||
+        sql.charAt(j) == '.')) j += 1
     if (j < n && sql.charAt(j) == '(') j = SqlText.matchBracket(sql, j) + 1
     math.max(j, at + 1)
   }
@@ -763,7 +763,7 @@ object PgSql {
     val open = m.end - 1
     val close = SqlText.matchBracket(sql, open)
     val inner = sql.substring(open + 1, close).trim
-    if (inner.matches("(?is)^(SELECT|WITH|VALUES)\\b.*"))
+    if (SqlText.re("(?is)^(SELECT|WITH|VALUES)\\b.*").matches(inner))
       throw new IllegalArgumentException(
         s"${m.group(2).toUpperCase} with a subquery is not in the " +
           "bound PG subset — use IN (SELECT ...) or EXISTS")
@@ -785,8 +785,7 @@ object PgSql {
     * the unit keyword. `WITH TIES` raises named (needs a rank
     * window, not a LIMIT). */
   private def rewriteFetchFirst(sql: String): String = {
-    if (SqlText.mask(sql)
-        .matches("(?is).*\\bWITH\\s+TIES\\b.*"))
+    if (SqlText.re("(?is).*\\bWITH\\s+TIES\\b.*").matches(SqlText.mask(sql)))
       throw new IllegalArgumentException(
         "FETCH FIRST ... WITH TIES is not in the bound PG subset — " +
           "rewrite with rank() OVER (ORDER BY ...) <= n")
@@ -799,7 +798,7 @@ object PgSql {
       "(?i)\\bFETCH\\s+(?:FIRST|NEXT)\\s+ROWS?\\s+ONLY\\b", "LIMIT 1")
     // PG's standard clause order is OFFSET-then-FETCH; Spark's
     // grammar only accepts LIMIT-then-OFFSET
-    val re = "(?i)\\bOFFSET\\s+(\\d+)\\s+LIMIT\\s+(\\d+)".r
+    val re = SqlText.re("(?i)\\bOFFSET\\s+(\\d+)\\s+LIMIT\\s+(\\d+)")
     val masked = SqlText.mask(s)
     val b = new StringBuilder(s)
     re.findAllMatchIn(masked).toSeq.reverseIterator.foreach { m =>
@@ -813,7 +812,7 @@ object PgSql {
   private def replaceTopLevelKeepGroups(sql: String, opRe: String,
       replacement: String): String = {
     val masked = SqlText.mask(sql)
-    val re = opRe.r
+    val re = SqlText.re(opRe)
     val b = new StringBuilder(sql)
     re.findAllMatchIn(masked).toSeq.reverseIterator.foreach { m =>
       val rep = replacement.replace("$1",
@@ -830,12 +829,11 @@ object PgSql {
     * raises named like string_agg. */
   private def rewriteArrayAgg(sql: String): String = {
     val masked = SqlText.mask(sql)
-    val m = "(?i)(?<![A-Za-z0-9_])array_agg\\s*\\(".r
+    val m = SqlText.re("(?i)\\barray_agg\\s*\\(")
       .findFirstMatchIn(masked).getOrElse(return sql)
     val close = SqlText.matchBracket(sql, m.end - 1)
     val argText = sql.substring(m.end, close).trim
-    if (SqlText.mask(argText)
-        .matches("(?is).*\\bORDER\\s+BY\\b.*"))
+    if (SqlText.re("(?is).*\\bORDER\\s+BY\\b.*").matches(SqlText.mask(argText)))
       throw new IllegalArgumentException(
         "array_agg with an aggregate ORDER BY is not in the bound " +
           "PG subset — the distributed collect has no order contract")
@@ -864,10 +862,10 @@ object PgSql {
   private def rewriteArrayFns(sql: String): String = {
     var s = sql
     s = replaceTopLevel(s,
-      "(?i)(?<![A-Za-z0-9_])array_to_string(?=\\s*\\()", "array_join")
+      "(?i)\\barray_to_string(?=\\s*\\()", "array_join")
     // one match per pass, innermost recursion re-masks the text
     val masked = SqlText.mask(s)
-    val lenM = "(?i)(?<![A-Za-z0-9_])array_length\\s*\\(".r
+    val lenM = SqlText.re("(?i)\\barray_length\\s*\\(")
       .findFirstMatchIn(masked)
     if (lenM.isDefined) {
       val m = lenM.get
@@ -880,7 +878,7 @@ object PgSql {
       return rewriteArrayFns(s.substring(0, m.start) +
         s"nullif(size(${args(0).trim}), 0)" + s.substring(close + 1))
     }
-    val staM = "(?i)(?<![A-Za-z0-9_])string_to_array\\s*\\(".r
+    val staM = SqlText.re("(?i)\\bstring_to_array\\s*\\(")
       .findFirstMatchIn(masked)
     if (staM.isDefined) {
       val m = staM.get
@@ -944,7 +942,7 @@ object PgSql {
     * happens at parse time, as in similar_escape's const-fold path). */
   private def rewriteSimilarTo(sql: String): String = {
     val masked = SqlText.mask(sql)
-    val m = "(?is)\\b(NOT\\s+)?SIMILAR\\s+TO\\b".r
+    val m = SqlText.re("(?is)\\b(NOT\\s+)?SIMILAR\\s+TO\\b")
       .findFirstMatchIn(masked).getOrElse(return sql)
     var j = m.end
     while (j < masked.length && masked.charAt(j).isWhitespace) j += 1
@@ -1033,12 +1031,12 @@ object PgSql {
     var found = true
     while (found) {
       val masked = SqlText.mask(s)
-      "(?i)(?<![A-Za-z0-9_])unnest\\s*\\(".r
+      SqlText.re("(?i)\\bunnest\\s*\\(")
         .findFirstMatchIn(masked) match {
         case None => found = false
         case Some(m) =>
           val before = masked.substring(0, m.start)
-          val afterKw = "(?is).*(\\bfrom|\\bjoin)\\s*$".r
+          val afterKw = SqlText.re("(?is).*(\\bfrom|\\bjoin)\\s*$")
             .pattern.matcher(before).matches()
           val ctx = clauseContext(before).toLowerCase
           val afterComma = "(?s).*,\\s*$".r.pattern.matcher(ctx).matches() &&
@@ -1056,7 +1054,7 @@ object PgSql {
           val arr = args.head.trim
           // WITH ORDINALITY → posexplode, PG's 1-based ordinal second
           val tail = masked.substring(close + 1)
-          val om = "(?is)^\\s*WITH\\s+ORDINALITY\\b".r.findFirstMatchIn(tail)
+          val om = SqlText.re("(?is)^\\s*WITH\\s+ORDINALITY\\b").findFirstMatchIn(tail)
           val (replacement, endAt) = om match {
             case Some(o) =>
               (s"(SELECT col AS unnest, pos + 1 AS ordinality FROM " +
@@ -1075,11 +1073,11 @@ object PgSql {
     * Spark spelling and raises named. */
   private def rejectOrderedStringAgg(sql: String): String = {
     val masked = SqlText.mask(sql)
-    "(?i)(?<![A-Za-z0-9_])string_agg\\s*\\(".r.findAllMatchIn(masked)
+    SqlText.re("(?i)\\bstring_agg\\s*\\(").findAllMatchIn(masked)
       .foreach { m =>
         val close = SqlText.matchBracket(masked, m.end - 1)
-        if (masked.substring(m.end, close)
-            .matches("(?is).*\\bORDER\\s+BY\\b.*"))
+        if (SqlText.re("(?is).*\\bORDER\\s+BY\\b.*")
+            .matches(masked.substring(m.end, close)))
           throw new IllegalArgumentException(
             "string_agg with an aggregate ORDER BY is not in the bound " +
               "PG subset")
@@ -1091,7 +1089,7 @@ object PgSql {
     * least/greatest (PG swaps the endpoints when x > y). */
   private def rewriteBetweenSymmetric(sql: String): String = {
     val masked = SqlText.mask(sql)
-    val m = "(?is)\\bBETWEEN\\s+SYMMETRIC\\b".r
+    val m = SqlText.re("(?is)\\bBETWEEN\\s+SYMMETRIC\\b")
       .findFirstMatchIn(masked).getOrElse(return sql)
     val xEnd = operandEnd(masked, m.end)
     val x = sql.substring(m.end, xEnd).trim
@@ -1114,7 +1112,7 @@ object PgSql {
     * to timestamp first (PG accepts date/timestamp alike). */
   private def rewriteExtractEpoch(sql: String): String = {
     var s = sql
-    var m = "(?i)(?<![A-Za-z0-9_])extract\\s*\\(\\s*epoch\\s+from\\s".r
+    var m = SqlText.re("(?i)\\bextract\\s*\\(\\s*epoch\\s+from\\s")
       .findFirstMatchIn(SqlText.mask(s))
     while (m.isDefined) {
       val open = s.indexOf('(', m.get.start)
@@ -1123,7 +1121,7 @@ object PgSql {
       s = s.substring(0, m.get.start) +
         s"(CAST(unix_micros(CAST(($inner) AS TIMESTAMP)) AS DOUBLE) / 1000000.0)" +
         s.substring(close + 1)
-      m = "(?i)(?<![A-Za-z0-9_])extract\\s*\\(\\s*epoch\\s+from\\s".r
+      m = SqlText.re("(?i)\\bextract\\s*\\(\\s*epoch\\s+from\\s")
         .findFirstMatchIn(SqlText.mask(s))
     }
     s
@@ -1146,7 +1144,7 @@ object PgSql {
     var found = true
     while (found) {
       val masked = SqlText.mask(s)
-      "(?i)(?<![A-Za-z0-9_])generate_series\\s*\\(".r
+      SqlText.re("(?i)\\bgenerate_series\\s*\\(")
         .findFirstMatchIn(masked) match {
         case None => found = false
         case Some(m) =>
@@ -1154,7 +1152,7 @@ object PgSql {
           // JOIN or a comma inside a FROM list; anything else is a
           // select-list set-returning call — out of subset
           val before = masked.substring(0, m.start)
-          val afterKw = "(?is).*(\\bfrom|\\bjoin)\\s*$".r
+          val afterKw = SqlText.re("(?is).*(\\bfrom|\\bjoin)\\s*$")
             .pattern.matcher(before).matches()
           // a comma counts as table position only when the current
           // CLAUSE is a FROM list (last FROM after last SELECT at the

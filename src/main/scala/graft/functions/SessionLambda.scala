@@ -70,7 +70,7 @@ object SessionLambda {
     * already lowered textually; anything else raises there. */
   def rewrite(spark: SparkSession, sql: String): String = {
     val masked = SqlText.mask(sql)
-    val re = "(?i)\\bSessionWindow\\s*\\(".r
+    val re = SqlText.re("(?i)\\bSessionWindow\\s*\\(")
     val m = re.findFirstMatchIn(masked).getOrElse(return sql)
     // nested scope? recurse into the innermost enclosing parens
     var open = m.start - 1
@@ -148,9 +148,9 @@ object SessionLambda {
     out.createOrReplaceTempView(view)
 
     // SessionStart() reads the session key column
-    val sel2 = "(?i)\\bSessionStart\\s*\\(\\s*\\)".r
+    val sel2 = SqlText.re("(?i)\\bSessionStart\\s*\\(\\s*\\)")
       .replaceAllIn(selectList, aliasCol)
-    val tail2 = "(?i)\\bSessionStart\\s*\\(\\s*\\)".r
+    val tail2 = SqlText.re("(?i)\\bSessionStart\\s*\\(\\s*\\)")
       .replaceAllIn(tail, aliasCol)
     sql.substring(0, selAt) + "SELECT" + sel2 + "FROM " + view +
       " GROUP BY " + (keys ++ Seq("__session_id", aliasCol))

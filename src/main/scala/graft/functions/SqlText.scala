@@ -1,5 +1,7 @@
 package graft.functions
 
+import scala.util.matching.Regex
+
 /** The lexical rules of the Spark-SQL text the text frontends scan and
   * emit — YQL scripts ([[YqlScript]]), module calls and sugar
   * ([[YqlSql]]), table paths ([[YqlTablePaths]]), MATCH_RECOGNIZE
@@ -12,8 +14,14 @@ package graft.functions
   *     the next character inside `'` and `"`, never inside backticks;
   *   - `--` comments (to the end of the line) and nested `/* */`
   *     comments, both of which count as whitespace;
-  *   - identifier characters: letters, digits, `_` and `$`;
+  *   - identifier characters: letters, digits, `_` and `$`; the
+  *     passes take word boundaries only from these, [[isIdent]] in
+  *     their walks and `\b` in the regexes they build with [[re]];
   *   - one bracket depth over `()`, `[]` and `{}`.
+  *
+  * What a plain NAME may be (`[A-Za-z_][A-Za-z0-9_]*` for YQL's
+  * `$bindings` and columns, PATTERN variables, PRAGMA names) is each
+  * language's grammar, not a lexical rule, and stays with its pass.
   *
   * Every primitive takes and returns positions in the text it was
   * given, so a pass scans with these and splices the original. Scans
@@ -27,6 +35,51 @@ object SqlText {
   private val Hidden: Char = '\u0001'
 
   def isIdent(c: Char): Boolean = c.isLetterOrDigit || c == '_' || c == '$'
+
+  /** [[isIdent]] as a regex character class (ASCII `\w` first, the
+    * cheap test for the common case). */
+  val IdentClass = "[\\w$\\p{L}\\p{Nd}]"
+
+  /** A regex in which `\b` is a boundary of [[IdentClass]], not of
+    * Java's `\w` (which takes `$` and non-ASCII letters for
+    * boundaries): the passes write their keyword patterns through this,
+    * so a keyword never matches inside `$from`. A `\b` before a word
+    * (a letter, `_`, `\Q` or a group) asserts that no identifier
+    * character precedes; any other `\b` that none follows. */
+  def re(pattern: String): Regex = {
+    val hit = compiled.get(pattern)
+    if (hit != null) hit
+    else {
+      val r = boundaries(pattern).r
+      compiled.put(pattern, r)
+      r
+    }
+  }
+
+  private def boundaries(p: String): String = {
+    val out = new StringBuilder
+    var i = 0
+    while (i < p.length) {
+      val c = p.charAt(i)
+      if (c == '\\' && i + 1 < p.length) {
+        if (p.charAt(i + 1) == 'b') {
+          val n = if (i + 2 < p.length) p.charAt(i + 2) else ' '
+          val word = n.isLetter || n == '_' || p.startsWith("\\Q", i + 2) ||
+            n == '(' && (!p.startsWith("(?", i + 2) || p.startsWith("(?:", i + 2))
+          out.append(if (word) s"(?<!$IdentClass)" else s"(?!$IdentClass)")
+        } else out.append(c).append(p.charAt(i + 1))
+        i += 2
+      } else { out.append(c); i += 1 }
+    }
+    out.toString
+  }
+
+  /** [[re]]'s compiled patterns, least recently used out first. */
+  private val compiled = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, Regex](256, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, Regex]): Boolean = size > 1024
+    })
 
   private def isOpen(c: Char) = c == '(' || c == '[' || c == '{'
   private def isClose(c: Char) = c == ')' || c == ']' || c == '}'
@@ -84,7 +137,9 @@ object SqlText {
     new String(a)
   }
 
-  /** `s` with every comment replaced by one space. */
+  /** `s` with every comment replaced by one space, except a Spark
+    * hint (`/*+ ... */`), which stays for Spark's parser; [[mask]] and
+    * the scans still read it as whitespace. */
   def dropComments(s: String): String = {
     val out = new StringBuilder
     var i = 0; var last = 0
@@ -92,7 +147,8 @@ object SqlText {
       val j = skip(s, i)
       if (j == i) i += 1
       else {
-        if (s.charAt(i) == '-' || s.charAt(i) == '/') {
+        if (s.charAt(i) == '-' ||
+            s.charAt(i) == '/' && !s.startsWith("/*+", i)) {
           out.append(s.substring(last, i)).append(' '); last = j
         }
         i = j
@@ -130,17 +186,17 @@ object SqlText {
     close
   }
 
-  /** Index of the bracket that opens the one at `close`. */
-  def openerOf(s: String, close: Int): Int = {
-    val m = mask(s.substring(0, close + 1))
+  /** Index of the bracket that opens the one at `close` of `masked`,
+    * a [[mask]]ed text: the walk costs only the distance it covers. */
+  def openerOf(masked: String, close: Int): Int = {
     var i = close - 1; var depth = 0
     while (i >= 0) {
-      val c = m.charAt(i)
+      val c = masked.charAt(i)
       if (isClose(c)) depth += 1
       else if (isOpen(c)) { if (depth == 0) return i; depth -= 1 }
       i -= 1
     }
-    fail(s, close, s"unbalanced '${s.charAt(close)}'")
+    fail(masked, close, s"unbalanced '${masked.charAt(close)}'")
   }
 
   /** First depth-0 occurrence of `sep` at or after `from`, or -1. */

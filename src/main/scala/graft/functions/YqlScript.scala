@@ -248,7 +248,7 @@ object YqlScript {
           s"BATCH applies to DELETE/UPDATE, got: ${st.take(40)}")
       }
       if (firstWord != "PRAGMA" && pragmaFiles.nonEmpty &&
-          "(?i)\\b(FileContent|FilePath|FolderPath|ParseFile)\\s*\\(".r
+          SqlText.re("(?i)\\b(FileContent|FilePath|FolderPath|ParseFile)\\s*\\(")
             .findFirstIn(SqlText.mask(st)).isDefined)
         st = lowerFileFns(st, pragmaFiles)
       if (firstWord == "PRAGMA") {
@@ -336,7 +336,7 @@ object YqlScript {
         // `INSERT OR ABORT|REVERT|IGNORE INTO` (SQLv1.g.in:579) is the
         // keyed conflict-policy insert; bare INSERT INTO stays the
         // static-table append
-        val or = "(?i)^INSERT\\s+OR\\s+(ABORT|REVERT|IGNORE)\\s+INTO\\b".r
+        val or = SqlText.re("(?i)^INSERT\\s+OR\\s+(ABORT|REVERT|IGNORE)\\s+INTO\\b")
           .findFirstMatchIn(st)
         if (or.isDefined)
           stmts += lowerInsertOr(st, or.get.group(1).toLowerCase,
@@ -364,7 +364,7 @@ object YqlScript {
           require(idx < sts.length, "DEFINE without END DEFINE")
           st = st + "; " + sts(idx)
         }
-        if ("(?i)^DEFINE\\s+ACTION\\b".r.findFirstIn(st).isDefined)
+        if (SqlText.re("(?i)^DEFINE\\s+ACTION\\b").findFirstIn(st).isDefined)
           defineAction(st, actions)
         else defineSubquery(st, scalars, lambdas)
       }
@@ -392,12 +392,12 @@ object YqlScript {
         }
         if (!norm.takeWhile(_.isLetter).equalsIgnoreCase("EVALUATE"))
           norm = "EVALUATE " + norm
-        if ("(?i)^EVALUATE\\s+IF\\b".r.findFirstIn(norm).isDefined)
+        if (SqlText.re("(?i)^EVALUATE\\s+IF\\b").findFirstIn(norm).isDefined)
           sts.insertAll(idx + 1,
             evaluateIf(norm, actions, scalars, lambdas, evalCond))
         else {
           // EVALUATE PARALLEL FOR normalizes to EVALUATE FOR
-          norm = "(?i)^EVALUATE\\s+PARALLEL\\s+FOR\\b".r
+          norm = SqlText.re("(?i)^EVALUATE\\s+PARALLEL\\s+FOR\\b")
             .replaceFirstIn(norm, "EVALUATE FOR")
           sts.insertAll(idx + 1, evaluateFor(norm, actions, scalars, lambdas))
         }
@@ -703,7 +703,7 @@ object YqlScript {
       .map(_.trim).filter(_.nonEmpty)
     require(keys.nonEmpty, "REDUCE ON requires at least one key column")
     var call = st.substring(usingAt + "USING".length, usingEnd).trim
-    if (call.toUpperCase.matches("^ALL\\b[\\s\\S]*"))
+    if (SqlText.re("(?i)^ALL\\b[\\s\\S]*").matches(call))
       throw new IllegalArgumentException(
         "REDUCE USING ALL (one call over every group) is not supported; " +
         "use USING (one call per group)")
@@ -744,7 +744,7 @@ object YqlScript {
       if (keys.length == 1) {
         require(!text.contains("$" + kp + "."),
           s"$$$kp is the bare key value for a single-column key")
-        text = ("\\$" + Pattern.quote(kp) + "\\b").r.replaceAllIn(text,
+        text = SqlText.re("\\$" + Pattern.quote(kp) + "\\b").replaceAllIn(text,
           Matcher.quoteReplacement("(" + keys.head + ")"))
       } else {
         text = ("\\$" + Pattern.quote(kp) + "\\.(\\d+)").r
@@ -754,7 +754,7 @@ object YqlScript {
               s"key tuple index $i out of range (${keys.length} key columns)")
             Matcher.quoteReplacement("(" + keys(i) + ")")
           })
-        if (("\\$" + Pattern.quote(kp) + "\\b").r.findFirstIn(text).isDefined)
+        if (SqlText.re("\\$" + Pattern.quote(kp) + "\\b").findFirstIn(text).isDefined)
           throw new IllegalArgumentException("bare $" + kp +
             " with a multi-column key; use $" + kp + ".N tuple access")
       }
@@ -767,7 +767,7 @@ object YqlScript {
             mm => Matcher.quoteReplacement(sortedCollect(mm.group(1))))
         }
         text = ("\\$" + Pattern.quote(vp) + "\\.").r.replaceAllIn(text, "")
-        if (("\\$" + Pattern.quote(vp) + "\\b").r.findFirstIn(text).isDefined)
+        if (SqlText.re("\\$" + Pattern.quote(vp) + "\\b").findFirstIn(text).isDefined)
           throw new IllegalArgumentException("bare $" + vp +
             " with TableRow(); project columns as $" + vp + ".col")
       } else {
@@ -779,7 +779,7 @@ object YqlScript {
           text = re.replaceAllIn(text,
             Matcher.quoteReplacement(sortedCollect(argExpr)))
         }
-        text = ("\\$" + Pattern.quote(vp) + "\\b").r.replaceAllIn(text,
+        text = SqlText.re("\\$" + Pattern.quote(vp) + "\\b").replaceAllIn(text,
           Matcher.quoteReplacement("(" + argExpr + ")"))
       }
       text
@@ -814,8 +814,8 @@ object YqlScript {
       "support RETURNING")
     // `\s*` before the source: `INSERT INTO t(a, b) SELECT ...` — the
     // column list glued to the table name — is standard spelling
-    val m = ("(?i)^INSERT\\s+INTO\\s+([A-Za-z_][A-Za-z0-9_.]*|`[^`]+`)" +
-      "(\\s+WITH\\s+TRUNCATE\\b)?\\s*([\\s\\S]+)$").r.findFirstMatchIn(st)
+    val m = SqlText.re("(?i)^INSERT\\s+INTO\\s+([A-Za-z_][A-Za-z0-9_.]*|`[^`]+`)" +
+      "(\\s+WITH\\s+TRUNCATE\\b)?\\s*([\\s\\S]+)$").findFirstMatchIn(st)
       .getOrElse(throw new IllegalArgumentException(
         s"malformed INSERT: ${st.take(60)}"))
     val target = m.group(1)
@@ -1150,8 +1150,7 @@ object YqlScript {
             (if (keysNonNull) ", 'graft.keys_nonnull'='true'" else "") + ")"
         DdlStmt(s"CREATE TABLE $ifNot$name (${colSql.mkString(", ")}) " +
           s"USING parquet$bucketSql$props")
-      } else if (rest.take(2).equalsIgnoreCase("AS") &&
-          (rest.length == 2 || !rest.charAt(2).isLetterOrDigit)) {
+      } else if (SqlText.kwEnd(rest, 0, "AS") >= 0) {
         val sel = lowerSelect(substitute(unwrapGroup(rest.drop(2)),
           scalars, lambdas))
         DdlStmt(s"CREATE TABLE $ifNot$name USING parquet AS $sel")
@@ -1305,8 +1304,8 @@ object YqlScript {
     val scalars = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val lambdas = scala.collection.mutable.LinkedHashMap.empty[String, Lambda]
     var exports = Set.empty[String]
-    val sts = scala.collection.mutable.ArrayBuffer(
-      SqlText.split(text, ";").map(_.trim).filter(_.nonEmpty): _*)
+    val sts = scala.collection.mutable.ArrayBuffer(SqlText.split(
+      SqlText.dropComments(text), ";").map(_.trim).filter(_.nonEmpty): _*)
     var idx = 0
     while (idx < sts.length) {
       var st = sts(idx)
@@ -1526,7 +1525,7 @@ object YqlScript {
       t.substring(1, t.length - 1)
     }
     var st = st0
-    val re = "(?i)\\b(FileContent|FilePath|FolderPath|ParseFile)\\s*\\(".r
+    val re = SqlText.re("(?i)\\b(FileContent|FilePath|FolderPath|ParseFile)\\s*\\(")
     var m = re.findFirstMatchIn(SqlText.mask(st))
     while (m.isDefined) {
       val mm = m.get
@@ -1573,9 +1572,7 @@ object YqlScript {
           val inPos = {
             var j = mm.start - 1
             while (j >= 0 && st.charAt(j).isWhitespace) j -= 1
-            j >= 1 && st.substring(math.max(0, j - 1), j + 1)
-              .equalsIgnoreCase("IN") &&
-              (j < 2 || !st.charAt(j - 2).isLetterOrDigit)
+            j >= 1 && SqlText.kwEnd(st, j - 1, "IN") >= 0
           }
           if (inPos)
             lines.map(l => s"CAST(${lit(l)} AS ${t.sql})")
@@ -1746,8 +1743,7 @@ object YqlScript {
         while (!done) {
           val at = lower.indexOf(n + "(", from)
           if (at < 0) done = true
-          else if (at == 0 || (!text.charAt(at - 1).isLetterOrDigit &&
-              text.charAt(at - 1) != '_')) {
+          else if (at == 0 || !SqlText.isIdent(text.charAt(at - 1))) {
             if (best < 0 || at < best) { best = at; bestName = n }
             done = true
           } else from = at + 1
@@ -1857,7 +1853,7 @@ object YqlScript {
     * Uint32/Uint64→BIGINT raw bits).
     */
   def lowerBitcast(sql: String): String = {
-    val re = "(?i)\\bBITCAST\\s*\\(".r
+    val re = SqlText.re("(?i)\\bBITCAST\\s*\\(")
     re.findFirstMatchIn(SqlText.mask(sql)) match {
       case None => sql
       case Some(m) =>
@@ -1904,10 +1900,10 @@ object YqlScript {
     */
   def lowerHop(sql: String): String = {
     val masked = SqlText.mask(sql)
-    "(?i)\\bHOP\\s*\\(".r.findFirstMatchIn(masked) match {
+    SqlText.re("(?i)\\bHOP\\s*\\(").findFirstMatchIn(masked) match {
       case None => sql
       case Some(m) =>
-        val gb = "(?i)\\bGROUP\\s+BY\\b".r.findFirstMatchIn(masked)
+        val gb = SqlText.re("(?i)\\bGROUP\\s+BY\\b").findFirstMatchIn(masked)
         require(gb.exists(_.end <= m.start),
           "HOP(...) is only valid as a GROUP BY hopping window " +
             "specification (SQLv1.g.in:533)")
@@ -1931,7 +1927,7 @@ object YqlScript {
           s"'${hop.toMillis} milliseconds')" + sql.substring(close + 1)
         // duplicate spec raises, as the reference does
         // (sql_group_by.cpp:366)
-        require("(?i)\\bHOP\\s*\\(".r
+        require(SqlText.re("(?i)\\bHOP\\s*\\(")
           .findFirstIn(SqlText.mask(lowered)).isEmpty,
           "Duplicate hopping window specification.")
         // HOP_START()/HOP_END() → the grouped window's bounds (scan
@@ -1939,7 +1935,7 @@ object YqlScript {
         var out = lowered
         Seq("HOP_START" -> "window.start", "HOP_END" -> "window.end")
           .foreach { case (kw, repl) =>
-            val re = s"(?i)\\b$kw\\s*\\(\\s*\\)".r
+            val re = SqlText.re(s"(?i)\\b$kw\\s*\\(\\s*\\)")
             val msk = SqlText.mask(out)
             val sb = new StringBuilder
             var last = 0
@@ -2002,17 +1998,18 @@ object YqlScript {
   private[graft] def lowerSessionWindowOver(sql: String): String = {
     val masked = SqlText.mask(sql)
     // a window-definition region: inline `OVER (...)` or `WINDOW w AS (...)`
-    val regionRe = "(?i)\\b(OVER|WINDOW\\s+[A-Za-z_][A-Za-z0-9_]*\\s+AS)\\s*\\(".r
+    val regionRe = SqlText.re(
+      "(?i)\\b(OVER|WINDOW\\s+[A-Za-z_][A-Za-z0-9_]*\\s+AS)\\s*\\(")
     val region = regionRe.findAllMatchIn(masked).flatMap { m =>
       val close = SqlText.matchBracket(sql, m.end - 1)
       val inner = masked.substring(m.end, close)
-      "(?i)\\bSessionWindow\\s*\\(".r.findFirstMatchIn(inner)
+      SqlText.re("(?i)\\bSessionWindow\\s*\\(").findFirstMatchIn(inner)
         .map(sm => (m, close, sm))
     }.toSeq.headOption.getOrElse(return sql)
     val (m, close, _) = region
     val inner = sql.substring(m.end, close)
     val innerMasked = masked.substring(m.end, close)
-    val pb = "(?i)\\bPARTITION\\s+BY\\b".r.findFirstMatchIn(innerMasked)
+    val pb = SqlText.re("(?i)\\bPARTITION\\s+BY\\b").findFirstMatchIn(innerMasked)
       .getOrElse(throw new IllegalArgumentException(
         "SessionWindow in a window definition needs PARTITION BY " +
           "(docs syntax/window.md#partition)"))
@@ -2070,18 +2067,18 @@ object YqlScript {
     var out = sql
     for ((a, b, r) <- repls) out = out.substring(0, a) + r + out.substring(b)
     // SessionStart() reads the session key; drop any OVER qualifier
-    out = ("(?i)\\bSessionStart\\s*\\(\\s*\\)" +
-      "(\\s+OVER\\s+[A-Za-z_][A-Za-z0-9_]*|\\s*OVER\\s*\\([^)]*\\))?").r
+    out = SqlText.re("(?i)\\bSessionStart\\s*\\(\\s*\\)" +
+      "(\\s+OVER\\s+[A-Za-z_][A-Za-z0-9_]*|\\s*OVER\\s*\\([^)]*\\))?")
       .replaceAllIn(out, "__sess_key")
     lowerSessionWindowOver(out)
   }
 
   def lowerSessionWindow(sql: String): String = {
     val masked = SqlText.mask(sql)
-    "(?i)\\bSessionWindow\\s*\\(".r.findFirstMatchIn(masked) match {
+    SqlText.re("(?i)\\bSessionWindow\\s*\\(").findFirstMatchIn(masked) match {
       case None => sql
       case Some(m) =>
-        val gb = "(?i)\\bGROUP\\s+BY\\b".r.findFirstMatchIn(masked)
+        val gb = SqlText.re("(?i)\\bGROUP\\s+BY\\b").findFirstMatchIn(masked)
         require(gb.exists(_.end <= m.start),
           "SessionWindow(...) is only valid in GROUP BY " +
             "(docs syntax/group_by.md#session-window)")
@@ -2106,7 +2103,7 @@ object YqlScript {
         val lowered = sql.substring(0, m.start) +
           s"session_window($te, '${gap.toMillis} milliseconds')" +
           sql.substring(tailStart)
-        require("(?i)\\bSessionWindow\\s*\\(".r
+        require(SqlText.re("(?i)\\bSessionWindow\\s*\\(")
           .findFirstIn(SqlText.mask(lowered)).isEmpty,
           "Duplicate session window specification.")
         // the alias and SessionStart() read the session key. A BARE
@@ -2120,7 +2117,7 @@ object YqlScript {
             Some(a.group(1)))).toSeq :+
           (("(?i)\\bSessionStart\\s*\\(\\s*\\)", None: Option[String]))
         repls.foreach { case (pat, name) =>
-          val re = pat.r
+          val re = SqlText.re(pat)
           val msk = SqlText.mask(out)
           val sb = new StringBuilder
           var last = 0
@@ -2164,7 +2161,7 @@ object YqlScript {
     * collapse under whole-stage codegen subexpression elimination.
     */
   def lowerDistinctOverWindow(sql: String, enabled: Boolean): String = {
-    val re = "(?i)\\b(count|sum|avg|min|max)(\\s*\\()\\s*distinct\\b".r
+    val re = SqlText.re("(?i)\\b(count|sum|avg|min|max)(\\s*\\()\\s*distinct\\b")
     def step(s: String, from: Int): String = {
       val masked = SqlText.mask(s)
       re.findFirstMatchIn(masked.substring(from))
@@ -2178,9 +2175,7 @@ object YqlScript {
           // Spark handles those natively
           var i = close + 1
           while (i < s.length && s.charAt(i).isWhitespace) i += 1
-          val isOver = i + 4 <= s.length &&
-            s.substring(i, i + 4).equalsIgnoreCase("OVER") &&
-            (i + 4 == s.length || !s.charAt(i + 4).isLetterOrDigit)
+          val isOver = SqlText.kwEnd(s, i, "OVER") >= 0
           if (!isOver) return step(s, close + 1)
           if (!enabled) throw new IllegalArgumentException(
             "Aggregation with distinct is not allowed over window " +
@@ -2195,8 +2190,7 @@ object YqlScript {
             if (j < s.length && s.charAt(j) == '(') SqlText.matchBracket(s, j) + 1
             else {
               var k = j
-              while (k < s.length &&
-                (s.charAt(k).isLetterOrDigit || s.charAt(k) == '_')) k += 1
+              while (k < s.length && SqlText.isIdent(s.charAt(k))) k += 1
               require(k > j, s"malformed OVER clause: ${s.substring(i).take(40)}")
               k
             }
@@ -2242,8 +2236,8 @@ object YqlScript {
     * VIEWs. */
   def lowerFlatten(sql: String): String = {
     val ident = "[A-Za-z_][A-Za-z0-9_]*"
-    val re = ("(?i)\\bFLATTEN\\s+(?:(OPTIONAL|LIST|DICT)\\s+)?BY\\s+" +
-      s"(?:($ident)(\\s+AS\\s+($ident))?|\\(([^)]*)\\))").r
+    val re = SqlText.re("(?i)\\bFLATTEN\\s+(?:(OPTIONAL|LIST|DICT)\\s+)?BY\\s+" +
+      s"(?:($ident)(\\s+AS\\s+($ident))?|\\(([^)]*)\\))")
     // keyword search and the backward source scan both run over the
     // quote mask, so 'FLATTEN BY x' inside a string literal (and
     // quoted parens in the source) can't derail the rewrite; the
@@ -2270,8 +2264,8 @@ object YqlScript {
     while (e >= 0 && masked.charAt(e).isWhitespace) e -= 1
     def wordEndingAt(p: Int): (String, Int) = {
       var s0 = p
-      while (s0 >= 0 && (masked.charAt(s0).isLetterOrDigit ||
-        masked.charAt(s0) == '_' || masked.charAt(s0) == '.')) s0 -= 1
+      while (s0 >= 0 && (SqlText.isIdent(masked.charAt(s0)) ||
+        masked.charAt(s0) == '.')) s0 -= 1
       (sql.substring(s0 + 1, p + 1), s0)
     }
     var srcAlias: Option[String] = None
@@ -2346,7 +2340,7 @@ object YqlScript {
     while (changed) {
       changed = false
       val masked = SqlText.mask(text)
-      "(?i)\\b(GROUP|PARTITION|IN)\\s+COMPACT\\b".r
+      SqlText.re("(?i)\\b(GROUP|PARTITION|IN)\\s+COMPACT\\b")
         .findFirstMatchIn(masked).foreach { m =>
           text = text.substring(0, m.start) +
             text.substring(m.start(1), m.end(1)) + text.substring(m.end)
@@ -2359,7 +2353,8 @@ object YqlScript {
     while (changed) {
       changed = false
       val masked = SqlText.mask(text)
-      "(?i)\\bASSUME\\s+ORDER\\s+BY\\b".r.findFirstMatchIn(masked).foreach { mm =>
+      val assume = SqlText.re("(?i)\\bASSUME\\s+ORDER\\s+BY\\b")
+      assume.findFirstMatchIn(masked).foreach { mm =>
         val stop = SqlText.findKw(text, Seq("LIMIT", "OFFSET", "UNION",
           "INTO", "HAVING", "WINDOW"), mm.end)
         val cut = if (stop >= 0) stop else SqlText.groupEnd(text, mm.end)
@@ -2386,8 +2381,8 @@ object YqlScript {
       "FULL", "INNER", "CROSS", "ON", "USING", "SAMPLE", "TABLESAMPLE",
       "MATCH_RECOGNIZE", "WINDOW", "FLATTEN", "VIEW", "WITH", "INTO",
       "ASSUME", "SEMI", "ANTI", "NATURAL")
-    val re = ("(?i)\\b(FROM|JOIN)\\s+" +
-      "([A-Za-z_][A-Za-z0-9_.]*|`[^`]+`)\\s+WITH\\b").r
+    val re = SqlText.re("(?i)\\b(FROM|JOIN)\\s+" +
+      "([A-Za-z_][A-Za-z0-9_.]*|`[^`]+`)\\s+WITH\\b")
     var text = sql
     var changed = true
     while (changed) {
@@ -2409,8 +2404,7 @@ object YqlScript {
           // single hint: IDENT [= tag | ( ... )] — SCHEMA's struct
           // group included
           var j = i
-          while (j < masked.length && (masked.charAt(j).isLetterOrDigit ||
-            masked.charAt(j) == '_')) j += 1
+          while (j < masked.length && SqlText.isIdent(masked.charAt(j))) j += 1
           var k = j
           while (k < masked.length && masked.charAt(k).isWhitespace) k += 1
           if (k < masked.length && masked.charAt(k) == '=') {
@@ -2422,8 +2416,8 @@ object YqlScript {
           else if (text.substring(i, j).equalsIgnoreCase("SCHEMA") ||
               text.substring(i, j).equalsIgnoreCase("COLUMNS")) {
             // unparenthesized type form: consume one type token
-            while (k < masked.length && (masked.charAt(k).isLetterOrDigit ||
-              "_<>?,".contains(masked.charAt(k)))) k += 1
+            while (k < masked.length && (SqlText.isIdent(masked.charAt(k)) ||
+              "<>?,".contains(masked.charAt(k)))) k += 1
           } else k = j
           hints += text.substring(i, k).trim
           end = k
@@ -2460,8 +2454,7 @@ object YqlScript {
             var a = end
             while (a < masked.length && masked.charAt(a).isWhitespace) a += 1
             var b = a
-            while (b < masked.length && (masked.charAt(b).isLetterOrDigit ||
-              masked.charAt(b) == '_')) b += 1
+            while (b < masked.length && SqlText.isIdent(masked.charAt(b))) b += 1
             val word = if (b > a) text.substring(a, b).toUpperCase else ""
             val hasAlias = word == "AS" ||
               (word.nonEmpty && !aliasStop.contains(word))
@@ -2475,8 +2468,7 @@ object YqlScript {
               var a = end
               while (a < masked.length && masked.charAt(a).isWhitespace) a += 1
               var b = a
-              while (b < masked.length && (masked.charAt(b).isLetterOrDigit ||
-                masked.charAt(b) == '_')) b += 1
+              while (b < masked.length && SqlText.isIdent(masked.charAt(b))) b += 1
               val word = if (b > a) text.substring(a, b).toUpperCase else ""
               val hasAlias = word == "AS" ||
                 (word.nonEmpty && !aliasStop.contains(word))
@@ -2512,7 +2504,7 @@ object YqlScript {
     while (changed) {
       changed = false
       val masked = SqlText.mask(text)
-      val m1 = "(?i)\\bTABLESAMPLE\\s+(BERNOULLI|SYSTEM)\\s*\\(".r
+      val m1 = SqlText.re("(?i)\\bTABLESAMPLE\\s+(BERNOULLI|SYSTEM)\\s*\\(")
         .findFirstMatchIn(masked)
       m1 match {
         case Some(m) =>
@@ -2526,8 +2518,8 @@ object YqlScript {
           // the fraction may arrive parenthesized — named expressions
           // substitute as "(lit)"; the alternation never consumes an
           // enclosing paren that was not part of the match
-          val m2 = ("(?i)\\bSAMPLE\\s+(?:\\(\\s*([0-9]*\\.?[0-9]+)\\s*\\)" +
-            "|([0-9]*\\.?[0-9]+)\\b)").r.findFirstMatchIn(masked)
+          val m2 = SqlText.re("(?i)\\bSAMPLE\\s+(?:\\(\\s*([0-9]*\\.?[0-9]+)\\s*\\)" +
+            "|([0-9]*\\.?[0-9]+)\\b)").findFirstMatchIn(masked)
           m2.foreach { m =>
             val g = if (m.group(1) != null) 1 else 2
             val frac = text.substring(m.start(g), m.end(g)).toDouble
@@ -2577,7 +2569,7 @@ object YqlScript {
       schemaOf: String => Seq[(String, org.apache.spark.sql.types.DataType)])
       : String = {
     val masked = SqlText.mask(sql)
-    val re = "(?i)\\bFLATTEN\\s+COLUMNS\\b".r
+    val re = SqlText.re("(?i)\\bFLATTEN\\s+COLUMNS\\b")
     re.findFirstMatchIn(masked) match {
       case None => sql
       case Some(m) =>
@@ -2587,13 +2579,13 @@ object YqlScript {
         def skipWs(): Unit = while (j >= 0 && sql.charAt(j).isWhitespace) j -= 1
         def identStart(): Int = {
           var k = j
-          while (k >= 0 && (sql.charAt(k).isLetterOrDigit ||
-            "_.`".contains(sql.charAt(k)))) k -= 1
+          while (k >= 0 && (SqlText.isIdent(sql.charAt(k)) ||
+            ".`".contains(sql.charAt(k)))) k -= 1
           k + 1
         }
         skipWs()
         var alias = ""
-        if (j >= 0 && (sql.charAt(j).isLetterOrDigit || sql.charAt(j) == '_')) {
+        if (j >= 0 && SqlText.isIdent(sql.charAt(j))) {
           // possible `AS alias` — only treat as alias if preceded by AS
           val is = identStart()
           var k = is - 1
@@ -2606,7 +2598,7 @@ object YqlScript {
         }
         val srcEnd = j + 1
         val srcStart =
-          if (j >= 0 && sql.charAt(j) == ')') SqlText.openerOf(sql, j)
+          if (j >= 0 && sql.charAt(j) == ')') SqlText.openerOf(masked, j)
           else identStart()
         val src = sql.substring(srcStart, srcEnd)
         require(src.nonEmpty, "FLATTEN COLUMNS needs a FROM source")
@@ -2667,7 +2659,7 @@ object YqlScript {
     // a leading WITH prefix (CTE list) scopes the whole statement:
     // keep it in front, analyze every branch under it
     var prefix = ""
-    if ("(?is)^\\s*WITH\\b".r.findFirstIn(branches.head).isDefined) {
+    if (SqlText.re("(?is)^\\s*WITH\\b").findFirstIn(branches.head).isDefined) {
       val selAt = SqlText.findKw(branches.head, "SELECT")
       require(selAt > 0,
         s"cannot locate the main SELECT after WITH in: ${branches.head.take(80)}")

@@ -58,8 +58,8 @@ object YqlSql {
   private val CollidesWithBuiltin: Set[String] = Set("url_decode", "url_encode")
 
   /** `Module::Function(`, at an identifier boundary. */
-  private val ModuleCall =
-    "(?<![\\p{L}\\p{Nd}_$])([A-Za-z_][A-Za-z0-9_]*)::([A-Za-z_][A-Za-z0-9_]*)(\\s*)\\(".r
+  private val ModuleCall = SqlText.re(
+    "\\b([A-Za-z_][A-Za-z0-9_]*)::([A-Za-z_][A-Za-z0-9_]*)(\\s*)\\(")
 
   /** `Module::Function(` → `module_function(`, outside string literals
     * and backtick-quoted identifiers. Only call sites of the known
@@ -123,7 +123,7 @@ object YqlSql {
     * express (PosixSyntax, LongestMatch, NeverNl, NeverCapture) raise
     * here, at fold time, when set true. */
   private def re2OptionsSugar(sql: String): String = {
-    val re = "(?i)(?<![A-Za-z0-9_])re2_options\\s*\\(".r
+    val re = SqlText.re("(?i)\\bre2_options\\s*\\(")
     val m = re.findAllMatchIn(SqlText.mask(sql))
       .find(mm => !sql.substring(mm.end).trim.startsWith("'re2opts:"))
       .getOrElse(return sql)
@@ -179,7 +179,7 @@ object YqlSql {
     * the enclosing ConvertTo / Lookup lowering dispatches statically —
     * no runtime resource value exists in the plan. */
   private def ysonOptionsSugar(sql: String): String = {
-    val re = "(?i)(?<![A-Za-z0-9_])yson_options\\s*\\(".r
+    val re = SqlText.re("(?i)\\byson_options\\s*\\(")
     val m = re.findAllMatchIn(SqlText.mask(sql))
       .find(mm => !sql.substring(mm.end).trim.startsWith("'ysonopts:"))
       .getOrElse(return sql)
@@ -298,7 +298,7 @@ object YqlSql {
     } else if (i < sql.length && sql.charAt(i) == '{') {
       val close = SqlText.matchBracket(sql, i)
       val stmts = sql.substring(i + 1, close).trim.stripSuffix(";").trim
-      val rm = "(?i)^RETURN\\b".r.findFirstMatchIn(stmts).getOrElse(
+      val rm = SqlText.re("(?i)^RETURN\\b").findFirstMatchIn(stmts).getOrElse(
         throw new IllegalArgumentException(
           "lambda statement bodies support a single RETURN expr; got: " +
             stmts.take(60)))
@@ -314,9 +314,8 @@ object YqlSql {
     }
     var newBody = body
     for (p <- params)
-      newBody = java.util.regex.Pattern
-        .compile(java.util.regex.Pattern.quote("$" + p) + "(?![A-Za-z0-9_])")
-        .matcher(newBody)
+      newBody = SqlText.re(java.util.regex.Pattern.quote("$" + p) + "\\b")
+        .pattern.matcher(newBody)
         .replaceAll(java.util.regex.Matcher.quoteReplacement(s"__la_$p"))
     // Spark's lambda grammar parenthesizes only MULTI-param heads
     val head =
@@ -334,7 +333,7 @@ object YqlSql {
     * DictAggregate with empty-list keys removed, all inside one
     * codegen'd projection. */
   private def lowerContainerAggregate(sql: String): String = {
-    val re = "(?i)\\b(List|Dict)Aggregate\\s*\\(".r
+    val re = SqlText.re("(?i)\\b(List|Dict)Aggregate\\s*\\(")
     val m = re.findFirstMatchIn(SqlText.mask(sql))
       .getOrElse(return sql)
     val dict = m.group(1).equalsIgnoreCase("Dict")
@@ -404,8 +403,8 @@ object YqlSql {
     * Spark SQL cannot parse a type expression in argument position, so
     * the type text quotes into the string literal the builders take. */
   private def typeArgSugar(sql: String): String = {
-    val re = ("(?i)(?<![A-Za-z0-9_])(Nothing|FromBytes|Unpickle|" +
-      "ListCreate|DictCreate|SetCreate|Variant|Enum)\\s*\\(").r
+    val re = SqlText.re("(?i)\\b(Nothing|FromBytes|Unpickle|" +
+      "ListCreate|DictCreate|SetCreate|Variant|Enum)\\s*\\(")
     val masked = SqlText.mask(sql)
     var out = sql
     // right-to-left so earlier offsets stay valid after replacement
@@ -471,7 +470,7 @@ object YqlSql {
     // mask PATTERN ( ... ) regions — `{n,m}` quantifiers live there
     val masked = {
       val sb = new StringBuilder(masked0)
-      val p = "(?i)\\bPATTERN\\s*\\(".r
+      val p = SqlText.re("(?i)\\bPATTERN\\s*\\(")
       for (m <- p.findAllMatchIn(masked0)) {
         try {
           val close = SqlText.matchBracket(masked0, m.end - 1)
@@ -618,7 +617,7 @@ object YqlSql {
     * arguments, so the items lower to alternating ('name', value)
     * arguments of the registered builders. */
   private def structSugar(sql: String): String = {
-    val re = "(?i)(?<![A-Za-z0-9_])(ExpandStruct|AsStruct|StructType)\\s*\\(".r
+    val re = SqlText.re("(?i)\\b(ExpandStruct|AsStruct|StructType)\\s*\\(")
     val m = re.findFirstMatchIn(SqlText.mask(sql))
       .getOrElse(return sql)
     val fn = m.group(1).toLowerCase
@@ -674,7 +673,7 @@ object YqlSql {
       "VARIANCE_POPULATION", "POPULATION_VARIANCE", "VARPOP",
       "VARIANCE_SAMPLE", "SAMPLE_VARIANCE", "VARSAMP",
       "TOPFREQ", "MODE", "SOME", "BOOL_AND", "BOOL_OR", "BOOL_XOR")
-    val re = ("(?i)(?<![A-Za-z0-9_])(" + names.mkString("|") + ")\\s*\\(").r
+    val re = SqlText.re("(?i)\\b(" + names.mkString("|") + ")\\s*\\(")
     val masked = SqlText.mask(sql)
     val m = re.findFirstMatchIn(masked).getOrElse(return sql)
     val name = m.group(1).toUpperCase
@@ -683,7 +682,7 @@ object YqlSql {
       .map(_.trim).filter(_.nonEmpty)
     // DISTINCT prefix (AGGREGATE_LIST(DISTINCT x))
     val dm = rawArgs.headOption.flatMap(a =>
-      "(?i)^DISTINCT\\b".r.findFirstMatchIn(a))
+      SqlText.re("(?i)^DISTINCT\\b").findFirstMatchIn(a))
     val args = dm match {
       case Some(d) => rawArgs.head.substring(d.end).trim +: rawArgs.tail
       case None => rawArgs
@@ -789,8 +788,8 @@ object YqlSql {
     var body = t.substring(m.end).trim
     if (body.startsWith("(") && SqlText.matchBracket(body, 0) == body.length - 1)
       body = body.substring(1, body.length - 1).trim
-    val pat = java.util.regex.Pattern.compile(
-      java.util.regex.Pattern.quote("$" + param) + "(?![A-Za-z0-9_])")
+    val pat =
+      SqlText.re(java.util.regex.Pattern.quote("$" + param) + "\\b").pattern
     arg => pat.matcher(body).replaceAll(
       java.util.regex.Matcher.quoteReplacement(s"($arg)"))
   }
@@ -850,7 +849,7 @@ object YqlSql {
   }
 
   private def lowerAggregateBy(sql: String): String = {
-    val re = "(?i)\\b(MULTI_)?(AGGREGATE_BY|AGGREGATEBY)\\s*\\(".r
+    val re = SqlText.re("(?i)\\b(MULTI_)?(AGGREGATE_BY|AGGREGATEBY)\\s*\\(")
     val m = re.findFirstMatchIn(SqlText.mask(sql))
       .getOrElse(return sql)
     val multi = m.group(1) != null
@@ -863,7 +862,7 @@ object YqlSql {
     val name = factory.name
     val params = factory.params
     // DISTINCT prefix on the aggregated expression
-    val dm = "(?i)^DISTINCT\\b".r.findFirstMatchIn(args(0))
+    val dm = SqlText.re("(?i)^DISTINCT\\b").findFirstMatchIn(args(0))
     val ex0 = dm.map(d => args(0).substring(d.end).trim).getOrElse(args(0))
     val ex = factory.inputTx(ex0)
     val dkw = if (dm.isDefined) "DISTINCT " else ""
@@ -1011,7 +1010,7 @@ object YqlSql {
   private[functions] def hopStreamRewrite(spark: SparkSession,
       sql0: String): String = {
     val masked = SqlText.mask(sql0)
-    val m = "(?i)\\bHOP\\s*\\(".r.findFirstMatchIn(masked)
+    val m = SqlText.re("(?i)\\bHOP\\s*\\(").findFirstMatchIn(masked)
       .getOrElse(return sql0)
     val close =
       try SqlText.matchBracket(sql0, m.end - 1)
@@ -1034,7 +1033,7 @@ object YqlSql {
     val afterFrom = stmt.substring(fromAt + 4)
     val leadWs = afterFrom.indexWhere(!_.isWhitespace)
     if (leadWs < 0) return sql0
-    val src = "^([A-Za-z_][A-Za-z0-9_]*)\\b".r
+    val src = SqlText.re("^([A-Za-z_][A-Za-z0-9_]*)\\b")
       .findFirstMatchIn(afterFrom.substring(leadWs))
       .map(_.group(1)).getOrElse(return sql0)
     val streaming =
@@ -1199,8 +1198,8 @@ object YqlSql {
     * scanning; fixpoint over multiple occurrences). */
   private[functions] def viewRewrite(spark: SparkSession,
       sql: String): String = {
-    val re = ("(?i)\\b(FROM|JOIN)\\s+([A-Za-z_][A-Za-z0-9_.]*|`[^`]+`)" +
-      "\\s+VIEW\\s+([A-Za-z_][A-Za-z0-9_]*)").r
+    val re = SqlText.re("(?i)\\b(FROM|JOIN)\\s+([A-Za-z_][A-Za-z0-9_.]*|`[^`]+`)" +
+      "\\s+VIEW\\s+([A-Za-z_][A-Za-z0-9_]*)")
     val masked = SqlText.mask(sql)
     re.findFirstMatchIn(masked) match {
       case None => sql

@@ -85,10 +85,11 @@ object YqlTablePaths {
     }
   }
 
-  private val PseudoRe = "(?i)\\bTable(Path|Name)\\s*\\(\\s*\\)".r
+  private val PseudoRe = SqlText.re("(?i)\\bTable(Path|Name)\\s*\\(\\s*\\)")
 
   private val CallRe =
-    "(?i)\\b(FROM|JOIN)\\s+(RANGE|EACH|CONCAT|FOLDER|LIKE|REGEXP|AS_TABLE)\\s*\\(".r
+    SqlText.re("(?i)\\b(FROM|JOIN)\\s+" +
+      "(RANGE|EACH|CONCAT|FOLDER|LIKE|REGEXP|AS_TABLE)\\s*\\(")
 
   @annotation.tailrec
   private def rewriteFrom(spark: SparkSession, sql: String, from: Int,

@@ -42,12 +42,29 @@ class SqlTextSpec extends AnyFunSuite {
     assert(SqlText.matchBracket(s, 1) == 21)
     assert(SqlText.openerOf(s, 21) == 1)
     assert(SqlText.openerOf(s, 12) == 5)
+    // the backward walk reads a mask: a quoted bracket is not one
+    assert(SqlText.openerOf(SqlText.mask("f('(', x)"), 8) == 1)
     assert(SqlText.split(s.substring(2, 21)).map(_.trim) ==
       Seq("a", "[b, (c)]", "{d: e}"))
     assert(SqlText.split(s, "??").map(_.trim) == Seq(s.take(22), "g"))
     assert(SqlText.groupEnd("a, (b) ) c", 0) == 7)
     assert(SqlText.findKw("(SELECT 1) LIMIT 1", "LIMIT", 1) == -1)
     assert(SqlText.indexOfTop("x -> (y -> z)", "->") == 2)
+  }
+
+  test("a regex's \\b is an identifier boundary, `$` and letters included") {
+    val s = "SELECT $from, \u00dffrom, valid_from FROM t"
+    assert(SqlText.re("(?i)\\bFROM\\b").findFirstMatchIn(s).map(_.start) ==
+      Some(s.lastIndexOf("FROM")))
+    // Java's own \b takes `$` for a boundary
+    assert("(?i)\\bFROM\\b".r.findFirstMatchIn(s).map(_.start) == Some(8))
+    assert(SqlText.re("\\$x\\b").findAllIn("$x + $x$y + $xy + ($x)").length == 2)
+  }
+
+  test("the comment drop keeps Spark hints") {
+    assert(SqlText.dropComments("SELECT /*+ BROADCAST(d) */ a /* b */ FROM t") ==
+      "SELECT /*+ BROADCAST(d) */ a   FROM t")
+    assert(SqlText.mask("/*+ x */").trim.isEmpty)
   }
 
   test("unbalanced brackets and unterminated quotes or comments name the " +

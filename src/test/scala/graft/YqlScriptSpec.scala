@@ -180,6 +180,31 @@ class YqlScriptSpec extends SparkSpec {
       Seq("SELECT a FROM (SELECT a FROM src ORDER BY a DESC LIMIT (3))"))
   }
 
+  test("library modules may hold comments, from the map or a PRAGMA file") {
+    val text =
+      """-- header: helpers; don't export $hidden
+        |$mul = ($x) -> ($x * 3); /* between ; ' bindings */
+        |DEFINE SUBQUERY $top($n) AS -- the template's ; comment
+        |  SELECT a FROM src /* it's */ LIMIT $n;
+        |END DEFINE;
+        |EXPORT $mul, $top; -- trailing ; comment
+        |""".stripMargin
+    val l = YqlScript.lower(
+      "IMPORT m SYMBOLS $mul, $top;\nSELECT $mul(a) AS m FROM $top(2)",
+      libraries = Map("m" -> text))
+    assert(l.selects ==
+      Seq("SELECT ((a) * 3) AS m FROM (SELECT a FROM src   LIMIT (2))"))
+    val f = java.io.File.createTempFile("graft_lib", ".sql")
+    try {
+      java.nio.file.Files.writeString(f.toPath, text)
+      val libName = f.getName.replaceAll("\\.[^.]*$", "")
+      val l2 = YqlScript.lower(
+        s"PRAGMA library('${f.getAbsolutePath}');\n" +
+        s"IMPORT $libName SYMBOLS $$mul;\nSELECT $$mul(a) AS m FROM t")
+      assert(l2.selects == Seq("SELECT ((a) * 3) AS m FROM t"))
+    } finally f.delete()
+  }
+
   // ——— end-to-end through spark.sql ———
 
   test("script runs end-to-end: bindings + lambda + FLATTEN BY + WITHOUT") {
@@ -1230,6 +1255,26 @@ class YqlScriptSpec extends SparkSpec {
       df2.collect()
       val plan2 = PlanTest.finalNodes(df2).map(_.nodeName).mkString(",")
       assert(!plan2.contains("BroadcastHashJoin"), plan2)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  test("a Spark /*+ hint */ in YQL text reaches Spark; other comments drop") {
+    import org.apache.spark.sql.functions._
+    spark.range(0, 50000).select(col("id").as("k"),
+      (col("id") % 97).as("v")).createOrReplaceTempView("hint_big")
+    spark.range(0, 40).select(col("id").as("k"),
+      (col("id") * 2).as("w")).createOrReplaceTempView("hint_dim")
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val df = YqlSql.sql(spark,
+        """$lo = 0; -- a comment ; it's
+          |SELECT /*+ BROADCAST(d) */ b.k, d.w FROM hint_big AS b
+          |JOIN /* not a hint */ hint_dim AS d ON b.k = d.k
+          |WHERE b.k >= $lo""".stripMargin)
+      assert(df.count() == 40)
+      val plan = PlanTest.finalNodes(df).map(_.nodeName).mkString(",")
+      assert(plan.contains("BroadcastHashJoin"), plan)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
