@@ -36,8 +36,9 @@ object GraftSession {
     * out of generated code, its analysis-time and optimizer-time parts
     * for filters over local rows, the held-log leaf's rules (a `ts`
     * filter no held row passes prunes the leaf; a surviving leaf becomes
-    * local rows before the filter binding), and the planner strategy that
-    * writes rows already on the driver without a job. */
+    * local rows before the filter binding), the planner strategy that
+    * writes rows already on the driver without a job, and the one that
+    * plans the per-partition jobs the user-job pipes run. */
   val extensions: SparkSessionExtensions => Unit = { e =>
     e.injectQueryStagePrepRule(_ => graft.plans.ParameterizeLiterals)
     e.injectPostHocResolutionRule(_ => graft.plans.ParameterizeLocalFilters)
@@ -45,6 +46,7 @@ object GraftSession {
     e.injectPreCBORule(_ => graft.plans.HeldToLocal)
     e.injectPreCBORule(_ => graft.plans.ParameterizePushedLocalFilters)
     e.injectPlannerStrategy(_ => org.apache.spark.sql.graft.LocalWrite)
+    e.injectPlannerStrategy(_ => graft.plans.PlanPartitionJobs)
   }
 
   /** AQE's target shuffle partition size, which [[tuneShuffleFor]] also

@@ -138,109 +138,6 @@ object Aggregators {
   private def toCdf(bins: Seq[(Double, Long)]): Seq[(Double, Long)] =
     bins.scanLeft((0.0, 0L)) { case ((_, acc), (p, c)) => (p, acc + c) }.drop(1)
 
-  /** Adaptive histogram core (YQL Adaptive*Histogram family,
-    * udfs/common/histogram; the Ben-Haim/Tom-Tov streaming histogram):
-    * keeps at most `maxBins` (position, count) centroids; inserting
-    * past the cap merges the adjacent pair with the lowest
-    * `mergeCost(p1,c1,p2,c2)` into its weighted mean — the cost
-    * function is what distinguishes the reference's Distance / Ward /
-    * Weight variants. Deterministic for a given partition order;
-    * totals are exact, bin positions approximate.
-    */
-  /** Mutable centroid buffer: parallel sorted position/count arrays.
-    * Same rationale as HistogramModule.WBuf — ScalaAggregator keeps
-    * buffers live between rows, so in-place binary-search inserts
-    * replace the per-row immutable-Seq rebuild. */
-  final class ABuf(var pos: Array[Double], var cnt: Array[Long],
-      var n: Int) extends Serializable
-
-  private def adaptiveCore(maxBins: Int,
-      mergeCost: (Double, Long, Double, Long) => Double,
-      cdf: Boolean): Aggregator[Double, ABuf, Seq[(Double, Long)]] =
-    new Aggregator[Double, ABuf, Seq[(Double, Long)]] {
-      private def lowerBound(a: Array[Double], n: Int, p: Double): Int = {
-        var lo = 0; var hi = n
-        while (lo < hi) {
-          val mid = (lo + hi) >>> 1
-          if (a(mid) >= p) hi = mid else lo = mid + 1
-        }
-        lo
-      }
-      // first minimal adjacent pair (strict <), weighted-mean merge —
-      // byte-identical arithmetic to the previous recursive compact
-      private def compact(b: ABuf): Unit = while (b.n > maxBins) {
-        var best = 0; var bestCost = Double.MaxValue
-        var i = 0
-        while (i < b.n - 1) {
-          val cost = mergeCost(b.pos(i), b.cnt(i), b.pos(i + 1), b.cnt(i + 1))
-          if (cost < bestCost) { bestCost = cost; best = i }
-          i += 1
-        }
-        val c = b.cnt(best) + b.cnt(best + 1)
-        b.pos(best) =
-          (b.pos(best) * b.cnt(best) + b.pos(best + 1) * b.cnt(best + 1)) / c
-        b.cnt(best) = c
-        System.arraycopy(b.pos, best + 2, b.pos, best + 1, b.n - best - 2)
-        System.arraycopy(b.cnt, best + 2, b.cnt, best + 1, b.n - best - 2)
-        b.n -= 1
-      }
-      private def insert(b: ABuf, p: Double, c: Long): Unit = {
-        val i = lowerBound(b.pos, b.n, p)
-        if (i < b.n && b.pos(i) == p) b.cnt(i) += c
-        else {
-          if (b.n == b.pos.length) {
-            val cap = math.max(8, b.pos.length * 2)
-            b.pos = java.util.Arrays.copyOf(b.pos, cap)
-            b.cnt = java.util.Arrays.copyOf(b.cnt, cap)
-          }
-          System.arraycopy(b.pos, i, b.pos, i + 1, b.n - i)
-          System.arraycopy(b.cnt, i, b.cnt, i + 1, b.n - i)
-          b.pos(i) = p; b.cnt(i) = c; b.n += 1
-          compact(b)
-        }
-      }
-      def zero: ABuf = new ABuf(new Array[Double](0), new Array[Long](0), 0)
-      def reduce(b: ABuf, a: Double): ABuf = { insert(b, a, 1L); b }
-      def merge(x: ABuf, y: ABuf): ABuf = {
-        var j = 0
-        while (j < y.n) { insert(x, y.pos(j), y.cnt(j)); j += 1 }
-        x
-      }
-      def finish(r: ABuf): Seq[(Double, Long)] = {
-        val bins = (0 until r.n).map(i => (r.pos(i), r.cnt(i)))
-        if (cdf) toCdf(bins) else bins
-      }
-      def bufferEncoder: Encoder[ABuf] =
-        org.apache.spark.sql.Encoders.kryo[ABuf]
-      def outputEncoder: Encoder[Seq[(Double, Long)]] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Double, Long)]]()
-    }
-
-  /** AdaptiveDistanceHistogram: merge the closest pair by position. */
-  def adaptiveHistogram(maxBins: Int): Aggregator[Double, ABuf, Seq[(Double, Long)]] =
-    adaptiveCore(maxBins, (p1, _, p2, _) => p2 - p1, cdf = false)
-
-  /** AdaptiveWardHistogram: merge the pair with the least variance
-    * increase — Ward's criterion c1·c2/(c1+c2)·(p2-p1)². */
-  def adaptiveWardHistogram(maxBins: Int): Aggregator[Double, ABuf, Seq[(Double, Long)]] =
-    adaptiveCore(maxBins,
-      (p1, c1, p2, c2) => (c1.toDouble * c2 / (c1 + c2)) * (p2 - p1) * (p2 - p1),
-      cdf = false)
-
-  /** AdaptiveWeightHistogram: merge the lightest adjacent pair. */
-  def adaptiveWeightHistogram(maxBins: Int): Aggregator[Double, ABuf, Seq[(Double, Long)]] =
-    adaptiveCore(maxBins, (_, c1, _, c2) => (c1 + c2).toDouble, cdf = false)
-
-  /** CDF forms of the adaptive family (cumulative counts). */
-  def adaptiveHistogramCdf(maxBins: Int): Aggregator[Double, ABuf, Seq[(Double, Long)]] =
-    adaptiveCore(maxBins, (p1, _, p2, _) => p2 - p1, cdf = true)
-  def adaptiveWardHistogramCdf(maxBins: Int): Aggregator[Double, ABuf, Seq[(Double, Long)]] =
-    adaptiveCore(maxBins,
-      (p1, c1, p2, c2) => (c1.toDouble * c2 / (c1 + c2)) * (p2 - p1) * (p2 - p1),
-      cdf = true)
-  def adaptiveWeightHistogramCdf(maxBins: Int): Aggregator[Double, ABuf, Seq[(Double, Long)]] =
-    adaptiveCore(maxBins, (_, c1, _, c2) => (c1 + c2).toDouble, cdf = true)
-
   /** LinearHistogramCDF: fixed-width bins, cumulative counts. */
   def linearHistogramCdf(binWidth: Double): Aggregator[Double, Map[Long, Long], Seq[(Double, Long)]] =
     new Aggregator[Double, Map[Long, Long], Seq[(Double, Long)]] {

@@ -1121,19 +1121,8 @@ object YqlSql {
         require(src.schema.length == 1,
           "Streaming::Process expects a single string column; project " +
             s"one, got: ${src.schema.fieldNames.mkString(", ")}")
-        val cmd = inline match {
-          case Some(script) =>
-            // ProcessInline (streaming_udf.cpp:729-765): the script
-            // text lands in an executable temp file
-            val f = java.nio.file.Files.createTempFile("graft_pipe", ".sh")
-            java.nio.file.Files.writeString(f, script)
-            f.toFile.setExecutable(true)
-            f.toFile.deleteOnExit()
-            Seq("/bin/sh", f.toString) ++ command
-          case None => command
-        }
         last = Some(graft.streaming.Streams.process(
-          src, src.schema.fieldNames.head, cmd, inDelim, outDelim))
+          src, src.schema.fieldNames.head, command, inDelim, outDelim, inline))
       case YqlScript.InsertStmt(s) =>
         // the union lowering applies to the SOURCE query of the
         // INSERT — never analyze the INSERT head itself (spark.sql

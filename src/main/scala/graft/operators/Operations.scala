@@ -1,7 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{shims => S}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The static-table dataflow operations (SURVEY.md §2.B): Map, Merge,
   * Sort, Reduce, JoinReduce, MapReduce, Erase — re-expressed over
@@ -115,43 +118,47 @@ object Operations {
     * in one of the §1.4 formats — here tab-separated, the Dsv flavor).
     * One process per partition, streamed in a background thread — rows
     * never buffer beyond pipe capacity; at scale this is identical to
-    * the reference's job-proxy pipe topology.
+    * the reference's job-proxy pipe topology. Each field is written as
+    * its external (Row) value's text, a null as the empty string.
     */
   def pipeMap(input: DataFrame, command: Seq[String],
       outSchema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val cmd = command
-    input.mapPartitions { rows =>
-      if (!rows.hasNext) Iterator.empty
-      else graft.sources.PipeJob.run(cmd,
-        os => {
-          val w = new java.io.PrintWriter(os)
-          rows.foreach { r =>
-            w.println(r.toSeq.map(v => if (v == null) "" else v.toString).mkString("\t"))
-          }
-          w.flush()
-        },
-        tsvReader(outSchema))
-    }(Encoders.row(outSchema))
+    val types = input.schema.fields.map(_.dataType)
+    val external = types.map(S.toScalaConverter)
+    graft.sources.PipeJob.pipe(input, "dsv", command, outSchema)(
+      (rows, os) => {
+        val w = new java.io.PrintWriter(os)
+        rows.foreach { r =>
+          w.println(types.indices.map { i =>
+            if (r.isNullAt(i)) "" else external(i)(r.get(i, types(i))).toString
+          }.mkString("\t"))
+        }
+        w.flush()
+      },
+      tsvReader(outSchema))
   }
 
   /** Parse a job's tab-separated stdout into typed rows (the Dsv
-    * flavor both pipe operators speak). */
+    * flavor both pipe operators speak). An empty field is null only in
+    * a nullable column. */
   private def tsvReader(outSchema: org.apache.spark.sql.types.StructType)
-      : java.io.InputStream => Iterator[Row] = { is =>
+      : java.io.InputStream => Iterator[InternalRow] = { is =>
+    import org.apache.spark.sql.types._
     val br = new java.io.BufferedReader(new java.io.InputStreamReader(is))
     Iterator.continually(br.readLine()).takeWhile(_ != null).map { line =>
       val parts = line.split("\t", -1)
-      Row.fromSeq(outSchema.fields.zipWithIndex.map { case (f, i) =>
+      InternalRow.fromSeq(outSchema.fields.toSeq.zipWithIndex.map { case (f, i) =>
         val s = if (i < parts.length) parts(i) else ""
         if (s.isEmpty && f.nullable) null
         else f.dataType match {
-          case org.apache.spark.sql.types.LongType => s.toLong
-          case org.apache.spark.sql.types.IntegerType => s.toInt
-          case org.apache.spark.sql.types.DoubleType => s.toDouble
-          case org.apache.spark.sql.types.BooleanType => s.toBoolean
-          case _ => s
+          case LongType => s.toLong
+          case IntegerType => s.toInt
+          case DoubleType => s.toDouble
+          case BooleanType => s.toBoolean
+          case _: StringType => UTF8String.fromString(s)
+          case other => throw new IllegalArgumentException(s"no Dsv reader for $other")
         }
-      }.toSeq)
+      })
     }
   }
 
@@ -171,16 +178,7 @@ object Operations {
       command: Seq[String],
       outSchema: org.apache.spark.sql.types.StructType): DataFrame = {
     require(jobCount > 0, "vanilla: job_count must be positive")
-    val cmd = command
-    spark.range(0, jobCount, 1, jobCount)
-      .mapPartitions { it =>
-        it.flatMap { jobIndex =>
-          graft.sources.PipeJob.run(cmd,
-            os => os.close(), // no table input: the job sees EOF at once
-            tsvReader(outSchema),
-            env = Map("YT_JOB_INDEX" -> jobIndex.toString))
-        }
-      }(Encoders.row(outSchema))
+    graft.sources.PipeJob.vanilla(spark, jobCount, command, outSchema)(tsvReader(outSchema))
   }
 
   /** Multi-output map: the mapper tags each produced row with an output

@@ -224,13 +224,13 @@ object Proto {
     * partition = one job pipe). */
   def encode(df: DataFrame): Dataset[Array[Byte]] = {
     val fields = fieldsOf(df.schema)
-    PipeJob.encodeBlobs(df)(encodeFramedStreamInternal(_, fields, _))
+    PipeJob.encodeBlobs(df, "protobuf")(encodeFramedStreamInternal(_, fields, _))
   }
 
   /** Per-partition lenval protobuf streams → DataFrame with `schema`. */
   def decode(blobs: Dataset[Array[Byte]], schema: StructType): DataFrame = {
     val fields = fieldsOf(schema)
-    PipeJob.decodeBlobs(blobs, schema)(decodeStreamInternal(_, fields))
+    PipeJob.decodeBlobs(blobs, "protobuf", schema)(decodeStreamInternal(_, fields))
   }
 
   /** User job over a protobuf pipe (user_job.cpp with
@@ -241,7 +241,7 @@ object Proto {
   def pipeMap(input: DataFrame, command: Seq[String], outSchema: StructType): DataFrame = {
     val inFields = fieldsOf(input.schema)
     val outFields = fieldsOf(outSchema)
-    PipeJob.pipeInternal(input, command, outSchema)(
+    PipeJob.pipe(input, "protobuf", command, outSchema)(
       encodeFramedStreamInternal(_, inFields, _),
       decodeStreamInternal(_, outFields))
   }

@@ -18,9 +18,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * 0 = nothing, 1 = value).
   *
   * In the reference this format feeds user jobs over pipes
-  * (user_job.cpp); here the codec runs inside `mapPartitions` so a
-  * "binary mapper" can consume/produce Skiff streams without any
-  * driver involvement — each partition is one pipe.
+  * (user_job.cpp); here the codec runs in a per-partition job
+  * ([[graft.plans.PartitionJob]]) so a "binary mapper" can
+  * consume/produce Skiff streams without any driver involvement — each
+  * partition is one pipe.
   *
   * The codec speaks Catalyst's internal representation directly: no
   * InternalRow→Row deserialization per input row, no Row→InternalRow
@@ -208,7 +209,7 @@ object Skiff {
         outSchemas.zipWithIndex.flatMap { case (s, j) =>
           s.fields.map(f => StructField(s"t${j}_${f.name}", f.dataType, nullable = true))
         })
-    PipeJob.pipeInternal(unionTagged(inputs), command, outStruct)(
+    PipeJob.pipe(unionTagged(inputs), "skiff", command, outStruct)(
       (rows, os) => {
         val scratch = new Array[Byte](8)
         rows.foreach { r =>
@@ -223,7 +224,7 @@ object Skiff {
     * partition = one job pipe). */
   def encode(df: DataFrame): Dataset[Array[Byte]] = {
     val fields = fieldsOf(df.schema)
-    PipeJob.encodeBlobs(df) { (rows, out) =>
+    PipeJob.encodeBlobs(df, "skiff") { (rows, out) =>
       val scratch = new Array[Byte](8)
       rows.foreach(r => encodeInternalTo(out, r, fields, 0, 0, scratch))
     }
@@ -236,7 +237,7 @@ object Skiff {
   def pipeMap(input: DataFrame, command: Seq[String], outSchema: StructType): DataFrame = {
     val inFields = fieldsOf(input.schema)
     val outFields = fieldsOf(outSchema)
-    PipeJob.pipeInternal(input, command, outSchema)(
+    PipeJob.pipe(input, "skiff", command, outSchema)(
       (rows, os) => {
         val scratch = new Array[Byte](8)
         rows.foreach(r => encodeInternalTo(os, r, inFields, 0, 0, scratch))
@@ -247,6 +248,6 @@ object Skiff {
   /** Per-partition Skiff byte streams → DataFrame with `schema`. */
   def decode(blobs: Dataset[Array[Byte]], schema: StructType): DataFrame = {
     val fields = fieldsOf(schema)
-    PipeJob.decodeBlobs(blobs, schema)(decodeStreamInternal(_, fields))
+    PipeJob.decodeBlobs(blobs, "skiff", schema)(decodeStreamInternal(_, fields))
   }
 }

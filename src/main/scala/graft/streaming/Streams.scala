@@ -1,8 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Streaming semantics of the reference (SURVEY.md §2.C queues, §2.D
   * streaming ops) on Structured Streaming.
@@ -151,7 +153,10 @@ object Streams {
     * pipe string records through an external command — records joined
     * by inputDelimiter into the process stdin, stdout split on
     * outputDelimiter into the result rows (a final unterminated chunk
-    * still emits, like the reference's stream matcher callback).
+    * still emits, like the reference's stream matcher callback). A NULL
+    * record fails the task. With a `script`, this is
+    * Streaming::ProcessInline (streaming_udf.cpp:738): the script body
+    * runs from a task-local file with `command` as its arguments.
     *
     * One process per partition over [[graft.sources.PipeJob]] (the
     * user-job pipe contract: exit-code check, bounded stderr capture,
@@ -161,52 +166,30 @@ object Streams {
     * `value: string`.
     */
   def process(input: DataFrame, textCol: String, command: Seq[String],
-      inputDelimiter: String = "\n", outputDelimiter: String = "\n"): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.STRING
-    val inDelim = inputDelimiter
-    val outDelim = outputDelimiter
-    input.select(col(textCol).cast("string")).as(enc)
-      .mapPartitions { it =>
-        if (!it.hasNext) Iterator.empty
-        else graft.sources.PipeJob.run(command,
-          out => {
-            val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-              out, java.nio.charset.StandardCharsets.UTF_8))
-            it.foreach { r => w.write(r); w.write(inDelim) }
-            w.flush()
-          },
-          in => splitStream(in, outDelim))
-      }(enc).toDF("value")
+      inputDelimiter: String = "\n", outputDelimiter: String = "\n",
+      script: Option[String] = None): DataFrame = {
+    val value = StructType(Seq(StructField("value", StringType)))
+    graft.sources.PipeJob.pipe(input.select(col(textCol).cast("string")), "text",
+        command, value, script)(
+      (rows, out) => {
+        val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
+          out, java.nio.charset.StandardCharsets.UTF_8))
+        rows.foreach { r =>
+          if (r.isNullAt(0))
+            throw new IllegalArgumentException(
+              s"Streaming::Process: NULL record in column $textCol")
+          w.write(r.getUTF8String(0).toString); w.write(inputDelimiter)
+        }
+        w.flush()
+      },
+      in => splitStream(in, outputDelimiter).map(l => InternalRow(UTF8String.fromString(l))))
   }
 
-  /** Streaming::ProcessInline (streaming_udf.cpp:738): the command is a
-    * script BODY — written to a task-local temp file, chmod 0755 (the
-    * shebang picks the interpreter) and executed like [[process]]. */
+  /** [[process]] of an inline script body. */
   def processInline(input: DataFrame, textCol: String, script: String,
       args: Seq[String] = Nil,
-      inputDelimiter: String = "\n", outputDelimiter: String = "\n"): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.STRING
-    val inDelim = inputDelimiter
-    val outDelim = outputDelimiter
-    input.select(col(textCol).cast("string")).as(enc)
-      .mapPartitions { it =>
-        if (!it.hasNext) Iterator.empty
-        else {
-          val f = java.io.File.createTempFile("graft-inline-", ".sh")
-          f.deleteOnExit()
-          java.nio.file.Files.writeString(f.toPath, script)
-          f.setExecutable(true, false)
-          graft.sources.PipeJob.run(f.getAbsolutePath +: args,
-            out => {
-              val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-                out, java.nio.charset.StandardCharsets.UTF_8))
-              it.foreach { r => w.write(r); w.write(inDelim) }
-              w.flush()
-            },
-            in => splitStream(in, outDelim))
-        }
-      }(enc).toDF("value")
-  }
+      inputDelimiter: String = "\n", outputDelimiter: String = "\n"): DataFrame =
+    process(input, textCol, args, inputDelimiter, outputDelimiter, Some(script))
 
   /** Split a byte stream into records on an arbitrary delimiter. The
     * terminal chunk emits even without a trailing delimiter; a trailing

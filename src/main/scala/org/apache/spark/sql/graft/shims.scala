@@ -79,16 +79,6 @@ object shims {
       b: org.apache.spark.sql.types.DataType): Boolean =
     a.asNullable == b.asNullable
 
-  /** DataFrame over an InternalRow RDD without the external-Row encoder
-    * round trip (`internalCreateDataFrame` is `private[sql]`). Rows must
-    * already be in the Catalyst representation of `schema`. */
-  def internalCreateDataFrame(spark: org.apache.spark.sql.SparkSession,
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.DataFrame =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema, isStreaming = false)
-
   /** DataFrame over a logical plan (`Dataset.ofRows` is `private[sql]`). */
   def ofRows(spark: org.apache.spark.sql.SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)

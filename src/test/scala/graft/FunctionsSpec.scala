@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.functions.{Aggregators, QLFunctions => F, Uint64 => U}
 
@@ -150,54 +151,57 @@ class FunctionsSpec extends SparkSpec {
     assert(got == Seq(2L, 4L)) // key 9.0 twice, tie broken by value asc
   }
 
+  /** The (position, frequency) bins of YQL histogram `producer` over
+    * the doubles `data`. */
+  private def yqlBins(producer: String, data: Seq[Double]): Seq[(Double, Double)] = {
+    data.toDF("v").createOrReplaceTempView("hist_src")
+    graft.functions.YqlSql.sql(spark, s"SELECT $producer AS h FROM hist_src")
+      .head().getStruct(0).getAs[scala.collection.Seq[Row]]("bins")
+      .map(b => (b.getDouble(0), b.getDouble(1))).toSeq
+  }
+
+  // bimodal: cluster near 0 and near 100
+  private val bimodal = (1 to 500).map(i => (i % 10).toDouble) ++
+    (1 to 500).map(i => 100.0 + (i % 10))
+
   test("adaptive histogram caps bins, preserves totals, tracks the distribution") {
-    import org.apache.spark.sql.functions._
-    val hist = udaf(graft.functions.Aggregators.adaptiveHistogram(8))
-    // bimodal: cluster near 0 and near 100
-    val data = ((1 to 500).map(i => (i % 10).toDouble) ++
-      (1 to 500).map(i => 100.0 + (i % 10))).toDF("v")
-    val bins = data.agg(hist(col("v")).as("h"))
-      .selectExpr("explode(h) AS b").selectExpr("b._1 AS pos", "b._2 AS cnt")
-      .collect().map(r => (r.getDouble(0), r.getLong(1)))
+    val bins = yqlBins("AdaptiveDistanceHistogram(v, 8)", bimodal)
     assert(bins.length <= 8)
-    assert(bins.map(_._2).sum == 1000L)
+    assert(bins.map(_._2).sum == 1000.0)
     val lowMass = bins.filter(_._1 < 50).map(_._2).sum
-    assert(lowMass == 500L, s"bimodal split lost: $lowMass")
+    assert(lowMass == 500.0, s"bimodal split lost: $lowMass")
   }
 
   test("ward and weight adaptive histograms cap bins and preserve mass") {
-    import org.apache.spark.sql.functions._
-    val data = ((1 to 500).map(i => (i % 10).toDouble) ++
-      (1 to 500).map(i => 100.0 + (i % 10))).toDF("v")
-    for ((agg, wardLike) <- Seq(
-        (graft.functions.Aggregators.adaptiveWardHistogram(8), true),
-        (graft.functions.Aggregators.adaptiveWeightHistogram(8), false))) {
-      val hist = udaf(agg)
-      val bins = data.agg(hist(col("v")).as("h"))
-        .selectExpr("explode(h) AS b").selectExpr("b._1 AS pos", "b._2 AS cnt")
-        .collect().map(r => (r.getDouble(0), r.getLong(1)))
-      assert(bins.length <= 8)
-      assert(bins.map(_._2).sum == 1000L)
+    for ((producer, wardLike) <- Seq("AdaptiveWardHistogram" -> true,
+        "AdaptiveWeightHistogram" -> false)) {
+      val bins = yqlBins(s"$producer(v, 8)", bimodal)
+      assert(bins.length <= 8, producer)
+      assert(bins.map(_._2).sum == 1000.0, producer)
       // ward (variance-minimizing) keeps the bimodal split; the weight
       // criterion may legitimately bridge the gap (it ignores distance)
       if (wardLike)
-        assert(bins.filter(_._1 < 50).map(_._2).sum == 500L, bins.toSeq)
+        assert(bins.filter(_._1 < 50).map(_._2).sum == 500.0, bins)
     }
   }
 
   test("CDF histogram variants are monotone and end at the total count") {
-    import org.apache.spark.sql.functions._
-    val data = (1 to 300).map(i => (i % 97).toDouble).toDF("v")
-    for (agg <- Seq(graft.functions.Aggregators.adaptiveWardHistogramCdf(8),
-        graft.functions.Aggregators.linearHistogramCdf(10.0),
+    val values = (1 to 300).map(i => (i % 97).toDouble)
+    def monotone(cum: Seq[Double]): Boolean =
+      cum.sliding(2).forall(w => w.length < 2 || w(0) <= w(1))
+    val ward = yqlBins(
+      "Histogram::ToCumulativeDistributionFunction(AdaptiveWardHistogram(v, 8))", values)
+      .map(_._2)
+    assert(ward.last == 300.0 && monotone(ward), ward)
+    val data = values.toDF("v")
+    for (agg <- Seq(graft.functions.Aggregators.linearHistogramCdf(10.0),
         graft.functions.Aggregators.logHistogramCdf(10.0))) {
       val hist = udaf(agg)
       val bins = data.agg(hist(col("v")).as("h"))
         .selectExpr("explode(h) AS b").selectExpr("b._1 AS pos", "b._2 AS cum")
         .collect().map(r => (r.getDouble(0), r.getLong(1)))
       assert(bins.last._2 == 300L, bins.toSeq)
-      assert(bins.map(_._2).sliding(2).forall(w => w.length < 2 || w(0) <= w(1)),
-        bins.toSeq)
+      assert(monotone(bins.map(_._2.toDouble).toSeq), bins.toSeq)
     }
   }
 

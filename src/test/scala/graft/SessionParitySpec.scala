@@ -41,11 +41,36 @@ class SessionParitySpec extends SparkSpec {
     val injected = SessionRules.injectedBy(spark, GraftSession.extensions)
     Seq(graft.plans.ParameterizeLiterals, graft.plans.ParameterizeLocalFilters,
         graft.plans.ParameterizePushedLocalFilters, graft.plans.PruneHeldTs, graft.plans.HeldToLocal,
-        org.apache.spark.sql.graft.LocalWrite).foreach { r =>
+        org.apache.spark.sql.graft.LocalWrite, graft.plans.PlanPartitionJobs).foreach { r =>
       assert(injected.contains(r.getClass.getName), r)
     }
     val missing = injected -- SessionRules.of(spark)
     assert(missing.isEmpty, s"rules the specs' session does not run: $missing")
+  }
+
+  test("one planned operator runs every user-job pipe: no RDD round trip, and PipeJob.run " +
+      "only inside a PartitionJob") {
+    val main = sources(new File("src/main/scala"))
+      .map(f => f -> new String(Files.readAllBytes(f.toPath), "UTF-8"))
+    val roundTrips = main.collect { case (f, src) if src.contains("internalCreateDataFrame") => f }
+    assert(roundTrips.isEmpty, s"an RDD round trip returned: $roundTrips")
+    val pipeFiles = Set("PipeJob.scala", "Skiff.scala", "Proto.scala", "Operations.scala", "Streams.scala")
+    val toRdd = main.collect {
+      case (f, src) if pipeFiles(f.getName) && src.contains("queryExecution.toRdd") => f
+    }
+    assert(toRdd.isEmpty, s"a pipe plans its child at construction: $toRdd")
+    val outside = main.collect {
+      case (f, src) if f.getName != "PipeJob.scala" && src.contains("PipeJob.run") => f
+    }
+    assert(outside.isEmpty, s"PipeJob.run called outside PipeJob: $outside")
+    val pipeJob = main.collectFirst { case (f, src) if f.getName == "PipeJob.scala" => src }.get
+    assert(pipeJob.contains("private def run["), "PipeJob.run is no longer private")
+    // every method of PipeJob that starts a job does so inside PartitionJob.over
+    val methods = pipeJob.split("\n  (?=(private )?def )").filterNot(_.contains("def run["))
+    val call = "(?<![A-Za-z0-9_.])run(\\[[^\\]]*\\])?\\(".r
+    val starters = methods.filter(m => call.findFirstIn(m).isDefined)
+    assert(starters.nonEmpty)
+    starters.foreach(m => assert(m.contains("PartitionJob.over("), m))
   }
 
   test("the specs' session carries every rule installRules adds") {
